@@ -87,7 +87,7 @@ base = tempfile.mkdtemp(prefix="cmp_scale_")
 try:
     t0 = time.time()
     job = CompressionPolicyJob(spark, base, 60, 3600, 3600, n_groups=8)
-    job.run(fine, parallelism=8)
+    job.run(fine)
     elapsed = time.time() - t0
     m = job.metrics()
 finally:

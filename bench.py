@@ -220,7 +220,7 @@ def main() -> None:
         t0 = time.time()
         ejob = RetentionExpiryJob(spark, exp_base, fine_size=60,
                                   coarse_size=3600, horizon=7200, n_groups=8)
-        ejob.run(fine_1m, parallelism=8)
+        ejob.run(fine_1m)
         times["retention_expiry"] = time.time() - t0
         em = ejob.metrics()
         extra["expiry_rows_before"] = em["rows_before"]
@@ -249,7 +249,7 @@ def main() -> None:
         cjob = CompressionPolicyJob(spark, cmp_base, fine_size=60,
                                     chunk_span=3600, horizon=3600,
                                     n_groups=8)
-        cjob.run(fine_1m, parallelism=8)
+        cjob.run(fine_1m)
         times["retention_compress"] = time.time() - t0
         cm = cjob.metrics()
         extra["compress_rows_in"] = cm["rows_in"]

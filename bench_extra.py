@@ -91,7 +91,7 @@ def stage_expiry(spark, out):
             job = RetentionExpiryJob(spark, base, fine_size=60,
                                      coarse_size=3600, horizon=7200,
                                      n_groups=8)
-            timed(f"expiry_run_{rep}", lambda: job.run(fine, parallelism=8),
+            timed(f"expiry_run_{rep}", lambda: job.run(fine),
                   out, spark)
         finally:
             shutil.rmtree(base, ignore_errors=True)
@@ -111,7 +111,7 @@ def stage_compress(spark, out):
                                        chunk_span=3600, horizon=3600,
                                        n_groups=8)
             timed(f"compress_run_{rep}",
-                  lambda: job.run(fine, parallelism=8), out, spark)
+                  lambda: job.run(fine), out, spark)
             if rep == 1:
                 timed("range_read",
                       lambda: job.read_fine(bucket_min=0, bucket_max=19).count(),

@@ -3117,18 +3117,17 @@ def q_stream_rollup(spark, sf_dir, sink_dir: str | None = None):
             # input mints new part-file names, which the file-source
             # checkpoint would ingest as NEW data and the append sink
             # would duplicate every row. Bind the base dir to the input
-            # (same fingerprint recipe as RollupJob): matching input ->
-            # skip the rewrite (the stream no-ops and the sink stands);
-            # different input -> fail loudly; torn state -> fail loudly.
+            # (the lifecycle jobs' fingerprint, streaming/commit.py):
+            # matching input -> skip the rewrite (the stream no-ops and
+            # the sink stands); different input -> fail loudly; torn
+            # state -> fail loudly.
             import json as _json
             from pathlib import Path as _P
 
+            from .streaming.commit import fingerprint, write_json
+
             fp_path = _P(base) / "input_fingerprint.json"
-            r0 = toks.agg(
-                F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(doc_id, tokens))").alias("h"),
-            ).collect()[0]
-            fp = {"n": int(r0["n"]), "h": int(r0["h"] or 0)}
+            fp = fingerprint(toks)
             if fp_path.exists():
                 if _json.loads(fp_path.read_text()) != fp:
                     raise ValueError(
@@ -3144,7 +3143,7 @@ def q_stream_rollup(spark, sf_dir, sink_dir: str | None = None):
         if stage:
             toks.write.mode("overwrite").parquet(inp)
             if sink_dir is not None:
-                fp_path.write_text(_json.dumps(fp))
+                write_json(fp_path, fp)
         q = stream_tokens_rollup(
             spark, inp, f"{base}/sink", f"{base}/ckpt", bucket_size=BUCKET
         )

@@ -1,5 +1,6 @@
 """Incremental / resumable orchestration (snapshot checkpoints + lineage)."""
 
-from .checkpoint import RollupJob, read_manifest
+from .checkpoint import RollupJob
+from .commit import GroupCommit, read_manifest
 
-__all__ = ["RollupJob", "read_manifest"]
+__all__ = ["GroupCommit", "RollupJob", "read_manifest"]

@@ -1,37 +1,20 @@
-"""Resumable rollup runs: snapshot checkpoints + per-partition lineage
-manifests + metrics (BASELINE.json north_rule).
-
-Production design: every stage boundary is an Iceberg snapshot commit —
-atomic, versioned, time-travelable — and resume = "which doc-partitions are
-already in the committed snapshot?". The sandbox stand-in keeps the same
-contract with staged parquet + a JSON manifest per completed partition
-group (the reference's only analog is its interrupt-safe partial return,
-R/stomp.R:50-58; full resumability is new engine surface).
-
-Layout under ``base_dir``:
-    stage=<name>/part=<k>/...parquet     completed partition-group output
-    manifests/<stage>_<k>.json           lineage: doc range, row count,
-                                         kernel versions, input fingerprint,
-                                         wall time, points/sec
-    _stage_<name>_COMMITTED              stage-level commit marker
-
-Idempotent re-run: a partition group with a valid manifest is skipped; a
-killed run leaves no manifest for incomplete groups, so re-running resumes
-exactly where it died (tests/test_resume.py kills mid-run and resumes).
-"""
+"""Resumable finest-tier rollup: a per-group loop on the group-commit
+store (streaming/commit.py holds the commit contract — staging,
+fingerprint, manifests, marker), with an optional Iceberg backend for the
+per-group data commits. The reference's only analog is its
+interrupt-safe partial return (R/stomp.R:50-58); full resumability is new
+engine surface."""
 
 from __future__ import annotations
 
-import json
-import os
 import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import __version__
 from ..operators.rollup import finest_rollup, with_derived_stats
+from .commit import GroupCommit
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "mp_iceberg") -> bool:
@@ -54,22 +37,7 @@ def iceberg_available(spark: SparkSession, catalog: str = "mp_iceberg") -> bool:
         return False
 
 
-# Version of the input_fingerprint RECIPE (not the input). Bumped whenever
-# the hash formula changes (v1: xxhash64(doc_id, n_tok); v2: + token VALUES).
-# Stored alongside the fingerprint so a resume can tell "the recipe changed"
-# (old checkpoint dirs must be discarded / recomputed) apart from "the input
-# changed" (caller error) — both fail loudly, with different messages.
-FP_RECIPE = 2
-
-
-def read_manifest(base_dir: str | Path, stage: str, part: int) -> dict | None:
-    p = Path(base_dir) / "manifests" / f"{stage}_{part}.json"
-    if not p.exists():
-        return None
-    try:
-        return json.loads(p.read_text())
-    except json.JSONDecodeError:
-        return None  # torn write == incomplete
+STAGE = "rollup_1m"
 
 
 class RollupJob:
@@ -77,8 +45,9 @@ class RollupJob:
 
     The tokens table is split into ``n_groups`` deterministic doc groups
     (hash of doc_id — the same salting used for skew defeat); each group is
-    one unit of commit. This mirrors a per-partition Iceberg write with
-    commit metadata, at sandbox scale."""
+    one unit of commit (streaming/commit.py). This mirrors a per-partition
+    Iceberg write with commit metadata, at sandbox scale. Output layout:
+    ``stage=rollup_1m/part=<k>/...parquet``."""
 
     def __init__(self, spark: SparkSession, base_dir: str | Path, n_groups: int = 8,
                  bucket_size: int = 60, iceberg_table: str | None = None):
@@ -104,148 +73,52 @@ class RollupJob:
                     "Spark runtime jar), falling back is not silent by "
                     "design — drop the argument to use parquet+manifests"
                 )
-        (self.base / "manifests").mkdir(parents=True, exist_ok=True)
+        # staging keeps the input's own partitioning: each group's rollup
+        # then runs with the input's parallelism, not one task per group
+        self.store = GroupCommit(spark, base_dir, STAGE, n_groups,
+                                 {"bucket_size": bucket_size},
+                                 layout_staging=False)
 
-    def group_col(self):
-        return F.pmod(F.xxhash64("doc_id"), F.lit(self.n_groups))
-
-    def completed_groups(self, stage: str = "rollup_1m") -> list[int]:
-        return [
-            k for k in range(self.n_groups)
-            if read_manifest(self.base, stage, k) is not None
-        ]
-
-    def input_fingerprint(self, tokens: DataFrame) -> dict:
-        """Order-independent input identity: row count + bit_xor of
-        xxhash64(doc_id, n_tok, tokens). Hashing the token array itself
-        (xxhash64 accepts array columns) means two inputs with identical
-        (doc_id, n_tok) but different token VALUES get different
-        fingerprints — a same-shape/different-content input can never
-        silently serve the stale staged copy. One map-side-combinable
-        aggregation, overflow-free under ANSI mode (bit_xor, not sum)."""
-        r = tokens.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(doc_id, n_tok, tokens))").alias("h"),
-        ).collect()[0]
-        return {"n": int(r["n"]), "h": int(r["h"] or 0), "recipe": FP_RECIPE}
+    def completed_groups(self) -> list[int]:
+        return self.store.completed_groups()
 
     def stage_input(self, tokens: DataFrame) -> DataFrame:
-        """Write the input ONCE, hive-partitioned by group, so each commit
-        unit below is a partition-PRUNED read of its own directory instead
-        of a full-input filter scan per group (at 100 TB: one write + n
-        pruned reads, not n full scans). Idempotent: skipped when the
-        staged layout already exists (its own _SUCCESS commit marker) AND
-        the input fingerprint matches the staged one — a changed input
-        against a base dir with committed work is an ERROR (a base dir
-        binds to one input), never a silent serve of the stale copy."""
-        staged = self.base / "input_staged"
-        fp_path = self.base / "input_fingerprint.json"
-        fp = self.input_fingerprint(tokens)
-        if (staged / "_SUCCESS").exists():
-            old = json.loads(fp_path.read_text()) if fp_path.exists() else None
-            if old is not None and (old.get("n"), old.get("h")) == (fp["n"], fp["h"]):
-                # the staged values MATCH under the current formula — the
-                # input is verified identical regardless of what recipe
-                # tag the dir carries (a dir staged by a same-formula
-                # build that predates the tag must not be spuriously
-                # invalidated); stamp the current recipe for next time
-                if old.get("recipe") != FP_RECIPE:
-                    tmp = self.base / ".input_fingerprint.json.tmp"
-                    tmp.write_text(json.dumps(fp))
-                    os.replace(tmp, fp_path)
-                self._last_fp = fp
-                return self.spark.read.parquet(str(staged))
-            if old is not None and old.get("recipe") != FP_RECIPE:
-                # values differ AND the recipe tag differs: cannot tell
-                # "input changed" from "hash formula changed" — fail loud
-                # with the ambiguity spelled out rather than guessing
-                raise ValueError(
-                    f"base dir {self.base} was staged under fingerprint "
-                    f"recipe {old.get('recipe', 'pre-tag')} and its values "
-                    f"do not match this build's recipe-{FP_RECIPE} "
-                    "fingerprint; this is either a changed input or a "
-                    "changed hash formula — discard the base dir (or "
-                    "finish the run with the old build)"
-                )
-            if any((self.base / "manifests").iterdir()):
-                raise ValueError(
-                    f"base dir {self.base} holds committed work for a "
-                    f"different input (staged fingerprint {old}, got {fp}); "
-                    "use a fresh base dir"
-                )
-        (
-            tokens.withColumn("grp", self.group_col())
-            .write.mode("overwrite")
-            .partitionBy("grp")
-            .parquet(str(staged))
-        )
-        tmp = self.base / ".input_fingerprint.json.tmp"
-        tmp.write_text(json.dumps(fp))
-        os.replace(tmp, fp_path)
-        self._last_fp = fp
-        return self.spark.read.parquet(str(staged))
+        return self.store.stage(tokens)
 
-    def run(self, tokens: DataFrame, stage: str = "rollup_1m",
-            fail_after: int | None = None) -> list[int]:
+    def run(self, tokens: DataFrame, fail_after: int | None = None) -> list[int]:
         """Process all incomplete groups; returns the groups processed this
         run. ``fail_after`` aborts after N groups (for kill-and-resume
         tests)."""
-        if self.iceberg_table and stage != "rollup_1m":
-            # refuse BEFORE any commit: a second stage would overwrite the
-            # one table's partitions with wrong-stage data (result() has
-            # the same guard, but by then the clobbering would be done)
-            raise ValueError(
-                f"stage={stage!r}: iceberg_table={self.iceberg_table!r} "
-                "holds only the 'rollup_1m' stage; map additional stages "
-                "to their own tables"
-            )
-        done = set(self.completed_groups(stage))
-        staged = self.stage_input(tokens)
-        processed = []
-        for k in range(self.n_groups):
-            if k in done:
-                continue
-            if fail_after is not None and len(processed) >= fail_after:
-                raise RuntimeError(f"injected failure after {fail_after} groups")
+        staged = self.store.stage(tokens)
+        batch, inject = self.store.batch(fail_after)
+        for k in batch:
             t0 = time.time()
             part_tokens = staged.filter(F.col("grp") == k)  # pruned read
             out = with_derived_stats(finest_rollup(part_tokens, self.bucket_size))
-            snapshot_id = None
+            lineage = {}
             if self.iceberg_table:
                 committed, snapshot_id = self._commit_iceberg(out, k)
+                if snapshot_id is not None:
+                    lineage["iceberg_snapshot_id"] = snapshot_id
             else:
-                out_path = str(self.base / f"stage={stage}" / f"part={k}")
+                out_path = str(self.base / f"stage={STAGE}" / f"part={k}")
                 out.write.mode("overwrite").parquet(out_path)
                 committed = self.spark.read.parquet(out_path)
             agg = committed.agg(
                 F.count("*").alias("rows"),
                 F.countDistinct("doc_id").alias("n_docs"),
             ).collect()[0]
-            rows, n_docs = agg["rows"], agg["n_docs"]
+            rows = int(agg["rows"])
             elapsed = time.time() - t0
-            manifest = {
-                "stage": stage,
-                "part": k,
-                "n_docs": int(n_docs),
-                "rows": int(rows),
-                "points": int(rows) * 5,
+            self.store.commit(k, {
+                "n_docs": int(agg["n_docs"]),
+                "rows": rows,
+                "points": rows * 5,
                 "elapsed_sec": round(elapsed, 3),
                 "points_per_sec": round(rows * 5 / elapsed, 1) if elapsed else None,
-                "kernel_version": __version__,
-                "input_fingerprint": getattr(self, "_last_fp", None),
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            if snapshot_id is not None:
-                manifest["iceberg_snapshot_id"] = snapshot_id
-            # manifest write is the commit point: write-then-rename = atomic
-            tmp = self.base / "manifests" / f".{stage}_{k}.json.tmp"
-            tmp.write_text(json.dumps(manifest))
-            os.replace(tmp, self.base / "manifests" / f"{stage}_{k}.json")
-            processed.append(k)
-        # stage-level marker once every group committed
-        if len(self.completed_groups(stage)) == self.n_groups:
-            (self.base / f"_stage_{stage}_COMMITTED").touch()
-        return processed
+                **lineage,
+            })
+        return self.store.finish(batch, inject)
 
     # The two catalog-API primitives of the commit path, factored out so
     # the ORCHESTRATION below (shape check, create-vs-replace decision,
@@ -306,26 +179,12 @@ class RollupJob:
         )
         return committed, self._snapshot_id()
 
-    def result(self, stage: str = "rollup_1m") -> DataFrame:
+    def result(self) -> DataFrame:
         # drop the hive-style `part` layout column — physical detail only
         if self.iceberg_table:
-            if stage != "rollup_1m":
-                # Iceberg mode binds THE table to the one stage this job
-                # runs; a future multi-stage job must map stages to tables
-                # explicitly rather than silently serving wrong-stage data
-                raise ValueError(
-                    f"stage={stage!r}: iceberg_table={self.iceberg_table!r} "
-                    "holds only the 'rollup_1m' stage"
-                )
             return self.spark.table(self.iceberg_table).drop("part")
-        return self.spark.read.parquet(str(self.base / f"stage={stage}")).drop("part")
+        return self.spark.read.parquet(str(self.base / f"stage={STAGE}")).drop("part")
 
-    def metrics(self, stage: str = "rollup_1m") -> dict:
-        ms = [read_manifest(self.base, stage, k) for k in range(self.n_groups)]
-        ms = [m for m in ms if m]
-        return {
-            "groups_done": len(ms),
-            "rows": sum(m["rows"] for m in ms),
-            "points": sum(m["points"] for m in ms),
-            "elapsed_sec": round(sum(m["elapsed_sec"] for m in ms), 3),
-        }
+    def metrics(self) -> dict:
+        m = self.store.metrics("rows", "points")
+        return {"groups_done": m.pop("groups_committed"), **m}

@@ -36,25 +36,21 @@ prunes segments BEFORE any decode work — the chunk-exclusion analog;
 parquet scan (plan-tested) and only surviving segments reach the
 Arrow decode kernel.
 
-Commit contract: identical to :class:`RetentionExpiryJob` (staged
-hive-partitioned input bound to one (input, policy) fingerprint;
-per-group lineage manifests written LAST via write-then-rename as the
-commit point; idempotent data overwrites; kill-and-resume pytested).
+Commit contract: streaming/commit.py (stores: ``fine_staged/``, ``head/``,
+``segments/``, each partitioned by commit group).
 
-Scale shape: one staged write + n_groups pruned reads; per group one
-map-side-combinable watermark aggregate over ROLLUP rows, one equi-join
-on (doc_id, source), one applyInPandas whose groups are bounded by the
-chunk grid (<= chunk_span/fine_size rows each — no skew regardless of
-doc length). At 1000 executors each group maps to Iceberg partition
-REPLACE WHERE commits exactly as the expiry job documents. Reference
+Scale shape: one staged write; per run one map-side-combinable
+watermark aggregate over ROLLUP rows, one equi-join on (doc_id, source),
+one segment encode whose groups are bounded by the chunk grid (<=
+chunk_span/fine_size rows each — no skew regardless of doc length). At
+1000 executors each group maps to Iceberg partition REPLACE WHERE commits
+exactly as the expiry job documents. Reference
 analog for the precompute/serve lifecycle: the stats-struct reuse of
 /root/reference/src/mass.cpp:408-443.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
 from pathlib import Path
 
@@ -64,10 +60,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import __version__
-from ..codecs import dod_decode, dod_decode_many, dod_encode, dod_encode_many
-from .checkpoint import read_manifest
-from .expiry import RetentionExpiryJob
+from ..codecs import dod_decode_many, dod_encode_many
+from .commit import GroupCommit
+from .expiry import check_tiers
 
 STAGE = "compress"
 
@@ -118,43 +113,13 @@ _FINE_OUT_SCHEMA = T.StructType(
 )
 
 
-def _pack_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Reference single-group packer (kept as the batch path's semantic
-    spec; the job itself uses :func:`_pack_segments_batch`, which is
-    blob-identical — dod_encode_many == dod_encode per series)."""
-    pdf = pdf.sort_values("bucket")
-    blobs = {c: dod_encode(pdf[c].to_numpy(dtype=np.int64))
-             for c in _STAT_COLS}
-    b = pdf["bucket"].to_numpy(dtype=np.int64)
-    return pd.DataFrame(
-        {
-            "doc_id": [pdf["doc_id"].iloc[0]],
-            "source": [pdf["source"].iloc[0]],
-            "chunk": [int(pdf["chunk"].iloc[0])],
-            "n_rows": [len(pdf)],
-            "b_min": [int(b[0])],
-            "b_max": [int(b[-1])],
-            "v_min": [int(pdf["min_v"].min())],
-            "v_max": [int(pdf["max_v"].max())],
-            "bucket_blob": [blobs["bucket"]],
-            "cnt_blob": [blobs["cnt"]],
-            "sum_blob": [blobs["sum_v"]],
-            "sumsq_blob": [blobs["sumsq"]],
-            "min_blob": [blobs["min_v"]],
-            "max_blob": [blobs["max_v"]],
-            "blob_bytes": [sum(len(v) for v in blobs.values())],
-        }
-    )
-
-
 def _pack_segments_batch(batches):
     """Arrow-batched segment packer: the rows of each segment arrive
     pre-grouped JVM-side (sort_array(collect_list(struct)) per (doc,
     source, chunk)) as one array column per stat, so ONE
     ``dod_encode_many`` call per column encodes every segment in the
-    batch — 18x less per-segment Python than the per-group
-    applyInPandas + per-call dod_encode shape (measured 440 -> 24 us
-    per 60-row segment)."""
+    batch (measured 24 us per 60-row segment, against 440 us for a
+    per-group applyInPandas with one dod_encode call per column)."""
     for b in batches:
         if not len(b):
             continue
@@ -196,8 +161,8 @@ def _decode_segments(batches):
         nseg = len(b)
         # ONE lockstep-vectorized decode for every blob of every segment in
         # the batch (column-major: all bucket blobs, then all cnt blobs, ...)
-        # — the former per-segment x per-column dod_decode loop paid a
-        # Python bit-reader iteration per VALUE (~14x slower, measured)
+        # — a per-segment x per-column dod_decode loop pays a Python
+        # bit-reader iteration per VALUE (~14x slower, measured)
         all_blobs: list = []
         for bc in blob_cols:
             all_blobs.extend(b[bc].tolist())
@@ -214,23 +179,30 @@ def _decode_segments(batches):
         yield pd.DataFrame(out)
 
 
-class CompressionPolicyJob(RetentionExpiryJob):
+class CompressionPolicyJob:
     """Partition-grouped, resumable compression of a fine-tier rollup
     store into head rows + DoD segment blobs. ``chunk_span`` (token
-    positions per compressed chunk, a multiple of ``fine_size``) plays
-    the parent's ``coarse_size`` role in the cutoff alignment;
-    ``horizon`` is how much recent history stays row-form."""
-
-    STAGE = STAGE
+    positions per compressed chunk, a multiple of ``fine_size``) aligns
+    the cutoff; ``horizon`` is how much recent history stays row-form."""
 
     def __init__(self, spark: SparkSession, base_dir: str | Path,
                  fine_size: int, chunk_span: int, horizon: int,
                  n_groups: int = 8):
-        super().__init__(spark, base_dir, fine_size, chunk_span, horizon,
-                         n_groups=n_groups)
+        check_tiers([fine_size, chunk_span], [horizon])
+        self.spark = spark
+        self.base = Path(base_dir)
+        self.fine_size = fine_size
         self.chunk_span = chunk_span
+        self.horizon = horizon
+        self.n_groups = n_groups
+        self.store = GroupCommit(
+            spark, base_dir, STAGE, n_groups,
+            {"fine_size": fine_size, "chunk_span": chunk_span,
+             "horizon": horizon},
+            staged="fine_staged")
 
-    # ---------------------------------------------------------- staging
+    def completed_groups(self) -> list[int]:
+        return self.store.completed_groups()
 
     def stage_input(self, fine: DataFrame) -> DataFrame:
         missing = [c for c in FINE_COLS if c not in fine.columns]
@@ -240,54 +212,29 @@ class CompressionPolicyJob(RetentionExpiryJob):
                 f"job stores exactly {FINE_COLS} (a single-tier store — "
                 "constant columns like `tier` are the caller's to re-attach)"
             )
-        return super().stage_input(fine.select(*FINE_COLS))
+        return self.store.stage(fine.select(*FINE_COLS))
 
-    # ------------------------------------------------------------- run
+    def run(self, fine: DataFrame, fail_after: int | None = None) -> list[int]:
+        """Compress every incomplete group in ONE data pass: head and
+        segments are whole-batch writes that replace only the batch's
+        group partitions, then one manifest per group. Returns the groups
+        committed this run.
 
-    def run(self, fine: DataFrame, fail_after: int | None = None,
-            parallelism: int | None = None) -> list[int]:
-        """Compress all incomplete groups IN ONE DATA PASS: head and
-        segments are written as whole-batch hive-partitioned writes with
-        dynamic partition overwrite (only the incomplete groups'
-        partitions are touched — committed groups' data is never
-        rewritten), then per-group manifests are derived from one grouped
-        read-back each. This replaces the former one-job-chain-per-group
-        loop, whose ~5 serialized driver actions per group dominated wall
-        time at any sandbox size (measured: 2→8 cores sped the loop up
-        only 1.06x; the batch shape is also the right cluster plan — one
-        big job saturates executors where 64 small ones idle them).
-
-        ``fail_after`` (kill-injection tests) restricts the batch to the
-        first N incomplete groups and raises after committing them —
-        observable semantics identical to the old sequential loop.
-        ``parallelism`` is accepted for API compatibility and ignored:
-        batch writes parallelize by partition, not by driver thread.
-
-        Manifest censuses are OBSERVED on the two data writes (guide
-        §1.4/§2.3): per-group head rows ride the head write; per-group
-        segment count / compressed rows / blob bytes ride the segment
-        write (segment rows carry ``n_rows``/``blob_bytes``), and
-        ``rows_in = rows_head + rows_compressed`` holds by construction
-        (the two predicates partition the store). The former separate
-        input-count job and the two read-back jobs — three extra passes
-        per run — are gone, and every batch group with no head or no
-        segment rows gets a schema-bearing empty partition backfill, so
-        a store where nothing (or everything) aged past the horizon
-        stays readable on both roots."""
-        from pyspark.sql import Observation
-
+        Censuses are observed on the two writes: per-group head rows ride
+        the head write; per-group segment count / compressed rows / blob
+        bytes ride the segment write (segment rows carry ``n_rows`` and
+        ``blob_bytes``), and ``rows_in = rows_head + rows_compressed``
+        holds by construction (the two predicates partition the store).
+        A group with no head or no segment rows gets a schema-bearing
+        empty partition, so a store where nothing (or everything) aged
+        past the horizon stays readable on both roots."""
         staged = self.stage_input(fine)
-        fp = json.loads((self.base / "input_fingerprint.json").read_text())
-        todo = self._todo_groups()
-        if not todo:
-            return []
-        batch = todo[:fail_after] if fail_after is not None else todo
-        inject = fail_after is not None and fail_after < len(todo)
+        batch, inject = self.store.batch(fail_after)
         if batch:
             t0 = time.time()
-            sub = staged.where(F.col("grp").isin([int(k) for k in batch]))
-            head_root = str(self.base / "head")
-            seg_root = str(self.base / "segments")
+            sub = staged.where(F.col("grp").isin(batch))
+            head_root = self.base / "head"
+            seg_root = self.base / "segments"
             # a doc lives wholly in one group (grp = hash(doc_id) %
             # n_groups), so the watermark needs no grp key
             wm = sub.groupBy("doc_id", "source").agg(
@@ -331,94 +278,40 @@ class CompressionPolicyJob(RetentionExpiryJob):
             )
             segments = grouped.mapInPandas(
                 _pack_segments_batch, schema=_SEG_WRITE_SCHEMA)
-
-            def _per_grp(val, name):
-                return [
-                    F.sum(F.when(F.col("grp") == int(k), val).otherwise(0))
-                    .alias(f"{name}_{k}")
-                    for k in batch
-                ]
-
-            obs_h = Observation("head_census")
-            obs_s = Observation("seg_census")
             try:
-                (self._write_layout(head)
-                 .observe(obs_h, *_per_grp(F.lit(1), "rows"))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("grp").parquet(head_root))
-                (self._write_layout(segments)
-                 .observe(obs_s,
-                          *_per_grp(F.lit(1), "nseg"),
-                          *_per_grp(F.col("n_rows"), "rows"),
-                          *_per_grp(F.col("blob_bytes"), "bytes"))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("grp").parquet(seg_root))
+                hc = self.store.write(head, head_root, batch,
+                                      {"rows": F.lit(1)})
+                sc = self.store.write(segments, seg_root, batch, {
+                    "nseg": F.lit(1), "rows": F.col("n_rows"),
+                    "bytes": F.col("blob_bytes")})
             finally:
                 joined.unpersist()
-            hm, sm = obs_h.get, obs_s.get
-            head_stats = {k: int(hm[f"rows_{k}"] or 0) for k in batch}
-            seg_stats = {
-                k: {"n_segments": int(sm[f"nseg_{k}"] or 0),
-                    "rows_compressed": int(sm[f"rows_{k}"] or 0),
-                    "blob_bytes": int(sm[f"bytes_{k}"] or 0)}
-                for k in batch
-            }
-            # schema-bearing empty partitions for batch groups the
-            # dynamic writes skipped (nothing cold / nothing hot / no
-            # rows at all), so both roots stay readable
-            empty_head = staged.limit(0).drop("grp")
-            empty_seg = self.spark.createDataFrame([], SEGMENT_SCHEMA)
+            self.store.backfill(
+                head_root, [k for k in batch if hc["rows"][k] == 0],
+                staged.limit(0).drop("grp"))
+            self.store.backfill(
+                seg_root, [k for k in batch if sc["nseg"][k] == 0],
+                self.spark.createDataFrame([], SEGMENT_SCHEMA))
+            fields = {}
             for k in batch:
-                if head_stats[k] == 0:
-                    empty_head.write.mode("overwrite").parquet(
-                        str(Path(head_root) / f"grp={k}"))
-                if seg_stats[k]["n_segments"] == 0:
-                    empty_seg.write.mode("overwrite").parquet(
-                        str(Path(seg_root) / f"grp={k}"))
-            elapsed = time.time() - t0
-            share = elapsed / len(batch)
-            for k in batch:
-                sc = seg_stats[k]
-                rows_compressed = sc["rows_compressed"]
-                rows_in = head_stats[k] + rows_compressed
-                self._commit_manifest(k, {
-                    "stage": self.STAGE,
-                    "part": k,
-                    "rows_in": int(rows_in),
-                    "rows_head": head_stats[k],
+                rows_compressed = sc["rows"][k]
+                fields[k] = {
+                    "rows_in": hc["rows"][k] + rows_compressed,
+                    "rows_head": hc["rows"][k],
                     "rows_compressed": rows_compressed,
-                    "n_segments": sc["n_segments"],
-                    "blob_bytes": sc["blob_bytes"],
+                    "n_segments": sc["nseg"][k],
+                    "blob_bytes": sc["bytes"][k],
                     # 6 int64 stat columns per row-form fine row
                     "logical_bytes": rows_compressed * 8 * len(_STAT_COLS),
-                    "policy": {
-                        "fine_size": self.fine_size,
-                        "chunk_span": self.chunk_span,
-                        "horizon": self.horizon,
-                    },
-                    # the batch write is shared work: per-group wall time
-                    # is reported as an equal share of the batch elapsed
-                    "elapsed_sec": round(share, 3),
-                    "rows_per_sec": round(rows_in / share, 1)
-                    if share else None,
-                    "kernel_version": __version__,
-                    "input_fingerprint": fp,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                })
-        if inject:
-            raise RuntimeError(f"injected failure after {fail_after} groups")
-        if len(self.completed_groups()) == self.n_groups:
-            (self.base / f"_stage_{self.STAGE}_COMMITTED").touch()
-        return list(batch)
+                }
+            self.store.commit_batch(batch, t0, fields, "rows_in")
+        return self.store.finish(batch, inject)
 
     # --------------------------------------------------------- reading
 
     def head(self) -> DataFrame:
         """Recent rows still in row form (full commit required)."""
-        self._require_committed()
+        self.store.require_committed()
         return self.spark.read.parquet(str(self.base / "head")).drop("grp")
 
     def segments(self, bucket_min: int | None = None,
@@ -430,7 +323,7 @@ class CompressionPolicyJob(RetentionExpiryJob):
         pushed filters (plan-tested). ``max_v_at_least`` skips segments
         whose value zone map proves no row inside can reach the threshold
         (``v_max`` is the max over the segment's ``max_v`` rows)."""
-        self._require_committed()
+        self.store.require_committed()
         seg = self.spark.read.parquet(str(self.base / "segments")).drop("grp")
         if bucket_min is not None:
             seg = seg.filter(F.col("b_max") >= int(bucket_min))
@@ -466,33 +359,9 @@ class CompressionPolicyJob(RetentionExpiryJob):
         expiry job's ``result``)."""
         return self.read_fine()
 
-    def watermarks(self) -> DataFrame:
-        raise NotImplementedError(
-            "compression drops no rows, so the watermark stays derivable "
-            "from the store itself — read_fine() and retention_policy "
-            "recompute it; no stored watermark table exists"
-        )
-
-    def serving_view(self, coarse: DataFrame) -> DataFrame:  # pragma: no cover
-        raise NotImplementedError(
-            "compose explicitly: retention_policy(job.read_fine(), coarse, "
-            "...) — the compressed store is a drop-in fine tier"
-        )
-
     def metrics(self) -> dict:
-        ms = [read_manifest(self.base, self.STAGE, k)
-              for k in range(self.n_groups)]
-        ms = [m for m in ms if m is not None]
-        blob = sum(m["blob_bytes"] for m in ms)
-        logical = sum(m["logical_bytes"] for m in ms)
-        return {
-            "groups_committed": len(ms),
-            "rows_in": sum(m["rows_in"] for m in ms),
-            "rows_head": sum(m["rows_head"] for m in ms),
-            "rows_compressed": sum(m["rows_compressed"] for m in ms),
-            "n_segments": sum(m["n_segments"] for m in ms),
-            "blob_bytes": blob,
-            "logical_bytes": logical,
-            "compression_ratio": round(logical / blob, 3) if blob else None,
-            "elapsed_sec": round(sum(m["elapsed_sec"] for m in ms), 3),
-        }
+        out = self.store.metrics("rows_in", "rows_head", "rows_compressed",
+                                 "n_segments", "blob_bytes", "logical_bytes")
+        blob, logical = out["blob_bytes"], out["logical_bytes"]
+        out["compression_ratio"] = round(logical / blob, 3) if blob else None
+        return out

@@ -7,8 +7,7 @@ missing half of the north rule's "retention engine" is a job that
 physically REWRITES the stored fine tier dropping every bucket whose
 serving responsibility has passed to the coarse tier (reference analog for
 the contract shape: the precompute-once/serve-many stats-struct lifecycle
-of /root/reference/src/mass.cpp:408-443; commit contract mirrored from
-streaming/checkpoint.py's RollupJob).
+of /root/reference/src/mass.cpp:408-443).
 
 Semantics (exactly the serving view's fine-tier predicate, so the view
 over the compacted store is provably row-identical to the view over the
@@ -28,390 +27,58 @@ watermark (``retention_policy(..., watermark=job.watermarks())``), the
 same way TimescaleDB keeps the continuous-aggregate watermark in catalog
 metadata rather than deriving it from the hypertable.
 
-Commit contract (identical to RollupJob):
+One body serves both jobs: :class:`RetentionExpiryJobMulti` compacts every
+non-coarsest tier of an N-tier cascade, and :class:`RetentionExpiryJob` is
+its 2-tier case. Stores under the base dir, each partitioned by commit
+group (streaming/commit.py holds the commit contract):
 
-    fine_staged/grp=<k>/...parquet       staged input, hive-partitioned
-    compacted/grp=<k>/...parquet         rewritten fine partitions
-    watermarks/grp=<k>/...parquet        pre-compaction per-doc watermark
-    manifests/expiry_<k>.json            lineage: rows before/dropped/after,
-                                         input fingerprint, wall time
-    _stage_expiry_COMMITTED              stage-level marker
+    fine_staged/ | tiers_staged/   staged input (2-tier job | N-tier job)
+    watermarks/grp=<k>/            pre-compaction per-doc watermark
+    compacted/grp=<k>/             kept rows
 
-The per-group manifest is written LAST via write-then-rename — it is the
-commit point. A killed run leaves no manifest for the group it died in, so
-re-running resumes exactly there (kill-and-resume pytested). A group's
-data writes are idempotent overwrites, so a torn data write under a
-missing manifest is simply redone.
+The staged and compacted rows carry a ``tier_idx`` column when there is
+more than one tier to compact.
+    manifests/expiry_<k>.json      per-group, per-tier row census
 
-Scale shape: one staged write + n_groups pruned reads; per group, one
-map-side-combinable watermark aggregate over ROLLUP rows (never raw
-tokens) and one equi-join on (doc_id, source) — no broadcast of any
-corpus-sized side, no skew (one watermark row per doc). At 1000 executors
-each group maps to a set of Iceberg partition overwrites (REPLACE WHERE),
-committed per group exactly as RollupJob._commit_iceberg does.
+Scale shape: one staged write; per run, one map-side-combinable watermark
+aggregate over ROLLUP rows (never raw tokens) and one equi-join on
+(doc_id, source) — no broadcast of any corpus-sized side, no skew (one
+watermark row per doc). At 1000 executors each group maps to a set of
+Iceberg partition overwrites (REPLACE WHERE).
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import __version__
 from ..operators.rollup import retention_policy, retention_policy_multi
-from .checkpoint import read_manifest
+from .commit import GroupCommit
 
 STAGE = "expiry"
 
 
-class RetentionExpiryJob:
-    """Partition-grouped, resumable physical expiry of a fine-tier rollup
-    store. ``fine_size``/``coarse_size``/``horizon`` are the retention
-    policy's parameters (coarse_size must be a multiple of fine_size,
-    horizon >= 0 — same domain the serving view enforces)."""
-
-    STAGE = STAGE  # subclasses (e.g. CompressionPolicyJob) override
-
-    def __init__(self, spark: SparkSession, base_dir: str | Path,
-                 fine_size: int, coarse_size: int, horizon: int,
-                 n_groups: int = 8, files_per_group: int = 1):
-        if coarse_size % fine_size:
+def check_tiers(sizes: list[int], horizons: list[int]) -> None:
+    """The retention policy domain the serving views enforce: nested tier
+    sizes, nonnegative horizons, nondecreasing finest-first."""
+    if len(sizes) < 2 or len(horizons) != len(sizes) - 1:
+        raise ValueError(
+            "need >=2 tier sizes and exactly len(sizes)-1 horizons")
+    for finer, coarser in zip(sizes, sizes[1:]):
+        if coarser % finer:
             raise ValueError(
-                f"tier sizes must nest: {coarse_size} % {fine_size} != 0")
-        if horizon < 0:
-            raise ValueError("horizon must be nonnegative")
-        if files_per_group < 1:
-            raise ValueError("files_per_group must be >= 1")
-        self.spark = spark
-        self.base = Path(base_dir)
-        self.fine_size = fine_size
-        self.coarse_size = coarse_size
-        self.horizon = horizon
-        self.n_groups = n_groups
-        self.files_per_group = files_per_group
-        (self.base / "manifests").mkdir(parents=True, exist_ok=True)
-
-    def _write_layout(self, df: DataFrame) -> DataFrame:
-        """Bound the store's file count (guide §6): without this, every
-        hive-partitioned write fans each of ~shuffle-partitions tasks
-        into up to n_groups grp dirs — measured 1004 files for a 6891-row
-        store, and every later scan (and every mapInPandas over it) pays
-        a task + Python-worker roundtrip per couple of files (identity
-        map over the fragmented store: 3.2s; over the compacted one:
-        0.55s). One hash repartition puts each commit group into
-        ``files_per_group`` well-sized files. The default (1) matches
-        sandbox group sizes; at scale set files_per_group so each file
-        lands in the 128MB-1GB band (the group stays the commit unit —
-        its files are still overwritten atomically per group)."""
-        return df.repartition(
-            self.n_groups * self.files_per_group,
-            F.col("grp"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(self.files_per_group)),
-        )
-
-    # ---------------------------------------------------------- staging
-
-    def group_col(self):
-        return F.pmod(F.xxhash64("doc_id"), F.lit(self.n_groups))
-
-    def completed_groups(self) -> list[int]:
-        return [
-            k for k in range(self.n_groups)
-            if read_manifest(self.base, self.STAGE, k) is not None
-        ]
-
-    # ------------------------------------------------- group commit loop
-
-    def _todo_groups(self) -> list[int]:
-        done = set(self.completed_groups())
-        return [k for k in range(self.n_groups) if k not in done]
-
-    def _commit_manifest(self, k: int, manifest: dict) -> None:
-        # manifest write-then-rename is the commit point for group k
-        tmp = self.base / "manifests" / f".{self.STAGE}_{k}.json.tmp"
-        tmp.write_text(json.dumps(manifest))
-        os.replace(tmp, self.base / "manifests" / f"{self.STAGE}_{k}.json")
+                f"tier sizes must nest: {coarser} % {finer} != 0")
+    if any(h < 0 for h in horizons):
+        raise ValueError("horizon must be nonnegative")
+    if any(b < a for a, b in zip(horizons, horizons[1:])):
+        raise ValueError("horizons must be nondecreasing finest-first")
 
 
-    @staticmethod
-    def _fp_hash():
-        return F.expr(
-            "xxhash64(doc_id, source, bucket, cnt, sum_v, sumsq,"
-            " min_v, max_v)"
-        ).cast("decimal(38,0)")
-
-    def _policy_vec(self) -> list:
-        return [self.fine_size, self.coarse_size, self.horizon,
-                self.n_groups]
-
-    def input_fingerprint(self, fine: DataFrame) -> dict:
-        """Order-independent identity of the fine store: row count + SUM
-        of a full-row hash (decimal(38,0), so 2^63-scale addends cannot
-        overflow at any realistic row count). Every stat column
-        participates, and — unlike a bit_xor, where a duplicated row
-        pair XORs to zero — summation is duplicate-sensitive, so
-        same-shape inputs differing only in repeated rows cannot alias.
-        The job's shape parameters (n_groups included: a resume with
-        fewer groups would silently orphan the higher staged groups)
-        ride along, making the base dir bind to one (input, policy,
-        grouping) triple. One map-side-combinable aggregate — only paid
-        on RESUME; a fresh staging observes the identical aggregates on
-        the staging write itself (guide §1: one fewer full input pass)."""
-        r = fine.agg(
-            F.count("*").alias("n"), F.sum(self._fp_hash()).alias("h")
-        ).collect()[0]
-        return {
-            "n": int(r["n"]), "h": str(r["h"] or 0),
-            "policy": self._policy_vec(),
-        }
-
-    def stage_input(self, fine: DataFrame) -> DataFrame:
-        """Write the fine store ONCE, hive-partitioned by doc group, so
-        each commit unit is a partition-pruned read. Idempotent; a base
-        dir binds to one (input, policy) pair — both a changed input and
-        a changed retention policy against committed work fail loudly
-        (recompacting with a different horizon over an already-compacted
-        layout would silently under- or over-drop).
-
-        The fingerprint is OBSERVED on the staging write itself (same
-        count + decimal hash-sum aggregates, so a later resume's
-        independently aggregated fingerprint compares equal); data lands
-        first, fingerprint second — crash in the gap leaves
-        _SUCCESS-without-fp, which simply restages (manifests cannot
-        exist before staging completes)."""
-        from pyspark.sql import Observation
-
-        staged = self.base / "fine_staged"
-        fp_path = self.base / "input_fingerprint.json"
-        if (staged / "_SUCCESS").exists():
-            fp = self.input_fingerprint(fine)
-            old = json.loads(fp_path.read_text()) if fp_path.exists() else None
-            if old == fp:
-                return self.spark.read.parquet(str(staged))
-            if old is not None:
-                raise ValueError(
-                    f"base dir {self.base} was staged for fingerprint/"
-                    f"policy {old}, got {fp}; a base dir binds to one "
-                    "input and one retention policy — use a fresh base dir"
-                )
-            # _SUCCESS present but no fingerprint: a prior run died
-            # between the data write and the fp write. Manifests cannot
-            # exist yet, so restaging is safe — fall through.
-        obs = Observation("stage_fp")
-        # observe sits ABOVE the layout repartition: a runtime-empty
-        # shuffle lets AQE's empty-relation propagation replace the
-        # subtree BELOW the metrics node, and a CollectMetrics inside the
-        # replaced subtree never reports (Observation.get then throws) —
-        # at the top of the plan it always survives and counts the same
-        # rows (bisected in r7; same ordering at every observed write)
-        (
-            self._write_layout(fine.withColumn("grp", self.group_col()))
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.sum(self._fp_hash()).alias("h"))
-            .write.mode("overwrite")
-            .partitionBy("grp")
-            .parquet(str(staged))
-        )
-        m = obs.get
-        fp = {"n": int(m["n"]), "h": str(m["h"] or 0),
-              "policy": self._policy_vec()}
-        tmp = self.base / ".input_fingerprint.json.tmp"
-        tmp.write_text(json.dumps(fp))
-        os.replace(tmp, fp_path)
-        return self.spark.read.parquet(str(staged))
-
-    # ------------------------------------------------------------- run
-
-    def run(self, fine: DataFrame, fail_after: int | None = None,
-            parallelism: int | None = None) -> list[int]:
-        """Compact all incomplete groups IN ONE DATA PASS: the watermark
-        table and the compacted store are written as whole-batch
-        hive-partitioned writes with dynamic partition overwrite (only
-        incomplete groups' partitions are touched — committed groups'
-        data is never rewritten), then per-group manifests are derived
-        from one grouped read-back each. The former one-job-chain-per-
-        group loop serialized ~4 driver actions per group, which
-        dominated wall time at any sandbox input size; the batch shape
-        is also the right cluster plan — one big job saturates
-        executors where N small sequential ones idle them. Fully-expired
-        groups get a schema-bearing empty partition backfill so an
-        emptied store stays readable (pytest-pinned edge).
-
-        ``fail_after`` (kill-injection tests) restricts the batch to the
-        first N incomplete groups and raises after committing them —
-        observable semantics identical to the old sequential loop.
-        ``parallelism`` is accepted for API compatibility and ignored.
-
-        All manifest censuses are OBSERVED on the two data writes
-        themselves (guide §1.4/§2.3): per-group rows_before and the
-        post-compaction doc count ride the watermark write (a doc keeps
-        >= 1 row iff its high-water ``wm`` exceeds its cutoff — the same
-        predicate the kept filter applies to its max bucket), and
-        per-group rows_after rides the compacted write — the former
-        separate before-count job and compacted read-back job are gone
-        (two full passes over the store per run)."""
-        from pyspark.sql import Observation
-
-        staged = self.stage_input(fine)
-        fp = json.loads((self.base / "input_fingerprint.json").read_text())
-        todo = self._todo_groups()
-        if not todo:
-            return []
-        batch = todo[:fail_after] if fail_after is not None else todo
-        inject = fail_after is not None and fail_after < len(todo)
-        if batch:
-            t0 = time.time()
-            in_batch = F.col("grp").isin([int(k) for k in batch])
-            sub = staged.where(in_batch)
-            wm_root = str(self.base / "watermarks")
-            comp_root = str(self.base / "compacted")
-            cut = (
-                F.floor((F.col("wm") - self.horizon) / self.coarse_size)
-                * self.coarse_size
-            ).cast("long")
-            # a doc lives wholly in one group, so grp can ride along
-            # as a watermark key without changing its doc grain
-            wm = sub.groupBy("grp", "doc_id", "source").agg(
-                ((F.max("bucket") + 1) * self.fine_size).alias("wm"),
-                F.count(F.lit(1)).alias("n_rows"))
-            obs_wm = Observation("wm_census")
-            wm_metrics = []
-            for k in batch:
-                g = F.col("grp") == int(k)
-                wm_metrics.append(F.sum(
-                    F.when(g, F.col("n_rows")).otherwise(0)
-                ).alias(f"rows_{k}"))
-                wm_metrics.append(F.sum(
-                    F.when(g & (F.col("wm") > cut), 1).otherwise(0)
-                ).alias(f"docs_{k}"))
-            # persist the PRE-compaction watermark first (the serving
-            # view over a compacted store must read the stored one)
-            (self._write_layout(
-                wm.select("grp", "doc_id", "source", "wm", "n_rows"))
-             .observe(obs_wm, *wm_metrics)
-             .select("grp", "doc_id", "source", "wm")
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("grp").parquet(wm_root))
-            wmm = obs_wm.get
-            before = {k: int(wmm[f"rows_{k}"] or 0) for k in batch}
-            n_docs = {k: int(wmm[f"docs_{k}"] or 0) for k in batch}
-            after = {k: 0 for k in batch}
-            if any(before.values()):
-                wm_c = (self.spark.read.parquet(wm_root)
-                        .where(in_batch).drop("grp"))
-                kept = (
-                    sub.join(wm_c, ["doc_id", "source"])
-                    .where((F.col("bucket") + 1) * self.fine_size > cut)
-                    .drop("wm")
-                )
-                obs_k = Observation("kept_census")
-                kept_metrics = [
-                    F.sum(F.when(F.col("grp") == int(k), 1).otherwise(0))
-                    .alias(f"rows_{k}")
-                    for k in batch
-                ]
-                (self._write_layout(kept)
-                 .observe(obs_k, *kept_metrics)
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("grp").parquet(comp_root))
-                km = obs_k.get
-                after = {k: int(km[f"rows_{k}"] or 0) for k in batch}
-            # schema-bearing empty partitions for groups the dynamic
-            # write skipped (no rows kept / no rows at all), so an
-            # emptied store stays readable
-            empty_kept = staged.limit(0).drop("grp")
-            empty_wm = (staged.limit(0).groupBy("doc_id", "source")
-                        .agg(F.lit(0).cast("long").alias("wm")))
-            for k in batch:
-                if after[k] == 0:
-                    empty_kept.write.mode("overwrite").parquet(
-                        str(Path(comp_root) / f"grp={k}"))
-                if before[k] == 0:
-                    empty_wm.write.mode("overwrite").parquet(
-                        str(Path(wm_root) / f"grp={k}"))
-            elapsed = time.time() - t0
-            share = elapsed / len(batch)
-            for k in batch:
-                rows_before = before[k]
-                rows_after = after[k]
-                self._commit_manifest(k, {
-                    "stage": self.STAGE,
-                    "part": k,
-                    "rows_before": int(rows_before),
-                    "rows_dropped": int(rows_before) - rows_after,
-                    "rows_after": rows_after,
-                    "n_docs_after": n_docs[k],
-                    "policy": {
-                        "fine_size": self.fine_size,
-                        "coarse_size": self.coarse_size,
-                        "horizon": self.horizon,
-                    },
-                    # the batch write is shared work: per-group wall time
-                    # is an equal share of the batch elapsed
-                    "elapsed_sec": round(share, 3),
-                    "rows_per_sec": round(rows_before / share, 1)
-                    if share else None,
-                    "kernel_version": __version__,
-                    "input_fingerprint": fp,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                })
-        if inject:
-            raise RuntimeError(f"injected failure after {fail_after} groups")
-        if len(self.completed_groups()) == self.n_groups:
-            (self.base / f"_stage_{self.STAGE}_COMMITTED").touch()
-        return list(batch)
-
-    # --------------------------------------------------------- reading
-
-    def _require_committed(self) -> None:
-        missing = sorted(
-            set(range(self.n_groups)) - set(self.completed_groups()))
-        if missing:
-            raise RuntimeError(
-                f"{self.STAGE} incomplete: groups {missing} have no manifest — "
-                "run() to completion before reading the compacted store"
-            )
-
-    def result(self) -> DataFrame:
-        """The compacted fine store (all groups; requires full commit)."""
-        self._require_committed()
-        return self.spark.read.parquet(str(self.base / "compacted")).drop("grp")
-
-    def watermarks(self) -> DataFrame:
-        """The pre-compaction per-doc watermark table — the authoritative
-        high-water for serving views over the compacted store."""
-        self._require_committed()
-        return self.spark.read.parquet(str(self.base / "watermarks")).drop("grp")
-
-    def serving_view(self, coarse: DataFrame) -> DataFrame:
-        """Retention serving view over the COMPACTED store + stored
-        watermark; row-identical to the view over the full store
-        (pytest-asserted)."""
-        return retention_policy(
-            self.result(), coarse, self.fine_size, self.coarse_size,
-            self.horizon, watermark=self.watermarks(),
-        )
-
-    def metrics(self) -> dict:
-        ms = [read_manifest(self.base, self.STAGE, k) for k in range(self.n_groups)]
-        ms = [m for m in ms if m is not None]
-        return {
-            "groups_committed": len(ms),
-            "rows_before": sum(m["rows_before"] for m in ms),
-            "rows_dropped": sum(m["rows_dropped"] for m in ms),
-            "rows_after": sum(m["rows_after"] for m in ms),
-            "elapsed_sec": round(sum(m["elapsed_sec"] for m in ms), 3),
-        }
-
-
-class RetentionExpiryJobMulti(RetentionExpiryJob):
+class RetentionExpiryJobMulti:
     """N-tier physical expiry: compacts EVERY non-coarsest tier of the
     cascade by its own cutoff — the full ``drop_chunks``-per-hypertable
     analog for the raw->1m->1h->1d cascade that
@@ -434,253 +101,145 @@ class RetentionExpiryJobMulti(RetentionExpiryJob):
     ``cut[i] = floor((wm - horizons[i]) / sizes[i+1]) * sizes[i+1]``,
     with ``wm`` the pre-compaction FINEST-tier watermark — identical
     math to the serving view, so view-over-compacted ==
-    view-over-full row for row (pytest-asserted, and the 2-tier
-    special case is bit-identical to :class:`RetentionExpiryJob`).
+    view-over-full row for row (pytest-asserted).
 
-    Commit contract, layout, and scale shape are the parent's, with the
-    staged store additionally hive-partitioned by ``tier_idx`` (each
-    (group, tier) a pruned read; at 1000 executors each group maps to
-    an Iceberg REPLACE WHERE on that tier's partition spec; the
-    compacted group is written unpartitioned with ``tier_idx`` as a
-    data column so an emptied group stays readable).
-    One manifest per GROUP covers all tiers with a per-tier
-    row census — a group commit is atomic across tiers, so a resume
-    never serves a half-compacted cascade slice."""
+    One manifest per GROUP covers all tiers with a per-tier row census —
+    a group commit is atomic across tiers, so a resume never serves a
+    half-compacted cascade slice."""
 
     def __init__(self, spark: SparkSession, base_dir: str | Path,
                  sizes: list[int], horizons: list[int], n_groups: int = 8):
-        if len(sizes) < 2 or len(horizons) != len(sizes) - 1:
-            raise ValueError(
-                "need >=2 tier sizes and exactly len(sizes)-1 horizons")
-        for finer, coarser in zip(sizes, sizes[1:]):
-            if coarser % finer:
-                raise ValueError(
-                    f"tier sizes must nest: {coarser} % {finer} != 0")
-        if any(h < 0 for h in horizons):
-            raise ValueError("horizon must be nonnegative")
-        if any(b < a for a, b in zip(horizons, horizons[1:])):
-            raise ValueError("horizons must be nondecreasing finest-first")
-        # parent init with the finest pair keeps the shared helpers
-        # (group_col / completed_groups / readers) working unchanged
-        super().__init__(spark, base_dir, sizes[0], sizes[-1],
-                         horizons[0], n_groups=n_groups)
+        check_tiers(sizes, horizons)
+        self.spark = spark
+        self.base = Path(base_dir)
         self.sizes = list(sizes)
         self.horizons = list(horizons)
+        self.n_groups = n_groups
+        self.store = GroupCommit(
+            spark, base_dir, STAGE, n_groups,
+            {"sizes": self.sizes, "horizons": self.horizons},
+            staged="tiers_staged")
 
-    # ---------------------------------------------------------- staging
-
-    def input_fingerprint(self, tiers: list[DataFrame]) -> dict:
-        """Parent fingerprint generalized: per-tier (count, hash-sum)
-        pairs — tier_idx participates via position, so swapping two
-        same-shape tiers cannot alias — plus the full policy vector."""
-        per_tier = []
-        for df in tiers:
-            r = df.agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    F.expr(
-                        "xxhash64(doc_id, source, bucket, cnt, sum_v,"
-                        " sumsq, min_v, max_v)"
-                    ).cast("decimal(38,0)")
-                ).alias("h"),
-            ).collect()[0]
-            per_tier.append([int(r["n"]), str(r["h"] or 0)])
-        return {
-            "tiers": per_tier,
-            "policy": [self.sizes, self.horizons, self.n_groups],
-        }
+    def completed_groups(self) -> list[int]:
+        return self.store.completed_groups()
 
     def stage_input(self, tiers: list[DataFrame]) -> DataFrame:
         if len(tiers) != len(self.sizes) - 1:
             raise ValueError(
                 f"expected {len(self.sizes) - 1} non-coarsest tier stores,"
                 f" got {len(tiers)}")
-        staged = self.base / "tiers_staged"
-        fp_path = self.base / "input_fingerprint.json"
-        fp = self.input_fingerprint(tiers)
-        if (staged / "_SUCCESS").exists():
-            old = json.loads(fp_path.read_text()) if fp_path.exists() else None
-            if old == fp:
-                return self.spark.read.parquet(str(staged))
-            if old is not None:
-                raise ValueError(
-                    f"base dir {self.base} was staged for fingerprint/"
-                    f"policy {old}, got {fp}; a base dir binds to one "
-                    "input and one retention policy — use a fresh base dir"
-                )
-        # fingerprint FIRST, data second (same torn-staging reasoning as
-        # the parent: fp-without-_SUCCESS restages; never the reverse)
-        tmp = self.base / ".input_fingerprint.json.tmp"
-        tmp.write_text(json.dumps(fp))
-        os.replace(tmp, fp_path)
-        union = None
-        for i, df in enumerate(tiers):
-            part = df.withColumn("tier_idx", F.lit(i)) \
-                     .withColumn("grp", self.group_col())
-            union = part if union is None else union.unionByName(part)
-        (
-            self._write_layout(union).write.mode("overwrite")
-            .partitionBy("grp", "tier_idx")
-            .parquet(str(staged))
-        )
-        return self.spark.read.parquet(str(staged))
+        if len(tiers) == 1:
+            # nothing to tell apart: no tier_idx column to stage, hash,
+            # shuffle and store (it cost the 2-tier job ~10% of its run
+            # time, measured on a 58k-row store)
+            return self.store.stage(tiers[0])
+        # tier_idx is an input column, so the fingerprint is positional:
+        # swapping two same-shape tiers cannot alias
+        return self.store.stage(reduce(DataFrame.unionByName, [
+            df.withColumn("tier_idx", F.lit(i)) for i, df in enumerate(tiers)
+        ]))
 
-    # ------------------------------------------------------------- run
+    def _cut(self, i: int):
+        align = self.sizes[i + 1]
+        return (F.floor((F.col("wm") - self.horizons[i]) / align)
+                * align).cast("long")
 
     def run(self, tiers: list[DataFrame],
-            fail_after: int | None = None,
-            parallelism: int | None = None) -> list[int]:
-        """One-data-pass batch compaction of every incomplete group (see
-        the single-tier :meth:`RetentionExpiryJob.run` for the batch
-        semantics). ``tier_idx`` stays a DATA column inside the grp
-        partitions: per-tier pruning comes back for free from an Iceberg
-        partition spec at scale, and the empty-partition backfill keeps
-        a fully-expired store readable (pytest-pinned edge).
+            fail_after: int | None = None) -> list[int]:
+        """Compact every incomplete group in ONE data pass: the watermark
+        table and the compacted store are whole-batch writes that replace
+        only the batch's group partitions, then one manifest per group.
+        Returns the groups committed this run.
 
-        Censuses are OBSERVED on the data writes (same scheme as the
-        single-tier run: the former per-(grp, tier) count job and the
-        compacted read-back job — two full passes over the store — are
-        gone): per-group doc counts ride the watermark write, and the
-        per-(grp, tier) before/after row counts ride the compacted
-        write's plan below and above its keep filter. An input whose
-        coarser tiers carry docs absent from the finest tier violates
-        the cascade-derivation contract; as before, such rows are
-        dropped (they never join a watermark), and they are now also
-        absent from the manifests' rows_before census."""
-        from pyspark.sql import Observation
-
+        Censuses are observed on the two writes: per-(group, tier) rows
+        before and the finest tier's surviving doc count ride the
+        watermark write (a doc keeps a finest row iff its ``wm`` exceeds
+        its cutoff), per-(group, tier) rows after ride the compacted
+        write. Coarser-tier rows of docs absent from the finest tier
+        violate the cascade-derivation contract: they never join a
+        watermark, so they are dropped and left out of every census."""
         staged = self.stage_input(tiers)
-        fp = json.loads((self.base / "input_fingerprint.json").read_text())
-        fine_size = self.sizes[0]
-        todo = self._todo_groups()
-        if not todo:
-            return []
-        batch = todo[:fail_after] if fail_after is not None else todo
-        inject = fail_after is not None and fail_after < len(todo)
+        batch, inject = self.store.batch(fail_after)
         if batch:
             t0 = time.time()
-            in_batch = F.col("grp").isin([int(k) for k in batch])
+            in_batch = F.col("grp").isin(batch)
             sub = staged.where(in_batch)
-            wm_root = str(self.base / "watermarks")
-            comp_root = str(self.base / "compacted")
+            wm_root = self.base / "watermarks"
+            comp_root = self.base / "compacted"
             n_tiers = len(self.horizons)
+            tier = F.col("tier_idx") if n_tiers > 1 else F.lit(0)
+            # a doc lives wholly in one group, so grp can ride along as a
+            # watermark key without changing its doc grain
             wm = (
-                sub.filter(F.col("tier_idx") == 0)
-                .groupBy("grp", "doc_id", "source")
-                .agg(((F.max("bucket") + 1) * fine_size).alias("wm"))
+                sub.groupBy("grp", "doc_id", "source").agg(
+                    ((F.max(F.when(tier == 0, F.col("bucket"))) + 1)
+                     * self.sizes[0]).alias("wm"),
+                    *[F.count(F.when(tier == i, 1)).alias(f"n{i}")
+                      for i in range(n_tiers)])
+                .where(F.col("wm").isNotNull())
             )
-            obs_wm = Observation("wm_census")
-            wm_metrics = [
-                F.sum(F.when(F.col("grp") == int(k), 1).otherwise(0))
-                .alias(f"docs_{k}")
-                for k in batch
-            ]
-            (self._write_layout(wm)
-             .observe(obs_wm, *wm_metrics)
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("grp").parquet(wm_root))
-            wmm = obs_wm.get
-            wm_docs = {k: int(wmm[f"docs_{k}"] or 0) for k in batch}
-            before_all: dict[tuple[int, int], int] = {
-                (k, i): 0 for k in batch for i in range(n_tiers)}
-            after_all: dict[tuple[int, int], int] = dict(before_all)
-            if any(wm_docs.values()):
-                wm_c = (self.spark.read.parquet(wm_root)
+            n_cols = tuple(f"n{i}" for i in range(n_tiers))
+            # persist the PRE-compaction watermark first (the serving
+            # view over a compacted store must read the stored one)
+            before = self.store.write(
+                wm, wm_root, batch,
+                {**{c: F.col(c) for c in n_cols},
+                 "docs": F.when(F.col("wm") > self._cut(0), 1).otherwise(0)},
+                drop=n_cols)
+            after = {c: dict.fromkeys(batch, 0) for c in n_cols}
+            if any(before["n0"].values()):
+                wm_c = (self.spark.read.parquet(str(wm_root))
                         .where(in_batch).drop("grp"))
-
-                def _tier_counts():
-                    return [
-                        F.sum(F.when((F.col("grp") == int(k))
-                                     & (F.col("tier_idx") == i), 1)
-                              .otherwise(0)).alias(f"r_{k}_{i}")
-                        for k in batch for i in range(n_tiers)
-                    ]
-
                 # per-tier keep predicate, dispatched on tier_idx in ONE
-                # pass — a single join + filter + write, not T jobs
-                obs_in = Observation("in_census")
-                joined = (sub.observe(obs_in, *_tier_counts())
-                          .join(wm_c, ["doc_id", "source"]))
-                keep = F.lit(False)
-                for i, h in enumerate(self.horizons):
-                    cut = (
-                        F.floor((F.col("wm") - F.lit(h)) / self.sizes[i + 1])
-                        * self.sizes[i + 1]
-                    ).cast("long")
-                    end = (F.col("bucket") + 1) * self.sizes[i]
-                    keep = F.when(F.col("tier_idx") == i, end > cut) \
-                            .otherwise(keep)
-                kept = joined.where(keep).drop("wm")
-                obs_out = Observation("kept_census")
-                (self._write_layout(kept)
-                 .observe(obs_out, *_tier_counts())
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("grp").parquet(comp_root))
-                inm, outm = obs_in.get, obs_out.get
-                for k in batch:
-                    for i in range(n_tiers):
-                        before_all[(k, i)] = int(inm[f"r_{k}_{i}"] or 0)
-                        after_all[(k, i)] = int(outm[f"r_{k}_{i}"] or 0)
-            empty_kept = staged.limit(0).drop("grp")
-            empty_wm = (staged.limit(0).groupBy("doc_id", "source")
-                        .agg(F.lit(0).cast("long").alias("wm")))
+                # pass — a single join + filter + write, not T jobs; the
+                # last tier needs no test (tier_idx < n_tiers)
+                keeps = [(F.col("bucket") + 1) * size > self._cut(i)
+                         for i, size in enumerate(self.sizes[:-1])]
+                keep = keeps[-1]
+                for i in reversed(range(n_tiers - 1)):
+                    keep = F.when(tier == i, keeps[i]).otherwise(keep)
+                kept = (sub.join(wm_c, ["doc_id", "source"])
+                        .where(keep).drop("wm"))
+                after = self.store.write(
+                    kept, comp_root, batch,
+                    {f"n{i}": F.when(tier == i, 1).otherwise(0)
+                     for i in range(n_tiers)})
+            self.store.backfill(
+                comp_root,
+                [k for k in batch if not any(after[c][k] for c in n_cols)],
+                staged.limit(0).drop("grp"))
+            self.store.backfill(
+                wm_root, [k for k in batch if before["n0"][k] == 0],
+                staged.limit(0).groupBy("doc_id", "source")
+                .agg(F.lit(0).cast("long").alias("wm")))
+            fields = {}
             for k in batch:
-                if not any(after_all[(k, i)] for i in range(n_tiers)):
-                    empty_kept.write.mode("overwrite").parquet(
-                        str(Path(comp_root) / f"grp={k}"))
-                if wm_docs[k] == 0:
-                    empty_wm.write.mode("overwrite").parquet(
-                        str(Path(wm_root) / f"grp={k}"))
-            elapsed = time.time() - t0
-            share = elapsed / len(batch)
-            for k in batch:
-                tier_census = [
-                    {
-                        "tier_idx": i,
-                        "rows_before": before_all.get((k, i), 0),
-                        "rows_dropped": before_all.get((k, i), 0)
-                        - after_all.get((k, i), 0),
-                        "rows_after": after_all.get((k, i), 0),
-                    }
-                    for i in range(n_tiers)
+                census = [
+                    {"tier_idx": i, "rows_before": before[c][k],
+                     "rows_dropped": before[c][k] - after[c][k],
+                     "rows_after": after[c][k]}
+                    for i, c in enumerate(n_cols)
                 ]
-                rows_before = sum(c["rows_before"] for c in tier_census)
-                self._commit_manifest(k, {
-                    "stage": self.STAGE,
-                    "part": k,
-                    "rows_before": rows_before,
-                    "rows_dropped": sum(
-                        c["rows_dropped"] for c in tier_census),
-                    "rows_after": sum(c["rows_after"] for c in tier_census),
-                    "tiers": tier_census,
-                    "policy": {"sizes": self.sizes,
-                               "horizons": self.horizons},
-                    "elapsed_sec": round(share, 3),
-                    "rows_per_sec": round(rows_before / share, 1)
-                    if share else None,
-                    "kernel_version": __version__,
-                    "input_fingerprint": fp,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                })
-        if inject:
-            raise RuntimeError(f"injected failure after {fail_after} groups")
-        if len(self.completed_groups()) == self.n_groups:
-            (self.base / f"_stage_{self.STAGE}_COMMITTED").touch()
-        return list(batch)
+                fields[k] = {
+                    **{key: sum(t[key] for t in census)
+                       for key in ("rows_before", "rows_dropped",
+                                   "rows_after")},
+                    "n_docs_after": before["docs"][k],
+                    "tiers": census,
+                }
+            self.store.commit_batch(batch, t0, fields, "rows_before")
+        return self.store.finish(batch, inject)
 
     # --------------------------------------------------------- reading
 
     def result(self) -> DataFrame:
         """All compacted tiers (``tier_idx`` column kept; full commit
         required)."""
-        self._require_committed()
-        return (
-            self.spark.read.parquet(str(self.base / "compacted"))
-            .drop("grp")
-        )
+        self.store.require_committed()
+        out = self.spark.read.parquet(str(self.base / "compacted")).drop("grp")
+        if len(self.horizons) == 1:  # a one-tier store has no tier_idx
+            out = out.withColumn("tier_idx", F.lit(0))
+        return out
 
     def result_tier(self, i: int) -> DataFrame:
         """Compacted store of tier ``i`` (0 = finest)."""
@@ -689,6 +248,13 @@ class RetentionExpiryJobMulti(RetentionExpiryJob):
                 f"tier_idx must be in [0, {len(self.sizes) - 2}] — the "
                 "coarsest tier is never compacted")
         return self.result().filter(F.col("tier_idx") == i).drop("tier_idx")
+
+    def watermarks(self) -> DataFrame:
+        """The pre-compaction per-doc watermark table — the authoritative
+        high-water for serving views over the compacted store."""
+        self.store.require_committed()
+        return (self.spark.read.parquet(str(self.base / "watermarks"))
+                .drop("grp"))
 
     def serving_view(self, coarsest: DataFrame) -> DataFrame:
         """N-tier retention serving view over the COMPACTED tiers + the
@@ -702,18 +268,65 @@ class RetentionExpiryJobMulti(RetentionExpiryJob):
             tiers, self.horizons, watermark=self.watermarks())
 
     def metrics(self) -> dict:
-        out = super().metrics()
-        ms = [read_manifest(self.base, self.STAGE, k)
-              for k in range(self.n_groups)]
-        ms = [m for m in ms if m is not None]
-        n_tiers = len(self.horizons)
+        out = self.store.metrics("rows_before", "rows_dropped", "rows_after")
+        ms = self.store.manifests()
         out["tiers"] = [
-            {
-                "tier_idx": i,
-                "rows_before": sum(m["tiers"][i]["rows_before"] for m in ms),
-                "rows_dropped": sum(m["tiers"][i]["rows_dropped"] for m in ms),
-                "rows_after": sum(m["tiers"][i]["rows_after"] for m in ms),
-            }
-            for i in range(n_tiers)
+            {"tier_idx": i,
+             **{key: sum(m["tiers"][i][key] for m in ms)
+                for key in ("rows_before", "rows_dropped", "rows_after")}}
+            for i in range(len(self.horizons))
         ]
+        return out
+
+
+class RetentionExpiryJob:
+    """Partition-grouped, resumable physical expiry of a fine-tier rollup
+    store: the 2-tier case ``sizes=[fine_size, coarse_size]``,
+    ``horizons=[horizon]`` of :class:`RetentionExpiryJobMulti` (coarse_size
+    must be a multiple of fine_size, horizon >= 0 — same domain the
+    serving view enforces)."""
+
+    def __init__(self, spark: SparkSession, base_dir: str | Path,
+                 fine_size: int, coarse_size: int, horizon: int,
+                 n_groups: int = 8):
+        self.fine_size = fine_size
+        self.coarse_size = coarse_size
+        self.horizon = horizon
+        self.n_groups = n_groups
+        self._tiers = RetentionExpiryJobMulti(
+            spark, base_dir, [fine_size, coarse_size], [horizon],
+            n_groups=n_groups)
+        self.store = self._tiers.store
+        self.store.staged = self.store.base / "fine_staged"
+        self.store.policy = {"fine_size": fine_size,
+                             "coarse_size": coarse_size, "horizon": horizon}
+
+    def completed_groups(self) -> list[int]:
+        return self.store.completed_groups()
+
+    def stage_input(self, fine: DataFrame) -> DataFrame:
+        return self._tiers.stage_input([fine])
+
+    def run(self, fine: DataFrame, fail_after: int | None = None) -> list[int]:
+        return self._tiers.run([fine], fail_after)
+
+    def result(self) -> DataFrame:
+        """The compacted fine store (all groups; requires full commit)."""
+        return self._tiers.result().drop("tier_idx")
+
+    def watermarks(self) -> DataFrame:
+        return self._tiers.watermarks()
+
+    def serving_view(self, coarse: DataFrame) -> DataFrame:
+        """Retention serving view over the COMPACTED store + stored
+        watermark; row-identical to the view over the full store
+        (pytest-asserted)."""
+        return retention_policy(
+            self.result(), coarse, self.fine_size, self.coarse_size,
+            self.horizon, watermark=self.watermarks(),
+        )
+
+    def metrics(self) -> dict:
+        out = self._tiers.metrics()
+        del out["tiers"]
         return out

@@ -1,7 +1,7 @@
 """Compression policy (streaming/compress.py — the compress_chunks
 analog): kill-and-resume, decode identity (read_fine == input store, row
 for row), chunk-quantum semantics, segment pruning before decode, and
-input/policy binding inherited from the expiry contract."""
+input/policy binding from the group-commit contract."""
 
 from __future__ import annotations
 
@@ -182,35 +182,34 @@ def test_full_lifecycle_compress_then_expire(spark, fine, tmp_path_factory):
     assert rows(served_lifecycle) == rows(served_direct)
 
 
-def test_parallel_group_commit_equivalence(spark, fine, tmp_path_factory):
-    """The ``parallelism`` kwarg is accepted for API compatibility (the
-    batch single-pass run parallelizes by partition, not driver thread);
-    two runs with and without it commit identical stores and censuses."""
+def test_fresh_runs_commit_identical_stores(spark, fine, tmp_path_factory):
+    """Determinism: two fresh runs of each batch job on the same input
+    commit identical stores and censuses."""
     from matrixprofiler_spark.streaming.expiry import RetentionExpiryJob
 
-    b_seq = tmp_path_factory.mktemp("cmp_par_a")
-    b_par = tmp_path_factory.mktemp("cmp_par_b")
-    j_seq = CompressionPolicyJob(spark, b_seq, FINE, CHUNK, HORIZON, n_groups=6)
-    j_par = CompressionPolicyJob(spark, b_par, FINE, CHUNK, HORIZON, n_groups=6)
-    assert sorted(j_seq.run(fine)) == sorted(j_par.run(fine, parallelism=4))
-    assert _rows(j_seq.read_fine()) == _rows(j_par.read_fine())
-    ms, mp_ = j_seq.metrics(), j_par.metrics()
+    b_a = tmp_path_factory.mktemp("cmp_det_a")
+    b_b = tmp_path_factory.mktemp("cmp_det_b")
+    j_a = CompressionPolicyJob(spark, b_a, FINE, CHUNK, HORIZON, n_groups=6)
+    j_b = CompressionPolicyJob(spark, b_b, FINE, CHUNK, HORIZON, n_groups=6)
+    assert sorted(j_a.run(fine)) == sorted(j_b.run(fine))
+    assert _rows(j_a.read_fine()) == _rows(j_b.read_fine())
+    ma, mb = j_a.metrics(), j_b.metrics()
     for k in ("rows_in", "rows_head", "rows_compressed", "n_segments",
               "blob_bytes"):
-        assert ms[k] == mp_[k], k
-    # expiry inherits the same parallel commit loop
-    e_seq = tmp_path_factory.mktemp("exp_par_a")
-    e_par = tmp_path_factory.mktemp("exp_par_b")
-    js = RetentionExpiryJob(spark, e_seq, FINE, 64, HORIZON, n_groups=6)
-    jp = RetentionExpiryJob(spark, e_par, FINE, 64, HORIZON, n_groups=6)
-    js.run(fine)
-    jp.run(fine, parallelism=4)
+        assert ma[k] == mb[k], k
+    # the same for expiry
+    e_a = tmp_path_factory.mktemp("exp_det_a")
+    e_b = tmp_path_factory.mktemp("exp_det_b")
+    ja = RetentionExpiryJob(spark, e_a, FINE, 64, HORIZON, n_groups=6)
+    jb = RetentionExpiryJob(spark, e_b, FINE, 64, HORIZON, n_groups=6)
+    ja.run(fine)
+    jb.run(fine)
     cols = ["doc_id", "source", "bucket", "cnt", "sum_v", "sumsq",
             "min_v", "max_v"]
-    assert (sorted(map(tuple, js.result().select(*cols).collect()))
-            == sorted(map(tuple, jp.result().select(*cols).collect())))
-    assert js.metrics() == {**jp.metrics(),
-                            "elapsed_sec": js.metrics()["elapsed_sec"]}
+    assert (sorted(map(tuple, ja.result().select(*cols).collect()))
+            == sorted(map(tuple, jb.result().select(*cols).collect())))
+    assert ja.metrics() == {**jb.metrics(),
+                            "elapsed_sec": ja.metrics()["elapsed_sec"]}
 
 
 def test_compress_random_configs_match_model(spark, tmp_path_factory):
@@ -277,17 +276,14 @@ def test_binding_and_validation(spark, fine, tmp_path_factory):
                                 n_groups=2)
     with pytest.raises(ValueError, match="fresh base dir"):
         job3.run(fine)
-    # no stored watermark table by design
-    with pytest.raises(NotImplementedError, match="derivable"):
-        job.watermarks()
 
 
 def test_store_file_counts_bounded(spark, fine, tmp_path_factory):
-    """The write layout must bound each store to ~files_per_group files
-    per commit group (guide §6 small-files defeat): without the layout
-    repartition every hive write fanned shuffle-partitions x n_groups
-    tiny files and each later scan paid a task + Python roundtrip per
-    couple of files."""
+    """The write layout must bound each store to ~one file per commit
+    group (guide §6 small-files defeat): without the layout repartition
+    every hive write fans shuffle-partitions x n_groups tiny files and
+    each later scan pays a task + Python roundtrip per couple of
+    files."""
     import glob
 
     base = tmp_path_factory.mktemp("compress_layout")
@@ -296,10 +292,9 @@ def test_store_file_counts_bounded(spark, fine, tmp_path_factory):
     job.run(fine)
     for store in ("fine_staged", "head", "segments"):
         files = glob.glob(str(base / store / "grp=*" / "*.parquet"))
-        # a (grp, doc-hash) pair can collide into a neighbour partition,
-        # so allow a small factor over the n_groups * files_per_group
-        # target, never the old ~shuffle_partitions x n_groups blowup
-        assert 0 < len(files) <= 3 * job.n_groups * job.files_per_group, (
+        # allow a small factor over the one-file-per-group target, never
+        # the ~shuffle_partitions x n_groups blowup
+        assert 0 < len(files) <= 3 * job.n_groups, (
             store, len(files))
     # round-trip identity still holds on the compacted layout
     assert _rows(job.read_fine()) == _rows(fine)

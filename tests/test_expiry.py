@@ -14,7 +14,8 @@ from matrixprofiler_spark.operators.rollup import (
     retention_policy,
 )
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
-from matrixprofiler_spark.streaming.expiry import RetentionExpiryJob, read_manifest
+from matrixprofiler_spark.streaming.commit import fingerprint, read_manifest
+from matrixprofiler_spark.streaming.expiry import RetentionExpiryJob
 
 FINE, COARSE, HORIZON = 16, 64, 32
 
@@ -155,16 +156,16 @@ def test_base_dir_binds_input_and_policy(spark, fine, tmp_path_factory):
 
 
 def test_torn_staging_resumes(spark, fine, tmp_path_factory):
-    """Crash between the fingerprint write and the staged-data write (the
-    fp-first commit order's only gap) must RESTAGE on the next run, not
-    brick the base dir."""
+    """A fingerprint without a staged _SUCCESS (a restaging overwrite
+    that died mid-write) must RESTAGE on the next run, not brick the base
+    dir."""
     base = tmp_path_factory.mktemp("expiry_torn")
     job = RetentionExpiryJob(spark, base, FINE, COARSE, HORIZON, n_groups=2)
     # simulate the torn state: fingerprint present, no staged _SUCCESS
     import json as _json
 
     (base / "input_fingerprint.json").write_text(
-        _json.dumps(job.input_fingerprint(fine)))
+        _json.dumps(fingerprint(fine)))
     assert not (base / "fine_staged" / "_SUCCESS").exists()
     job.run(fine)  # restages and completes
     assert len(job.completed_groups()) == 2

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from matrixprofiler_spark.operators.rollup import finest_rollup, with_derived_stats
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
-from matrixprofiler_spark.streaming.checkpoint import RollupJob, read_manifest
+from matrixprofiler_spark.streaming.checkpoint import RollupJob
+from matrixprofiler_spark.streaming.commit import read_manifest
 
 
 @pytest.fixture(scope="module")
@@ -116,6 +117,21 @@ def test_same_shape_different_tokens_is_rejected(spark, tokens, tmp_path):
         job2.stage_input(perturbed)
 
 
+def test_duplicated_rows_do_not_alias(spark, tokens, tmp_path):
+    """{A, B, B} and {A, C, C} have the same row count, and under a
+    bit_xor hash the same hash too (each duplicated pair cancels): a
+    resume against committed work for one must reject the other, never
+    serve its stale staged copy."""
+    a, b, c = tokens.orderBy("doc_id").limit(3).collect()
+    x = spark.createDataFrame([a, b, b], tokens.schema)
+    y = spark.createDataFrame([a, c, c], tokens.schema)
+    job = RollupJob(spark, tmp_path, n_groups=2)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        job.run(x, fail_after=1)
+    with pytest.raises(ValueError, match="different input"):
+        RollupJob(spark, tmp_path, n_groups=2).run(y)
+
+
 def test_manifest_records_input_fingerprint(spark, tokens, tmp_path):
     job = RollupJob(spark, tmp_path, n_groups=2)
     job.run(tokens)
@@ -189,15 +205,12 @@ def test_iceberg_kill_and_resume(spark, tokens, tmp_path):
 
 
 def test_fingerprint_recipe_change_is_distinguished(spark, tokens, tmp_path):
-    """Recipe-tag semantics: (a) a dir whose staged VALUES match under
-    the current formula resumes fine regardless of its recipe tag (a
-    same-formula build that predates the tag must not be spuriously
-    invalidated) and gets re-stamped; (b) when values differ AND the tag
-    differs, the error names the input-vs-formula ambiguity instead of
-    asserting 'different input'."""
+    """Recipe-tag semantics: when values differ AND the tag differs, the
+    error names the input-vs-formula ambiguity instead of asserting
+    'different input'."""
     import json
 
-    from matrixprofiler_spark.streaming.checkpoint import FP_RECIPE
+    from matrixprofiler_spark.streaming.commit import FP_RECIPE
 
     job = RollupJob(spark, tmp_path, n_groups=2)
     job.run(tokens)
@@ -205,14 +218,7 @@ def test_fingerprint_recipe_change_is_distinguished(spark, tokens, tmp_path):
     good = json.loads(fp_path.read_text())
     assert good["recipe"] == FP_RECIPE  # staged dirs carry the version
 
-    # (a) matching values under an old/missing tag -> accepted + re-stamped
-    pre_tag = {k: v for k, v in good.items() if k != "recipe"}
-    fp_path.write_text(json.dumps(pre_tag))
-    job2 = RollupJob(spark, tmp_path, n_groups=2)
-    assert job2.run(tokens) == []  # all groups already committed
-    assert json.loads(fp_path.read_text())["recipe"] == FP_RECIPE
-
-    # (b) differing values + differing tag -> the ambiguity error
+    # differing values + differing tag -> the ambiguity error
     bad = dict(good, h=good["h"] ^ 1, recipe=FP_RECIPE - 1)
     fp_path.write_text(json.dumps(bad))
     job3 = RollupJob(spark, tmp_path, n_groups=2)
@@ -230,7 +236,7 @@ def test_iceberg_commit_contract_on_session_catalog(spark, tokens, tmp_path,
     real body runs under test: existence + stale-partition shape check,
     create-vs-replace decision, snapshot-id lineage into manifests,
     kill-and-resume skipping committed groups, result() serving from the
-    table and rejecting unknown stages."""
+    table."""
     from matrixprofiler_spark.streaming import checkpoint as cp
 
     table = "spark_catalog.default.rollup_contract_t"
@@ -277,13 +283,6 @@ def test_iceberg_commit_contract_on_session_catalog(spark, tokens, tmp_path,
     got = sorted(map(tuple, job2.result().collect()))
     ref = sorted(map(tuple, ref_job.result().collect()))
     assert got == ref
-    # unknown stage in Iceberg mode is an error, never wrong-stage data —
-    # at BOTH layers: result() (read) and run() (refused BEFORE any
-    # commit could clobber the table's partitions)
-    with pytest.raises(ValueError, match="rollup_1m"):
-        job2.result(stage="rollup_1h")
-    with pytest.raises(ValueError, match="rollup_1m"):
-        job2.run(tokens, stage="rollup_1h")
 
     # the stale-partition shape check fires for a smaller regrouping
     job3 = SessionCatalogJob(spark, tmp_path / "base3", n_groups=2,
