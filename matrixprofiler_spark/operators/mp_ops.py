@@ -275,8 +275,11 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
     # near-empty sliver chunk (which would pair with EVERY other chunk of
     # its doc, paying full tile setup + Arrow transfer of the partner
     # array for a handful of windows); results are chunk-invariant
-    chunks = chunk_tokens(tokens_df.filter(F.size("tokens") >= 2 * w), w,
-                          chunk_len, equalize=True)
+    # chunk_tokens slices by n_tok, and the census below filters on the
+    # same predicate, so the tile count it estimates is the one chunked
+    long_enough = F.col("n_tok") >= 2 * w
+    chunks = chunk_tokens(tokens_df.filter(long_enough), w, chunk_len,
+                          equalize=True)
     a = chunks.select(
         "doc_id", F.col("chunk_off").alias("a_off"), F.col("tokens").alias("a_tok")
     )
@@ -293,15 +296,16 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
         # pruned) and replicates chunk_tokens' per-doc chunk count, so
         # it costs one metadata-grade aggregate; the caller's
         # num_partitions stays the upper bound (the skew/scale defense
-        # at cluster size), defaultParallelism*2 the lower bound.
+        # at cluster size), one wave (defaultParallelism, see
+        # plans/partitioning.py) the lower bound.
         nw = F.col("n_tok").cast("double") - float(w - 1)
         c = F.greatest(F.ceil(nw / float(chunk_len)), F.lit(1)).cast("double")
         n_tiles = (
-            tokens_df.filter(F.col("n_tok") >= 2 * w)
+            tokens_df.filter(long_enough)
             .agg(F.sum(c * (c + 1.0) / 2.0))
             .collect()[0][0]
         ) or 0.0
-        floor_parts = 2 * tokens_df.sparkSession.sparkContext.defaultParallelism
+        floor_parts = tokens_df.sparkSession.sparkContext.defaultParallelism
         np_eff = int(min(num_partitions,
                          max(int(np.ceil(n_tiles / TILES_PER_TASK)),
                              min(num_partitions, floor_parts), 1)))

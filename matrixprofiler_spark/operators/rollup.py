@@ -59,8 +59,13 @@ ROLLUP_SCHEMA = T.StructType(
 
 def salted(df: DataFrame, num_partitions: int) -> DataFrame:
     """Hash repartition on (source, doc_id) — defeats token-length skew by
-    spreading docs uniformly; partition count should be >= 4x cores so
-    AQE/stragglers even out the zipf length tail.
+    spreading docs uniformly. For a Python stage, take the count from
+    ``plans.plan_partitions``: one wave (cores) unless memory needs more.
+    Each Python task pays ~0.3 s before its first row (PySpark's
+    worker re-reads the zip archives' directories in
+    ``importlib.invalidate_caches()`` at every task start, CPython 3.11),
+    so extra waves only multiply that cost; offset chunking, not more
+    partitions, is what evens out the zipf length tail.
 
     Hashing the natural high-cardinality key directly keeps every output
     partition populated. The previous pmod(xxhash64, n) synthetic salt had

@@ -1,8 +1,17 @@
 """Partitioning plan: sizes the salted-hash fan-out and offset-chunking for
 a tokens corpus so that (a) every partition's token mass fits comfortably in
 executor memory, (b) the zipf length tail cannot pin a straggler, and
-(c) there are enough partitions for 4x-wave scheduling at the target
-parallelism (the knobs the north_rule says must be explicit).
+(c) a per-doc Python stage runs as at most one wave of tasks.
+
+One wave: every task that crosses into Python pays a fixed cost before it
+sees a row. PySpark's worker calls ``importlib.invalidate_caches()`` at the
+start of each task, and on CPython 3.11 that re-reads the directory of
+``pyspark.zip`` once for each of its 16 zipimporters. Measured on a 4-core
+VM: 0.28-0.32 s per task, ~0.16 s of it in that call
+(``tools/py_task_cost.py`` re-measures both on any host).
+Offset chunking already caps the largest unit of work, so extra waves buy
+no balance; they only make each slot pay that cost once more per wave.
+The fan-out is therefore ``max(memory bound, cores)``.
 
 The inputs come from cheap corpus stats (count + sum/max of n_tok — one
 aggregate over table metadata or a scan), so the plan can be computed before
@@ -37,7 +46,6 @@ def plan_partitions(
     cores: int,
     mem_per_task_bytes: int = 512 * 2**20,
     bytes_per_token: int = 32,   # int32 + per-window float64 stats headroom
-    waves: int = 4,
 ) -> PartitionPlan:
     """Pick partition counts from corpus stats.
 
@@ -45,12 +53,12 @@ def plan_partitions(
     * straggler bound: one partition's work <= ~2x the mean even if it
       draws several max-length docs -> chunk docs longer than the target
       partition mass / 8 (chunking also caps the per-kernel-call allocation);
-    * scheduling bound: at least ``waves`` * cores partitions.
+    * scheduling bound: one wave, ``cores`` partitions, unless the memory
+      bound asks for more (see the module docstring).
     """
     mem_tokens = max(1, mem_per_task_bytes // bytes_per_token)
     by_mem = -(-total_tokens // mem_tokens)  # ceil
-    by_waves = waves * cores
-    num_partitions = max(by_mem, by_waves)
+    num_partitions = max(by_mem, cores)
     target = max(1, total_tokens // num_partitions)
     chunk_len = None
     if max_tokens > max(4096, target // 8):

@@ -62,6 +62,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import __version__
 
@@ -183,7 +184,7 @@ class GroupCommit:
             fp = self._bind(fingerprint(df))
             if old == fp:
                 self.fp = fp
-                return self.spark.read.parquet(str(self.staged))
+                return self.read(self.staged, df.schema)
             if self.completed_groups():
                 if old.get("recipe") != FP_RECIPE:
                     raise ValueError(
@@ -214,7 +215,7 @@ class GroupCommit:
          .parquet(str(self.staged)))
         self.fp = self._bind(_fp(obs.get))
         write_json(fp_path, self.fp)
-        return self.spark.read.parquet(str(self.staged))
+        return self.read(self.staged, df.schema)
 
     # ------------------------------------------------------------ writes
 
@@ -290,6 +291,17 @@ class GroupCommit:
         return batch
 
     # ----------------------------------------------------------- reading
+
+    def read(self, root: str | Path, schema: T.StructType) -> DataFrame:
+        """The store under ``root``, written from rows of ``schema`` and
+        partitioned by group, read with the schema it was written with:
+        no schema-inference job. ``grp`` comes last, as the int that
+        partition inference gives. The field list is a fresh one:
+        ``StructType.add`` appends in place and ``StructType(fields)``
+        shares the caller's list, so either would change ``schema``."""
+        full = T.StructType([*schema.fields,
+                             T.StructField("grp", T.IntegerType(), True)])
+        return self.spark.read.schema(full).parquet(str(root))
 
     def require_committed(self) -> None:
         missing = sorted(set(range(self.n_groups))

@@ -212,7 +212,11 @@ class CompressionPolicyJob:
                 f"job stores exactly {FINE_COLS} (a single-tier store — "
                 "constant columns like `tier` are the caller's to re-attach)"
             )
-        return self.store.stage(fine.select(*FINE_COLS))
+        # the head store keeps the row form the decoded segments have, so
+        # both read back with one declared schema
+        return self.store.stage(fine.select(*[
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in _FINE_OUT_SCHEMA.fields]))
 
     def run(self, fine: DataFrame, fail_after: int | None = None) -> list[int]:
         """Compress every incomplete group in ONE data pass: head and
@@ -312,7 +316,7 @@ class CompressionPolicyJob:
     def head(self) -> DataFrame:
         """Recent rows still in row form (full commit required)."""
         self.store.require_committed()
-        return self.spark.read.parquet(str(self.base / "head")).drop("grp")
+        return self.store.read(self.base / "head", _FINE_OUT_SCHEMA).drop("grp")
 
     def segments(self, bucket_min: int | None = None,
                  bucket_max: int | None = None,
@@ -324,7 +328,7 @@ class CompressionPolicyJob:
         whose value zone map proves no row inside can reach the threshold
         (``v_max`` is the max over the segment's ``max_v`` rows)."""
         self.store.require_committed()
-        seg = self.spark.read.parquet(str(self.base / "segments")).drop("grp")
+        seg = self.store.read(self.base / "segments", SEGMENT_SCHEMA).drop("grp")
         if bucket_min is not None:
             seg = seg.filter(F.col("b_max") >= int(bucket_min))
         if bucket_max is not None:
@@ -342,10 +346,13 @@ class CompressionPolicyJob:
         or a ``max_v`` threshold, segment pruning (chunk exclusion /
         value zone map) happens before decode and the exact row filter
         after."""
-        cold = self.segments(bucket_min, bucket_max, max_v_at_least) \
-            .mapInPandas(_decode_segments, schema=_FINE_OUT_SCHEMA)
-        head = self.head().select(*FINE_COLS)
-        out = head.unionByName(cold.select(*FINE_COLS))
+        # one wave of decode tasks (plans/partitioning.py): the segment
+        # scan splits by file layout, and every split would pay a Python
+        # task's fixed cost to decode a few segments
+        cold = (self.segments(bucket_min, bucket_max, max_v_at_least)
+                .coalesce(self.spark.sparkContext.defaultParallelism)
+                .mapInPandas(_decode_segments, schema=_FINE_OUT_SCHEMA))
+        out = self.head().unionByName(cold)
         if bucket_min is not None:
             out = out.filter(F.col("bucket") >= int(bucket_min))
         if bucket_max is not None:

@@ -188,7 +188,8 @@ class RetentionExpiryJobMulti:
                 drop=n_cols)
             after = {c: dict.fromkeys(batch, 0) for c in n_cols}
             if any(before["n0"].values()):
-                wm_c = (self.spark.read.parquet(str(wm_root))
+                wm_c = (self.store.read(wm_root,
+                                        wm.drop("grp", *n_cols).schema)
                         .where(in_batch).drop("grp"))
                 # per-tier keep predicate, dispatched on tier_idx in ONE
                 # pass — a single join + filter + write, not T jobs; the

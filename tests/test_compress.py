@@ -298,3 +298,50 @@ def test_store_file_counts_bounded(spark, fine, tmp_path_factory):
             store, len(files))
     # round-trip identity still holds on the compacted layout
     assert _rows(job.read_fine()) == _rows(fine)
+
+
+def _plan_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_range_read_is_one_wave_without_schema_jobs(spark, fine,
+                                                    tmp_path_factory):
+    """A range read runs as two Spark jobs (the count's map and result
+    stages): the stores are read with the schema the job wrote (the one
+    inference gives), so no schema-inference job runs, and the segment
+    decode runs as at most one wave of Python tasks, however many splits
+    the segment scan has. The small split size gives each of the 8
+    segment files its own split, as a store of large files would."""
+    base = tmp_path_factory.mktemp("compress_wave")
+    job = CompressionPolicyJob(spark, base, FINE, CHUNK, HORIZON, n_groups=8)
+    job.run(fine)
+    # the declared read schemas are the ones inference would give
+    for store, df in (("head", job.head()), ("segments", job.segments()),
+                      ("fine_staged", job.stage_input(fine).drop("grp"))):
+        inferred = spark.read.parquet(str(base / store)).drop("grp")
+        assert df.schema == inferred.schema, store
+    sc = spark.sparkContext
+    group = "test_range_read_is_one_wave"
+    split_conf = "spark.sql.files.maxPartitionBytes"
+    split_size = spark.conf.get(split_conf)
+    spark.conf.set(split_conf, "1m")
+    try:
+        sc.setJobGroup(group, "read_fine range read")
+        try:
+            got = job.read_fine(bucket_min=2, bucket_max=5)
+            n = got.count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        decode = [nd for nd in _plan_nodes(
+            got._jdf.queryExecution().executedPlan())
+            if nd.nodeName() == "MapInPandas"]
+        assert len(decode) == 1
+        splits = decode[0].child().execute().getNumPartitions()
+    finally:
+        spark.conf.set(split_conf, split_size)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert splits <= sc.defaultParallelism
+    assert n == fine.where(F.col("bucket").between(2, 5)).count()

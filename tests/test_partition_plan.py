@@ -6,10 +6,21 @@ from matrixprofiler_spark.plans import plan_partitions
 
 
 def test_small_corpus_scheduling_bound():
+    # memory bound: ceil(66M tokens * 32 B / 512 MiB) = 4 partitions, below
+    # the cores, so the plan is one wave: one partition per core
     p = plan_partitions(n_docs=20_000, total_tokens=66_000_000,
                         max_tokens=16_384, cores=32)
-    assert p.num_partitions >= 4 * 32  # at least 4 waves
+    assert p.num_partitions == 32
     assert p.spark_confs()["spark.sql.adaptive.enabled"] == "true"
+
+
+def test_memory_bound_wins_over_cores():
+    # 1G tokens * 32 B = 32 GiB of task memory: 64 partitions of 512 MiB,
+    # more than the 8 cores
+    p = plan_partitions(n_docs=100_000, total_tokens=2**30,
+                        max_tokens=16_384, cores=8)
+    assert p.num_partitions == 64
+    assert p.target_partition_tokens * 32 <= 512 * 2**20
 
 
 def test_large_corpus_memory_bound():
