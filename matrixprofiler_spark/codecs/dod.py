@@ -341,7 +341,8 @@ def dod_decode(data: bytes) -> np.ndarray:
     if n == 1:
         return out
     delta = np.uint64(r.read(64)).astype(np.int64)
-    out[1] = out[0] + delta
+    with np.errstate(over="ignore"):  # int64 wraparound mirrors encode
+        out[1] = out[0] + delta
     for i in range(2, n):
         if r.read1() == 0:
             dod = 0
@@ -353,7 +354,7 @@ def dod_decode(data: bytes) -> np.ndarray:
             dod = r.read(12) - 2047
         else:
             dod = np.uint64(r.read(64)).astype(np.int64)
-        with np.errstate(over="ignore"):  # int64 wraparound mirrors encode
+        with np.errstate(over="ignore"):
             delta = delta + dod
             out[i] = out[i - 1] + delta
     return out

@@ -59,12 +59,6 @@ def _declare(lib: ctypes.CDLL) -> ctypes.CDLL:
     D = ctypes.POINTER(ctypes.c_double)
     I = ctypes.POINTER(ctypes.c_int)
     L = ctypes.c_long
-    lib.mpx_fused.argtypes = [D, D, D, D, D, D, L, L, L, L]
-    lib.mpx_fused.restype = None
-    lib.mpx_merge.argtypes = [D, D, I, L, L, L, L]
-    lib.mpx_merge.restype = None
-    lib.mpx_cc0.argtypes = [D, D, D, D, L, L, L]
-    lib.mpx_cc0.restype = None
     LL = ctypes.POINTER(ctypes.c_longlong)
     U8 = ctypes.POINTER(ctypes.c_ubyte)
     lib.tile_minima.argtypes = [LL, LL, D, D, D, D, U8, U8,

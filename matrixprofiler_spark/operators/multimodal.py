@@ -1,12 +1,12 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` payloads with
-typed metadata, processed by Arrow-batched kernels over ``mapInPandas``.
+"""Media faces: image/audio rows as opaque ``binary`` payloads with typed
+metadata, reduced to features by Arrow-batched kernels over ``mapInPandas``.
 
-The container has no image/audio codecs, so the DECODE step is stubbed —
-``decode_image`` raises NotImplementedError unless ``fake=True``, in which
-case a deterministic fake decoder (seeded by the payload digest) produces
-pixel arrays of the declared shape. Everything around the stub — schema,
-batch shape, partitioning, UDF signatures, feature extraction on the
-decoded arrays — is real and tested (tests/test_multimodal.py).
+The media table is derived from the documents table (``media_from_documents``)
+and decoded by one closed-form rule: the payload bytes, repeated row-major
+to the declared sample count (``_tile``). No image or audio format is
+parsed. Because an ANSI-SQL engine can re-derive the same bytes
+positionally, the two faces (``image_features_exact``,
+``audio_features_exact``) hash-match their DuckDB oracles.
 
 Schema of a media table:
     media_id: string, kind: string ('image'|'audio'), payload: binary,
@@ -16,7 +16,6 @@ Schema of a media table:
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import numpy as np
@@ -25,241 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("channels", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_samples", T.IntegerType(), True),
-                ]
-            ),
-            False,
-        ),
-    ]
-)
 
-
-def synth_media_df(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table: payload = pseudo-random bytes whose
-    digest seeds the fake decoder (so decode is reproducible anywhere)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for idx in b["id"].tolist():
-                rng = np.random.Generator(np.random.Philox(key=seed, counter=[1, 0, 0, idx]))
-                if idx % 2 == 0:
-                    w, h, c = int(rng.integers(16, 64)), int(rng.integers(16, 64)), 3
-                    payload = rng.integers(0, 256, size=256, dtype=np.uint8).tobytes()
-                    rows.append((f"img_{idx:06d}", "image", payload,
-                                 (w, h, c, None, None)))
-                else:
-                    sr, ns = 16000, int(rng.integers(1600, 16000))
-                    payload = rng.integers(0, 256, size=256, dtype=np.uint8).tobytes()
-                    rows.append((f"aud_{idx:06d}", "audio", payload,
-                                 (None, None, None, sr, ns)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return spark.range(0, n, 1, 4).mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def decode_image(payload: bytes, width: int, height: int, channels: int,
-                 fake: bool = False, mode: str = "philox") -> np.ndarray:
-    """Decode an image payload.
-
-    REAL paths: BMP (24-bit uncompressed), PNG (8-bit gray/RGB/palette/
-    GA/RGBA, all five row filters, CRC-checked — DEFLATE via the stdlib
-    zlib) and JPEG (sequential SOF0/SOF1 AND progressive SOF2, any
-    chroma sampling, restart intervals — pure-Python Huffman + matrix
-    IDCT, codecs/jpeg.py) are parsed by in-repo dependency-free codecs,
-    magic-byte detected, no flag needed. Arithmetic-coded JPEG refuses
-    loudly.
-
-    ``fake=True`` yields a deterministic uint8 array of the declared
-    shape for other payloads: mode='philox' seeds a counter RNG from
-    the payload digest; mode='tile' repeats the payload bytes row-major
-    (the closed-form decoder any engine can replicate — the oracle
-    face)."""
-    # 2-byte magic alone is weak vs arbitrary binary payloads; also require
-    # the BMP header's file-size field to match before routing to the codec
-    if (payload[:2] == b"BM" and len(payload) >= 6
-            and int.from_bytes(payload[2:6], "little") == len(payload)):
-        from ..codecs.media import parse_bmp
-
-        return parse_bmp(payload)
-    from ..codecs.media import PNG_SIG
-
-    img = None
-    if payload[: len(PNG_SIG)] == PNG_SIG:  # 8-byte magic: unambiguous
-        from ..codecs.media import parse_png
-
-        img = parse_png(payload)
-    elif payload[:3] == b"\xFF\xD8\xFF":  # JPEG SOI + first marker
-        from ..codecs.jpeg import parse_jpeg
-
-        img = parse_jpeg(payload)
-    if img is not None:
-        # normalize to the (h, w, 3) RGB contract every other decode
-        # path returns (the feature kernels reduce over axis 2): gray ->
-        # replicate to 3 channels, gray+alpha/RGBA -> drop alpha
-        if img.ndim == 2:
-            return np.repeat(img[:, :, None], 3, axis=2)
-        if img.shape[2] == 2:
-            return np.repeat(img[:, :, :1], 3, axis=2)
-        if img.shape[2] == 4:
-            return np.ascontiguousarray(img[:, :, :3])
-        return img
-    if not fake:
-        raise NotImplementedError(
-            "BMP/PNG/baseline-JPEG decode natively; other image formats "
-            "are not supported in this environment — pass fake=True for "
-            "the deterministic test decoder"
-        )
-    n = height * width * channels
-    if mode == "tile":
-        b = np.frombuffer(payload, dtype=np.uint8)
-        reps = -(-n // b.size)
-        return np.tile(b, reps)[:n].reshape(height, width, channels)
-    digest = hashlib.sha256(payload).digest()
-    seed = int.from_bytes(digest[:8], "little")
-    rng = np.random.Generator(np.random.Philox(key=seed))
-    return rng.integers(0, 256, size=(height, width, channels), dtype=np.uint8)
-
-
-def decode_audio(payload: bytes, n_samples: int, fake: bool = False,
-                 mode: str = "philox") -> np.ndarray:
-    """Decode an audio payload to a float32 mono waveform in [-1, 1).
-
-    REAL paths: WAV (RIFF PCM 8/16-bit) and FLAC
-    (CONSTANT/VERBATIM/FIXED/LPC subframes, Rice residuals incl.
-    escapes, all stereo decorrelation modes, CRC-verified — see
-    codecs/flac.py) are parsed by in-repo dependency-free codecs,
-    magic-byte detected; multi-channel mixes down by mean. MP3/OGG
-    would need external entropy/transform codecs, so they remain a
-    declared stub.
-
-    ``fake=True`` for other payloads: mode='tile' maps tiled payload
-    bytes to (b - 128) / 128 — closed-form for the oracle face."""
-    x = None
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        from ..codecs.media import parse_wav
-
-        x, _sr = parse_wav(payload)
-    elif payload[:4] == b"fLaC":
-        from ..codecs.flac import parse_flac
-
-        x, _sr = parse_flac(payload)
-    if x is not None:
-        return x.mean(axis=1, dtype=np.float64).astype(np.float32) \
-            if x.shape[1] > 1 else x[:, 0]
-    if not fake:
-        raise NotImplementedError(
-            "only WAV-PCM and FLAC (fixed-predictor subset) decode "
-            "natively; other audio codecs are not installed in this "
-            "environment — pass fake=True for the deterministic test "
-            "decoder"
-        )
-    if mode == "tile":
-        b = np.frombuffer(payload, dtype=np.uint8)
-        reps = -(-n_samples // b.size)
-        t = np.tile(b, reps)[:n_samples].astype(np.float32)
-        return ((t - 128.0) / 128.0).astype(np.float32)
-    digest = hashlib.sha256(payload).digest()
-    seed = int.from_bytes(digest[:8], "little")
-    rng = np.random.Generator(np.random.Philox(key=seed))
-    return (rng.random(n_samples, dtype=np.float32) * 2 - 1).astype(np.float32)
-
-
-IMAGE_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("mean_lum", T.DoubleType(), False),
-        T.StructField("std_lum", T.DoubleType(), False),
-        T.StructField("resized_8x8", T.ArrayType(T.DoubleType()), False),
-        T.StructField("phash64", T.LongType(), False),
-    ]
-)
-
-
-def image_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
-    """Decode -> grayscale -> resize 8x8 (area mean) -> perceptual-hash-style
-    64-bit fingerprint + luminance stats. All vectorized numpy per batch."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                img = decode_image(bytes(payload), meta["width"], meta["height"],
-                                   meta["channels"], fake=fake_decode)
-                gray = img.astype(np.float64).mean(axis=2)
-                h, w = gray.shape
-                # area-mean resize to 8x8 via integer bucket edges
-                ye = np.linspace(0, h, 9).astype(int)
-                xe = np.linspace(0, w, 9).astype(int)
-                small = np.array(
-                    [
-                        [gray[ye[i]:ye[i + 1], xe[j]:xe[j + 1]].mean() for j in range(8)]
-                        for i in range(8)
-                    ]
-                )
-                bits = (small > np.median(small)).ravel()
-                phash = 0
-                for k, bit in enumerate(bits):
-                    if bit:
-                        phash |= 1 << k
-                # keep int64-signed range
-                phash = phash - (1 << 64) if phash >= (1 << 63) else phash
-                rows.append((mid, float(gray.mean()), float(gray.std()),
-                             small.ravel().tolist(), phash))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
-
-    imgs = media.filter(F.col("kind") == "image")
-    return imgs.mapInPandas(kernel, schema=IMAGE_FEATURES_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("duration_sec", T.DoubleType(), False),
-        T.StructField("rms", T.DoubleType(), False),
-        T.StructField("zero_crossing_rate", T.DoubleType(), False),
-        T.StructField("frame_rms", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
-
-def audio_features(media: DataFrame, frame: int = 1024,
-                   fake_decode: bool = True) -> DataFrame:
-    """Decode -> frame-sample RMS series + global stats (the audio analog of
-    the rollup engine's per-window aggregation)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                x = decode_audio(bytes(payload), meta["n_samples"], fake=fake_decode)
-                sr = meta["sample_rate"]
-                nf = x.size // frame
-                fr = (
-                    np.sqrt((x[: nf * frame].reshape(nf, frame).astype(np.float64) ** 2).mean(axis=1))
-                    if nf
-                    else np.zeros(0)
-                )
-                zc = float(((x[1:] * x[:-1]) < 0).mean()) if x.size > 1 else 0.0
-                rows.append((mid, x.size / sr, float(np.sqrt((x.astype(np.float64) ** 2).mean())),
-                             zc, fr.tolist()))
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
-
-    auds = media.filter(F.col("kind") == "audio")
-    return auds.mapInPandas(kernel, schema=AUDIO_FEATURES_SCHEMA)
+def _tile(payload: bytes, n: int) -> np.ndarray:
+    """``payload``'s bytes repeated end to end and cut to ``n`` (uint8)."""
+    b = np.frombuffer(payload, dtype=np.uint8)
+    return np.tile(b, -(-n // b.size))[:n]
 
 
 def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,16 +78,16 @@ IMAGE_EXACT_SCHEMA = T.StructType(
 
 
 def image_features_exact(media: DataFrame) -> DataFrame:
-    """decode (tile mode) -> luminance stats from EXACT integer sums with
-    the oracle's expression tree: t_p = r+g+b per pixel (int), mean_lum =
+    """tile decode -> luminance stats from EXACT integer sums with the
+    oracle's expression tree: t_p = r+g+b per pixel (int), mean_lum =
     S/(npix*3.0), std_lum = sqrt((S2/9.0)/npix - mean*mean)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = []
             for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                img = decode_image(bytes(payload), meta["width"], meta["height"],
-                                   meta["channels"], fake=True, mode="tile")
+                h, w, c = meta["height"], meta["width"], meta["channels"]
+                img = _tile(bytes(payload), h * w * c).reshape(h, w, c)
                 t = img.astype(np.int64).sum(axis=2).ravel()
                 npix = t.size
                 s = int(t.sum())
@@ -345,17 +114,15 @@ AUDIO_EXACT_SCHEMA = T.StructType(
 
 
 def audio_features_exact(media: DataFrame) -> DataFrame:
-    """decode (tile mode) -> global stats from EXACT integer sums: samples
-    are (b-128)/128 (exact float32), so d = round(x*128) recovers the ints;
-    rms = sqrt((SS/16384.0)/n), zcr = sign-changes/(n-1)."""
+    """tile decode -> global stats from EXACT integer sums over the
+    samples d = b - 128 (the waveform is d/128): rms = sqrt((SS/16384.0)/n),
+    zcr = sign-changes/(n-1)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = []
             for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                x = decode_audio(bytes(payload), meta["n_samples"], fake=True,
-                                 mode="tile")
-                d = np.rint(x.astype(np.float64) * 128.0).astype(np.int64)
+                d = _tile(bytes(payload), meta["n_samples"]).astype(np.int64) - 128
                 n = d.size
                 ss = int((d * d).sum())
                 rms = np.sqrt((ss / 16384.0) / n)

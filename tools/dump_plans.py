@@ -1,14 +1,28 @@
-"""Dump .explain('formatted') plans of the flagship stages to BENCH/PLANS.md
-so plan quality (pruning, pushdown, single-shuffle cascades, broadcast
-joins) is reviewable without running Spark."""
+"""Dump .explain('formatted') plans of the flagship stages, of the
+registered queries below and of the lifecycle stores' serving reads to
+BENCH/PLANS.md, so plan quality (pruning, pushdown, single-shuffle
+cascades, broadcast joins, store file counts) is reviewable without
+running Spark. To compare two trees, run it in each and diff the output.
+
+    python tools/dump_plans.py
+"""
 
 from __future__ import annotations
 
+import glob
 import sys
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+# the registered queries whose plans the r7 optimization round changed
+QUERIES = [
+    "realtime_rollup", "rollup_1m", "text_stats", "sliding_stats_w8",
+    "matrix_profile_w8", "mass_w8", "zero_crossings_w16",
+    "dedup_ngram_jaccard", "dedup_minhash_lsh",
+]
 
 
 def plan_of(df) -> str:
@@ -99,9 +113,43 @@ def main():
     sections[
         "matrix_profile_blobs (per-doc MPX kernel directly on salted scan)"
     ] = matrix_profile_blobs(tok, w=8, max_tokens=256, num_partitions=4)
-    out = ["# Physical plans of the flagship stages",
+    from matrixprofiler_spark.queries import queries
+
+    reg = queries()
+    for name in QUERIES:
+        sections[f"query {name}"] = reg[name](spark, sf)
+
+    # lifecycle stores: run a tiny job, then plan its serving read; each
+    # title carries the file counts of the stores that read scans
+    from matrixprofiler_spark.streaming.compress import CompressionPolicyJob
+    from matrixprofiler_spark.streaming.expiry import RetentionExpiryJob
+
+    fine = finest_rollup(tok, 16).cache()
+    fine.count()
+    tmp = tempfile.TemporaryDirectory(prefix="plans_")
+    c_root, e_root = f"{tmp.name}/compress", f"{tmp.name}/expiry"
+
+    def n_files(store):
+        return len(glob.glob(f"{store}/grp=*/*.parquet"))
+
+    cjob = CompressionPolicyJob(spark, c_root, 16, 64, 16, n_groups=4)
+    cjob.run(fine)
+    ejob = RetentionExpiryJob(spark, e_root, 16, 64, 32, n_groups=4)
+    ejob.run(fine)
+    sections[
+        f"compressed range read, CompressionPolicyJob.read_fine "
+        f"({n_files(c_root + '/segments')} segment files, "
+        f"{n_files(c_root + '/head')} head files)"
+    ] = cjob.read_fine(bucket_min=0, bucket_max=3)
+    sections[
+        f"retention expiry serving read, RetentionExpiryJob.result "
+        f"({n_files(e_root + '/compacted')} compacted files)"
+    ] = ejob.result()
+
+    out = ["# Physical plans of the flagship stages, queries and serving reads",
            "",
-           "Generated by tools/dump_plans.py (`df.explain('formatted')`).",
+           "Generated by `python tools/dump_plans.py` (`df.explain('formatted')`);",
+           "to compare two trees, run it in each and diff this file.",
            ""]
     for title, df in sections.items():
         out.append(f"## {title}\n")
@@ -111,6 +159,7 @@ def main():
     (REPO / "BENCH" / "PLANS.md").write_text("\n".join(out))
     print("wrote BENCH/PLANS.md")
     spark.stop()
+    tmp.cleanup()
 
 
 if __name__ == "__main__":
