@@ -3,9 +3,10 @@
 gorilla: Facebook Gorilla XOR float64 compression (values).
 dod:     Gorilla delta-of-delta integer compression (bucket ids / offsets).
 
-Both are exact (lossless round-trip, including -0.0 and NaN payloads) and
-implemented with vectorized numpy bit assembly — no per-value Python in the
-encode hot path.
+Both are exact (lossless round-trip, including -0.0 and NaN payloads).
+Each codec has one batch encoder: native C (kernels/native_mpx.c) once its
+first-use self-test passes, else the vectorized numpy bit assembly that is
+its reference — no per-value Python in the encode hot path.
 """
 
 from .dod import dod_decode, dod_decode_many, dod_encode, dod_encode_many

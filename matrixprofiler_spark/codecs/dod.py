@@ -13,215 +13,123 @@ Stream layout (bit-aligned, MSB-first):
                      we widen to cover arbitrary offsets)
 
 Field values are stored biased (D + 2^(k-1) - 1 shifted into unsigned k-bit
-range). Encode is vectorized numpy bit assembly; decode is a bit reader.
+range). Encode is one batch encoder — native C once its self-test passes,
+else the vectorized numpy bit assembly that is its reference; decode is a
+bit reader (or the lockstep-vectorized dod_decode_many).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
-from .gorilla import _BitReader, _assemble, _dshift
+from ..kernels import native as _native
+from .gorilla import _BitReader, _dshift, _encode_many, _native_batch, _pack
 
-_BUCKETS = (
-    (7, -63, 64),
-    (9, -255, 256),
-    (12, -2047, 2048),
+# (control prefix, prefix bits, payload bits, lo, hi) per non-zero class;
+# payloads are stored biased by -lo, anything outside all three ranges is
+# '1111' + the full 64 bits
+_CLASSES = (
+    (2, 2, 7, -63, 64),
+    (6, 3, 9, -255, 256),
+    (14, 4, 12, -2047, 2048),
 )
 
 
 def dod_encode(values: np.ndarray) -> bytes:
-    v = np.ascontiguousarray(values, dtype=np.int64)
-    n = v.size
-    if n == 0:
-        return np.uint32(n).tobytes()
-    from .gorilla import _native_codec_lib, _native_dod_many
-
-    lib = _native_codec_lib()
-    if lib is not None:
-        return _native_dod_many(lib, [v], np.array([n], dtype=np.int64))[0]
-    return _dod_encode_numpy(v)
-
-
-def _dod_encode_numpy(v: np.ndarray) -> bytes:
-    n = v.size
-    header = np.uint32(n).tobytes()
-    if n == 0:
-        return header
-
-    def rec(X, bit_off, nbits_after):
-        """One field as a (hi, lo, byte_off) record: X's value ends
-        ``nbits_after`` bits after ``bit_off``."""
-        p = bit_off & 7
-        hi, lo = _dshift(np.asarray(X, dtype=np.uint64), 128 - p - nbits_after)
-        return hi, lo, bit_off >> 3
-
-    z64 = np.zeros(1, dtype=np.int64)
-    if n == 1:
-        return header + _assemble([rec(v[:1].view(np.uint64), z64, 64)], 8).tobytes()
-
-    delta = np.diff(v)
-    dod = np.diff(delta) if n > 2 else np.empty(0, dtype=np.int64)
-    m = dod.size
-
-    zero = dod == 0
-    fit7 = (~zero) & (dod >= -63) & (dod <= 64)
-    fit9 = (~zero) & (~fit7) & (dod >= -255) & (dod <= 256)
-    fit12 = (~zero) & (~fit7) & (~fit9) & (dod >= -2047) & (dod <= 2048)
-    full = (~zero) & (~fit7) & (~fit9) & (~fit12)
-
-    nbits = np.select(
-        [zero, fit7, fit9, fit12, full],
-        [1, 2 + 7, 3 + 9, 4 + 12, 4 + 64],
-    ).astype(np.int64)
-    total = 128 + int(nbits.sum())
-    total_bytes = (total + 7) // 8
-
-    recs = [
-        rec(v[:1].view(np.uint64), z64, 64),
-        rec(delta[:1].astype(np.int64).view(np.uint64), z64 + 64, 64),
-    ]
-    starts = (128 + np.concatenate(([0], np.cumsum(nbits)[:-1]))
-              if m else np.empty(0, np.int64))
-    # control prefix + biased payload per class ('10','110','1110','1111'),
-    # OR-merged into one record per value
-    for (w, lo_b, _hi), mask, prefix, plen in (
-        (_BUCKETS[0], fit7, 2, 2),
-        (_BUCKETS[1], fit9, 6, 3),
-        (_BUCKETS[2], fit12, 14, 4),
-        ((64, None, None), full, 15, 4),
-    ):
-        if not mask.any():
-            continue
-        so = starts[mask]
-        p = so & 7
-        h1, l1 = _dshift(np.full(int(mask.sum()), prefix, dtype=np.uint64),
-                         128 - p - plen)
-        payload = (dod[mask].view(np.uint64) if lo_b is None
-                   else (dod[mask] - lo_b).astype(np.uint64))
-        h2, l2 = _dshift(payload, 128 - p - plen - w)
-        recs.append((h1 | h2, l1 | l2, so >> 3))
-
-    return header + _assemble(recs, total_bytes).tobytes()
+    """Encode an int64 array -> DoD bitstream (bytes), headed by its uint32
+    count (little-endian)."""
+    return dod_encode_many([values])[0]
 
 
 def dod_encode_many(arrays) -> list[bytes]:
-    """Encode MANY int64 series in one vectorized bit-assembly.
+    """Encode MANY int64 series; blob j is ``dod_encode(arrays[j])``.
 
-    Byte-for-byte the same stream per series as :func:`dod_encode`
-    (test-asserted), but amortizes the masked vector passes over the
-    whole batch — the encode hot path of the compression-policy job,
-    where per-call overhead made 60-value segments cost ~0.4 ms each
-    (~6x per segment across the stat columns)."""
-    arrays = [np.ascontiguousarray(a, dtype=np.int64) for a in arrays]
-    all_sizes = np.array([a.size for a in arrays], dtype=np.int64)
-    n_all = len(arrays)
-    if n_all == 0:
-        return []
-    total = int(all_sizes.sum())
-    if total == 0:
-        return [np.uint32(0).tobytes()] * n_all
-    keep = np.nonzero(all_sizes > 0)[0]
-    arrays_ne = [arrays[i] for i in keep]
-    sizes = all_sizes[keep]
-    n_series = sizes.size
+    The native C encoder runs once ``_dod_selftest`` has passed in the
+    process; otherwise ``_dod_numpy`` — one vectorized bit assembly over
+    the whole batch — which is the byte-for-byte reference. This is the
+    encode hot path of the compression-policy job, where per-call
+    overhead made 60-value segments cost ~0.4 ms each."""
+    return _dod_many(arrays, _native.checked("dod", _dod_selftest))
 
-    from .gorilla import _native_codec_lib, _native_dod_many
 
-    lib = _native_codec_lib()
-    if lib is not None:
-        blobs = _native_dod_many(lib, arrays_ne, sizes)
-        out_n: list[bytes] = [np.uint32(0).tobytes()] * n_all
-        for j in range(n_series):
-            out_n[int(keep[j])] = blobs[j]
-        return out_n
+def _dod_many(arrays, lib) -> list[bytes]:
+    """``dod_encode_many`` on a given kernel (None: numpy)."""
+    return _encode_many(arrays, np.int64, _dod_numpy if lib is None
+                        else partial(_native_batch, lib.dod_encode_batch))
 
-    v = np.concatenate(arrays_ne)
+
+def _field(x, off, end):
+    """(hi, lo, byte_off) record of the uint64 field ``x`` whose last bit
+    lands ``end`` bits after bit offset ``off``."""
+    hi, lo = _dshift(x, 128 - (off & 7) - end)
+    return hi, lo, off >> 3
+
+
+def _dod_numpy(v, sizes):
+    total = v.size
     starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-    ends = np.cumsum(sizes)
     within = np.arange(total, dtype=np.int64) - np.repeat(starts, sizes)
-    is0 = within == 0
-    is1 = within == 1
-    with np.errstate(over="ignore"):  # int64 wraparound mirrors dod_encode
+    with np.errstate(over="ignore"):  # int64 wraparound, as in dod_decode
         delta = np.zeros(total, dtype=np.int64)
         delta[1:] = v[1:] - v[:-1]          # garbage at series firsts; masked
         dod = np.zeros(total, dtype=np.int64)
         dod[1:] = delta[1:] - delta[:-1]    # valid only where within >= 2
+    raw = ((within == 0, v), (within == 1, delta))
 
-    rest = ~(is0 | is1)
+    rest = within >= 2
     zero = rest & (dod == 0)
-    fit7 = rest & ~zero & (dod >= -63) & (dod <= 64)
-    fit9 = rest & ~zero & ~fit7 & (dod >= -255) & (dod <= 256)
-    fit12 = rest & ~zero & ~fit7 & ~fit9 & (dod >= -2047) & (dod <= 2048)
-    full = rest & ~zero & ~fit7 & ~fit9 & ~fit12
+    left = rest & ~zero
+    classes = []
+    for prefix, plen, w, lo_b, hi_b in _CLASSES:
+        m = left & (dod >= lo_b) & (dod <= hi_b)
+        left &= ~m
+        classes.append((m, prefix, plen, w, lo_b))
+    classes.append((left, 15, 4, 64, 0))
+    nbits = np.where(rest, 1, 64)
+    for m, _, plen, w, _ in classes:
+        nbits[m] = plen + w
 
-    nbits = np.select(
-        [is0 | is1, zero, fit7, fit9, fit12, full],
-        [64, 1, 2 + 7, 3 + 9, 4 + 12, 4 + 64],
-    ).astype(np.int64)
-    # per-series bit length, padded to a byte boundary so series streams
-    # can be sliced out of the shared buffer independently
-    series_bits = np.asarray(np.add.reduceat(nbits, starts), dtype=np.int64)
-    padded_bits = ((series_bits + 7) // 8) * 8
-    series_bit_starts = np.concatenate(([0], np.cumsum(padded_bits)[:-1]))
-    wb = np.cumsum(nbits) - nbits
-    wb = wb - np.repeat(wb[starts], sizes)
-    offsets = np.repeat(series_bit_starts, sizes) + wb
-
-    total_bytes = int(padded_bits.sum()) // 8
-    byte_starts = series_bit_starts // 8
-    byte_lens = padded_bits // 8
-
-    # assemble in SERIES GROUPS (same cache-bounding as gorilla_encode_many)
-    step = 1 << 18
-    packed = np.empty(total_bytes, dtype=np.uint8)
-    g0 = 0
-    while g0 < n_series:
-        g1 = g0
-        vals = 0
-        while g1 < n_series and (vals == 0 or vals + sizes[g1] <= step):
-            vals += sizes[g1]
-            g1 += 1
-        v0, v1 = int(starts[g0]), int(ends[g1 - 1])
-        gb0 = int(byte_starts[g0])
-        gbytes = int(byte_starts[g1 - 1] + byte_lens[g1 - 1]) - gb0
-        sel = slice(v0, v1)
-        loc_off = offsets[sel] - gb0 * 8
-        v_l, d_l, dod_l = v[sel], delta[sel], dod[sel]
-        recs = []
-
-        def raw64(mask_l, vals_i64):
-            off = loc_off[mask_l]
-            p = off & 7
-            hi, lo = _dshift(vals_i64.astype(np.uint64), 128 - p - 64)
-            recs.append((hi, lo, off >> 3))
-
-        raw64(is0[sel], v_l[is0[sel]])
-        raw64(is1[sel], d_l[is1[sel]])
-        for (w, lo_b, _hi), mask, prefix, plen in (
-            (_BUCKETS[0], fit7, 2, 2),
-            (_BUCKETS[1], fit9, 6, 3),
-            (_BUCKETS[2], fit12, 14, 4),
-            ((64, None, None), full, 15, 4),
-        ):
-            mask_l = mask[sel]
-            if not mask_l.any():
+    def records(sel, off):
+        recs = [_field(x[sel][m[sel]].view(np.uint64), off[m[sel]], 64)
+                for m, x in raw]
+        for m, prefix, plen, w, lo_b in classes:
+            m = m[sel]
+            if not m.any():
                 continue
-            off = loc_off[mask_l]
-            p = off & 7
-            h1, l1 = _dshift(
-                np.full(off.size, prefix, dtype=np.uint64), 128 - p - plen)
-            payload = (dod_l[mask_l].astype(np.uint64) if lo_b is None
-                       else (dod_l[mask_l] - lo_b).astype(np.uint64))
-            h2, l2 = _dshift(payload, 128 - p - plen - w)
-            recs.append((h1 | h2, l1 | l2, off >> 3))
-        packed[gb0 : gb0 + gbytes] = _assemble(recs, gbytes)
-        g0 = g1
+            o = off[m]
+            h1, l1, b = _field(np.full(o.size, prefix, dtype=np.uint64),
+                               o, plen)
+            h2, l2, _ = _field((dod[sel][m] - lo_b).view(np.uint64),
+                               o, plen + w)
+            recs.append((h1 | h2, l1 | l2, b))
+        return recs
 
-    out: list[bytes] = [np.uint32(0).tobytes()] * n_all
-    for j in range(n_series):
-        body = packed[byte_starts[j] : byte_starts[j] + byte_lens[j]].tobytes()
-        out[int(keep[j])] = np.uint32(sizes[j]).tobytes() + body
-    return out
+    return _pack(nbits, starts, sizes, records)
+
+
+def _dod_selftest(lib) -> None:
+    """Raise unless the native encoder reproduces the numpy bytes on
+    adversarial batches: every delta-of-delta class and its edges,
+    int64 wraparound, single values and empty series."""
+    rng = np.random.default_rng(777)
+    cases = [
+        rng.integers(-10, 10, size=50, dtype=np.int64).cumsum(),
+        np.array([7], dtype=np.int64),
+        np.empty(0, dtype=np.int64),
+        np.array([5, 5, 5, 5], dtype=np.int64),
+        # delta-of-deltas on both sides of every class edge
+        np.cumsum(np.cumsum(np.array(
+            [0, 0, 64, -63, -64, 65, 256, -255, -256, 257, 2048, -2047,
+             -2048, 2049], dtype=np.int64))),
+        rng.integers(np.iinfo(np.int64).min // 2, np.iinfo(np.int64).max // 2,
+                     size=40, dtype=np.int64),
+        np.array([np.iinfo(np.int64).min, np.iinfo(np.int64).max, 0]),
+    ]
+    for batch in (cases, cases[:1]):
+        if _dod_many(batch, lib) != _dod_many(batch, None):
+            raise AssertionError("native dod mismatch")
 
 
 def _gather_bits(buf: np.ndarray, bitpos: np.ndarray, k: int) -> np.ndarray:

@@ -12,8 +12,8 @@ Stream layout (bit-aligned, MSB-first):
 The ENCODER always emits the '11' branch (a spec-compliant choice — '10'
 window reuse is an optional encoder optimization), which removes the
 sequential control-flow dependency and lets the whole encode be vectorized
-numpy bit assembly. The DECODER handles both '10' and '11' so any compliant
-Gorilla stream decodes.
+numpy bit assembly (the reference for the native C batch encoder). The
+DECODER handles both '10' and '11' so any compliant Gorilla stream decodes.
 
 Losslessness: XOR round-trips every bit pattern, so -0.0, infinities and
 NaN payloads are preserved exactly (tests/test_codecs.py).
@@ -21,100 +21,75 @@ NaN payloads are preserved exactly (tests/test_codecs.py).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
-_NATIVE_STATE: dict = {"checked": False, "lib": None}
+from ..kernels import native as _native
 
 
-def _native_codec_lib():
-    """Native bitstream encoders (kernels/native_mpx.c), gated behind a
-    byte-equality check against the numpy assemblers on adversarial
-    inputs (NaN payloads, +-0.0, infinities, repeats, random bit
-    patterns). Any failure pins the process to the numpy path."""
-    st = _NATIVE_STATE
-    if not st["checked"]:
-        st["checked"] = True
-        from ..kernels import native as _native
-
-        lib = _native.get_lib()
-        if lib is not None:
-            try:
-                rng = np.random.default_rng(777)
-                cases = [
-                    rng.normal(size=100),
-                    np.repeat(rng.normal(size=10), 7),
-                    np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 1.5, 1.5]),
-                    rng.integers(0, 2 ** 62, size=64,
-                                 dtype=np.int64).view(np.float64),
-                    np.zeros(5),
-                    np.array([1.0]),
-                ]
-                for x in cases:
-                    x = np.ascontiguousarray(x, dtype=np.float64)
-                    a = _gorilla_encode_numpy(x)
-                    b = _native_gorilla_many(
-                        lib, [x], np.array([x.size], dtype=np.int64))[0]
-                    if a != b:
-                        raise AssertionError("native gorilla mismatch")
-                ints = [rng.integers(-10, 10, size=50, dtype=np.int64).cumsum(),
-                        np.array([7], dtype=np.int64),
-                        np.array([5, 5, 5, 5], dtype=np.int64),
-                        rng.integers(np.iinfo(np.int64).min // 2,
-                                     np.iinfo(np.int64).max // 2,
-                                     size=40, dtype=np.int64)]
-                from . import dod as _dod
-
-                for x in ints:
-                    x = np.ascontiguousarray(x, dtype=np.int64)
-                    a = _dod._dod_encode_numpy(x)
-                    b = _native_dod_many(
-                        lib, [x], np.array([x.size], dtype=np.int64))[0]
-                    if a != b:
-                        raise AssertionError("native dod mismatch")
-                st["lib"] = lib
-            except Exception:
-                st["lib"] = None
-    return st["lib"]
+def _encode_many(arrays, dtype, encode) -> list[bytes]:
+    """Batch driver shared by both codecs: ``encode(v, sizes)`` turns the
+    concatenated non-empty series into (packed bodies, byte offsets of
+    each body, length n+1). Every blob is its uint32 count (little-endian)
+    then its body; an empty series is the bare header."""
+    arrays = [np.ascontiguousarray(a, dtype=dtype) for a in arrays]
+    all_sizes = np.array([a.size for a in arrays], dtype=np.int64)
+    out = [np.uint32(0).tobytes()] * len(arrays)
+    keep = np.flatnonzero(all_sizes)
+    if keep.size == 0:
+        return out
+    sizes = all_sizes[keep]
+    v = (arrays[keep[0]] if keep.size == 1  # no copy for one series
+         else np.concatenate([arrays[i] for i in keep]))
+    packed, offs = encode(v, sizes)
+    for j, i in enumerate(keep):
+        out[i] = (np.uint32(sizes[j]).tobytes()
+                  + packed[offs[j] : offs[j + 1]].tobytes())
+    return out
 
 
-def _native_gorilla_many(lib, arrays_ne, sizes) -> list[bytes]:
-    """C-encode non-empty float64 series; returns full blobs (header +
-    body) per series."""
-    from ..kernels import native as _native
-
-    total = int(sizes.sum())
-    v = (np.concatenate(arrays_ne) if len(arrays_ne) > 1
-         else arrays_ne[0]).view(np.uint64)
-    out = np.empty(10 * total + 16 * len(arrays_ne) + 64, dtype=np.uint8)
-    lens = np.empty(len(arrays_ne), dtype=np.int64)
-    sizes_c = np.ascontiguousarray(sizes, dtype=np.int64)
-    lib.gorilla_encode_batch(_native.ptr_u64(v), _native.ptr_ll(sizes_c),
-                             len(arrays_ne), _native.ptr_u8(out),
-                             _native.ptr_ll(lens))
-    offs = np.concatenate(([0], np.cumsum(lens)))
-    return [np.uint32(sizes_c[j]).tobytes()
-            + out[offs[j] : offs[j + 1]].tobytes()
-            for j in range(len(arrays_ne))]
+def _native_batch(encode_batch, v, sizes):
+    """One C batch encoder (kernels/native_mpx.c: gorilla_encode_batch or
+    dod_encode_batch) over the concatenated series ``v``. No field is
+    longer than 77 bits, so 10 bytes per value bound every padded body;
+    the rest of the buffer is slack."""
+    out = np.empty(10 * v.size + 24 * sizes.size + 64, dtype=np.uint8)
+    lens = np.empty(sizes.size, dtype=np.int64)
+    encode_batch(v.ctypes.data_as(encode_batch.argtypes[0]),
+                 _native.ptr_ll(sizes), sizes.size, _native.ptr_u8(out),
+                 _native.ptr_ll(lens))
+    return out, np.concatenate(([0], np.cumsum(lens)))
 
 
-def _native_dod_many(lib, arrays_ne, sizes) -> list[bytes]:
-    """C-encode non-empty int64 series; returns full blobs per series."""
-    from ..kernels import native as _native
-
-    total = int(sizes.sum())
-    v = np.ascontiguousarray(
-        np.concatenate(arrays_ne) if len(arrays_ne) > 1 else arrays_ne[0],
-        dtype=np.int64)
-    out = np.empty(10 * total + 24 * len(arrays_ne) + 64, dtype=np.uint8)
-    lens = np.empty(len(arrays_ne), dtype=np.int64)
-    sizes_c = np.ascontiguousarray(sizes, dtype=np.int64)
-    lib.dod_encode_batch(_native.ptr_ll(v), _native.ptr_ll(sizes_c),
-                         len(arrays_ne), _native.ptr_u8(out),
-                         _native.ptr_ll(lens))
-    offs = np.concatenate(([0], np.cumsum(lens)))
-    return [np.uint32(sizes_c[j]).tobytes()
-            + out[offs[j] : offs[j + 1]].tobytes()
-            for j in range(len(arrays_ne))]
+def _pack(nbits, starts, sizes, records):
+    """Lay out and assemble the numpy encoders' bitstreams. ``nbits`` is
+    each value's field length; every series body is padded to a byte
+    boundary so it can be sliced out of the shared buffer. ``records(sel,
+    off)`` returns the (hi, lo, byte_off) records of the values in slice
+    ``sel``, given their bit offsets ``off`` relative to the group's
+    first byte. Series are assembled in groups of ~2^18 values (at least
+    one series), which keeps the record temporaries and their output
+    cache-sized however many series one Arrow batch packs. Returns
+    (packed, byte offsets of each body, length n+1)."""
+    series_bits = np.add.reduceat(nbits, starts)
+    byte_offs = np.concatenate(([0], np.cumsum((series_bits + 7) // 8)))
+    within = np.cumsum(nbits) - nbits
+    within -= np.repeat(within[starts], sizes)
+    offsets = np.repeat(byte_offs[:-1] * 8, sizes) + within
+    packed = np.empty(int(byte_offs[-1]), dtype=np.uint8)
+    g0 = 0
+    while g0 < sizes.size:
+        g1, vals = g0, 0
+        while g1 < sizes.size and (vals == 0 or vals + sizes[g1] <= 1 << 18):
+            vals += sizes[g1]
+            g1 += 1
+        b0, b1 = int(byte_offs[g0]), int(byte_offs[g1])
+        sel = slice(int(starts[g0]), int(starts[g0]) + vals)
+        packed[b0:b1] = _assemble(records(sel, offsets[sel] - b0 * 8),
+                                  b1 - b0)
+        g0 = g1
+    return packed, byte_offs
 
 
 def _clz64(x: np.ndarray) -> np.ndarray:
@@ -218,49 +193,7 @@ def gorilla_encode(values: np.ndarray) -> bytes:
     """Encode a float64 array -> Gorilla bitstream (bytes).
 
     Header: uint32 count (little-endian), then the bit stream."""
-    v = np.ascontiguousarray(values, dtype=np.float64)
-    n = v.size
-    header = np.uint32(n).tobytes()
-    if n == 0:
-        return header
-    lib = _native_codec_lib()
-    if lib is not None:
-        return _native_gorilla_many(lib, [v],
-                                    np.array([n], dtype=np.int64))[0]
-    return _gorilla_encode_numpy(v)
-
-
-def _gorilla_encode_numpy(v: np.ndarray) -> bytes:
-    n = v.size
-    header = np.uint32(n).tobytes()
-    bits_v = v.view(np.uint64)
-    xor = np.empty(n - 1, dtype=np.uint64) if n > 1 else np.empty(0, dtype=np.uint64)
-    if n > 1:
-        xor[:] = bits_v[1:] ^ bits_v[:-1]
-
-    zero = xor == np.uint64(0)
-    lz = np.minimum(_clz64(xor), 31)  # 5-bit field
-    tz = _ctz64(xor)
-    siglen = np.where(zero, 0, 64 - lz - tz).astype(np.int64)
-
-    # bits per value: 1 for repeats, 2+5+6+siglen otherwise
-    nbits = np.where(zero, 1, 13 + siglen)
-    total = 64 + int(nbits.sum())
-    total_bytes = (total + 7) // 8
-
-    if n > 1:
-        starts = 64 + np.concatenate(([0], np.cumsum(nbits)[:-1]))
-        nz = ~zero
-        meaningful = np.zeros(n - 1, dtype=np.uint64)
-        meaningful[nz] = xor[nz] >> tz[nz].astype(np.uint64)
-        terms = _records(bits_v[:1], np.zeros(1, dtype=np.int64),
-                         lz[nz], siglen[nz], meaningful[nz], starts[nz])
-    else:
-        terms = _records(bits_v[:1], np.zeros(1, dtype=np.int64),
-                         np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-                         np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64))
-
-    return header + _assemble(terms, total_bytes).tobytes()
+    return gorilla_encode_many([values])[0]
 
 
 class _BitReader:
@@ -319,38 +252,24 @@ def gorilla_decode(data: bytes) -> np.ndarray:
 
 
 def gorilla_encode_many(arrays) -> list[bytes]:
-    """Encode MANY float64 series in one vectorized bit-assembly.
+    """Encode MANY float64 series; blob j is ``gorilla_encode(arrays[j])``.
 
-    Produces byte-for-byte the same stream per series as
-    ``gorilla_encode`` (verified in tests), but amortizes the ~25 masked
-    vector passes over the whole batch instead of per series — the encode
-    hot path of the per-doc window-stats kernel.
-    """
-    arrays = [np.ascontiguousarray(a, dtype=np.float64) for a in arrays]
-    all_sizes = np.array([a.size for a in arrays], dtype=np.int64)
-    n_all = len(arrays)
-    if n_all == 0:
-        return []
-    total = int(all_sizes.sum())
-    if total == 0:
-        return [np.uint32(0).tobytes() for _ in arrays]
+    The native C encoder runs once ``_gorilla_selftest`` has passed in the
+    process; otherwise ``_gorilla_numpy`` — one vectorized bit assembly
+    over the whole batch — which is the byte-for-byte reference. This is
+    the encode hot path of the per-doc window-stats kernel."""
+    return _gorilla_many(arrays, _native.checked("gorilla", _gorilla_selftest))
 
-    # work only over non-empty series (an empty series between/after
-    # non-empty ones would otherwise produce out-of-range reduceat starts)
-    keep = np.nonzero(all_sizes > 0)[0]
-    arrays_ne = [arrays[i] for i in keep]
-    sizes = all_sizes[keep]
-    n_series = sizes.size
 
-    lib = _native_codec_lib()
-    if lib is not None:
-        blobs = _native_gorilla_many(lib, arrays_ne, sizes)
-        out_n: list[bytes] = [np.uint32(0).tobytes()] * n_all
-        for j in range(n_series):
-            out_n[int(keep[j])] = blobs[j]
-        return out_n
+def _gorilla_many(arrays, lib) -> list[bytes]:
+    """``gorilla_encode_many`` on a given kernel (None: numpy)."""
+    return _encode_many(arrays, np.float64, _gorilla_numpy if lib is None
+                        else partial(_native_batch, lib.gorilla_encode_batch))
 
-    v = np.concatenate(arrays_ne).view(np.uint64)
+
+def _gorilla_numpy(v, sizes):
+    v = v.view(np.uint64)
+    total = v.size
     starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
     is_first = np.zeros(total, dtype=bool)
     is_first[starts] = True
@@ -360,61 +279,40 @@ def gorilla_encode_many(arrays) -> list[bytes]:
     xor[is_first] = 0  # unused for first elements
 
     zero = (xor == np.uint64(0)) & ~is_first
-    lz = np.minimum(_clz64(xor), 31)
+    lz = np.minimum(_clz64(xor), 31)  # 5-bit field
     tz = _ctz64(xor)
     siglen = np.where(zero | is_first, 0, 64 - lz - tz).astype(np.int64)
-
+    # bits per value: 64 raw first, 1 for repeats, 2+5+6+siglen otherwise
     nbits = np.where(is_first, 64, np.where(zero, 1, 13 + siglen))
-    # per-series bit length, padded to a byte boundary so series streams
-    # can be sliced out of the shared buffer independently
-    series_bits = np.add.reduceat(nbits, starts) if total else np.zeros(0)
-    series_bits = np.asarray(series_bits, dtype=np.int64)
-    padded_bits = ((series_bits + 7) // 8) * 8
-    series_bit_starts = np.concatenate(([0], np.cumsum(padded_bits)[:-1]))
-
-    # bit offset of each value: series start + within-series cumsum
-    within = np.cumsum(nbits) - nbits
-    within = within - np.repeat(within[starts], sizes)
-    offsets = np.repeat(series_bit_starts, sizes) + within
 
     nz = ~zero & ~is_first
     meaningful = np.zeros(total, dtype=np.uint64)
     meaningful[nz] = xor[nz] >> tz[nz].astype(np.uint64)
-    total_bytes = int(padded_bits.sum()) // 8
-    byte_starts = series_bit_starts // 8
-    byte_lens = padded_bits // 8
 
-    # assemble in SERIES GROUPS of ~2^18 values: each group's records only
-    # touch its own byte range (series streams are byte-padded), so both
-    # the bincount temporaries and its output stay cache-sized no matter
-    # how many series one Arrow batch packs.
-    step = 1 << 18
-    packed = np.empty(total_bytes, dtype=np.uint8)
-    ends = np.cumsum(sizes)
-    g0 = 0
-    while g0 < n_series:
-        g1 = g0
-        vals = 0
-        while g1 < n_series and (vals == 0 or vals + sizes[g1] <= step):
-            vals += sizes[g1]
-            g1 += 1
-        v0 = int(starts[g0])
-        v1 = int(ends[g1 - 1])
-        gb0 = int(byte_starts[g0])
-        gbytes = int(byte_starts[g1 - 1] + byte_lens[g1 - 1]) - gb0
-        sel = slice(v0, v1)
-        loc_first = is_first[sel]
-        loc_nz = nz[sel]
-        loc_off = offsets[sel] - gb0 * 8
-        terms = _records(
-            v[sel][loc_first], loc_off[loc_first],
-            lz[sel][loc_nz], siglen[sel][loc_nz],
-            meaningful[sel][loc_nz], loc_off[loc_nz],
-        )
-        packed[gb0 : gb0 + gbytes] = _assemble(terms, gbytes)
-        g0 = g1
-    out: list[bytes] = [np.uint32(0).tobytes()] * n_all
-    for j in range(n_series):
-        body = packed[byte_starts[j] : byte_starts[j] + byte_lens[j]].tobytes()
-        out[int(keep[j])] = np.uint32(sizes[j]).tobytes() + body
-    return out
+    def records(sel, off):
+        first, m = is_first[sel], nz[sel]
+        return _records(v[sel][first], off[first], lz[sel][m],
+                        siglen[sel][m], meaningful[sel][m], off[m])
+
+    return _pack(nbits, starts, sizes, records)
+
+
+def _gorilla_selftest(lib) -> None:
+    """Raise unless the native encoder reproduces the numpy bytes on
+    adversarial batches: NaN payloads, +-0.0, infinities, repeats, random
+    bit patterns, XORs with 30, 31 and more leading zeros (the 5-bit
+    field's cap), single values and empty series."""
+    rng = np.random.default_rng(777)
+    cases = [
+        rng.normal(size=100),
+        1.0 + np.array([0.0, 2.0 ** -20, 2.0 ** -40, 2.0 ** -19, 0.0]),
+        np.repeat(rng.normal(size=10), 7),
+        np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 1.5, 1.5]),
+        np.empty(0),
+        rng.integers(0, 2 ** 62, size=64, dtype=np.int64).view(np.float64),
+        np.zeros(5),
+        np.array([1.0]),
+    ]
+    for batch in (cases, cases[-1:]):
+        if _gorilla_many(batch, lib) != _gorilla_many(batch, None):
+            raise AssertionError("native gorilla mismatch")

@@ -26,14 +26,10 @@ def seqsum(a) -> float:
     return float(np.cumsum(a)[-1])
 
 
-def lsum(a) -> float:
-    """Long-double sequential sum. Rcpp sugar sum()/mean() and R's own
-    sum() accumulate in LDOUBLE (x87 80-bit on linux/x86-64); replicate
-    with np.longdouble so znorm/std match the goldens bit-for-bit."""
-    return float(_lsum_ld(a))
-
-
 def _lsum_ld(a) -> np.longdouble:
+    """Long-double sequential sum. Rcpp sugar mean() and R's own sum()
+    accumulate in LDOUBLE (x87 80-bit on linux/x86-64); replicate with
+    np.longdouble so znorm/std match the goldens bit-for-bit."""
     a = np.asarray(a)
     if a.size == 0:
         return np.longdouble(0.0)

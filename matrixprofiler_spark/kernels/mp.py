@@ -22,7 +22,6 @@ equivalence test, mirroring the reference's own test-algorithms.R:44-52).
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 
@@ -33,9 +32,10 @@ from .window import muinvn
 _F64 = np.float64
 _EPS = np.finfo(np.float64).eps  # DBL_EPSILON
 
-# MPX diagonal-batch working-set budget, in elements (see mpx()): result is
-# bit-identical for any value; loaded-throughput-tuned default.
-_DIAG_BUDGET = int(os.environ.get("MPX_DIAG_BUDGET", str(1 << 17)))
+# Working-set budget, in elements, of one diagonal batch of the numpy MPX
+# path (see _mpx_core): the result is bit-identical for any value; tuned
+# for loaded throughput.
+_DIAG_BUDGET = 1 << 17
 
 
 def _as_f64(x) -> np.ndarray:
@@ -231,39 +231,35 @@ def stamp(data, window_size: int, query=None, exclusion_zone: float = 0.5) -> di
     }
 
 
-_NATIVE_STATE: dict = {"checked": False, "lib": None}
-
-
-def _native_mpx_lib():
-    """The native MPX library, gated behind a byte-equality sanity check
-    against the numpy path (run once per process, on adversarial inputs
-    with exact correlation ties and zero-variance windows). Any failure —
-    no compiler, mismatch, exception — pins the process to numpy."""
-    st = _NATIVE_STATE
-    if not st["checked"]:
-        st["checked"] = True
-        lib = _native.get_lib()
-        if lib is not None:
-            try:
-                rng = np.random.default_rng(12345)
-                cases = [rng.integers(0, 3, size=257).astype(np.float64),
-                         np.tile(np.arange(7.0), 40)]
-                x2 = np.ones(200, dtype=np.float64)
-                x2[50:60] = 3.0
-                cases.append(x2)
-                for x in cases:
-                    for w in (8, 16):
-                        a = _mpx_core(x, w, 0.5, True, True, lib=None)
-                        b = _mpx_core(x, w, 0.5, True, True, lib=lib)
-                        if (a["matrix_profile"].tobytes()
-                                != b["matrix_profile"].tobytes()
-                                or a["profile_index"].tobytes()
-                                != b["profile_index"].tobytes()):
-                            raise AssertionError("native mpx mismatch")
-                st["lib"] = lib
-            except Exception:
-                st["lib"] = None
-    return st["lib"]
+def _mpx_selftest(lib) -> None:
+    """Raise unless the native MPX driver reproduces the numpy bytes on
+    adversarial inputs: exact correlation ties, zero-variance windows, and
+    the production w = 128 at every remainder (plen - exclusion) mod 8, so
+    the 8-, 4- and 1-row groups all run."""
+    rng = np.random.default_rng(12345)
+    x2 = np.ones(200, dtype=np.float64)
+    x2[50:60] = 3.0
+    cases = [(x, w) for x in (rng.integers(0, 3, size=257).astype(np.float64),
+                              np.tile(np.arange(7.0), 40), x2)
+             for w in (8, 16)]
+    # w = 128 (exclusion 65): n = 208 + r leaves 16 + r diagonals. A random
+    # walk whose tail repeats its head from diagonal plen - 8 (or - 4) on
+    # makes the last diagonals the best matches, so the rows of the last
+    # groups decide profile values (measured: every one-row corruption of
+    # the 8-, 4- or 1-row bodies is caught).
+    for r in range(8):
+        for back in (8, 4):
+            x = np.cumsum(rng.normal(size=208 + r))
+            d = x.size - 128 + 1 - back
+            x[d:] = x[: x.size - d]
+            cases.append((x, 128))
+    for x, w in cases:
+        a = _mpx_core(x, w, 0.5, True, True, lib=None)
+        b = _mpx_core(x, w, 0.5, True, True, lib=lib)
+        if (a["matrix_profile"].tobytes() != b["matrix_profile"].tobytes()
+                or a["profile_index"].tobytes()
+                != b["profile_index"].tobytes()):
+            raise AssertionError(f"native mpx mismatch (n={x.size}, w={w})")
 
 
 def mpx(data, window_size: int, exclusion_zone: float = 0.5,
@@ -277,18 +273,20 @@ def mpx(data, window_size: int, exclusion_zone: float = 0.5,
     is replicated bit-for-bit by cumsumming the interleaved term sequence
     [cc0+t1_0, t2_0, t1_1, t2_1, ...] (np.cumsum is strictly sequential).
 
-    Two implementations of the batch inner loop (identical bits, checked
-    at first use by _native_mpx_lib):
-    * native C (kernels/native_mpx.c): one fused product/accumulate/scale
-      pass per diagonal row, four rows interleaved to hide FP add latency,
-      plus the literal sequential merge loop — 5-8x the numpy path
+    Two implementations (identical bits; the native one is used only after
+    _mpx_selftest passes, via native.checked):
+    * native C (kernels/native_mpx.c::mpx_full): one call over all
+      diagonals in groups of 8 rows — a fused product/accumulate/scale
+      pass with the rows' add chains interleaved to hide FP add latency,
+      then the literal sequential merge loop — 5-8x the numpy path
       single-thread (the serial add chain is latency-bound and numpy's
       cumsum runs ~3x below that bound; fusing also removes two full
       memory passes per batch);
-    * numpy fallback: the r7 memory-pass-reduced shape (interleaved-factor
-      single multiply + in-place cumsum + two-multiply scaling).
+    * numpy reference and fallback: diagonal batches sized by
+      _DIAG_BUDGET (interleaved-factor single multiply + in-place cumsum
+      + two-multiply scaling).
     """
-    lib = _native_mpx_lib()
+    lib = _native.checked("mpx", _mpx_selftest)
     return _mpx_core(_as_f64(data), int(window_size), float(exclusion_zone),
                      bool(idxs), bool(euclidean), lib=lib)
 
@@ -312,11 +310,10 @@ def _mpx_core(x, w, ez, idxs, euclidean, lib=None) -> dict:
     # Diagonals are processed in BATCHES — per-row op sequences are
     # untouched by batching, so every cc path (and thus every bit) is
     # identical to the one-diagonal-at-a-time loop; the merge stays
-    # strictly diagonal-ordered (tie semantics). Batch budget in ELEMENTS
-    # (env-tunable for other core counts / cache sizes), tuned UNDER full
-    # 32-worker load where the stage is aggregate-memory-bandwidth-bound —
-    # see OPTIMIZATION_r07.md §3. The result is identical for ANY batch
-    # size; only throughput changes.
+    # strictly diagonal-ordered (tie semantics). The batch budget is tuned
+    # UNDER full 32-worker load, where the stage is aggregate-memory-
+    # bandwidth-bound — see OPTIMIZATION_r07.md §3. The result is identical
+    # for ANY batch size; only throughput changes.
     diag_batch = max(4, min(256, _DIAG_BUDGET // max(plen, 1)))
     arange_p1 = np.arange(plen, dtype=np.int32) + 1
     # Interleaved factor layout shared by both paths: one contiguous

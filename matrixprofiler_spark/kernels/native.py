@@ -1,19 +1,21 @@
-"""On-demand C compilation for the MPX hot loop (guide §1.2 step 2 taken to
-its floor: the per-diagonal two-add recurrence is a serial FP dependency
-chain, and numpy's row-wise cumsum runs ~3x below the chain's latency bound;
-a C loop that interleaves four independent rows hides the add latency and
-fuses the product / accumulate / scale passes into one, cutting both CPU and
-memory traffic for the bench's dominant stage).
+"""On-demand C compilation of the native kernels (kernels/native_mpx.c):
+the MPX whole-kernel driver, the distributed-MP tile minima and the
+Gorilla/DoD batch encoders. Each replaces a numpy loop that runs well
+below its hardware bound — e.g. MPX's per-diagonal two-add recurrence is a
+serial FP dependency chain that numpy's row-wise cumsum runs ~3x below its
+latency bound, while a C loop over interleaved rows hides the add latency
+and fuses the product / accumulate / scale passes into one.
 
 The shared library is compiled once per machine into the system temp dir
 (content-hashed file name, atomic rename — safe under concurrent Spark
-python workers), loaded via ctypes, and ONLY used after a byte-equality
-sanity check against the pure-numpy path (kernels/mp.py performs it on
-first use). Anything failing — no compiler, compile error, load error —
-falls back to the numpy path silently: the numpy path remains the
-reference implementation and is bit-identical by construction.
+python workers) and loaded via ctypes. Each kernel is used ONLY after
+``checked`` has run its byte-equality self-test against the numpy path
+once in the process. Anything failing — no compiler, compile error, load
+error, a self-test mismatch or exception — falls back to that kernel's
+numpy path silently: the numpy paths remain the reference implementations
+and are bit-identical by construction.
 
-Kill switch: set MATRIXPROFILER_NO_NATIVE=1 to force the numpy path.
+Kill switch: set MATRIXPROFILER_NO_NATIVE=1 to force the numpy paths.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from pathlib import Path
 # the host CPU model so a shared temp dir across heterogeneous nodes cannot
 # serve a mismatched binary. -ffp-contract=off in every set forbids FMA
 # contraction, keeping the C FP op sequences IEEE-identical to numpy's
-# (gcc's SLP vectorization across the 4 independent accumulator chains
+# (gcc's SLP vectorization across the independent accumulator chains
 # preserves per-lane op order — measured bit-identical and ~1.8x the -O2
 # scalar build on the MPX kernel).
 _CFLAG_SETS = [
@@ -42,6 +44,7 @@ _CFLAG_SETS = [
 
 _lib = None
 _tried = False
+_checked: dict = {}
 
 
 def _cpu_tag() -> str:
@@ -93,7 +96,7 @@ def get_lib():
 
     Returns the ctypes.CDLL, or None when natively accelerating is not
     possible here (no compiler / compile failed / disabled by env).
-    The caller is responsible for the numeric sanity check.
+    Kernels go through ``checked``, which adds the numeric self-test.
     """
     global _lib, _tried
     if _tried:
@@ -133,6 +136,24 @@ def get_lib():
     except Exception:
         _lib = None
     return _lib
+
+
+def checked(name: str, selftest):
+    """The native library for kernel ``name``, or None for its numpy path.
+
+    On the first call per kernel and process, loads the library and runs
+    ``selftest(lib)``, which raises unless the native kernel reproduces
+    the numpy bytes on that kernel's adversarial cases. Any exception pins
+    this kernel (and only this one) to numpy for the process."""
+    if name not in _checked:
+        lib = get_lib()
+        if lib is not None:
+            try:
+                selftest(lib)
+            except Exception:
+                lib = None
+        _checked[name] = lib
+    return _checked[name]
 
 
 def ptr_d(a):

@@ -1,10 +1,11 @@
-/* Native MPX diagonal-batch kernels (compiled on demand by native.py).
+/* Native kernels (compiled on demand by native.py): the MPX whole-kernel
+ * driver, the distributed-MP tile minima and the Gorilla/DoD encoders.
  *
- * Each function replicates the EXACT FP op sequence of the numpy reference
- * path in kernels/mp.py::mpx — same products, same sequential add order,
- * same (cc * sig) * sg association — so results are bit-identical (the
- * loader refuses the library unless a runtime byte-equality sanity check
- * against the numpy path passes; ffp-contract=off forbids FMA fusion).
+ * The MPX functions replicate the EXACT FP op sequence of the numpy
+ * reference path in kernels/mp.py::mpx — same products, same sequential
+ * add order, same (cc * sig) * sg association — so results are
+ * bit-identical (each kernel is refused unless its first-use byte-equality
+ * self-test against numpy passes; ffp-contract=off forbids FMA fusion).
  *
  * Layouts (see mp.py::mpx):
  *   A[2k]   = df[k],  A[2k+1] = dg[k]          (interleaved cross factors)
@@ -15,119 +16,63 @@
  * and the correlation path is the running sum cc0 + t1_0 + t2_0 + t1_1 ...
  * observed after each t2 (the reference's two-add loop, src/mpx.cpp:944).
  *
- * Rows are processed in groups of 4 with interleaved accumulators so the
- * four independent serial add chains hide FP add latency; per-row op order
- * is untouched (only instruction scheduling ACROSS independent rows
- * changes, which cannot affect any row's bits).
+ * Rows are processed in groups of W (8, then 4, then 1) with one
+ * accumulator per row, so W independent serial add chains hide FP add
+ * latency and one pass over the A/sig/sgp streams serves W diagonals;
+ * per-row op order is untouched (only instruction scheduling ACROSS
+ * independent rows changes, which cannot affect any row's bits).
  */
 #include <stddef.h>
 
-static void row1(const double *A, const double *z, const double *sig,
-                 const double *sg, double cc0, double *c, long maxoff)
+/* Each group body is written once with its width W as a parameter; every
+ * call site passes a literal, so after forced inlining W is a
+ * compile-time constant and the j-loops unroll into W named accumulators
+ * (the unroll pragma makes that hold at -O2 too). */
+#define INLINE static inline __attribute__((always_inline))
+
+INLINE void fused_group(const double *A, const double *Z, const double *sig,
+                        const double *sgp, const double *cc0, double *c_all,
+                        long maxoff, long d, long ldc, const int W)
 {
-    double acc = cc0;
+    const double *z = Z + 2 * d;
+    const double *g = sgp + d;
+    double a[8];
+#pragma GCC unroll 8
+    for (int j = 0; j < W; j++)
+        a[j] = cc0[j];
     for (long k = 0; k < maxoff; k++) {
-        acc += A[2 * k] * z[2 * k];
-        acc += A[2 * k + 1] * z[2 * k + 1];
-        c[k] = (acc * sig[k]) * sg[k];
+        double f1 = A[2 * k], f2 = A[2 * k + 1];
+        double s = sig[k];
+#pragma GCC unroll 8
+        for (int j = 0; j < W; j++)
+            a[j] += f1 * z[2 * j + 2 * k];
+#pragma GCC unroll 8
+        for (int j = 0; j < W; j++)
+            a[j] += f2 * z[2 * j + 2 * k + 1];
+#pragma GCC unroll 8
+        for (int j = 0; j < W; j++)
+            c_all[j * ldc + k] = (a[j] * s) * g[k + j];
     }
 }
 
-void mpx_fused(const double *A, const double *Z, const double *sig,
-               const double *sgp, const double *cc0, double *c_all,
-               long B, long maxoff, long d0, long ldc)
+/* The 8-wide groups halve the stream bytes per pair against 4-wide: no
+ * gain single-thread (four chains already hide the add latency), but the
+ * 32-worker aggregate is stream-bandwidth-bound (measured: per-core rate
+ * drops 748 -> 573M pairs/s from 1 to 32 processes at 4-wide). */
+static void mpx_fused(const double *A, const double *Z, const double *sig,
+                      const double *sgp, const double *cc0, double *c_all,
+                      long B, long maxoff, long d0, long ldc)
 {
     long i = 0;
-    /* 8-wide main loop: one pass over the A/sig/sgp streams serves 8
-     * diagonals instead of 4, halving the stream bytes per pair. That
-     * does nothing single-thread (the four-chain form already hides the
-     * FP add latency) but lifts the 32-worker aggregate, which is
-     * stream-bandwidth-bound at full width (measured: per-core rate
-     * drops 748 -> 573M pairs/s from 1 to 32 processes at 4-wide).
-     * Per-diagonal op order is untouched — each accumulator chain is
-     * independent — so results are bit-identical (gated + pytested). */
-    for (; i + 8 <= B; i += 8) {
-        const double *z0 = Z + 2 * (d0 + i);
-        const double *z1 = z0 + 2;
-        const double *z2 = z0 + 4;
-        const double *z3 = z0 + 6;
-        const double *z4 = z0 + 8;
-        const double *z5 = z0 + 10;
-        const double *z6 = z0 + 12;
-        const double *z7 = z0 + 14;
-        const double *g0 = sgp + d0 + i;
-        double *c0 = c_all + i * ldc;
-        double *c1 = c0 + ldc;
-        double *c2 = c1 + ldc;
-        double *c3 = c2 + ldc;
-        double *c4 = c3 + ldc;
-        double *c5 = c4 + ldc;
-        double *c6 = c5 + ldc;
-        double *c7 = c6 + ldc;
-        double a0 = cc0[i],     a1 = cc0[i + 1];
-        double a2 = cc0[i + 2], a3 = cc0[i + 3];
-        double a4 = cc0[i + 4], a5 = cc0[i + 5];
-        double a6 = cc0[i + 6], a7 = cc0[i + 7];
-        for (long k = 0; k < maxoff; k++) {
-            double f1 = A[2 * k], f2 = A[2 * k + 1];
-            double s = sig[k];
-            a0 += f1 * z0[2 * k];
-            a1 += f1 * z1[2 * k];
-            a2 += f1 * z2[2 * k];
-            a3 += f1 * z3[2 * k];
-            a4 += f1 * z4[2 * k];
-            a5 += f1 * z5[2 * k];
-            a6 += f1 * z6[2 * k];
-            a7 += f1 * z7[2 * k];
-            a0 += f2 * z0[2 * k + 1];
-            a1 += f2 * z1[2 * k + 1];
-            a2 += f2 * z2[2 * k + 1];
-            a3 += f2 * z3[2 * k + 1];
-            a4 += f2 * z4[2 * k + 1];
-            a5 += f2 * z5[2 * k + 1];
-            a6 += f2 * z6[2 * k + 1];
-            a7 += f2 * z7[2 * k + 1];
-            c0[k] = (a0 * s) * g0[k];
-            c1[k] = (a1 * s) * g0[k + 1];
-            c2[k] = (a2 * s) * g0[k + 2];
-            c3[k] = (a3 * s) * g0[k + 3];
-            c4[k] = (a4 * s) * g0[k + 4];
-            c5[k] = (a5 * s) * g0[k + 5];
-            c6[k] = (a6 * s) * g0[k + 6];
-            c7[k] = (a7 * s) * g0[k + 7];
-        }
-    }
-    for (; i + 4 <= B; i += 4) {
-        const double *z0 = Z + 2 * (d0 + i);
-        const double *z1 = z0 + 2;
-        const double *z2 = z0 + 4;
-        const double *z3 = z0 + 6;
-        const double *g0 = sgp + d0 + i;
-        double *c0 = c_all + i * ldc;
-        double *c1 = c0 + ldc;
-        double *c2 = c1 + ldc;
-        double *c3 = c2 + ldc;
-        double a0 = cc0[i], a1 = cc0[i + 1], a2 = cc0[i + 2], a3 = cc0[i + 3];
-        for (long k = 0; k < maxoff; k++) {
-            double f1 = A[2 * k], f2 = A[2 * k + 1];
-            double s = sig[k];
-            a0 += f1 * z0[2 * k];
-            a1 += f1 * z1[2 * k];
-            a2 += f1 * z2[2 * k];
-            a3 += f1 * z3[2 * k];
-            a0 += f2 * z0[2 * k + 1];
-            a1 += f2 * z1[2 * k + 1];
-            a2 += f2 * z2[2 * k + 1];
-            a3 += f2 * z3[2 * k + 1];
-            c0[k] = (a0 * s) * g0[k];
-            c1[k] = (a1 * s) * g0[k + 1];
-            c2[k] = (a2 * s) * g0[k + 2];
-            c3[k] = (a3 * s) * g0[k + 3];
-        }
-    }
+    for (; i + 8 <= B; i += 8)
+        fused_group(A, Z, sig, sgp, cc0 + i, c_all + i * ldc, maxoff,
+                    d0 + i, ldc, 8);
+    for (; i + 4 <= B; i += 4)
+        fused_group(A, Z, sig, sgp, cc0 + i, c_all + i * ldc, maxoff,
+                    d0 + i, ldc, 4);
     for (; i < B; i++)
-        row1(A, Z + 2 * (d0 + i), sig, sgp + d0 + i, cc0[i],
-             c_all + i * ldc, maxoff);
+        fused_group(A, Z, sig, sgp, cc0 + i, c_all + i * ldc, maxoff,
+                    d0 + i, ldc, 1);
 }
 
 /* Sequential per-diagonal max-merge, exact reference order: rows ascending,
@@ -135,9 +80,12 @@ void mpx_fused(const double *A, const double *Z, const double *sig,
  * comparison, strict > (NaN never updates). Equivalent to the numpy path's
  * two vectorized passes per row: cand2 writes for a position always land
  * strictly before the cand1 comparison at that position (step k-diag < k),
- * and positions within one pass are distinct. 1-based candidate indexes. */
-void mpx_merge(const double *c_all, double *mp, int *mpi,
-               long B, long plen, long d0, long ldc)
+ * and positions within one pass are distinct. 1-based candidate indexes.
+ * Kept out of line: inlined into mpx_full, the -O2 build ran ~12% slower
+ * (interleaved single-thread A/B). */
+__attribute__((noinline))
+static void mpx_merge(const double *c_all, double *mp, int *mpi,
+                      long B, long plen, long d0, long ldc)
 {
     for (long i = 0; i < B; i++) {
         long diag = d0 + i;
@@ -159,41 +107,40 @@ void mpx_merge(const double *c_all, double *mp, int *mpi,
     }
 }
 
-/* cc0 per diagonal row: replicates
- *   np.cumsum((x[diag:diag+w] - mu[diag]) * ww, )[-1]
+/* cc0 for W diagonal rows starting at d: replicates
+ *   np.cumsum((x[d:d+w] - mu[d]) * ww, )[-1]
  * exactly — the accumulator is SEEDED with the k=0 product (cumsum's first
  * element is the first term, not 0 + term: 0.0 + (-0.0) would flip the
  * zero's sign), then adds terms in index order. */
-void mpx_cc0(const double *x, const double *mu, const double *ww,
-             double *cc0_out, long B, long w, long d0)
+INLINE void cc0_group(const double *x, const double *mu, const double *ww,
+                      double *out, long w, long d, const int W)
+{
+    const double *xr = x + d;
+    double m[4], a[4];
+#pragma GCC unroll 4
+    for (int j = 0; j < W; j++) {
+        m[j] = mu[d + j];
+        a[j] = (xr[j] - m[j]) * ww[0];
+    }
+    for (long k = 1; k < w; k++) {
+        double wk = ww[k];
+#pragma GCC unroll 4
+        for (int j = 0; j < W; j++)
+            a[j] += (xr[k + j] - m[j]) * wk;
+    }
+#pragma GCC unroll 4
+    for (int j = 0; j < W; j++)
+        out[j] = a[j];
+}
+
+static void mpx_cc0(const double *x, const double *mu, const double *ww,
+                    double *cc0_out, long B, long w, long d0)
 {
     long i = 0;
-    for (; i + 4 <= B; i += 4) {
-        const double *x0 = x + d0 + i;
-        double m0 = mu[d0 + i], m1 = mu[d0 + i + 1];
-        double m2 = mu[d0 + i + 2], m3 = mu[d0 + i + 3];
-        double a0 = (x0[0] - m0) * ww[0];
-        double a1 = (x0[1] - m1) * ww[0];
-        double a2 = (x0[2] - m2) * ww[0];
-        double a3 = (x0[3] - m3) * ww[0];
-        for (long k = 1; k < w; k++) {
-            double wk = ww[k];
-            a0 += (x0[k] - m0) * wk;
-            a1 += (x0[k + 1] - m1) * wk;
-            a2 += (x0[k + 2] - m2) * wk;
-            a3 += (x0[k + 3] - m3) * wk;
-        }
-        cc0_out[i] = a0; cc0_out[i + 1] = a1;
-        cc0_out[i + 2] = a2; cc0_out[i + 3] = a3;
-    }
-    for (; i < B; i++) {
-        const double *xr = x + d0 + i;
-        double m = mu[d0 + i];
-        double acc = (xr[0] - m) * ww[0];
-        for (long k = 1; k < w; k++)
-            acc += (xr[k] - m) * ww[k];
-        cc0_out[i] = acc;
-    }
+    for (; i + 4 <= B; i += 4)
+        cc0_group(x, mu, ww, cc0_out + i, w, d0 + i, 4);
+    for (; i < B; i++)
+        cc0_group(x, mu, ww, cc0_out + i, w, d0 + i, 1);
 }
 
 /* Distributed-MP tile kernel: exact row/column partial minima of one

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..codecs import dod_encode, gorilla_encode
+from ..kernels import native as _native
 from ..kernels.mp import mpx, stomp
 
 MP_BLOBS_SCHEMA = T.StructType(
@@ -97,54 +98,36 @@ def matrix_profile_blobs(tokens_df: DataFrame, w: int, algo: str = "mpx",
 # small enough that a task stays well under a second of kernel work.
 TILES_PER_TASK = 12
 
-_TILE_NATIVE_STATE: dict = {"checked": False, "lib": None}
-
-
-def _native_tile_lib():
-    """Native tile kernel, gated behind a byte-equality check against the
-    numpy block path on adversarial tiles (exact ties, zero-variance
-    windows, near-diagonal bands). Any failure pins the process to numpy."""
-    st = _TILE_NATIVE_STATE
-    if not st["checked"]:
-        st["checked"] = True
-        from ..kernels import native as _native
-
-        lib = _native.get_lib()
-        if lib is not None:
-            try:
-                rng = np.random.default_rng(4242)
-                cases = []
-                ai = rng.integers(0, 3, size=90).astype(np.int64)
-                bi = rng.integers(0, 3, size=110).astype(np.int64)
-                cases.append((ai, bi, 0, 200, 8, 4, True))
-                ai2 = np.ones(80, dtype=np.int64)
-                ai2[30:40] = 5
-                cases.append((ai2, ai2.copy(), 0, 64, 8, 4, True))
-                cases.append((ai, bi, 0, 40, 8, 4, False))  # near-diag band
-                for a, b, ao, bo, w, ez, both in cases:
-                    gi = ao + np.arange(a.size - w + 1)
-                    gj = bo + np.arange(b.size - w + 1)
-                    ra = _tile_partial_minima(a, b, gi, gj, w, ez, both,
-                                              _lib=None)
-                    rb = _tile_partial_minima(a, b, gi, gj, w, ez, both,
-                                              _lib=lib)
-                    for va, vb in zip(ra, rb):
-                        if va is None and vb is None:
-                            continue
-                        if np.asarray(va).tobytes() != np.asarray(vb).tobytes():
-                            raise AssertionError("native tile mismatch")
-                st["lib"] = lib
-            except Exception:
-                st["lib"] = None
-    return st["lib"]
+def _tile_selftest(lib) -> None:
+    """Raise unless the native tile kernel reproduces the numpy block path
+    on adversarial tiles (exact ties, zero-variance windows, near-diagonal
+    bands)."""
+    rng = np.random.default_rng(4242)
+    ai = rng.integers(0, 3, size=90).astype(np.int64)
+    bi = rng.integers(0, 3, size=110).astype(np.int64)
+    ai2 = np.ones(80, dtype=np.int64)
+    ai2[30:40] = 5
+    cases = [(ai, bi, 0, 200, 8, 4, True),
+             (ai2, ai2.copy(), 0, 64, 8, 4, True),
+             (ai, bi, 0, 40, 8, 4, False)]  # near-diag band
+    for a, b, ao, bo, w, ez, both in cases:
+        gi = ao + np.arange(a.size - w + 1)
+        gj = bo + np.arange(b.size - w + 1)
+        ra = _tile_partial_minima(a, b, gi, gj, w, ez, both, _lib=None)
+        rb = _tile_partial_minima(a, b, gi, gj, w, ez, both, _lib=lib)
+        for va, vb in zip(ra, rb):
+            if va is None and vb is None:
+                continue
+            if np.asarray(va).tobytes() != np.asarray(vb).tobytes():
+                raise AssertionError("native tile mismatch")
 
 
 def _tile_partial_minima(ai, bi, gi, gj, w, exclusion, both_sides,
                          _lib="auto"):
     """Exact row/column partial minima of one na x nb distance tile.
 
-    Two implementations (byte-identical outputs, gated at first use by
-    _native_tile_lib):
+    Two implementations (byte-identical outputs; the native one is used
+    only after _tile_selftest passes, via native.checked):
 
     * native C (kernels/native_mpx.c::tile_minima): rolling-QT diagonal
       traversal — integer dot products below 2^53 are exact in float64
@@ -181,10 +164,8 @@ def _tile_partial_minima(ai, bi, gi, gj, w, exclusion, both_sides,
     wmua_full = w * mu_a
     near_diag_flag = max(gj[0] - gi[-1], gi[0] - gj[-1]) <= exclusion
 
-    lib = _native_tile_lib() if _lib == "auto" else _lib
+    lib = _native.checked("tile", _tile_selftest) if _lib == "auto" else _lib
     if lib is not None:
-        from ..kernels import native as _native
-
         ai_c = np.ascontiguousarray(ai, dtype=np.int64)
         bi_c = np.ascontiguousarray(bi, dtype=np.int64)
         dmin = np.empty(na, dtype=np.float64)

@@ -1,11 +1,12 @@
-"""Native (C) MPX inner loop must be byte-identical to the numpy path.
+"""Native (C) kernels must be byte-identical to their numpy paths.
 
-The native path is an optimization of the SAME op sequence (see
-kernels/native_mpx.c); this sweep drives both paths of _mpx_core directly
-over adversarial inputs — exact correlation ties (tiny alphabets, periodic
+Each native kernel is an optimization of the SAME op sequence (see
+kernels/native_mpx.c); these sweeps drive both paths directly over
+adversarial inputs — exact correlation ties (tiny alphabets, periodic
 series), zero-variance windows (sig = inf branches), NaN/Inf data, edge
-sizes around the diagonal batch — and requires bit equality of values AND
-indexes (tobytes comparison: array_equal would miss -0.0 vs +0.0).
+sizes around the diagonal batch and the 8/4/1-row groups — and require bit
+equality of values AND indexes (tobytes comparison: array_equal would miss
+-0.0 vs +0.0). The first-use gate (native.checked) is tested too.
 """
 
 from __future__ import annotations
@@ -13,12 +14,23 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from matrixprofiler_spark.kernels.mp import _mpx_core, _native_mpx_lib, mpx
+from matrixprofiler_spark.codecs import dod as dod_mod
+from matrixprofiler_spark.codecs import gorilla as gorilla_mod
+from matrixprofiler_spark.codecs import dod_decode, gorilla_decode
 from matrixprofiler_spark.kernels import native as native_mod
+from matrixprofiler_spark.kernels.mp import _mpx_core, _mpx_selftest, mpx
+from matrixprofiler_spark.operators import mp_ops
+
+SELFTESTS = {
+    "mpx": _mpx_selftest,
+    "tile": mp_ops._tile_selftest,
+    "gorilla": gorilla_mod._gorilla_selftest,
+    "dod": dod_mod._dod_selftest,
+}
 
 
 def _lib():
-    lib = _native_mpx_lib()
+    lib = native_mod.checked("mpx", _mpx_selftest)
     if lib is None:
         pytest.skip("native mpx unavailable (no compiler?)")
     return lib
@@ -75,11 +87,28 @@ def test_nan_inf_data():
     _check(x, 64)
 
 
+def _group_edge_sizes(w):
+    """n such that plen - exclusion leaves 0..3 full 8-row groups plus every
+    remainder 0..7 (the remainder runs the 4- and 1-row groups)."""
+    exclusion = round(w * 0.5) + 1
+    return [w - 1 + exclusion + 8 * q + r for q in range(4) for r in range(8)]
+
+
 def test_batch_boundary_sizes():
-    # plen around diag_batch transitions (2^17 budget, cap 256)
+    # plen around diag_batch transitions (2^17 budget, cap 256); n = 140
+    # runs no diagonal at all (plen 13 < exclusion 65)
     rng = np.random.default_rng(5)
     for n in (140, 513 + 127, 512 + 128, 2048 + 127):
         _check(rng.integers(0, 9, size=n).astype(np.float64), 128)
+    # the native 8-row groups at the production w = 128 and at w = 8; the
+    # random walk's tail repeats its head, so the last diagonals win
+    for w in (128, 8):
+        for n in _group_edge_sizes(w):
+            _check(rng.integers(0, 3, size=n).astype(np.float64), w)
+            x = np.cumsum(rng.normal(size=n))
+            d = max(n - w + 1 - 8, 1)
+            x[d:] = x[: n - d]
+            _check(x, w)
 
 
 def test_public_mpx_uses_sane_path():
@@ -104,10 +133,9 @@ def test_native_tile_minima_equality():
     """C rolling-QT tile kernel must be byte-identical to the numpy
     dgemm-block path on adversarial tiles (exact ties, zero-variance
     windows, near-diagonal exclusion bands, asymmetric shapes)."""
-    from matrixprofiler_spark.operators.mp_ops import (
-        _native_tile_lib, _tile_partial_minima)
+    from matrixprofiler_spark.operators.mp_ops import _tile_partial_minima
 
-    lib = _native_tile_lib()
+    lib = native_mod.checked("tile", mp_ops._tile_selftest)
     if lib is None:
         pytest.skip("native tile kernel unavailable")
     rng = np.random.default_rng(99)
@@ -137,54 +165,123 @@ def test_native_tile_minima_equality():
             assert np.asarray(va).tobytes() == np.asarray(vb).tobytes()
 
 
-def test_native_codecs_equality():
-    """C Gorilla/DoD encoders must be byte-identical to the numpy
-    assemblers (NaN payloads, +-0.0, infinities, repeats, int64 extremes,
-    single-value and empty-adjacent series)."""
-    from matrixprofiler_spark.codecs.gorilla import (
-        _gorilla_encode_numpy, _native_codec_lib, _native_gorilla_many,
-        _native_dod_many, gorilla_decode)
-    from matrixprofiler_spark.codecs.dod import _dod_encode_numpy, dod_decode
+def _float_series(rng, kind, n):
+    if kind == 0:
+        return rng.normal(size=n)
+    if kind == 1:
+        return np.repeat(rng.normal(size=max(1, n // 7)), 7)[:n]
+    if kind == 2:
+        return rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max,
+                            size=n, dtype=np.int64).view(np.float64)
+    if kind == 3:
+        return np.full(n, rng.choice([0.0, -0.0, np.inf, np.nan]))
+    if kind == 4:
+        # XORs confined to the low mantissa bits: leading zeros up to 63
+        return 1.0 + rng.integers(0, 2 ** int(rng.integers(1, 52)),
+                                  size=n) * 2.0 ** -52
+    return np.round(rng.normal(size=n), 1)
 
-    lib = _native_codec_lib()
+
+def _int_series(rng, kind, n):
+    if kind == 0:
+        return rng.integers(-10, 10, size=n, dtype=np.int64).cumsum()
+    if kind == 1:
+        return np.arange(n, dtype=np.int64) * 60
+    if kind == 2:
+        return rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max,
+                            size=n, dtype=np.int64)
+    if kind == 3:
+        return rng.integers(-3000, 3000, size=n, dtype=np.int64).cumsum()
+    return np.full(n, 7, dtype=np.int64)
+
+
+def _batches(rng, make):
+    """Batches of 1-10 series mixing empty, single-value and longer series
+    of every kind."""
+    for _ in range(60):
+        yield [make(rng, int(rng.integers(0, 6)),
+                    int(rng.choice([0, 1, 2, int(rng.integers(3, 300))])))
+               for _ in range(int(rng.integers(1, 11)))]
+
+
+def test_native_codecs_equality():
+    """C Gorilla/DoD batch encoders must be byte-identical to the numpy
+    batch encoders (NaN payloads, +-0.0, infinities, repeats, int64
+    extremes, single-value and empty series inside a batch), and every
+    blob must round-trip."""
+    lib = native_mod.get_lib()
     if lib is None:
         pytest.skip("native codecs unavailable")
     rng = np.random.default_rng(5)
-    for t in range(120):
-        n = int(rng.integers(1, 300))
-        kind = t % 5
-        if kind == 0:
-            x = rng.normal(size=n)
-        elif kind == 1:
-            x = np.repeat(rng.normal(size=max(1, n // 7)), 7)[:n]
-        elif kind == 2:
-            x = rng.integers(0, 2 ** 62, size=n,
-                             dtype=np.int64).view(np.float64)
-        elif kind == 3:
-            x = np.full(n, rng.choice([0.0, -0.0, np.inf, np.nan]))
-        else:
-            x = np.round(rng.normal(size=n), 1)
-        x = np.ascontiguousarray(x, dtype=np.float64)
-        blob = _native_gorilla_many(lib, [x],
-                                    np.array([x.size], dtype=np.int64))[0]
-        assert blob == _gorilla_encode_numpy(x)
-        assert (gorilla_decode(blob).view(np.uint64).tobytes()
-                == x.view(np.uint64).tobytes())
-    for t in range(120):
-        n = int(rng.integers(1, 300))
-        kind = t % 4
-        if kind == 0:
-            x = rng.integers(-10, 10, size=n, dtype=np.int64).cumsum()
-        elif kind == 1:
-            x = np.arange(n, dtype=np.int64) * 60
-        elif kind == 2:
-            x = rng.integers(np.iinfo(np.int64).min // 2,
-                             np.iinfo(np.int64).max // 2,
-                             size=n, dtype=np.int64)
-        else:
-            x = np.full(n, 7, dtype=np.int64)
-        x = np.ascontiguousarray(x, dtype=np.int64)
-        blob = _native_dod_many(lib, [x],
-                                np.array([x.size], dtype=np.int64))[0]
-        assert blob == _dod_encode_numpy(x)
-        assert np.array_equal(dod_decode(blob), x)
+    for batch in _batches(rng, _float_series):
+        blobs = gorilla_mod._gorilla_many(batch, lib)
+        assert blobs == gorilla_mod._gorilla_many(batch, None)
+        for x, blob in zip(batch, blobs):
+            assert (gorilla_decode(blob).view(np.uint64).tobytes()
+                    == x.view(np.uint64).tobytes())
+    for batch in _batches(rng, _int_series):
+        blobs = dod_mod._dod_many(batch, lib)
+        assert blobs == dod_mod._dod_many(batch, None)
+        for x, blob in zip(batch, blobs):
+            assert np.array_equal(dod_decode(blob), x)
+
+
+def test_failing_selftest_pins_only_its_kernel(monkeypatch):
+    """A raising self-test pins that one kernel to numpy for the process;
+    the other kernels stay native and the public encoder's bytes do not
+    change."""
+    lib = native_mod.get_lib()
+    if lib is None:
+        pytest.skip("native library unavailable")
+    rng = np.random.default_rng(8)
+    batch = [rng.normal(size=50), np.empty(0), np.array([np.nan, -0.0])]
+    expected = gorilla_mod.gorilla_encode_many(batch)
+
+    def broken(lib):
+        raise AssertionError("injected self-test failure")
+
+    monkeypatch.setattr(native_mod, "_checked", {})
+    monkeypatch.setattr(gorilla_mod, "_gorilla_selftest", broken)
+    assert gorilla_mod.gorilla_encode_many(batch) == expected
+    assert gorilla_mod.gorilla_encode(batch[0]) == expected[0]
+    assert native_mod._checked == {"gorilla": None}
+    for name in ("mpx", "tile", "dod"):
+        assert native_mod.checked(name, SELFTESTS[name]) is lib
+
+
+def test_library_exports_only_the_drivers():
+    """The group bodies are static: the library's symbol table holds only
+    the four entry points the Python side declares."""
+    lib = native_mod.get_lib()
+    if lib is None:
+        pytest.skip("native library unavailable")
+    for name in ("mpx_full", "tile_minima", "gorilla_encode_batch",
+                 "dod_encode_batch"):
+        assert hasattr(lib, name)
+    for name in ("mpx_fused", "mpx_merge", "mpx_cc0", "row1",
+                 "fused_group", "cc0_group"):
+        assert not hasattr(lib, name)
+
+
+@pytest.mark.parametrize("flags", native_mod._CFLAG_SETS,
+                         ids=lambda f: " ".join(f[:2]))
+def test_every_flag_set_passes_selftests(monkeypatch, flags):
+    """Each compiler flag set get_lib may fall back to builds a library
+    whose kernels all pass their self-tests and the MPX group-edge
+    sweep."""
+    monkeypatch.setattr(native_mod, "_CFLAG_SETS", [flags])
+    monkeypatch.setattr(native_mod, "_tried", False)
+    monkeypatch.setattr(native_mod, "_lib", None)
+    monkeypatch.setattr(native_mod, "_checked", {})
+    lib = native_mod.get_lib()
+    if lib is None:
+        pytest.skip("flag set does not build here")
+    for name, selftest in SELFTESTS.items():
+        selftest(lib)
+    rng = np.random.default_rng(6)
+    for n in _group_edge_sizes(128):
+        x = rng.integers(0, 3, size=n).astype(np.float64)
+        a = _mpx_core(x, 128, 0.5, True, True, lib=None)
+        b = _mpx_core(x, 128, 0.5, True, True, lib=lib)
+        assert a["matrix_profile"].tobytes() == b["matrix_profile"].tobytes()
+        assert a["profile_index"].tobytes() == b["profile_index"].tobytes()
