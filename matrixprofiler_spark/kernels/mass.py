@@ -17,13 +17,8 @@ import math
 
 import numpy as np
 
+from .mathfn import _F64, _as_f64
 from .window import movmean_std, movsum_ogita
-
-_F64 = np.float64
-
-
-def _as_f64(x) -> np.ndarray:
-    return np.ascontiguousarray(x, dtype=_F64)
 
 
 def set_k(grain: int, data_size: int, window_size: int) -> int:

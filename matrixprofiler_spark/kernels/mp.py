@@ -27,19 +27,15 @@ import numpy as np
 
 from . import native as _native
 from .mass import mass3, mass_pre, set_k
+from .mathfn import _F64, _as_f64
 from .window import muinvn
 
-_F64 = np.float64
 _EPS = np.finfo(np.float64).eps  # DBL_EPSILON
 
 # Working-set budget, in elements, of one diagonal batch of the numpy MPX
 # path (see _mpx_core): the result is bit-identical for any value; tuned
 # for loaded throughput.
 _DIAG_BUDGET = 1 << 17
-
-
-def _as_f64(x) -> np.ndarray:
-    return np.ascontiguousarray(x, dtype=_F64)
 
 
 def c_round(v: float) -> int:

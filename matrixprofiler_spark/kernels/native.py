@@ -79,10 +79,6 @@ def _declare(lib: ctypes.CDLL) -> ctypes.CDLL:
     return lib
 
 
-def ptr_u64(a):
-    return a.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64))
-
-
 def ptr_ll(a):
     return a.ctypes.data_as(ctypes.POINTER(ctypes.c_longlong))
 

@@ -31,11 +31,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-_F64 = np.float64
-
-
-def _as_f64(x) -> np.ndarray:
-    return np.ascontiguousarray(x, dtype=_F64)
+from .mathfn import _F64, _as_f64
 
 
 def _is_integral(x: np.ndarray) -> bool:

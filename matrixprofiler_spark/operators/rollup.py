@@ -76,6 +76,19 @@ def salted(df: DataFrame, num_partitions: int) -> DataFrame:
     return df.repartition(num_partitions, F.col("source"), F.col("doc_id"))
 
 
+def bucket_stats(x: np.ndarray, starts: np.ndarray, ends: np.ndarray):
+    """Exact aggregates of int64 values ``x`` over the buckets
+    ``[starts[i], ends[i])``, which must tile ``x`` in order and be
+    non-empty. Returns ``(cnt, sum_v, sumsq, min_v, max_v)`` as int64
+    arrays: one cumsum-diff per sum and one ``reduceat`` per extremum,
+    with no per-bucket Python. The batch finest tier and the streaming
+    cascade both compute their buckets here."""
+    c = np.concatenate(([0], np.cumsum(x)))
+    c2 = np.concatenate(([0], np.cumsum(x * x)))
+    return (ends - starts, c[ends] - c[starts], c2[ends] - c2[starts],
+            np.minimum.reduceat(x, starts), np.maximum.reduceat(x, starts))
+
+
 def finest_rollup(tokens_df: DataFrame, bucket_size: int = 60) -> DataFrame:
     """Per-doc finest-tier bucket aggregates via a vectorized Arrow kernel.
 
@@ -92,8 +105,8 @@ def finest_rollup(tokens_df: DataFrame, bucket_size: int = 60) -> DataFrame:
                  else np.empty(0, dtype=np.int64))
             # bucket layout: each doc tiles into ceil(n/bs) buckets; buckets
             # are contiguous in the concatenated array, so every aggregate
-            # is one reduceat / cumsum-diff over the whole batch — no
-            # per-doc Python at all.
+            # is one bucket_stats call over the whole batch — no per-doc
+            # Python at all.
             nb = (lens + bucket_size - 1) // bucket_size
             total_nb = int(nb.sum())
             if total_nb == 0:
@@ -104,19 +117,18 @@ def finest_rollup(tokens_df: DataFrame, bucket_size: int = 60) -> DataFrame:
             k = np.arange(total_nb, dtype=np.int64) - np.repeat(first_bucket, nb)
             starts = np.repeat(doc_starts, nb) + k * bucket_size
             ends = np.minimum(starts + bucket_size, np.repeat(doc_ends, nb))
-            c = np.concatenate(([0], np.cumsum(x)))
-            c2 = np.concatenate(([0], np.cumsum(x * x)))
+            cnt, sum_v, sumsq, min_v, max_v = bucket_stats(x, starts, ends)
             yield pd.DataFrame(
                 {
                     "doc_id": np.repeat(b["doc_id"].to_numpy(), nb),
                     "source": np.repeat(b["source"].to_numpy(), nb),
                     "tier": "1m",
                     "bucket": k,
-                    "cnt": ends - starts,
-                    "sum_v": c[ends] - c[starts],
-                    "sumsq": c2[ends] - c2[starts],
-                    "min_v": np.minimum.reduceat(x, starts).astype(np.int32),
-                    "max_v": np.maximum.reduceat(x, starts).astype(np.int32),
+                    "cnt": cnt,
+                    "sum_v": sum_v,
+                    "sumsq": sumsq,
+                    "min_v": min_v.astype(np.int32),
+                    "max_v": max_v.astype(np.int32),
                 }
             )
 

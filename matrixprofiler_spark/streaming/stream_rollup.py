@@ -1,45 +1,53 @@
-"""Structured Streaming ingestion of the rollup engine.
+"""Structured Streaming faces of the rollup engine.
 
-The production shape: new pre-tokenized docs land as files (or Kafka); a
-streaming query computes the finest-tier bucket aggregates incrementally
-and appends them to the rollup sink, with event-time watermarking for the
-timestamped (events-style) variant. The batch and streaming paths share
-the same kernel (`finest_rollup` is a mapInPandas transformation, legal in
-streaming), so outputs are identical rows.
+New pre-tokenized docs land as files (or Kafka) and a streaming query
+appends their bucket aggregates to a parquet sink. Token buckets are
+computed by ``operators.rollup.bucket_stats``, the batch finest tier's
+kernel, so streamed rows equal batch rows exactly.
 
-Two entry points:
-* ``stream_tokens_rollup`` — file-source stream of tokens parquet ->
-  finest-tier rollup -> parquet sink (append). Per-doc rows are
-  self-contained, so no state/watermark is needed; exactly-once comes from
-  the checkpointed file source + idempotent sink.
+Three entry points, each returning a started ``availableNow`` query:
+* ``stream_tokens_rollup`` — whole docs (tokens parquet) -> finest-tier
+  rollup. Per-doc rows are self-contained, so no state or watermark is
+  needed; exactly-once comes from the checkpointed file source and the
+  idempotent sink.
 * ``stream_events_rollup`` — event-time tumbling window aggregation with a
   watermark for late data (the classic readStream -> withWatermark ->
   groupBy(window) shape).
+* ``incremental_tier_rollup`` — docs arriving as (doc_id, chunk_off,
+  tokens) chunks, in any order -> the continuous-aggregate cascade: one
+  stateful operator emits every tier's buckets as they complete. One tier
+  is the plain incremental bucket rollup.
 """
 
 from __future__ import annotations
 
+from types import MappingProxyType
+from typing import Mapping
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators.rollup import finest_rollup
+from ..operators.rollup import ROLLUP_SCHEMA, bucket_stats, finest_rollup
 from ..sources.tokens import TOKENS_SCHEMA
 
+CHUNK_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("source", T.StringType(), False),
+        T.StructField("chunk_off", T.LongType(), False),
+        T.StructField("tokens", T.ArrayType(T.IntegerType()), False),
+    ]
+)
 
-def stream_tokens_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
-                         checkpoint_dir: str, bucket_size: int = 60):
-    """File-source streaming rollup; returns the StreamingQuery.
 
-    Use ``trigger(availableNow=True)`` semantics via ``process_available``
-    for batch-ish catch-up runs (and in tests)."""
-    stream = (
-        spark.readStream.schema(TOKENS_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
-    rolled = finest_rollup(stream, bucket_size)
+def _append_to_parquet(df: DataFrame, sink_dir: str, checkpoint_dir: str):
+    """Start ``df`` as an append-mode parquet sink that processes the input
+    available now and then stops."""
     return (
-        rolled.writeStream.format("parquet")
+        df.writeStream.format("parquet")
         .option("path", sink_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -48,13 +56,25 @@ def stream_tokens_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
     )
 
 
+def stream_tokens_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
+                         checkpoint_dir: str, bucket_size: int = 60):
+    """File-source streaming finest-tier rollup of whole docs; returns the
+    started StreamingQuery, which catches up on the files available now
+    and stops."""
+    stream = (
+        spark.readStream.schema(TOKENS_SCHEMA)
+        .option("maxFilesPerTrigger", 16)
+        .parquet(input_dir)
+    )
+    return _append_to_parquet(finest_rollup(stream, bucket_size), sink_dir,
+                              checkpoint_dir)
+
+
 def stream_events_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
                          checkpoint_dir: str, watermark: str = "1 hour"):
     """Watermarked event-time tumbling rollup of an events stream
     (ts, user_id, value): per (user, 1h window) count + exact cents sum.
     Late rows beyond the watermark are dropped deterministically."""
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -76,230 +96,35 @@ def stream_events_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
             "user_id", "cnt", "sum_cents",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append_to_parquet(agg, sink_dir, checkpoint_dir)
 
 
-def incremental_bucket_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
-                              checkpoint_dir: str, bucket_size: int = 60,
-                              max_buffer_tokens: int = 1 << 22):
-    """Custom stateful streaming operator (``applyInPandasWithState``):
-    docs arrive as ordered (doc_id, chunk_off, tokens) appends; per-doc
-    state carries the trailing partial bucket (the same sufficient state —
-    running counts/sums — the reference's incremental MPX prototypes keep,
-    src/mpx.cpp:194-376), and each micro-batch emits the buckets it
-    completed. Completed buckets never change (append output mode).
+def incremental_tier_rollup(
+    spark: SparkSession, input_dir: str, sink_dir: str, checkpoint_dir: str,
+    tiers: Mapping[str, int] = MappingProxyType({"1m": 60, "1h": 3600}),
+    max_buffer_tokens: int = 1 << 22,
+):
+    """Streaming CONTINUOUS-AGGREGATE CASCADE (``applyInPandasWithState``).
+
+    ``tiers`` maps each tier name to its bucket size in tokens; a bucket
+    is emitted the moment its last token arrives (a 3600-token bucket
+    appears with its 3600th token), and a one-entry mapping is the plain
+    incremental bucket rollup. Docs arrive as (doc_id, chunk_off, tokens)
+    chunks in any order, across micro-batches and restarts. Per-doc state
+    holds the next expected offset, the chunks buffered past a gap, and
+    per tier the exact accumulators of the trailing partial bucket (the
+    same sufficient state the reference's incremental MPX prototypes
+    keep, src/mpx.cpp:194-376). Completed buckets never change (append
+    output mode) and equal the batch cascade's complete buckets exactly.
+    More than ``max_buffer_tokens`` buffered tokens for one doc means a
+    chunk is missing, and the stream fails loudly.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    chunk_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-            T.StructField("chunk_off", T.LongType(), False),
-            T.StructField("tokens", T.ArrayType(T.IntegerType()), False),
-        ]
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-            T.StructField("bucket", T.LongType(), False),
-            T.StructField("cnt", T.LongType(), False),
-            T.StructField("sum_v", T.LongType(), False),
-            T.StructField("sumsq", T.LongType(), False),
-            T.StructField("min_v", T.IntegerType(), False),
-            T.StructField("max_v", T.IntegerType(), False),
-        ]
-    )
-    # state: next expected offset + trailing partial bucket accumulators +
-    # buffered not-yet-contiguous chunks (chunks may arrive across Arrow
-    # batches / micro-batches in any order; buffer instead of asserting)
-    state_schema = T.StructType(
-        [
-            T.StructField("next_off", T.LongType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("sum_v", T.LongType()),
-            T.StructField("sumsq", T.LongType()),
-            T.StructField("min_v", T.LongType()),
-            T.StructField("max_v", T.LongType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("buf_offs", T.ArrayType(T.LongType())),
-            T.StructField("buf_lens", T.ArrayType(T.IntegerType())),
-            T.StructField("buf_toks", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        """Vectorized: concatenate the contiguous run of chunks, then one
-        cumsum-diff / reduceat per micro-batch (the finest_rollup pattern,
-        operators/rollup.py:87-110) — no per-token Python. The trailing
-        partial bucket's exact accumulators are the only numeric state."""
-        doc_id = key[0]
-        if state.exists:
-            (next_off, cnt, s, s2, mn, mx, src,
-             b_offs, b_lens, b_toks) = state.get
-            chunks = []
-            p = 0
-            toks_flat = np.asarray(b_toks if b_toks is not None else [], dtype=np.int64)
-            for off, ln in zip(b_offs or [], b_lens or []):
-                chunks.append((int(off), toks_flat[p : p + ln]))
-                p += ln
-        else:
-            next_off, cnt, s, s2, mn, mx, src = 0, 0, 0, 0, 2**31, -(2**31), None
-            chunks = []
-
-        for pdf in pdfs:
-            for off, toks, sc in zip(pdf["chunk_off"], pdf["tokens"], pdf["source"]):
-                src = sc
-                chunks.append((int(off), np.asarray(toks, dtype=np.int64)))
-        chunks.sort(key=lambda t: t[0])
-
-        run, rest = [], []
-        expected = next_off
-        for off, arr in chunks:
-            if off == expected:
-                run.append(arr)
-                expected += arr.size
-            elif off > expected:
-                rest.append((off, arr))
-            else:
-                raise ValueError(f"overlapping chunk for {doc_id} at {off}")
-        buffered = sum(a.size for _, a in rest)
-        if buffered > max_buffer_tokens:
-            # fail LOUDLY: a never-arriving chunk would otherwise grow this
-            # state without bound and silently withhold all later buckets
-            raise ValueError(
-                f"doc {doc_id}: {buffered} tokens buffered waiting for "
-                f"offset {expected} (cap max_buffer_tokens="
-                f"{max_buffer_tokens}) — a chunk is missing from the stream"
-            )
-
-        out = None
-        if run:
-            x = np.concatenate(run)
-            start = next_off
-            bs = bucket_size
-            first_cut = (bs - start % bs) % bs
-            cuts = np.arange(first_cut, x.size + 1, bs)
-            if cuts.size:
-                xb = x[: cuts[-1]]
-                seg_starts = np.concatenate(([0], cuts[:-1]))
-                nonempty = cuts > seg_starts  # first segment empty iff aligned
-                seg_starts, seg_ends = seg_starts[nonempty], cuts[nonempty]
-                c = np.concatenate(([0], np.cumsum(xb)))
-                c2 = np.concatenate(([0], np.cumsum(xb * xb)))
-                scnt = (seg_ends - seg_starts).astype(np.int64)
-                ssum = c[seg_ends] - c[seg_starts]
-                ssq = c2[seg_ends] - c2[seg_starts]
-                smn = np.minimum.reduceat(xb, seg_starts)
-                smx = np.maximum.reduceat(xb, seg_starts)
-                bids = (start + seg_starts) // bs
-                if cnt:  # carried partial completes the first bucket
-                    scnt[0] += cnt
-                    ssum[0] += s
-                    ssq[0] += s2
-                    smn[0] = min(int(smn[0]), int(mn))
-                    smx[0] = max(int(smx[0]), int(mx))
-                out = pd.DataFrame(
-                    {
-                        "doc_id": doc_id,
-                        "source": src,
-                        "bucket": bids,
-                        "cnt": scnt,
-                        "sum_v": ssum,
-                        "sumsq": ssq,
-                        "min_v": smn.astype(np.int32),
-                        "max_v": smx.astype(np.int32),
-                    }
-                )
-                cnt, s, s2, mn, mx = 0, 0, 0, 2**31, -(2**31)
-                tail = x[cuts[-1] :]
-            else:
-                tail = x
-            if tail.size:
-                cnt += int(tail.size)
-                s += int(tail.sum())
-                s2 += int((tail * tail).sum())
-                mn = min(int(mn), int(tail.min()))
-                mx = max(int(mx), int(tail.max()))
-            next_off = expected
-
-        state.update(
-            (
-                int(next_off), int(cnt), int(s), int(s2), int(mn), int(mx), src,
-                [int(o) for o, _ in rest],
-                [int(a.size) for _, a in rest],
-                [int(v) for _, a in rest for v in a],
-            )
-        )
-        if out is not None:
-            yield out
-
-    stream = (
-        spark.readStream.schema(chunk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    agg = stream.groupBy("doc_id").applyInPandasWithState(
-        update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def incremental_tier_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
-                            checkpoint_dir: str, tiers=(60, 3600),
-                            tier_names=("1m", "1h"),
-                            max_buffer_tokens: int = 1 << 22):
-    """Streaming CONTINUOUS-AGGREGATE CASCADE: one stateful operator emits
-    every retention tier's buckets as they complete (a 1h bucket appears
-    the moment its 3600th token arrives), with per-tier trailing-partial
-    accumulators in state — the streaming face of tier_rollup. Same
-    cumsum/reduceat bucket math as the batch kernel, so completed buckets
-    equal the batch cascade's rows exactly (tested across a restart)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    n_tiers = len(tiers)
-    chunk_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-            T.StructField("chunk_off", T.LongType(), False),
-            T.StructField("tokens", T.ArrayType(T.IntegerType()), False),
-        ]
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-            T.StructField("tier", T.StringType(), False),
-            T.StructField("bucket", T.LongType(), False),
-            T.StructField("cnt", T.LongType(), False),
-            T.StructField("sum_v", T.LongType(), False),
-            T.StructField("sumsq", T.LongType(), False),
-            T.StructField("min_v", T.IntegerType(), False),
-            T.StructField("max_v", T.IntegerType(), False),
-        ]
-    )
+    names, sizes = tuple(tiers), tuple(tiers.values())
+    # per-tier accumulators of an empty partial bucket: cnt, sum_v, sumsq,
+    # min_v, max_v (the extrema are the identities of min and max)
+    empty = np.array([0, 0, 0, 2**31, -(2**31)], dtype=np.int64)
     state_schema = T.StructType(
         [
             T.StructField("next_off", T.LongType()),
@@ -316,27 +141,18 @@ def incremental_tier_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
     )
 
     def update(key, pdfs, state: GroupState):
+        """Reassemble the contiguous run of chunks, then one bucket_stats
+        call per tier — no per-token Python."""
         doc_id = key[0]
         if state.exists:
-            (next_off, cnts, sums, sqs, mns, mxs, src,
-             b_offs, b_lens, b_toks) = state.get
-            cnts, sums, sqs = list(cnts), list(sums), list(sqs)
-            mns, mxs = list(mns), list(mxs)
-            chunks = []
-            p = 0
-            flat = np.asarray(b_toks if b_toks is not None else [], dtype=np.int64)
-            for off, ln in zip(b_offs or [], b_lens or []):
-                chunks.append((int(off), flat[p : p + ln]))
-                p += ln
+            next_off, *acc, src, b_offs, b_lens, b_toks = state.get
+            carry = np.array(acc, dtype=np.int64)  # (5, n_tiers)
+            flat = np.asarray(b_toks or [], dtype=np.int64)
+            pieces = np.split(flat, np.cumsum(b_lens or [])[:-1])
+            chunks = [(int(o), a) for o, a in zip(b_offs or [], pieces)]
         else:
-            next_off = 0
-            cnts = [0] * n_tiers
-            sums = [0] * n_tiers
-            sqs = [0] * n_tiers
-            mns = [2**31] * n_tiers
-            mxs = [-(2**31)] * n_tiers
-            src = None
-            chunks = []
+            next_off, src, chunks = 0, None, []
+            carry = np.repeat(empty[:, None], len(sizes), axis=1)
 
         for pdf in pdfs:
             for off, toks, sc in zip(pdf["chunk_off"], pdf["tokens"], pdf["source"]):
@@ -364,89 +180,50 @@ def incremental_tier_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
             )
 
         frames = []
-        if run:
-            x = np.concatenate(run)
-            start = next_off
-            c = np.concatenate(([0], np.cumsum(x)))
-            c2 = np.concatenate(([0], np.cumsum(x * x)))
-            for ti, bs in enumerate(tiers):
-                first_cut = (bs - start % bs) % bs
-                cuts = np.arange(first_cut, x.size + 1, bs)
-                if not cuts.size:
-                    continue
-                xb = x[: cuts[-1]]
-                seg_starts = np.concatenate(([0], cuts[:-1]))
-                nonempty = cuts > seg_starts
-                seg_starts, seg_ends = seg_starts[nonempty], cuts[nonempty]
-                scnt = (seg_ends - seg_starts).astype(np.int64)
-                ssum = c[seg_ends] - c[seg_starts]
-                ssq = c2[seg_ends] - c2[seg_starts]
-                smn = np.minimum.reduceat(xb, seg_starts).astype(np.int64)
-                smx = np.maximum.reduceat(xb, seg_starts).astype(np.int64)
-                bids = (start + seg_starts) // bs
-                if cnts[ti]:
-                    scnt[0] += cnts[ti]
-                    ssum[0] += sums[ti]
-                    ssq[0] += sqs[ti]
-                    smn[0] = min(int(smn[0]), int(mns[ti]))
-                    smx[0] = max(int(smx[0]), int(mxs[ti]))
+        x = np.concatenate(run) if run else np.empty(0, dtype=np.int64)
+        for ti, (name, bs) in enumerate(zip(names, sizes)):
+            if not x.size:  # no new token: every carry stays as it is
+                break
+            # buckets of this tier that the run touches: the first one
+            # continues the carried partial, the last may stay partial
+            cuts = np.arange(-next_off % bs or bs, x.size, bs)
+            starts = np.concatenate(([0], cuts))
+            ends = np.concatenate((cuts, [x.size]))
+            stats = np.array(bucket_stats(x, starts, ends))  # (5, n_buckets)
+            stats[:3, 0] += carry[:3, ti]
+            stats[3, 0] = min(stats[3, 0], carry[3, ti])
+            stats[4, 0] = max(stats[4, 0], carry[4, ti])
+            n_done = ends.size - int((next_off + x.size) % bs != 0)
+            carry[:, ti] = empty if n_done == ends.size else stats[:, -1]
+            if n_done:
+                cnt, sum_v, sumsq, min_v, max_v = stats[:, :n_done]
                 frames.append(pd.DataFrame(
                     {
-                        "doc_id": doc_id, "source": src,
-                        "tier": tier_names[ti], "bucket": bids,
-                        "cnt": scnt, "sum_v": ssum, "sumsq": ssq,
-                        "min_v": smn.astype(np.int32),
-                        "max_v": smx.astype(np.int32),
+                        "doc_id": doc_id, "source": src, "tier": name,
+                        "bucket": (next_off + starts[:n_done]) // bs,
+                        "cnt": cnt, "sum_v": sum_v, "sumsq": sumsq,
+                        "min_v": min_v.astype(np.int32),
+                        "max_v": max_v.astype(np.int32),
                     }
                 ))
-                cnts[ti], sums[ti], sqs[ti] = 0, 0, 0
-                mns[ti], mxs[ti] = 2**31, -(2**31)
-                tail = x[cuts[-1] :]
-                if tail.size:
-                    cnts[ti] = int(tail.size)
-                    sums[ti] = int(tail.sum())
-                    sqs[ti] = int((tail * tail).sum())
-                    mns[ti] = int(tail.min())
-                    mxs[ti] = int(tail.max())
-            # tiers whose cut never happened accumulate the WHOLE run
-            for ti, bs in enumerate(tiers):
-                first_cut = (bs - start % bs) % bs
-                if np.arange(first_cut, x.size + 1, bs).size:
-                    continue
-                cnts[ti] += int(x.size)
-                sums[ti] += int(x.sum())
-                sqs[ti] += int((x * x).sum())
-                mns[ti] = min(int(mns[ti]), int(x.min()))
-                mxs[ti] = max(int(mxs[ti]), int(x.max()))
-            next_off = expected
 
         state.update(
             (
-                int(next_off),
-                [int(v) for v in cnts], [int(v) for v in sums],
-                [int(v) for v in sqs], [int(v) for v in mns],
-                [int(v) for v in mxs], src,
-                [int(o) for o, _ in rest],
+                int(expected), *carry.tolist(), src,
+                [o for o, _ in rest],
                 [int(a.size) for _, a in rest],
-                [int(v) for _, a in rest for v in a],
+                [v for _, a in rest for v in a.tolist()],
             )
         )
         if frames:
             yield pd.concat(frames, ignore_index=True)
 
     stream = (
-        spark.readStream.schema(chunk_schema)
+        spark.readStream.schema(CHUNK_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
     agg = stream.groupBy("doc_id").applyInPandasWithState(
-        update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        update, ROLLUP_SCHEMA, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append_to_parquet(agg, sink_dir, checkpoint_dir)

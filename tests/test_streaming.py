@@ -83,9 +83,7 @@ def test_stateful_incremental_rollup(spark, tmp_path):
     """applyInPandasWithState: chunked appends produce exactly the batch
     finest-rollup's COMPLETED buckets, across a restart, with the trailing
     partial carried in state."""
-    from matrixprofiler_spark.streaming.stream_rollup import (
-        incremental_bucket_rollup,
-    )
+    from matrixprofiler_spark.streaming.stream_rollup import incremental_tier_rollup
 
     inp = str(tmp_path / "chunks")
     sink = str(tmp_path / "sink2")
@@ -100,7 +98,7 @@ def test_stateful_incremental_rollup(spark, tmp_path):
     spark.createDataFrame(
         rows1, "doc_id string, source string, chunk_off long, tokens array<int>"
     ).write.parquet(inp)
-    q = incremental_bucket_rollup(spark, inp, sink, ckpt)
+    q = incremental_tier_rollup(spark, inp, sink, ckpt, tiers={"1m": 60})
     q.awaitTermination(120)
     first = spark.read.parquet(sink).count()
     assert first == 2  # one completed 60-bucket per doc
@@ -110,7 +108,7 @@ def test_stateful_incremental_rollup(spark, tmp_path):
     spark.createDataFrame(
         rows2, "doc_id string, source string, chunk_off long, tokens array<int>"
     ).write.mode("append").parquet(inp)
-    q2 = incremental_bucket_rollup(spark, inp, sink, ckpt)
+    q2 = incremental_tier_rollup(spark, inp, sink, ckpt, tiers={"1m": 60})
     q2.awaitTermination(120)
 
     got = {
@@ -187,13 +185,91 @@ def test_streaming_tier_cascade(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("seed", [5, 17])
+def test_streaming_cascade_edge_corpus(spark, tmp_path, seed):
+    """Adversarial delivery of the stateful cascade: docs split into
+    seeded random 1-70 token chunks arrive shuffled, over several files
+    per restart and four restarts. After every restart the sink must hold
+    exactly the batch cascade's complete buckets over each doc's
+    contiguous delivered prefix, each (doc, tier, bucket) once. The
+    corpus has a 1-token doc, a doc of exactly 2 x 256 tokens, negative
+    values, and a doc whose second run (7 tokens after a 5-token carry)
+    completes no finest bucket."""
+    from matrixprofiler_spark.operators.rollup import cascade_tier
+    from matrixprofiler_spark.streaming.stream_rollup import incremental_tier_rollup
+
+    tiers = {"a": 16, "b": 64, "c": 256}
+    rng = np.random.default_rng(seed)
+    lens = {"exact": 512, "one": 1, "steps": 300, "long": 777, "short": 40}
+    docs = {k: rng.integers(-50257, 50257, n).astype(np.int32)
+            for k, n in lens.items()}
+    docs["long"][100:400] = 7  # a constant stretch
+
+    # (doc, off, len, delivery): "steps" opens with a 5-token chunk in
+    # delivery 0 and a 7-token one in delivery 1, and the rest of it comes
+    # later; every other chunk lands in a random delivery
+    chunks = []
+    for k, n in lens.items():
+        off = 0
+        while off < n:
+            if k == "steps" and off < 12:
+                ln, d = (5, 0) if off == 0 else (7, 1)
+            else:
+                ln = min(int(rng.integers(1, 71)), n - off)
+                d = int(rng.integers(2 if k == "steps" else 0, 4))
+            chunks.append((k, off, ln, d))
+            off += ln
+    rng.shuffle(chunks)
+
+    full = spark.createDataFrame(
+        [(k, [int(v) for v in x], int(x.size), "web") for k, x in docs.items()],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    fine = finest_rollup(full, tiers["a"]).withColumn("tier", F.lit("a"))
+    mid = cascade_tier(fine, tiers["a"], tiers["b"], "b")
+    coarse = cascade_tier(mid, tiers["b"], tiers["c"], "c")
+    batch = fine.unionByName(mid).unionByName(coarse).collect()
+
+    def row(r):
+        return (r.doc_id, r.source, r.tier, r.bucket,
+                r.cnt, r.sum_v, r.sumsq, r.min_v, r.max_v)
+
+    inp, sink, ckpt = (str(tmp_path / d) for d in ("in", "sink", "ckpt"))
+    schema = "doc_id string, source string, chunk_off long, tokens array<int>"
+    for d in range(4):
+        part = [c for c in chunks if c[3] == d]
+        for f in range(3):  # three files, so three micro-batches
+            rows = [(k, "web", off, [int(v) for v in docs[k][off:off + ln]])
+                    for k, off, ln, _ in part[f::3]]
+            if rows:
+                spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                    "append").parquet(inp)
+        incremental_tier_rollup(spark, inp, sink, ckpt,
+                                tiers=tiers).awaitTermination(120)
+
+        # contiguous prefix delivered so far, per doc
+        prefix = dict.fromkeys(lens, 0)
+        for k, off, ln, _ in sorted(c for c in chunks if c[3] <= d):
+            if off == prefix[k]:
+                prefix[k] += ln
+        got = [row(r) for r in spark.read.parquet(sink).collect()]
+        want = [row(r) for r in batch
+                if (r.bucket + 1) * tiers[r.tier] <= prefix[r.doc_id]]
+        keys = [g[:4] for g in got]
+        assert len(keys) == len(set(keys)), d
+        assert sorted(got) == sorted(want), d
+        if d < 2:  # "steps" still has a partial "a" bucket pending
+            assert prefix["steps"] == (5, 12)[d]
+    assert prefix == lens
+    assert not any(g[0] == "one" for g in got)
+    assert sum(g[4] for g in got if g[0] == "exact" and g[2] == "c") == 512
+
+
 def test_stateful_buffer_cap_fails_loudly(spark, tmp_path):
     """A never-arriving chunk must not grow per-doc state without bound:
     past max_buffer_tokens the stream FAILS with a clear error instead of
     silently withholding all later buckets."""
-    from matrixprofiler_spark.streaming.stream_rollup import (
-        incremental_bucket_rollup,
-    )
+    from matrixprofiler_spark.streaming.stream_rollup import incremental_tier_rollup
 
     inp = str(tmp_path / "chunks")
     sink = str(tmp_path / "sink")
@@ -203,7 +279,8 @@ def test_stateful_buffer_cap_fails_loudly(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id string, source string, chunk_off long, tokens array<int>"
     ).write.parquet(inp)
-    q = incremental_bucket_rollup(spark, inp, sink, ckpt, max_buffer_tokens=100)
+    q = incremental_tier_rollup(spark, inp, sink, ckpt, tiers={"1m": 60},
+                                max_buffer_tokens=100)
     with pytest.raises(Exception, match="missing from the stream"):
         q.awaitTermination(120)
         raise AssertionError("stream should have failed")
@@ -353,7 +430,7 @@ def test_late_chunks_across_restart_keep_retention_seamfree(spark, tmp_path):
         [chunk("dA", 0), chunk("dA", 64), chunk("dB", 0)], chunk_schema
     ).write.parquet(inp)
     q = incremental_tier_rollup(spark, inp, sink, ckpt,
-                                tiers=(16, 64), tier_names=("1m", "1h"))
+                                tiers={"1m": 16, "1h": 64})
     q.awaitTermination(120)
     mid = spark.read.parquet(sink).collect()
     # buckets past the gap are withheld: dA served only through offset 32
@@ -366,7 +443,7 @@ def test_late_chunks_across_restart_keep_retention_seamfree(spark, tmp_path):
         [chunk("dA", 32), chunk("dB", 32)], chunk_schema
     ).write.mode("append").parquet(inp)
     q = incremental_tier_rollup(spark, inp, sink, ckpt,
-                                tiers=(16, 64), tier_names=("1m", "1h"))
+                                tiers={"1m": 16, "1h": 64})
     q.awaitTermination(120)
 
     # delivery 3: the rest, again spanning a restart
@@ -374,7 +451,7 @@ def test_late_chunks_across_restart_keep_retention_seamfree(spark, tmp_path):
         chunk("dB", o) for o in range(64, 192, 32)]
     spark.createDataFrame(rest, chunk_schema).write.mode("append").parquet(inp)
     q = incremental_tier_rollup(spark, inp, sink, ckpt,
-                                tiers=(16, 64), tier_names=("1m", "1h"))
+                                tiers={"1m": 16, "1h": 64})
     q.awaitTermination(120)
 
     streamed = spark.read.parquet(sink)
