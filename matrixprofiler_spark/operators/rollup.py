@@ -61,11 +61,12 @@ def salted(df: DataFrame, num_partitions: int) -> DataFrame:
     """Hash repartition on (source, doc_id) — defeats token-length skew by
     spreading docs uniformly. For a Python stage, take the count from
     ``plans.plan_partitions``: one wave (cores) unless memory needs more.
-    Each Python task pays ~0.3 s before its first row (PySpark's
-    worker re-reads the zip archives' directories in
-    ``importlib.invalidate_caches()`` at every task start, CPython 3.11),
-    so extra waves only multiply that cost; offset chunking, not more
-    partitions, is what evens out the zipf length tail.
+    Each Python task pays a fixed cost before its first row, 0.06-0.08 s
+    once the package's import-time pin stops PySpark's per-task
+    ``importlib.invalidate_caches()`` from re-reading Spark's own archives
+    (``matrixprofiler_spark/__init__.py``, CPython 3.11), so extra waves
+    only multiply that cost; offset chunking, not more partitions, is what
+    evens out the zipf length tail.
 
     Hashing the natural high-cardinality key directly keeps every output
     partition populated. The previous pmod(xxhash64, n) synthetic salt had

@@ -6,9 +6,12 @@ executor memory, (b) the zipf length tail cannot pin a straggler, and
 One wave: every task that crosses into Python pays a fixed cost before it
 sees a row. PySpark's worker calls ``importlib.invalidate_caches()`` at the
 start of each task, and on CPython 3.11 that re-reads the directory of
-``pyspark.zip`` once for each of its 16 zipimporters. Measured on a 4-core
-VM: 0.28-0.32 s per task, ~0.16 s of it in that call
-(``tools/py_task_cost.py`` re-measures both on any host).
+every zip archive on the worker's path, the ``spark-core`` jar (5,359
+entries) most of all; that was 0.12-0.29 s of a 0.3-0.5 s task. The
+package pins Spark's own archives on import (``_pin_spark_archives`` in
+``matrixprofiler_spark/__init__.py``), so a reused worker's engine task now
+costs 0.06-0.08 s on a 4-core VM (``tools/py_task_cost.py`` re-measures
+both on any host).
 Offset chunking already caps the largest unit of work, so extra waves buy
 no balance; they only make each slot pay that cost once more per wave.
 The fan-out is therefore ``max(memory bound, cores)``.

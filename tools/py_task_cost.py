@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Measure the fixed cost of one Python-UDF task on this host.
+"""Measure the fixed cost of one engine Python-UDF task on this host.
 
     python3 tools/py_task_cost.py [--slots K] [--rows N] [--reps R]
 
@@ -7,10 +7,14 @@ Starts a ``local[K]`` session and times an identity ``mapInPandas`` over N
 rows split into K partitions (one wave of tasks) and into 4K partitions
 (four waves). Each extra wave makes every slot run one more task on the
 same rows, so ``(four_waves_s - one_wave_s) / 3`` is what one task costs
-before it sees a row. It also times ``importlib.invalidate_caches()``
-inside a worker, the call PySpark's worker makes at the start of every
-task, and counts the worker's zipimporters: on CPython 3.11 the call
-re-reads each zip archive's directory, on later releases only lazily.
+before it sees a row. The identity UDF imports ``matrixprofiler_spark``,
+as every engine UDF does when it is unpickled, so the figure is the cost
+the engine's tasks pay. It also times ``importlib.invalidate_caches()``
+inside such a worker, the call PySpark's worker makes at the start of
+every task (on CPython 3.11 it re-reads each zip archive's directory, on
+later releases only lazily), and reports whether the package's pin of
+Spark's own archives is installed there (``pinned``), how many
+zipimporters the worker holds and the realpaths of their archives.
 
 Prints one JSON line. The engine does not import this script; it backs
 the one-wave rule of ``matrixprofiler_spark/plans/partitioning.py``.
@@ -20,21 +24,30 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import platform
 import statistics
 import time
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _identity(batches):
+    import matrixprofiler_spark  # noqa: F401
+
     yield from batches
 
 
 def _invalidate_cost(batches):
     import importlib
+    import os
     import sys
     import zipimport
 
     import pandas as pd
+
+    import matrixprofiler_spark  # noqa: F401
 
     for _ in batches:
         pass
@@ -43,9 +56,15 @@ def _invalidate_cost(batches):
         t0 = time.perf_counter()
         importlib.invalidate_caches()
         times.append(time.perf_counter() - t0)
-    zips = sum(isinstance(v, zipimport.zipimporter)
-               for v in sys.path_importer_cache.values())
-    yield pd.DataFrame({"s": [statistics.median(times)], "zips": [zips]})
+    zips = [v.archive for v in sys.path_importer_cache.values()
+            if isinstance(v, zipimport.zipimporter)]
+    pinned = zipimport.zipimporter.invalidate_caches.__module__ == "matrixprofiler_spark"
+    yield pd.DataFrame({
+        "s": [statistics.median(times)],
+        "zips": [len(zips)],
+        "pinned": [pinned],
+        "archives": [sorted({os.path.realpath(a) for a in zips})],
+    })
 
 
 def _timed(fn, reps: int) -> float:
@@ -66,6 +85,9 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
+    # the Python workers import the engine from this checkout
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [str(REPO), os.environ.get("PYTHONPATH")]))
     k = args.slots
     spark = (SparkSession.builder.master(f"local[{k}]")
              .appName("py_task_cost")
@@ -85,7 +107,8 @@ def main(argv=None) -> int:
         four()
         one_s, four_s = _timed(one, args.reps), _timed(four, args.reps)
         inv = (spark.range(0, 1, 1, 1)
-               .mapInPandas(_invalidate_cost, "s double, zips long")
+               .mapInPandas(_invalidate_cost,
+                            "s double, zips long, pinned boolean, archives array<string>")
                .collect()[0])
         out = {
             "python": platform.python_version(),
@@ -97,6 +120,8 @@ def main(argv=None) -> int:
             "per_task_s": round((four_s - one_s) / 3, 4),
             "invalidate_caches_s": round(inv["s"], 4),
             "worker_zipimporters": int(inv["zips"]),
+            "pinned": bool(inv["pinned"]),
+            "worker_archives": list(inv["archives"]),
         }
     finally:
         spark.stop()
