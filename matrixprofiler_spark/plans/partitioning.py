@@ -25,6 +25,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from ..kernels import native
+from ..kernels.mp import _mpx_selftest
+
 
 @dataclass
 class PartitionPlan:
@@ -76,34 +79,42 @@ def plan_partitions(
     )
 
 
-# Measured single-process throughput of the per-doc MPX diagonal kernel
-# (BENCH/BASELINE.md r5 kernel measurements: ~59M half-pairs/s/proc vs
-# ~35M for the tiled dgemm path, which additionally pays partner-chunk
-# Arrow transfer + cross-tile window-stat recompute). Used only to DERIVE
-# the routing cut below; the bench re-measures both paths every round.
-MPX_BLOB_HALF_PAIRS_PER_SEC = 59e6
+# Routing-cut constants. A blob task must finish within MP_TASK_BUDGET_SEC
+# at the single-thread rate of the MPX kernel that will run it, in
+# half-pairs/s (a doc of n tokens is ~n^2/2 of them). kernels/mp.py:mpx
+# runs the native library only once native.checked("mpx", ...) passes its
+# self-test, else numpy; the two rates are an order of magnitude apart, so
+# each path has its own. tools/mpx_rate.py re-measures both on any host; on
+# a 4-core VM, n = 8,192/20,480/40,000, w = 128, it read
+#   native: 4.7-6.1e8; 4.5e8 here, below every reading -> cut 47,434;
+#   numpy:  3.6-5.2e7; 59e6 here (BENCH/BASELINE.md r5) -> cut 17,175.
+# The tiled dgemm path runs at ~35M half-pairs/s and also pays partner-
+# chunk Arrow transfer, cross-tile window-stat recompute and ~0.8 s of
+# Spark jobs per call even on empty input, so it is never cheaper for a
+# doc that fits one task.
+MP_TASK_BUDGET_SEC = 2.5
+MP_FLOOR_TOKENS = 4096
+MPX_NATIVE_HALF_PAIRS_PER_SEC = 4.5e8
+MPX_NUMPY_HALF_PAIRS_PER_SEC = 59e6
 
 
-def mp_routing_cut(
-    corpus_max_tokens: int,
-    task_budget_sec: float = 2.5,
-    half_pairs_per_sec: float = MPX_BLOB_HALF_PAIRS_PER_SEC,
-    floor_tokens: int = 4096,
-) -> int:
+def mp_routing_cut(corpus_max_tokens: int) -> int:
     """Blob-vs-tile routing cut for the matrix-profile stage, derived from
-    the corpus census + a per-task cost bound instead of a hard-coded
-    constant (VERDICT r5 note #1).
+    the corpus census and a per-task cost bound at the rate of the MPX
+    kernel this process runs.
 
     A doc of n tokens is n^2/2 half-pairs; one blob task must stay under
-    ``task_budget_sec`` at the measured kernel rate, so the budget bound
-    is n_budget = sqrt(2 * budget * rate) (~17k tokens at the defaults).
-    Because the blob kernel is faster PER HALF-PAIR than the tile path,
-    tiles are only worth paying when a doc genuinely cannot be one task:
-    the cut is min(corpus max, budget bound) — at a 16k-max corpus that
-    reproduces the measured-optimal cut==max routing, while a corpus with
-    1M-token docs automatically routes them to tiles at ~17k instead of
-    silently scheduling 8.5h single tasks."""
+    ``MP_TASK_BUDGET_SEC`` at that rate, so the budget bound is
+    n_budget = sqrt(2 * budget * rate): ~47k tokens on the native path,
+    17,175 on the numpy path. Because the blob kernel is faster per
+    half-pair than the tile path, tiles are only worth paying when a doc
+    genuinely cannot be one task: the cut is min(corpus max, budget
+    bound), never below ``MP_FLOOR_TOKENS``. A corpus with 1M-token docs
+    routes them to tiles at the budget bound instead of scheduling
+    multi-hour single tasks."""
     if corpus_max_tokens <= 0:
-        return floor_tokens
-    n_budget = int((2.0 * task_budget_sec * half_pairs_per_sec) ** 0.5)
-    return max(floor_tokens, min(int(corpus_max_tokens), n_budget))
+        return MP_FLOOR_TOKENS
+    rate = (MPX_NUMPY_HALF_PAIRS_PER_SEC if native.checked("mpx", _mpx_selftest) is None
+            else MPX_NATIVE_HALF_PAIRS_PER_SEC)
+    n_budget = int((2.0 * MP_TASK_BUDGET_SEC * rate) ** 0.5)
+    return max(MP_FLOOR_TOKENS, min(int(corpus_max_tokens), n_budget))

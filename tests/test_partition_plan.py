@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
+
+from matrixprofiler_spark.kernels import native
 from matrixprofiler_spark.plans import plan_partitions
+from matrixprofiler_spark.plans.partitioning import mp_routing_cut
 
 
 def test_small_corpus_scheduling_bound():
@@ -43,3 +47,34 @@ def test_no_chunking_for_uniform_short_docs():
     p = plan_partitions(n_docs=10**9, total_tokens=10**11,
                         max_tokens=128, cores=1000)
     assert p.chunk_len is None
+
+
+@pytest.fixture(params=["native", "numpy"])
+def mpx_path(request, monkeypatch):
+    """Pin the ``"mpx"`` kernel gate that ``mp_routing_cut`` consults: any
+    library object selects the native rate, None the numpy rate."""
+    monkeypatch.setitem(native._checked, "mpx",
+                        object() if request.param == "native" else None)
+    return request.param
+
+
+def test_routing_cut_is_the_corpus_max_below_the_budget(mpx_path):
+    assert mp_routing_cut(16_384) == 16_384
+
+
+def test_routing_cut_floor_for_an_empty_corpus(mpx_path):
+    assert mp_routing_cut(0) == 4096
+
+
+@pytest.mark.parametrize("mpx_path", ["numpy"], indirect=True)
+def test_routing_cut_numpy_budget_bound(mpx_path):
+    # sqrt(2 * 2.5 s * 59e6 half-pairs/s)
+    assert mp_routing_cut(1_000_000) == 17_175
+
+
+@pytest.mark.parametrize("mpx_path", ["native"], indirect=True)
+def test_routing_cut_native_keeps_a_20k_doc_in_one_task(mpx_path):
+    # at the native rate the budget bound (~47k) is above a 20,480-token
+    # doc, so the doc runs as one MPX blob instead of tiles
+    assert mp_routing_cut(20_480) == 20_480
+    assert mp_routing_cut(1_000_000) > 20_480

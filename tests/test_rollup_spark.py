@@ -259,6 +259,34 @@ def test_matrix_profile_distributed_bitexact(spark):
         assert got == ref, chunk_len
 
 
+def test_mp_routes_agree_on_one_doc(spark):
+    """The routing cut moves docs between the two matrix-profile routes,
+    so one doc must get the same profile from either: the MPX blob and the
+    distributed tiles agree on every window's value to 1e-9 relative, and
+    on its neighbor wherever the two floating-point paths do not split a
+    near-tie (>= 99% of windows, as in test_matrix_profile_blobs)."""
+    from matrixprofiler_spark.operators.mp_ops import (
+        matrix_profile_blobs, matrix_profile_distributed)
+
+    w = 64
+    toks = np.cumsum(np.random.default_rng(11).integers(-5, 6, size=3000)) + 10_000
+    df = spark.createDataFrame(
+        [("walk", "s", int(toks.size), toks.tolist())],
+        "doc_id string, source string, n_tok int, tokens array<int>")
+    blob = matrix_profile_blobs(df, w, max_tokens=None).collect()[0]
+    mp = gorilla_decode(bytes(blob.mp_blob))
+    pi = dod_decode(bytes(blob.pi_blob))
+    rows = sorted(matrix_profile_distributed(df, w, chunk_len=700).collect(),
+                  key=lambda r: r.off)
+    off = np.array([r.off for r in rows])
+    assert blob.profile_len == toks.size - w + 1
+    np.testing.assert_array_equal(off, np.arange(blob.profile_len))
+    np.testing.assert_allclose([r.mp for r in rows], mp, rtol=1e-9)
+    # MPX profile indexes are 1-based, the tiles' neighbor offsets 0-based
+    agree = (np.array([r.nn_off for r in rows]) == pi - 1).mean()
+    assert agree >= 0.99, agree
+
+
 def test_lttb_keeps_spikes_and_endpoints(spark):
     """LTTB must retain the first point, the last point, and select the
     spike inside a middle bucket (it maximizes the triangle area)."""
