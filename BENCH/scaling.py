@@ -54,8 +54,8 @@ tokens = ensure_synth_tokens(spark, n_docs, {repo!r} + f"/data/tokens_scaling_{{
 tokens.count()  # warm the input cache path (I/O excluded from scaling meas.)
 # warm python workers + kernel imports + Arrow/JIT paths (process-pool
 # warm-up is standard benchmarking practice; workers are reused)
-from matrixprofiler_spark.operators.rollup import finest_rollup as _fr, spine_from_tokens
-_fr(tokens.limit(16)).count()
+from matrixprofiler_spark.operators.rollup import spine_from_tokens
+tier_rollup(tokens.limit(16)).count()
 window_stats(tokens.limit(16), w=128).count()
 
 # the cached parquet is already uniformly laid out in small files, so the

@@ -32,7 +32,7 @@ PREP = r"""
 import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
-from matrixprofiler_spark.operators.rollup import finest_rollup
+from matrixprofiler_spark.operators.rollup import tier_rollup
 from matrixprofiler_spark.sources.tokens import ensure_synth_tokens
 
 n_docs = int(sys.argv[1]); out = sys.argv[2]
@@ -45,7 +45,7 @@ spark.sparkContext.setLogLevel("ERROR")
 tokens = ensure_synth_tokens(spark, n_docs,
                              {repo!r} + f"/data/tokens_scaling_{{n_docs}}",
                              seed=42)
-fine = finest_rollup(tokens, 60).select(
+fine = tier_rollup(tokens, {"1m": 60}).select(
     "doc_id", "source", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v")
 fine.write.mode("overwrite").parquet(out)
 spark.stop()

@@ -93,11 +93,6 @@ def matrix_profile_blobs(tokens_df: DataFrame, w: int, algo: str = "mpx",
     )
 
 
-# Target tiles per task for the distributed-MP fan-out: large enough to
-# amortize per-task scheduling/Arrow setup over the ~50ms tile kernels,
-# small enough that a task stays well under a second of kernel work.
-TILES_PER_TASK = 12
-
 def _tile_selftest(lib) -> None:
     """Raise unless the native tile kernel reproduces the numpy block path
     on adversarial tiles (exact ties, zero-variance windows, near-diagonal
@@ -256,8 +251,6 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
     # near-empty sliver chunk (which would pair with EVERY other chunk of
     # its doc, paying full tile setup + Arrow transfer of the partner
     # array for a handful of windows); results are chunk-invariant
-    # chunk_tokens slices by n_tok, and the census below filters on the
-    # same predicate, so the tile count it estimates is the one chunked
     long_enough = F.col("n_tok") >= 2 * w
     chunks = chunk_tokens(tokens_df.filter(long_enough), w, chunk_len,
                           equalize=True)
@@ -269,32 +262,16 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
     )
     tiles = a.join(b, "doc_id").filter(F.col("b_off") >= F.col("a_off"))
     if num_partitions:
-        # Scale the tile fan-out to the actual tile count instead of
-        # using the caller's hint verbatim: ~3 tiles/task pays more
-        # per-task scheduling + Arrow setup than kernel (measured at the
-        # bench's 1632 tiles: 512 tasks 10.5-14.9s vs 128 tasks
-        # 8.1-8.2s, same band). The census reads only n_tok (column-
-        # pruned) and replicates chunk_tokens' per-doc chunk count, so
-        # it costs one metadata-grade aggregate; the caller's
-        # num_partitions stays the upper bound (the skew/scale defense
-        # at cluster size), one wave (defaultParallelism, see
-        # plans/partitioning.py) the lower bound.
-        nw = F.col("n_tok").cast("double") - float(w - 1)
-        c = F.greatest(F.ceil(nw / float(chunk_len)), F.lit(1)).cast("double")
-        n_tiles = (
-            tokens_df.filter(long_enough)
-            .agg(F.sum(c * (c + 1.0) / 2.0))
-            .collect()[0][0]
-        ) or 0.0
-        floor_parts = tokens_df.sparkSession.sparkContext.defaultParallelism
-        np_eff = int(min(num_partitions,
-                         max(int(np.ceil(n_tiles / TILES_PER_TASK)),
-                             min(num_partitions, floor_parts), 1)))
-        # direct hash on the natural high-cardinality tile key (see
-        # rollup.salted(): a pmod-n synthetic salt leaves ~1/e of the
-        # partitions empty and piles 2-3 tiles into others)
+        # one wave, as for every Python stage (plans/partitioning.py): the
+        # caller's hint is the upper bound, the task slots the fan-out, so
+        # building the plan needs no tile census job. Direct hash on the
+        # natural high-cardinality tile key (see rollup.salted(): a pmod-n
+        # synthetic salt leaves ~1/e of the partitions empty and piles 2-3
+        # tiles into others)
+        slots = tokens_df.sparkSession.sparkContext.defaultParallelism
         tiles = tiles.repartition(
-            np_eff, F.col("doc_id"), F.col("a_off"), F.col("b_off")
+            min(num_partitions, slots),
+            F.col("doc_id"), F.col("a_off"), F.col("b_off"),
         )
 
     part_schema = T.StructType(

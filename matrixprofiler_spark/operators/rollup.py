@@ -12,24 +12,25 @@ the reference's formulas (mean = sum/w, std = sqrt(sumsq/w - mean^2),
 src/windowfunc.cpp:60-84), so a full bucket of size k reproduces
 ``movmean(x, k)`` / ``movstd(x, k)`` sampled at bucket starts bit-for-bit
 (the integer fast path of kernels/window.py is provably equal to the Ogita
-compensated loop on integer data). Coarser tiers are composed from finer
-tiers by integer addition — algebraically exact, no re-reading raw data.
+compensated loop on integer data). Every tier is bucketed straight from
+the raw tokens; ``cascade_tier`` composes a coarser tier from a STORED
+finer one by integer addition — algebraically exact, no raw re-read.
 
 Scale design
 ------------
-* finest tier computed per doc inside ``mapInPandas`` (vectorized numpy
-  reshape-sums; no per-row Python) — docs are independent rows, so there is
-  NO shuffle before the kernel; only an optional salted ``repartition`` to
+* every tier computed per doc inside one ``mapInPandas`` kernel (one
+  cumsum-diff / ``reduceat`` pass per tier over the Arrow batch; no
+  per-row Python) — docs are independent rows, so there is NO shuffle
+  before or after the kernel; only an optional salted ``repartition`` to
   balance token-length skew.
-* tier cascade = ``groupBy(doc_id, bucket/k)`` over already-small
-  per-bucket rows (raw_len/60 rows per doc), a tiny shuffle.
 * raw tier (per-window statistic series) is emitted as Gorilla-compressed
   binary blobs per doc — one row per doc, not one row per offset.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from types import MappingProxyType
+from typing import Iterator, Mapping
 
 import numpy as np
 import pandas as pd
@@ -40,7 +41,7 @@ from pyspark.sql import types as T
 from ..codecs import dod_encode, gorilla_encode, gorilla_encode_many
 from ..kernels.window import movmax, movmean, movmin, movstd
 
-TIER_SIZES = {"1m": 60, "1h": 3600, "1d": 86400}
+TIER_SIZES = MappingProxyType({"1m": 60, "1h": 3600, "1d": 86400})
 
 ROLLUP_SCHEMA = T.StructType(
     [
@@ -82,60 +83,12 @@ def bucket_stats(x: np.ndarray, starts: np.ndarray, ends: np.ndarray):
     ``[starts[i], ends[i])``, which must tile ``x`` in order and be
     non-empty. Returns ``(cnt, sum_v, sumsq, min_v, max_v)`` as int64
     arrays: one cumsum-diff per sum and one ``reduceat`` per extremum,
-    with no per-bucket Python. The batch finest tier and the streaming
-    cascade both compute their buckets here."""
+    with no per-bucket Python. The batch and streaming tiers both compute
+    their buckets here."""
     c = np.concatenate(([0], np.cumsum(x)))
     c2 = np.concatenate(([0], np.cumsum(x * x)))
     return (ends - starts, c[ends] - c[starts], c2[ends] - c2[starts],
             np.minimum.reduceat(x, starts), np.maximum.reduceat(x, starts))
-
-
-def finest_rollup(tokens_df: DataFrame, bucket_size: int = 60) -> DataFrame:
-    """Per-doc finest-tier bucket aggregates via a vectorized Arrow kernel.
-
-    One output row per (doc, bucket); all math is numpy int64 (exact)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if not len(b):
-                continue
-            toks_list = [np.asarray(t, dtype=np.int64) for t in b["tokens"]]
-            lens = np.fromiter((t.size for t in toks_list), dtype=np.int64,
-                               count=len(toks_list))
-            x = (np.concatenate(toks_list) if toks_list
-                 else np.empty(0, dtype=np.int64))
-            # bucket layout: each doc tiles into ceil(n/bs) buckets; buckets
-            # are contiguous in the concatenated array, so every aggregate
-            # is one bucket_stats call over the whole batch — no per-doc
-            # Python at all.
-            nb = (lens + bucket_size - 1) // bucket_size
-            total_nb = int(nb.sum())
-            if total_nb == 0:
-                continue
-            doc_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            doc_ends = doc_starts + lens
-            first_bucket = np.concatenate(([0], np.cumsum(nb)[:-1]))
-            k = np.arange(total_nb, dtype=np.int64) - np.repeat(first_bucket, nb)
-            starts = np.repeat(doc_starts, nb) + k * bucket_size
-            ends = np.minimum(starts + bucket_size, np.repeat(doc_ends, nb))
-            cnt, sum_v, sumsq, min_v, max_v = bucket_stats(x, starts, ends)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(b["doc_id"].to_numpy(), nb),
-                    "source": np.repeat(b["source"].to_numpy(), nb),
-                    "tier": "1m",
-                    "bucket": k,
-                    "cnt": cnt,
-                    "sum_v": sum_v,
-                    "sumsq": sumsq,
-                    "min_v": min_v.astype(np.int32),
-                    "max_v": max_v.astype(np.int32),
-                }
-            )
-
-    return tokens_df.select("doc_id", "source", "tokens").mapInPandas(
-        kernel, schema=ROLLUP_SCHEMA
-    )
 
 
 def cascade_tier(finer: DataFrame, finer_size: int, coarser_size: int,
@@ -176,31 +129,69 @@ def with_derived_stats(rollup: DataFrame) -> DataFrame:
     return rollup.withColumn("mean", mean).withColumn("std", F.sqrt(var))
 
 
-def tier_rollup(tokens_df: DataFrame, num_partitions: int | None = None,
-                persist: bool = False,
+def tier_rollup(tokens_df: DataFrame,
+                tiers: Mapping[str, int] = TIER_SIZES,
+                num_partitions: int | None = None, persist: bool = False,
                 persisted_out: list | None = None) -> DataFrame:
-    """Full cascade raw->1m->1h->1d; returns the union of tier tables.
+    """Every tier of ``tiers`` (ordered ``{name: bucket size}``, the
+    mapping ``incremental_tier_rollup`` takes) straight from the raw
+    tokens, in one vectorized Arrow kernel: one output row per (doc, tier,
+    bucket), all math numpy int64 (exact), no per-doc Python and no
+    shuffle, so the sizes need not nest. A one-entry mapping is a single
+    tier.
 
-    ``persist=True`` caches the finer tiers so the union doesn't re-run the
-    kernel per branch (in production each tier is an Iceberg table written
-    once and read by the next cascade step, which serves the same purpose —
-    see streaming/checkpoint.py). ``persisted_out`` (a caller-supplied
-    list) receives the persisted intermediates so a repeated-measurement
-    harness can unpersist them without clearing unrelated caches."""
+    ``persist=True`` caches the output, whose consumers (per-tier
+    aggregates, gap fill) would otherwise each re-run the kernel; in
+    production each tier is a table written once (streaming/checkpoint.py).
+    ``persisted_out`` (a caller-supplied list) receives the cached
+    DataFrame so a repeated-measurement harness can unpersist it without
+    clearing unrelated caches."""
+    names, sizes = tuple(tiers), tuple(tiers.values())
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            toks_list = [np.asarray(t, dtype=np.int64) for t in b["tokens"]]
+            lens = np.fromiter((t.size for t in toks_list), dtype=np.int64,
+                               count=len(toks_list))
+            if not lens.sum():
+                continue
+            x = np.concatenate(toks_list)
+            doc_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+            doc_ends = doc_starts + lens
+            for name, bs in zip(names, sizes):
+                # each doc tiles into ceil(n/bs) buckets, contiguous in the
+                # concatenated array, so a tier is one bucket_stats call
+                # over the whole batch
+                nb = (lens + bs - 1) // bs
+                first_bucket = np.concatenate(([0], np.cumsum(nb)[:-1]))
+                k = np.arange(nb.sum()) - np.repeat(first_bucket, nb)
+                starts = np.repeat(doc_starts, nb) + k * bs
+                ends = np.minimum(starts + bs, np.repeat(doc_ends, nb))
+                cnt, sum_v, sumsq, min_v, max_v = bucket_stats(x, starts, ends)
+                yield pd.DataFrame(
+                    {
+                        "doc_id": np.repeat(b["doc_id"].to_numpy(), nb),
+                        "source": np.repeat(b["source"].to_numpy(), nb),
+                        "tier": name,
+                        "bucket": k,
+                        "cnt": cnt,
+                        "sum_v": sum_v,
+                        "sumsq": sumsq,
+                        "min_v": min_v.astype(np.int32),
+                        "max_v": max_v.astype(np.int32),
+                    }
+                )
+
     if num_partitions:
         tokens_df = salted(tokens_df, num_partitions)
-    m1 = finest_rollup(tokens_df, TIER_SIZES["1m"])
+    out = tokens_df.select("doc_id", "source", "tokens").mapInPandas(
+        kernel, schema=ROLLUP_SCHEMA
+    )
     if persist:
-        m1 = m1.persist()
+        out = out.persist()
         if persisted_out is not None:
-            persisted_out.append(m1)
-    h1 = cascade_tier(m1, TIER_SIZES["1m"], TIER_SIZES["1h"], "1h")
-    if persist:
-        h1 = h1.persist()
-        if persisted_out is not None:
-            persisted_out.append(h1)
-    d1 = cascade_tier(h1, TIER_SIZES["1h"], TIER_SIZES["1d"], "1d")
-    return m1.unionByName(h1).unionByName(d1)
+            persisted_out.append(out)
+    return out
 
 
 WINDOW_STATS_SCHEMA = T.StructType(
@@ -489,8 +480,10 @@ def retention_policy_multi(tiers: list, horizons: list[int],
     equi-join per tier on the same keys; no corpus-sized broadcast, no
     skew.
 
-    Contract: every coarser tier must be derived from the finest one
-    (``cascade_tier``), so each doc in any tier has a watermark row.
+    Contract: every tier must cover the same docs as the finest one —
+    built from the same tokens (``tier_rollup``) or cascaded from the
+    finest (``cascade_tier``) — so each doc in any tier has a watermark
+    row.
     The contract is enforced: each tier left-joins the watermark and a
     missing wm raises at execution time (fail-fast) instead of the old
     inner join silently dropping the doc."""
@@ -531,8 +524,8 @@ def retention_policy_multi(tiers: list, horizons: list[int],
         if i > 0:
             cond = cond & (end <= cutoffs[i - 1])
         # left join + fail-fast instead of a plain inner join: the
-        # derivation contract (every coarser tier cascaded from the
-        # finest) guarantees a watermark row per doc; if a caller feeds a
+        # derivation contract (every tier built from the finest tier's
+        # docs) guarantees a watermark row per doc; if a caller feeds a
         # mis-derived coarse tier, an inner join would silently DROP its
         # docs. The when() wrapper evaluates the null check before the
         # wm-derived cutoff conditions, so a missing watermark raises
@@ -541,8 +534,9 @@ def retention_policy_multi(tiers: list, horizons: list[int],
             F.col("wm").isNull(),
             F.raise_error(F.lit(
                 "retention_policy_multi: doc present in a coarser tier has "
-                "no watermark row in the finest tier — coarser tiers must "
-                "be derived from the finest (cascade_tier)"
+                "no watermark row in the finest tier — every tier must "
+                "be built from the finest tier's docs (tier_rollup or "
+                "cascade_tier)"
             )).cast("boolean"),
         ).otherwise(cond)
         served.append(
@@ -578,8 +572,8 @@ def realtime_rollup(materialized: DataFrame, tokens_df: DataFrame,
     same, so a freshly-materialized bucket racing the watermark update
     cannot double-serve), the fresh side takes positions ``>= wm``, and
     with an aligned watermark the two partition the offset axis — the
-    union equals ``finest_rollup(tokens)`` row for row (pytest + driver
-    face hash vs the oracle's single full rollup).
+    union equals ``tier_rollup(tokens, {"1m": fine_size})`` row for row
+    (pytest + driver face hash vs the oracle's single full rollup).
 
     Scale shape: one map-side-combinable watermark aggregate (when
     derived) + one equi-join per side on (doc_id, source); the fresh

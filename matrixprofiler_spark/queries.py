@@ -34,7 +34,7 @@ from .operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from .operators.rollup import cascade_tier, finest_rollup, gap_fill
+from .operators.rollup import cascade_tier, gap_fill, tier_rollup
 from .operators.similarity import cosine_pairs_above, cosine_topk
 from .operators.windows import (
     mass_profile_exact,
@@ -116,7 +116,7 @@ def _face_cache(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------- queries
 
 def q_rollup_1m(spark, sf_dir):
-    r = finest_rollup(_tok(spark, sf_dir), BUCKET)
+    r = tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET})
     return r.select("doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v")
 
 
@@ -133,7 +133,7 @@ FROM pos GROUP BY 1, 2
 
 
 def q_rollup_cascade(spark, sf_dir):
-    m1 = finest_rollup(_tok(spark, sf_dir), BUCKET)
+    m1 = tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET})
     h1 = cascade_tier(m1, BUCKET, BUCKET_COARSE, "1h")
     return h1.select("doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v")
 
@@ -153,7 +153,7 @@ def q_retention_policy(spark, sf_dir):
     # persist: wm + fine-served + cascade branches all read m1; without
     # the cache the raw-token Arrow kernel would run once per branch
     _face_caches_clear()
-    m1 = _face_cache(finest_rollup(_tok(spark, sf_dir), BUCKET))
+    m1 = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
     h1 = cascade_tier(m1, BUCKET, BUCKET_COARSE, "1h")
     served = retention_policy(m1, h1, BUCKET, BUCKET_COARSE, RET_HORIZON)
     return served.select(
@@ -218,7 +218,7 @@ def q_retention_expiry(spark, sf_dir, sink_dir=None):
         # run's re-fingerprint all read the rollup; without the cache the
         # raw-token Arrow kernel would run once per pass
         _face_caches_clear()
-        fine = _face_cache(finest_rollup(_tok(spark, sf_dir), BUCKET))
+        fine = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
         job = RetentionExpiryJob(
             spark, base, BUCKET, BUCKET_COARSE, RET_HORIZON, n_groups=4)
         if not job.completed_groups():
@@ -296,7 +296,7 @@ def q_retention_expiry_tiers(spark, sf_dir, sink_dir=None):
     base = sink_dir or tempfile.mkdtemp(prefix="retention_expiry_tiers_")
     try:
         _face_caches_clear()
-        m1 = _face_cache(finest_rollup(_tok(spark, sf_dir), BUCKET))
+        m1 = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
         m2 = cascade_tier(m1, BUCKET, 2 * BUCKET, "2m")
         job = RetentionExpiryJobMulti(
             spark, base, sizes, horizons, n_groups=4)
@@ -401,7 +401,7 @@ def q_retention_compress(spark, sf_dir, sink_dir=None):
     base = sink_dir or tempfile.mkdtemp(prefix="retention_compress_")
     try:
         _face_caches_clear()
-        fine = _face_cache(finest_rollup(_tok(spark, sf_dir), BUCKET))
+        fine = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
         job = CompressionPolicyJob(
             spark, base, BUCKET, COMPRESS_CHUNK, COMPRESS_HORIZON,
             n_groups=4)
@@ -494,7 +494,7 @@ def q_realtime_rollup(spark, sf_dir):
         .withColumn("tokens", F.slice("tokens", F.lit(1), F.col("mwm")))
         .drop("mwm")
     )
-    mat = finest_rollup(trunc, BUCKET).drop("tier")
+    mat = tier_rollup(trunc, {"1m": BUCKET}).drop("tier")
     view = realtime_rollup(mat, toks, BUCKET, tag=True)
     return view.select(
         "doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v",
@@ -530,7 +530,7 @@ def q_retention_tiers_3(spark, sf_dir):
     from .operators.rollup import retention_policy_multi
 
     _face_caches_clear()
-    m1 = _face_cache(finest_rollup(_tok(spark, sf_dir), BUCKET))
+    m1 = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
     m2 = cascade_tier(m1, BUCKET, 2 * BUCKET, "2m")
     m4 = cascade_tier(m1, BUCKET, 4 * BUCKET, "4m")
     served = retention_policy_multi(
@@ -593,7 +593,7 @@ WHERE (c.bucket + 1) * {4 * BUCKET} <= cut1
 
 
 def q_gapfill(spark, sf_dir):
-    m1 = finest_rollup(_tok(spark, sf_dir), BUCKET)
+    m1 = tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET})
     holey = m1.filter(F.pmod(F.col("bucket"), F.lit(5)) != 3)
     filled = gap_fill(holey)
     return filled.select("doc_id", "bucket", "filled", "cnt", "sum_v")
@@ -622,7 +622,7 @@ def q_gapfill_locf(spark, sf_dir):
     after the carry with the shared sum/cnt expression."""
     from .operators.rollup import gap_fill_locf
 
-    m1 = finest_rollup(_tok(spark, sf_dir), BUCKET)
+    m1 = tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET})
     _face_caches_clear()
     holey = _face_cache(m1.filter(F.pmod(F.col("bucket"), F.lit(5)) != 3))
     filled = gap_fill_locf(holey)
@@ -670,7 +670,7 @@ def q_gapfill_interp(spark, sf_dir):
     means; unbracketed holes stay NULL."""
     from .operators.rollup import gap_fill_interpolate
 
-    m1 = finest_rollup(_tok(spark, sf_dir), BUCKET)
+    m1 = tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET})
     _face_caches_clear()
     holey = _face_cache(m1.filter(F.pmod(F.col("bucket"), F.lit(5)) != 3))
     filled = gap_fill_interpolate(holey)
@@ -2213,9 +2213,9 @@ def q_tier_blobs(spark, sf_dir):
     the oracle's direct SQL aggregates (encode/decode cancels exactly —
     Gorilla round-trips every bit pattern)."""
     from .codecs import dod_decode, gorilla_decode
-    from .operators.rollup import tier_blobs, tier_rollup
+    from .operators.rollup import tier_blobs
 
-    roll = tier_rollup(_tok(spark, sf_dir)).filter(F.col("tier") == "1m")
+    roll = tier_rollup(_tok(spark, sf_dir), {"1m": 60})
     blobs = tier_blobs(roll)
 
     out_schema = T.StructType(
@@ -3013,7 +3013,7 @@ def q_rollup_by_source(spark, sf_dir):
     """Corpus-level rollup: exact per-(source, bucket) stats across docs —
     the fleet-wide view of the same tier cascade (one extra exact-int
     groupBy over the finest tier)."""
-    m1 = finest_rollup(_tok(spark, sf_dir), BUCKET)
+    m1 = tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET})
     return (
         m1.groupBy("source", "bucket")
         .agg(
@@ -3090,7 +3090,7 @@ def q_stream_rollup(spark, sf_dir, sink_dir: str | None = None):
     tokens table is staged as a file-source stream, a checkpointed
     availableNow streaming query rolls it up incrementally into a parquet
     sink, and the COMPLETED sink is returned. Same kernel as the batch
-    path (finest_rollup is a streaming-legal transformation), so rows
+    path (tier_rollup is a streaming-legal transformation), so rows
     equal the batch rollup bit-for-bit — the oracle is the batch SQL.
 
     Default (driver) mode uses a self-cleaning temp dir, so the bounded

@@ -13,7 +13,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.rollup import finest_rollup, with_derived_stats
+from ..operators.rollup import tier_rollup, with_derived_stats
 from .commit import GroupCommit
 
 
@@ -94,7 +94,8 @@ class RollupJob:
         for k in batch:
             t0 = time.time()
             part_tokens = staged.filter(F.col("grp") == k)  # pruned read
-            out = with_derived_stats(finest_rollup(part_tokens, self.bucket_size))
+            out = with_derived_stats(
+                tier_rollup(part_tokens, {"1m": self.bucket_size}))
             lineage = {}
             if self.iceberg_table:
                 committed, snapshot_id = self._commit_iceberg(out, k)

@@ -2,8 +2,8 @@
 
 New pre-tokenized docs land as files (or Kafka) and a streaming query
 appends their bucket aggregates to a parquet sink. Token buckets are
-computed by ``operators.rollup.bucket_stats``, the batch finest tier's
-kernel, so streamed rows equal batch rows exactly.
+computed by ``operators.rollup.bucket_stats``, the kernel of the batch
+``tier_rollup``, so streamed rows equal batch rows exactly.
 
 Three entry points, each returning a started ``availableNow`` query:
 * ``stream_tokens_rollup`` — whole docs (tokens parquet) -> finest-tier
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.rollup import ROLLUP_SCHEMA, bucket_stats, finest_rollup
+from ..operators.rollup import ROLLUP_SCHEMA, bucket_stats, tier_rollup
 from ..sources.tokens import TOKENS_SCHEMA
 
 CHUNK_SCHEMA = T.StructType(
@@ -66,7 +66,7 @@ def stream_tokens_rollup(spark: SparkSession, input_dir: str, sink_dir: str,
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
-    return _append_to_parquet(finest_rollup(stream, bucket_size), sink_dir,
+    return _append_to_parquet(tier_rollup(stream, {"1m": bucket_size}), sink_dir,
                               checkpoint_dir)
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from matrixprofiler_spark.operators.rollup import cascade_tier, finest_rollup
+from matrixprofiler_spark.operators.rollup import cascade_tier, tier_rollup
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
 from matrixprofiler_spark.streaming import commit
 from matrixprofiler_spark.streaming.checkpoint import RollupJob
@@ -64,7 +64,7 @@ class Crash(Exception):
 @pytest.fixture(scope="module")
 def inputs(spark):
     tokens = synth_tokens_df(spark, 12, seed=5).cache()
-    fine = finest_rollup(tokens, FINE).cache()
+    fine = tier_rollup(tokens, {"1m": FINE}).cache()
     mid = cascade_tier(fine, FINE, 2 * FINE, "2m").cache()
     return {"tokens": tokens, "fine": fine, "mid": mid}
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from matrixprofiler_spark.codecs import dod_decode
-from matrixprofiler_spark.operators.rollup import finest_rollup, retention_policy
+from matrixprofiler_spark.operators.rollup import retention_policy, tier_rollup
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
 from matrixprofiler_spark.streaming.compress import CompressionPolicyJob
 
@@ -19,7 +19,7 @@ FINE, CHUNK, HORIZON = 16, 64, 32
 @pytest.fixture(scope="module")
 def fine(spark):
     toks = synth_tokens_df(spark, 40, seed=7)
-    df = finest_rollup(toks, FINE).cache()
+    df = tier_rollup(toks, {"1m": FINE}).cache()
     df.count()
     return df
 
@@ -231,7 +231,7 @@ def test_compress_random_configs_match_model(spark, tmp_path_factory):
             [(d, [int(v) for v in np.arange(n, dtype=np.int64) % 97], n,
               "web") for d, n in docs.items()],
             "doc_id string, tokens array<int>, n_tok int, source string")
-        fine_df = finest_rollup(tokens, fine_size).cache()
+        fine_df = tier_rollup(tokens, {"1m": fine_size}).cache()
         fine_df.count()
         base = tmp_path_factory.mktemp(f"cmp_model_{trial}")
         job = CompressionPolicyJob(spark, base, fine_size, chunk, horizon,

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from matrixprofiler_spark.operators.rollup import (
-    finest_rollup,
     gap_fill,
     tier_rollup,
     window_stats,
@@ -82,7 +81,7 @@ def test_matrix_profile_edge(spark, edge_tokens):
 def test_gap_fill_edge(spark, edge_tokens):
     from matrixprofiler_spark.operators.rollup import spine_from_tokens
 
-    m1 = finest_rollup(edge_tokens)
+    m1 = tier_rollup(edge_tokens, {"1m": 60})
     # drop every bucket of one doc except bucket 0 — including the TRAILING
     # buckets, which a data-derived spine cannot see; the n_tok-derived
     # spine restores them all

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from matrixprofiler_spark.operators.rollup import (
     cascade_tier,
-    finest_rollup,
     retention_policy,
+    tier_rollup,
 )
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
 from matrixprofiler_spark.streaming.commit import fingerprint, read_manifest
@@ -23,7 +23,7 @@ FINE, COARSE, HORIZON = 16, 64, 32
 @pytest.fixture(scope="module")
 def fine(spark):
     toks = synth_tokens_df(spark, 40, seed=7)
-    df = finest_rollup(toks, FINE).cache()
+    df = tier_rollup(toks, {"1m": FINE}).cache()
     df.count()
     return df
 

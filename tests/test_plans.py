@@ -8,10 +8,12 @@ HashAggregate operators rather than asserted by name.)"""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from matrixprofiler_spark.operators.rollup import finest_rollup
+from matrixprofiler_spark.operators.rollup import tier_rollup
 from matrixprofiler_spark.operators.similarity import cosine_topk
 from matrixprofiler_spark.sources.tokens import tokens_from_documents
 
@@ -25,10 +27,10 @@ def plan_of(df) -> str:
 
 
 def test_scan_prunes_columns(spark):
-    """finest_rollup needs only doc_id/tokens/source -> ReadSchema must not
+    """tier_rollup needs only doc_id/tokens/source -> ReadSchema must not
     include lang or n_chars."""
     tok = tokens_from_documents(spark, SF)
-    plan = plan_of(finest_rollup(tok))
+    plan = plan_of(tier_rollup(tok, {"1m": 60}))
     assert "ReadSchema" in plan
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "lang" not in read_schema
@@ -39,7 +41,7 @@ def test_scan_prunes_columns(spark):
 def test_filter_pushdown_to_scan(spark):
     """A source filter must reach the parquet scan as a pushed filter."""
     tok = tokens_from_documents(spark, SF).filter(F.col("source") == "src1")
-    plan = plan_of(finest_rollup(tok))
+    plan = plan_of(tier_rollup(tok, {"1m": 60}))
     assert "PushedFilters" in plan
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l][0]
     assert "source" in pushed and "src1" in pushed
@@ -50,8 +52,41 @@ def test_no_shuffle_before_kernel(spark):
     on the scan — zero Exchange operators in the plan unless salting is
     explicitly requested."""
     tok = tokens_from_documents(spark, SF)
-    plan = plan_of(finest_rollup(tok))
+    plan = plan_of(tier_rollup(tok, {"1m": 60}))
     assert "Exchange" not in plan
+
+
+def _tree_nodes(plan: str) -> list[str]:
+    """Node names of a formatted plan's operator tree (its first block)."""
+    return [re.sub(r"^[\s:+-]*", "", line).rsplit(" (", 1)[0].strip()
+            for line in plan.split("\n\n")[0].splitlines()[1:]]
+
+
+def test_tier_rollup_is_one_kernel(spark):
+    """Every tier comes out of one Arrow kernel over the raw tokens: the
+    salted plan has the salt as its only Exchange, one MapInPandas and no
+    aggregation, whatever tiers it emits."""
+    tok = tokens_from_documents(spark, SF)
+    nodes = _tree_nodes(plan_of(tier_rollup(tok, num_partitions=4)))
+    assert nodes.count("Exchange") == 1
+    assert nodes.count("MapInPandas") == 1
+    assert not [n for n in nodes if "Aggregate" in n]
+
+
+def test_distributed_mp_builds_without_jobs(spark):
+    """Building the tiled matrix profile runs no Spark job: its fan-out
+    is one wave of task slots, not sized by an eager tile census."""
+    from matrixprofiler_spark.operators.mp_ops import matrix_profile_distributed
+
+    tok = tokens_from_documents(spark, SF)
+    sc = spark.sparkContext
+    group = "test_distributed_mp_builds_without_jobs"
+    sc.setJobGroup(group, "build matrix_profile_distributed")
+    try:
+        matrix_profile_distributed(tok, 8, num_partitions=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
 def test_broadcast_join_for_small_query_side(spark):
@@ -68,7 +103,7 @@ def test_whole_stage_codegen_in_cascade(spark):
     from matrixprofiler_spark.operators.rollup import cascade_tier
 
     tok = tokens_from_documents(spark, SF)
-    h1 = cascade_tier(finest_rollup(tok), 60, 3600, "1h")
+    h1 = cascade_tier(tier_rollup(tok, {"1m": 60}), 60, 3600, "1h")
     plan = plan_of(h1)
     # map-side partial aggregation + exactly one shuffle on the group keys
     assert plan.count("HashAggregate") >= 2

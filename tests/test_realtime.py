@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from matrixprofiler_spark.operators.rollup import finest_rollup, realtime_rollup
+from matrixprofiler_spark.operators.rollup import realtime_rollup, tier_rollup
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
 
 FINE, LAG = 16, 24
@@ -33,7 +33,7 @@ def stale_mat(toks):
         .withColumn("tokens", F.slice("tokens", F.lit(1), F.col("mwm")))
         .drop("mwm")
     )
-    df = finest_rollup(trunc, FINE).drop("tier").cache()
+    df = tier_rollup(trunc, {"1m": FINE}).drop("tier").cache()
     df.count()
     return df
 
@@ -43,7 +43,7 @@ def _rows(df):
 
 
 def test_identity_and_split(spark, toks, stale_mat):
-    full = finest_rollup(toks, FINE).drop("tier")
+    full = tier_rollup(toks, {"1m": FINE}).drop("tier")
     view = realtime_rollup(stale_mat, toks, FINE, tag=True)
     assert _rows(view) == _rows(full)
     parts = {r["part"]: r["n"] for r in
@@ -58,7 +58,7 @@ def test_stored_watermark_path(spark, toks, stale_mat):
     wm = stale_mat.groupBy("doc_id", "source").agg(
         ((F.max("bucket") + 1) * FINE).alias("wm"))
     view = realtime_rollup(stale_mat, toks, FINE, watermark=wm)
-    full = finest_rollup(toks, FINE).drop("tier")
+    full = tier_rollup(toks, {"1m": FINE}).drop("tier")
     assert _rows(view) == _rows(full)
 
 
@@ -73,9 +73,9 @@ def test_never_materialized_doc_served_from_raw(spark, toks):
     """A doc with no materialized rows at all (and no watermark row) is
     served entirely from the raw side."""
     one = toks.limit(1)
-    empty_mat = finest_rollup(toks, FINE).drop("tier").limit(0)
+    empty_mat = tier_rollup(toks, {"1m": FINE}).drop("tier").limit(0)
     view = realtime_rollup(empty_mat, one, FINE, tag=True)
-    full = finest_rollup(one, FINE).drop("tier")
+    full = tier_rollup(one, {"1m": FINE}).drop("tier")
     assert _rows(view) == _rows(full)
     assert view.where(F.col("part") == "materialized").count() == 0
     # exactly-once: served counts add back to n_tok

@@ -10,7 +10,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from matrixprofiler_spark.operators.rollup import finest_rollup, with_derived_stats
+from matrixprofiler_spark.operators.rollup import tier_rollup, with_derived_stats
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
 from matrixprofiler_spark.streaming.checkpoint import RollupJob
 from matrixprofiler_spark.streaming.commit import read_manifest
@@ -47,7 +47,7 @@ def test_kill_and_resume(spark, tokens, tmp_path_factory):
     # resumed result == single-shot computation, bit-for-bit
     resumed = job2.result().orderBy("doc_id", "bucket").collect()
     direct = (
-        with_derived_stats(finest_rollup(tokens))
+        with_derived_stats(tier_rollup(tokens, {"1m": 60}))
         .orderBy("doc_id", "bucket")
         .collect()
     )
@@ -200,7 +200,7 @@ def test_iceberg_kill_and_resume(spark, tokens, tmp_path):
     resumed.run(tokens)
     assert len(resumed.completed_groups()) == 4
     got = sorted(map(tuple, resumed.result().collect()))
-    direct = sorted(map(tuple, with_derived_stats(finest_rollup(tokens)).collect()))
+    direct = sorted(map(tuple, with_derived_stats(tier_rollup(tokens, {"1m": 60})).collect()))
     assert got == direct
 
 

@@ -4,7 +4,7 @@
     movmean/movstd at bucket starts — the reference-parity bridge);
 (b) the embedded golden doc round-trips the Spark path;
 (c) per-row tokens equality vs the source table (input_hint invariant);
-(d) tier cascade (1h from 1m) == direct computation, exactly;
+(d) every tier of any mapping == direct numpy computation, exactly;
 (e) gap-fill restores a dense spine with filled flags;
 (f) parallelism invariance: output identical at 1 vs 8 partitions.
 """
@@ -80,18 +80,29 @@ def test_tier_stats_match_kernel_oracle(spark, tokens):
     assert checked > 100
 
 
-def test_tier_cascade_exact(spark, tokens):
-    """1h tier composed from 1m == 1h computed directly from tokens."""
-    roll = tier_rollup(tokens)
-    h1 = roll.filter(F.col("tier") == "1h").orderBy("doc_id", "bucket").collect()
+@pytest.mark.parametrize(
+    "tiers",
+    [TIER_SIZES, {"a": 16, "b": 64, "c": 256}, {"p": 7, "q": 100}],
+    ids=["1m-1h-1d", "nested", "non-nested"],
+)
+def test_tier_cascade_exact(spark, tokens, tiers):
+    """Every bucket of every tier, for any mapping (nested or not), equals
+    the numpy slice of the doc's tokens, and the tiers are the mapping's."""
+    roll = tier_rollup(tokens, tiers).toPandas()
+    assert set(roll["tier"]) == set(tiers)
     pdf = tokens.select("doc_id", "tokens").toPandas().set_index("doc_id")
-    for r in h1:
-        x = np.asarray(pdf.loc[r.doc_id, "tokens"], dtype=np.int64)
-        seg = x[r.bucket * 3600 : (r.bucket + 1) * 3600]
-        assert r.cnt == seg.size
-        assert r.sum_v == seg.sum()
-        assert r.sumsq == (seg * seg).sum()
-        assert r.min_v == seg.min() and r.max_v == seg.max()
+    for (doc_id, tier), g in roll.groupby(["doc_id", "tier"]):
+        x = np.asarray(pdf.loc[doc_id, "tokens"], dtype=np.int64)
+        bs = tiers[tier]
+        g = g.sort_values("bucket")
+        segs = [x[i:i + bs] for i in range(0, x.size, bs)]
+        np.testing.assert_array_equal(g["bucket"], np.arange(len(segs)))
+        for col, f in (("cnt", np.size), ("sum_v", np.sum),
+                       ("sumsq", lambda v: np.sum(v * v)),
+                       ("min_v", np.min), ("max_v", np.max)):
+            np.testing.assert_array_equal(g[col], [f(v) for v in segs], col)
+    assert roll.groupby("tier")["doc_id"].nunique().to_dict() == {
+        t: len(pdf) for t in tiers}
 
 
 def test_window_stats_blobs_roundtrip(spark, tokens):
@@ -372,12 +383,11 @@ def test_retention_policy_partitions_offset_axis(spark, tokens):
     tiers must actually serve rows at a 256-token horizon."""
     from matrixprofiler_spark.operators.rollup import (
         cascade_tier,
-        finest_rollup,
         retention_policy,
     )
 
     fine_sz, coarse_sz, horizon = 16, 64, 256
-    m1 = finest_rollup(tokens, fine_sz)
+    m1 = tier_rollup(tokens, {"1m": fine_sz})
     h1 = cascade_tier(m1, fine_sz, coarse_sz, "1h")
     served = retention_policy(m1, h1, fine_sz, coarse_sz, horizon)
 
@@ -417,11 +427,10 @@ def test_retention_policy_multi_three_tiers(spark, tokens):
 
     from matrixprofiler_spark.operators.rollup import (
         cascade_tier,
-        finest_rollup,
         retention_policy_multi,
     )
 
-    m1 = finest_rollup(tokens, 16)
+    m1 = tier_rollup(tokens, {"1m": 16})
     m2 = cascade_tier(m1, 16, 32, "2m")
     m4 = cascade_tier(m1, 16, 64, "4m")
     tiers = [(m1, 16), (m2, 32), (m4, 64)]
@@ -647,7 +656,6 @@ def test_retention_multi_random_configs_match_model(spark):
 
     from matrixprofiler_spark.operators.rollup import (
         cascade_tier,
-        finest_rollup,
         retention_policy_multi,
     )
 
@@ -668,7 +676,7 @@ def test_retention_multi_random_configs_match_model(spark):
              [(r[0], r[1], r[2], r[3]) for r in rows]],
             "doc_id string, tokens array<int>, n_tok int, source string")
 
-        fine = finest_rollup(tokens, sizes[0])
+        fine = tier_rollup(tokens, {"1m": sizes[0]})
         tiers = [(fine, sizes[0])]
         for i, sz in enumerate(sizes[1:], 1):
             tiers.append((cascade_tier(fine, sizes[0], sz, f"T{i}"), sz))

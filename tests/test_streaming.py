@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from matrixprofiler_spark.operators.rollup import finest_rollup
+from matrixprofiler_spark.operators.rollup import tier_rollup
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
 from matrixprofiler_spark.streaming.stream_rollup import (
     stream_events_rollup,
@@ -28,7 +28,7 @@ def test_streaming_rollup_equals_batch(spark, tmp_path):
 
     got = spark.read.parquet(sink).orderBy("doc_id", "bucket").collect()
     want = (
-        finest_rollup(spark.read.parquet(inp))
+        tier_rollup(spark.read.parquet(inp), {"1m": 60})
         .orderBy("doc_id", "bucket")
         .collect()
     )
@@ -45,7 +45,7 @@ def test_streaming_rollup_equals_batch(spark, tmp_path):
     q2 = stream_tokens_rollup(spark, inp, sink, ckpt)
     q2.awaitTermination(120)
     total = spark.read.parquet(sink).count()
-    expect = finest_rollup(spark.read.parquet(inp)).count()
+    expect = tier_rollup(spark.read.parquet(inp), {"1m": 60}).count()
     assert total == expect
 
 
@@ -124,7 +124,7 @@ def test_stateful_incremental_rollup(spark, tmp_path):
     )
     want = {
         (r.doc_id, r.bucket): r
-        for r in finest_rollup(batch_tokens).filter(F.col("cnt") == 60).collect()
+        for r in tier_rollup(batch_tokens, {"1m": 60}).filter(F.col("cnt") == 60).collect()
     }
     assert set(got) == set(want)
     for k in want:
@@ -136,7 +136,7 @@ def test_streaming_tier_cascade(spark, tmp_path):
     """Multi-tier continuous aggregates: the stateful cascade emits 1m AND
     1h buckets as they complete, across a restart, equal to the batch
     tier cascade's completed buckets."""
-    from matrixprofiler_spark.operators.rollup import cascade_tier, finest_rollup
+    from matrixprofiler_spark.operators.rollup import cascade_tier
     from matrixprofiler_spark.streaming.stream_rollup import incremental_tier_rollup
 
     inp = str(tmp_path / "tchunks")
@@ -174,7 +174,7 @@ def test_streaming_tier_cascade(spark, tmp_path):
         [(k, [int(v) for v in x], int(x.size), "web") for k, x in docs.items()],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    m1 = finest_rollup(full, 60)
+    m1 = tier_rollup(full, {"1m": 60})
     h1 = cascade_tier(m1, 60, 3600, "1h")
     batch = m1.unionByName(h1).collect()
     want = {
@@ -225,7 +225,7 @@ def test_streaming_cascade_edge_corpus(spark, tmp_path, seed):
         [(k, [int(v) for v in x], int(x.size), "web") for k, x in docs.items()],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    fine = finest_rollup(full, tiers["a"]).withColumn("tier", F.lit("a"))
+    fine = tier_rollup(full, {"a": tiers["a"]})
     mid = cascade_tier(fine, tiers["a"], tiers["b"], "b")
     coarse = cascade_tier(mid, tiers["b"], tiers["c"], "c")
     batch = fine.unionByName(mid).unionByName(coarse).collect()
@@ -382,7 +382,7 @@ def test_streamed_rollup_feeds_retention_view(spark, tmp_path):
 
     key = ["doc_id", "source", "tier", "bucket"]
     streamed = view(spark.read.parquet(sink)).orderBy(key).collect()
-    batch = view(finest_rollup(tokens, 16)).orderBy(key).collect()
+    batch = view(tier_rollup(tokens, {"1m": 16})).orderBy(key).collect()
     assert len(streamed) == len(batch) > 0
     for a, b in zip(streamed, batch):
         assert a.asDict() == b.asDict()
@@ -405,7 +405,6 @@ def test_late_chunks_across_restart_keep_retention_seamfree(spark, tmp_path):
     batch path and seam-free (sum(cnt) == n_tok per doc)."""
     from matrixprofiler_spark.operators.rollup import (
         cascade_tier,
-        finest_rollup,
         retention_policy,
     )
     from matrixprofiler_spark.streaming.stream_rollup import incremental_tier_rollup
@@ -472,7 +471,7 @@ def test_late_chunks_across_restart_keep_retention_seamfree(spark, tmp_path):
         streamed.filter(F.col("tier") == "1m"),
         streamed.filter(F.col("tier") == "1h"),
     ).orderBy(key).collect()
-    m1 = finest_rollup(full, 16)
+    m1 = tier_rollup(full, {"1m": 16})
     want = view(m1, cascade_tier(m1, 16, 64, "1h")).orderBy(key).collect()
     assert len(got) == len(want) > 0
     for a, b in zip(got, want):
@@ -524,7 +523,7 @@ def test_streamed_fine_tier_survives_physical_expiry(spark, tmp_path):
 
     key = ["doc_id", "source", "tier", "bucket"]
     got = job2.serving_view(coarse).orderBy(key).collect()
-    m1 = finest_rollup(tokens, fine_sz)
+    m1 = tier_rollup(tokens, {"1m": fine_sz})
     want = retention_policy(
         m1, cascade_tier(m1, fine_sz, coarse_sz, "1h"),
         fine_sz, coarse_sz, horizon,

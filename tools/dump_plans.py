@@ -37,8 +37,8 @@ def main():
 
     from matrixprofiler_spark.operators.rollup import (
         cascade_tier,
-        finest_rollup,
         gap_fill,
+        tier_rollup,
         window_stats_chunked,
     )
     from matrixprofiler_spark.operators.similarity import (
@@ -60,14 +60,14 @@ def main():
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
 
     sections = {
-        "finest_rollup (kernel on pruned scan, zero shuffles)": finest_rollup(tok),
-        "finest_rollup with source filter (pushdown)": finest_rollup(
-            tok.filter(F.col("source") == "src1")
+        "tier_rollup (1m/1h/1d in one kernel on pruned scan, zero shuffles)":
+            tier_rollup(tok),
+        "tier_rollup 1m with source filter (pushdown)": tier_rollup(
+            tok.filter(F.col("source") == "src1"), {"1m": 60}
         ),
-        "tier cascade 1m->1h (map-side partial agg, one Exchange)": cascade_tier(
-            finest_rollup(tok), 60, 3600, "1h"
-        ),
-        "gap_fill (generated spine + equi-join)": gap_fill(finest_rollup(tok)),
+        "cascade_tier 1m->1h from a stored 1m tier (map-side partial agg, one Exchange)":
+            cascade_tier(tier_rollup(tok, {"1m": 60}), 60, 3600, "1h"),
+        "gap_fill (generated spine + equi-join)": gap_fill(tier_rollup(tok, {"1m": 60})),
         "window_stats_chunked (offset-range chunking, JVM-side slice)":
             window_stats_chunked(tok, 64, chunk_len=500),
         "cosine_topk (broadcast query side)": cosine_topk(emb, k=1, num_queries=5),
@@ -124,7 +124,7 @@ def main():
     from matrixprofiler_spark.streaming.compress import CompressionPolicyJob
     from matrixprofiler_spark.streaming.expiry import RetentionExpiryJob
 
-    fine = finest_rollup(tok, 16).cache()
+    fine = tier_rollup(tok, {"1m": 16}).cache()
     fine.count()
     tmp = tempfile.TemporaryDirectory(prefix="plans_")
     c_root, e_root = f"{tmp.name}/compress", f"{tmp.name}/expiry"
