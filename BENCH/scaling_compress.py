@@ -7,9 +7,9 @@ local-cluster[4N,c] (each executor its own JVM + python workers),
 efficiency = (rows/s @ 4N) / (4 x rows/s @ N), interleaved best-of-reps
 (the sandbox CPU quota fluctuates ~2x).
 
-The measured window is the END-TO-END job: staged fingerprint-bound input
-write, per-group watermark + cutoff join, DoD segment encode
-(applyInPandas), head/segment writes, lineage manifests — i.e. everything
+The measured window is the END-TO-END job: the fingerprint binding of the
+live input, per-group watermark + cutoff join, DoD segment encode
+(mapInPandas), head/segment writes, lineage manifests — i.e. everything
 `CompressionPolicyJob.run` commits.
 
 Usage: python BENCH/scaling_compress.py [n_small] [n_docs]

@@ -214,9 +214,10 @@ def q_retention_expiry(spark, sf_dir, sink_dir=None):
 
     base = sink_dir or tempfile.mkdtemp(prefix="retention_expiry_")
     try:
-        # persist: the fingerprint aggregate + staged write + the resume
-        # run's re-fingerprint all read the rollup; without the cache the
-        # raw-token Arrow kernel would run once per pass
+        # persist: the job reads its input live — the watermark pass,
+        # the compaction pass and the resume run's re-fingerprint all
+        # read the rollup; without the cache the raw-token Arrow kernel
+        # would run once per pass
         _face_caches_clear()
         fine = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
         job = RetentionExpiryJob(

@@ -73,11 +73,11 @@ class RollupJob:
                     "Spark runtime jar), falling back is not silent by "
                     "design — drop the argument to use parquet+manifests"
                 )
-        # staging keeps the input's own partitioning: each group's rollup
-        # then runs with the input's parallelism, not one task per group
+        # the staged copy keeps the input's own partitioning: each
+        # group's pruned read then runs with the input's parallelism, not
+        # one task per group
         self.store = GroupCommit(spark, base_dir, STAGE, n_groups,
-                                 {"bucket_size": bucket_size},
-                                 layout_staging=False)
+                                 {"bucket_size": bucket_size})
 
     def completed_groups(self) -> list[int]:
         return self.store.completed_groups()

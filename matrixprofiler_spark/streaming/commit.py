@@ -9,45 +9,66 @@ one group — and commit group by group. In production every group commit
 is an Iceberg snapshot commit (atomic, versioned, time-travelable) and
 resume asks "which groups are already in the committed snapshot?". The
 :class:`GroupCommit` store keeps that contract with parquet and one JSON
-manifest per committed group; it is the only code that writes staged
-inputs, fingerprints, manifests and stage markers.
+manifest per committed group; it is the only code that writes
+fingerprints, manifests and stage markers.
 
 Layout under ``base_dir``:
 
-    <staged>/grp=<k>/...parquet    the input, written once, hive-partitioned
-                                   by group, so each commit unit is a
-                                   partition-pruned read (at 100 TB: one
-                                   write + pruned reads, not a full scan
-                                   per group)
-    input_fingerprint.json         identity of the staged input + policy
-    <store>/grp=<k>/...parquet     the job's outputs, one partition per group
+    input_fingerprint.json         identity of the bound input + policy,
+                                   and the input's metadata pin
+    <store>/grp=<k>/...parquet     the job's outputs, one partition per
+                                   group, one file per group per write
     manifests/<stage>_<k>.json     lineage of group k: censuses, policy,
                                    input fingerprint, kernel version,
                                    wall time
     _stage_<stage>_COMMITTED       every group has a manifest
+    input_staged/grp=<k>/...       (rollup only) a copy of the input,
+                                   hive-partitioned by group, so each of
+                                   its one-group passes is a pruned read
 
-Fingerprint (recipe ``FP_RECIPE``): the row count plus the
-``decimal(38,0)`` SUM of ``xxhash64`` over every input column. The sum is
-order-independent and, unlike a ``bit_xor`` (where a duplicated row pair
-cancels), duplicate-sensitive: {A, B, B} and {A, C, C} differ. The decimal
-cannot overflow at any realistic row count. A fresh staging observes it on
-the staging write itself (no extra pass); a resume recomputes it with one
-map-side-combinable aggregate. The stored record carries the recipe tag,
-the job's policy and ``n_groups``, so a base dir binds to one (input,
-policy, grouping): a mismatch against committed work fails loudly — naming
-the hash-formula change when the recipe tags differ — while a mismatch
-with nothing committed simply restages.
+Binding. The expiry and compression jobs read their input live: the
+input is treated as an immutable snapshot — the Iceberg snapshot-id
+analog — and the base dir binds to its identity instead of a copy
+(:meth:`GroupCommit.bind`). Two identities:
+
+* the content fingerprint (recipe ``FP_RECIPE``): the row count plus the
+  ``decimal(38,0)`` SUM of ``xxhash64`` over every input column. The sum
+  is order-independent and, unlike a ``bit_xor`` (where a duplicated row
+  pair cancels), duplicate-sensitive: {A, B, B} and {A, C, C} differ. The
+  decimal cannot overflow at any realistic row count. A fresh binding
+  observes it on the job's own first pass over the input (no extra
+  pass); should AQE prune the observed stage — an empty input or batch —
+  one aggregate computes it instead, so an empty input reads
+  ``n = 0, h = 0``.
+* the metadata pin: the analyzed plan's ``semanticHash()`` plus the
+  sorted ``inputFiles()`` with each file's size and mtime. It exists only
+  for a deterministic plan whose leaves are all file relations and that
+  runs no Python UDF; the same files under another projection hash
+  differently. The plan hash is stable within one session (JVM), so an
+  unchanged re-run there launches no Spark job; a re-run from another
+  session recomputes the content fingerprint.
+
+The stored record carries the recipe tag, the job's policy and
+``n_groups``, so a base dir binds to one (input, policy, grouping): a
+re-run whose pin matches is bound; otherwise the content fingerprint
+decides. A mismatch against committed work fails loudly — naming the
+hash-formula change when the recipe tags differ — while a mismatch with
+nothing committed simply rebinds.
 
 Commit order, and what a crash at each point leaves behind:
 
-1. staged data (its ``_SUCCESS``), then the fingerprint: a crash in
-   between leaves no fingerprint, and the next run restages;
-2. the batch's data writes: dynamic partition overwrites that touch only
+1. the batch's data writes: dynamic partition overwrites that touch only
    the batch's groups, redone by the next run since no manifest names
    them (committed groups' data is never rewritten);
+2. on a fresh binding, the fingerprint, before any manifest: a crash
+   before it leaves no binding, and the next run binds afresh;
 3. one manifest per group, write-then-rename: THE commit point — a torn
    or missing manifest means "not committed";
 4. the stage marker, once every group has a manifest.
+
+The rollup job stages first instead (:meth:`GroupCommit.stage`): its
+staged data (its ``_SUCCESS``), then the fingerprint, then steps 1-4 per
+group; a crash between the first two restages.
 
 ``fail_after=N`` restricts a run to the first N incomplete groups and
 raises ``injected failure`` after committing them (kill-and-resume tests).
@@ -57,9 +78,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from pathlib import Path
 
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,6 +95,9 @@ from .. import __version__
 # input changed". v1: xxhash64(doc_id, n_tok); v2: + token values, bit_xor;
 # v3: decimal sum over every input column.
 FP_RECIPE = 3
+
+# footer key under which Spark's parquet writer keeps the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _fp_metrics(cols: list[str]) -> list[Column]:
@@ -108,26 +135,32 @@ def read_manifest(base_dir: str | Path, stage: str, part: int) -> dict | None:
         return None  # torn write == incomplete
 
 
+def stored_schema(root: str | Path) -> T.StructType:
+    """The row schema a group-partitioned store under ``root`` was written
+    with, from one file's footer (every group holds a file, see
+    :meth:`GroupCommit.backfill`): no schema-inference job."""
+    f = next(Path(root).glob("grp=*/*.parquet"))
+    meta = pq.read_schema(f).metadata[_SPARK_SCHEMA_KEY]
+    return T.StructType.fromJson(json.loads(meta))
+
+
 class GroupCommit:
     """The commit store of one job stage under ``base_dir``.
 
     ``policy`` (a JSON-able dict) is recorded in the fingerprint and in
-    every manifest. ``staged`` names the staged-input directory.
-    ``layout_staging`` repartitions the staging write by group (one file
-    per group); a job whose per-group work wants the input's own
-    parallelism turns it off."""
+    every manifest."""
 
     def __init__(self, spark: SparkSession, base_dir: str | Path, stage: str,
-                 n_groups: int, policy: dict, staged: str = "input_staged",
-                 layout_staging: bool = True):
+                 n_groups: int, policy: dict):
         self.spark = spark
         self.base = Path(base_dir)
         self.stage_name = stage
         self.n_groups = n_groups
         self.policy = policy
-        self.staged = self.base / staged
-        self.layout_staging = layout_staging
         self.fp: dict | None = None
+        # a fresh binding until its fingerprint is written:
+        # (input, observation, pin)
+        self._fresh: tuple | None = None
         (self.base / "manifests").mkdir(parents=True, exist_ok=True)
 
     # ------------------------------------------------------------ groups
@@ -158,64 +191,128 @@ class GroupCommit:
         hive-partitioned write fans each of ~shuffle-partitions tasks into
         up to n_groups grp dirs — measured 1004 files for a 6891-row
         store, and every later scan pays a task + Python-worker roundtrip
-        per couple of files. One hash repartition puts each group into
-        one file per write; at scale, choose n_groups so each file lands
-        in the 128MB-1GB band (the group stays the commit unit).
+        per couple of files. One hash repartition on the group puts each
+        group into exactly one task, so one file per write; at scale,
+        choose n_groups so each file lands in the 128MB-1GB band (the
+        group stays the commit unit). ``min(n_groups, task slots)`` tasks
+        make the write one wave."""
+        return df.repartition(
+            min(self.n_groups, self.spark.sparkContext.defaultParallelism),
+            F.col("grp"))
 
-        The constant second key fixes which task each group hashes to
-        (n_groups=8: two groups on each of four tasks; the group key
-        alone puts three on one task), so it sets every write's task
-        balance."""
-        return df.repartition(self.n_groups, F.col("grp"),
-                              F.lit(0).cast("long"))
+    # ----------------------------------------------------------- binding
 
-    # ----------------------------------------------------------- staging
-
-    def _bind(self, fp: dict) -> dict:
+    def _binding(self, fp: dict) -> dict:
         return {**fp, "policy": self.policy, "n_groups": self.n_groups}
+
+    def _pin(self, df: DataFrame) -> dict | None:
+        """The metadata identity of a file-backed input (module
+        docstring), or None when ``df`` is not one."""
+        jvm = self.spark._jvm
+        plan = df._jdf.queryExecution().analyzed()
+        patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        if (not plan.deterministic()
+                or plan.containsPattern(patterns.PYTHON_UDF())):
+            return None
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if (leaf.getClass().getSimpleName() != "LogicalRelation"
+                    or leaf.relation().getClass().getSimpleName()
+                    != "HadoopFsRelation"):
+                return None
+        conf = self.spark._jsc.hadoopConfiguration()
+        files = []
+        for name in sorted(df.inputFiles()):
+            path = jvm.org.apache.hadoop.fs.Path(name)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            files.append([name, st.getLen(), st.getModificationTime()])
+        return {"plan": df.semanticHash(), "files": files}
+
+    def _bound(self, df: DataFrame, pin: dict | None) -> bool:
+        """Whether the base dir is already bound to ``df``: by the pin
+        when it matches, else by the content fingerprint. Raises when
+        committed work belongs to another input or policy; False means
+        bind afresh."""
+        fp_path = self.base / "input_fingerprint.json"
+        if not fp_path.exists():
+            return False
+        old = json.loads(fp_path.read_text())
+        old_pin = old.pop("pin", None)
+        if pin is not None and pin == old_pin and old == self._binding(
+                {"n": old.get("n"), "h": old.get("h"), "recipe": FP_RECIPE}):
+            self.fp = old
+            return True
+        fp = self._binding(fingerprint(df))
+        if old == fp:
+            self.fp = fp
+            return True
+        if self.completed_groups():
+            if old.get("recipe") != FP_RECIPE:
+                raise ValueError(
+                    f"base dir {self.base} was bound under fingerprint "
+                    f"recipe {old.get('recipe', 'pre-tag')} and its "
+                    f"values do not match this build's recipe-"
+                    f"{FP_RECIPE} fingerprint; this is either a changed "
+                    "input or a changed hash formula — discard the base "
+                    "dir (or finish the run with the old build)")
+            raise ValueError(
+                f"base dir {self.base} holds committed "
+                f"{self.stage_name} work for a different input or "
+                f"policy (bound {old}, got {fp}); a base dir binds to "
+                "one input and one policy — use a fresh base dir")
+        return False
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        """Bind the base dir to the live input ``df`` without copying it;
+        returns ``df`` with ``grp``. A fresh binding's fingerprint is
+        observed by the pass :meth:`observe_input` marks and written
+        before the first manifest."""
+        pin = self._pin(df)
+        if not self._bound(df, pin):
+            self._fresh = (df, Observation(f"fp_{self.stage_name}"), pin)
+        return df.withColumn("grp", self.group_col())
+
+    def observe_input(self, live: DataFrame) -> DataFrame:
+        """``live`` (from :meth:`bind`) as the job's first pass reads it:
+        on a fresh binding it observes the content fingerprint. Filter
+        the batch AFTER this, so every input row is counted."""
+        if self._fresh is None:
+            return live
+        df, obs, _ = self._fresh
+        return live.observe(obs, *_fp_metrics(df.columns))
+
+    def _record(self) -> None:
+        """Write a fresh binding's fingerprint, once its observed pass
+        has run."""
+        df, obs, pin = self._fresh
+        try:
+            fp = _fp(obs.get)
+        except Py4JJavaError:
+            # AQE's empty-relation propagation replaced the stage that
+            # held the metrics node (an empty input or batch), so the
+            # observation has no row
+            fp = fingerprint(df)
+        self.fp = self._binding(fp)
+        write_json(self.base / "input_fingerprint.json",
+                   self.fp if pin is None else {**self.fp, "pin": pin})
+        self._fresh = None
 
     def stage(self, df: DataFrame) -> DataFrame:
         """Write ``df`` once, partitioned by group, and bind the base dir
         to it; returns the staged read (with ``grp``). Idempotent: a
-        staged input whose fingerprint matches is reused."""
-        fp_path = self.base / "input_fingerprint.json"
-        if (self.staged / "_SUCCESS").exists() and fp_path.exists():
-            old = json.loads(fp_path.read_text())
-            fp = self._bind(fingerprint(df))
-            if old == fp:
-                self.fp = fp
-                return self.read(self.staged, df.schema)
-            if self.completed_groups():
-                if old.get("recipe") != FP_RECIPE:
-                    raise ValueError(
-                        f"base dir {self.base} was staged under fingerprint "
-                        f"recipe {old.get('recipe', 'pre-tag')} and its "
-                        f"values do not match this build's recipe-"
-                        f"{FP_RECIPE} fingerprint; this is either a changed "
-                        "input or a changed hash formula — discard the base "
-                        "dir (or finish the run with the old build)")
-                raise ValueError(
-                    f"base dir {self.base} holds committed "
-                    f"{self.stage_name} work for a different input or "
-                    f"policy (staged {old}, got {fp}); a base dir binds to "
-                    "one input and one policy — use a fresh base dir")
-        obs = Observation("stage_fp")
-        out = df.withColumn("grp", self.group_col())
-        if self.layout_staging:
-            out = self.layout(out)
-        # observe sits ABOVE the layout repartition: a runtime-empty
-        # shuffle lets AQE's empty-relation propagation replace the
-        # subtree BELOW the metrics node, and a CollectMetrics inside the
-        # replaced subtree never reports (Observation.get then throws) —
-        # at the top of the plan it always survives and counts the same
-        # rows. Every observed write in this module keeps that order.
-        (out.observe(obs, *_fp_metrics(df.columns))
+        staged input bound to ``df`` is reused."""
+        staged = self.base / "input_staged"
+        pin = self._pin(df)
+        if (staged / "_SUCCESS").exists() and self._bound(df, pin):
+            return self.read(staged, df.schema)
+        self._fresh = (df, Observation("stage_fp"), pin)
+        (self.observe_input(df.withColumn("grp", self.group_col()))
          .write.mode("overwrite")
          .partitionBy("grp")
-         .parquet(str(self.staged)))
-        self.fp = self._bind(_fp(obs.get))
-        write_json(fp_path, self.fp)
-        return self.read(self.staged, df.schema)
+         .parquet(str(staged)))
+        self._record()
+        return self.read(staged, df.schema)
 
     # ------------------------------------------------------------ writes
 
@@ -227,7 +324,13 @@ class GroupCommit:
         partition overwrite (only the batch's partitions are replaced).
         Returns, per ``census`` name, the per-group sum of its column,
         observed on the write itself — no read-back pass. ``drop`` lists
-        census-only columns left out of the stored rows."""
+        census-only columns left out of the stored rows.
+
+        The census observe sits ABOVE the layout repartition: a
+        runtime-empty shuffle lets AQE's empty-relation propagation
+        replace the subtree BELOW the metrics node, and a CollectMetrics
+        inside the replaced subtree never reports — at the top of the
+        plan it always survives and counts the same rows."""
         obs = Observation(f"census_{Path(root).name}")
         metrics = [
             F.sum(F.when(F.col("grp") == k, col).otherwise(0))
@@ -242,18 +345,32 @@ class GroupCommit:
         return {name: {k: int(m[f"{name}_{k}"] or 0) for k in batch}
                 for name in census}
 
-    @staticmethod
-    def backfill(root: str | Path, groups, empty: DataFrame) -> None:
+    def backfill(self, root: str | Path, groups: list[int],
+                 schema: T.StructType) -> None:
         """Schema-bearing empty partitions for the groups a dynamic write
-        skipped (no rows), so an emptied store stays readable."""
+        skipped (no rows), so an emptied store stays readable: one Spark
+        write of the empty file, copied into every such group's dir."""
+        if not groups:
+            return
+        tmp = self.base / "_backfill"
+        self.spark.createDataFrame([], schema).write.mode(
+            "overwrite").parquet(str(tmp))
+        src = next(tmp.glob("*.parquet"))
         for k in groups:
-            empty.write.mode("overwrite").parquet(str(Path(root) / f"grp={k}"))
+            part = Path(root) / f"grp={k}"
+            shutil.rmtree(part, ignore_errors=True)
+            part.mkdir(parents=True)
+            shutil.copyfile(src, part / src.name)
+        shutil.rmtree(tmp)
 
     # ----------------------------------------------------------- commits
 
     def commit(self, k: int, fields: dict) -> None:
         """Commit group ``k``: its manifest, with the shared lineage
-        fields, is the commit point."""
+        fields, is the commit point. A fresh binding's fingerprint goes
+        first."""
+        if self._fresh is not None:
+            self._record()
         write_json(
             self.base / "manifests" / f"{self.stage_name}_{k}.json",
             {

@@ -36,10 +36,11 @@ prunes segments BEFORE any decode work — the chunk-exclusion analog;
 parquet scan (plan-tested) and only surviving segments reach the
 Arrow decode kernel.
 
-Commit contract: streaming/commit.py (stores: ``fine_staged/``, ``head/``,
-``segments/``, each partitioned by commit group).
+Commit contract: streaming/commit.py (stores: ``head/`` and
+``segments/``, each partitioned by commit group; the input is read live
+and the base dir binds to its identity, never to a copy).
 
-Scale shape: one staged write; per run one map-side-combinable
+Scale shape: no copy of the input; per run one map-side-combinable
 watermark aggregate over ROLLUP rows, one equi-join on (doc_id, source),
 one segment encode whose groups are bounded by the chunk grid (<=
 chunk_span/fine_size rows each — no skew regardless of doc length). At
@@ -198,13 +199,12 @@ class CompressionPolicyJob:
         self.store = GroupCommit(
             spark, base_dir, STAGE, n_groups,
             {"fine_size": fine_size, "chunk_span": chunk_span,
-             "horizon": horizon},
-            staged="fine_staged")
+             "horizon": horizon})
 
     def completed_groups(self) -> list[int]:
         return self.store.completed_groups()
 
-    def stage_input(self, fine: DataFrame) -> DataFrame:
+    def _input(self, fine: DataFrame) -> DataFrame:
         missing = [c for c in FINE_COLS if c not in fine.columns]
         if missing:
             raise ValueError(
@@ -214,9 +214,9 @@ class CompressionPolicyJob:
             )
         # the head store keeps the row form the decoded segments have, so
         # both read back with one declared schema
-        return self.store.stage(fine.select(*[
+        return fine.select(*[
             F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in _FINE_OUT_SCHEMA.fields]))
+            for f in _FINE_OUT_SCHEMA.fields])
 
     def run(self, fine: DataFrame, fail_after: int | None = None) -> list[int]:
         """Compress every incomplete group in ONE data pass: head and
@@ -232,17 +232,19 @@ class CompressionPolicyJob:
         A group with no head or no segment rows gets a schema-bearing
         empty partition, so a store where nothing (or everything) aged
         past the horizon stays readable on both roots."""
-        staged = self.stage_input(fine)
+        live = self.store.bind(self._input(fine))
         batch, inject = self.store.batch(fail_after)
         if batch:
             t0 = time.time()
-            sub = staged.where(F.col("grp").isin(batch))
+            in_batch = F.col("grp").isin(batch)
+            sub = live.where(in_batch)
             head_root = self.base / "head"
             seg_root = self.base / "segments"
             # a doc lives wholly in one group (grp = hash(doc_id) %
             # n_groups), so the watermark needs no grp key
-            wm = sub.groupBy("doc_id", "source").agg(
-                ((F.max("bucket") + 1) * self.fine_size).alias("wm"))
+            wm = (self.store.observe_input(live).where(in_batch)
+                  .groupBy("doc_id", "source").agg(
+                      ((F.max("bucket") + 1) * self.fine_size).alias("wm")))
             cut = (
                 F.floor((F.col("wm") - self.horizon) / self.chunk_span)
                 * self.chunk_span
@@ -292,10 +294,10 @@ class CompressionPolicyJob:
                 joined.unpersist()
             self.store.backfill(
                 head_root, [k for k in batch if hc["rows"][k] == 0],
-                staged.limit(0).drop("grp"))
+                _FINE_OUT_SCHEMA)
             self.store.backfill(
                 seg_root, [k for k in batch if sc["nseg"][k] == 0],
-                self.spark.createDataFrame([], SEGMENT_SCHEMA))
+                SEGMENT_SCHEMA)
             fields = {}
             for k in batch:
                 rows_compressed = sc["rows"][k]

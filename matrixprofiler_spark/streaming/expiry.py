@@ -29,20 +29,20 @@ metadata rather than deriving it from the hypertable.
 
 One body serves both jobs: :class:`RetentionExpiryJobMulti` compacts every
 non-coarsest tier of an N-tier cascade, and :class:`RetentionExpiryJob` is
-its 2-tier case. Stores under the base dir, each partitioned by commit
-group (streaming/commit.py holds the commit contract):
+its 2-tier case. The input is read live, never copied: the base dir binds
+to its identity (streaming/commit.py holds the commit contract). Stores
+under the base dir, each partitioned by commit group:
 
-    fine_staged/ | tiers_staged/   staged input (2-tier job | N-tier job)
     watermarks/grp=<k>/            pre-compaction per-doc watermark
-    compacted/grp=<k>/             kept rows
-
-The staged and compacted rows carry a ``tier_idx`` column when there is
-more than one tier to compact.
+    compacted/grp=<k>/             kept rows, in the input's columns
     manifests/expiry_<k>.json      per-group, per-tier row census
 
-Scale shape: one staged write; per run, one map-side-combinable watermark
-aggregate over ROLLUP rows (never raw tokens) and one equi-join on
-(doc_id, source) — no broadcast of any corpus-sized side, no skew (one
+With more than one tier to compact, the input and the compacted rows
+carry a ``tier_idx`` column.
+
+Scale shape: no copy of the input; per run, one map-side-combinable
+watermark aggregate over ROLLUP rows (never raw tokens) and one equi-join
+on (doc_id, source) — no broadcast of any corpus-sized side, no skew (one
 watermark row per doc). At 1000 executors each group maps to a set of
 Iceberg partition overwrites (REPLACE WHERE).
 """
@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rollup import retention_policy, retention_policy_multi
-from .commit import GroupCommit
+from .commit import GroupCommit, stored_schema
 
 STAGE = "expiry"
 
@@ -117,27 +117,26 @@ class RetentionExpiryJobMulti:
         self.n_groups = n_groups
         self.store = GroupCommit(
             spark, base_dir, STAGE, n_groups,
-            {"sizes": self.sizes, "horizons": self.horizons},
-            staged="tiers_staged")
+            {"sizes": self.sizes, "horizons": self.horizons})
 
     def completed_groups(self) -> list[int]:
         return self.store.completed_groups()
 
-    def stage_input(self, tiers: list[DataFrame]) -> DataFrame:
+    def _input(self, tiers: list[DataFrame]) -> DataFrame:
         if len(tiers) != len(self.sizes) - 1:
             raise ValueError(
                 f"expected {len(self.sizes) - 1} non-coarsest tier stores,"
                 f" got {len(tiers)}")
         if len(tiers) == 1:
-            # nothing to tell apart: no tier_idx column to stage, hash,
-            # shuffle and store (it cost the 2-tier job ~10% of its run
-            # time, measured on a 58k-row store)
-            return self.store.stage(tiers[0])
+            # nothing to tell apart: no tier_idx column to hash, shuffle
+            # and store (it cost the 2-tier job ~10% of its run time,
+            # measured on a 58k-row store)
+            return tiers[0]
         # tier_idx is an input column, so the fingerprint is positional:
         # swapping two same-shape tiers cannot alias
-        return self.store.stage(reduce(DataFrame.unionByName, [
+        return reduce(DataFrame.unionByName, [
             df.withColumn("tier_idx", F.lit(i)) for i, df in enumerate(tiers)
-        ]))
+        ])
 
     def _cut(self, i: int):
         align = self.sizes[i + 1]
@@ -158,12 +157,12 @@ class RetentionExpiryJobMulti:
         write. Coarser-tier rows of docs absent from the finest tier
         violate the cascade-derivation contract: they never join a
         watermark, so they are dropped and left out of every census."""
-        staged = self.stage_input(tiers)
+        live = self.store.bind(self._input(tiers))
         batch, inject = self.store.batch(fail_after)
         if batch:
             t0 = time.time()
             in_batch = F.col("grp").isin(batch)
-            sub = staged.where(in_batch)
+            sub = live.where(in_batch)
             wm_root = self.base / "watermarks"
             comp_root = self.base / "compacted"
             n_tiers = len(self.horizons)
@@ -171,7 +170,8 @@ class RetentionExpiryJobMulti:
             # a doc lives wholly in one group, so grp can ride along as a
             # watermark key without changing its doc grain
             wm = (
-                sub.groupBy("grp", "doc_id", "source").agg(
+                self.store.observe_input(live).where(in_batch)
+                .groupBy("grp", "doc_id", "source").agg(
                     ((F.max(F.when(tier == 0, F.col("bucket"))) + 1)
                      * self.sizes[0]).alias("wm"),
                     *[F.count(F.when(tier == i, 1)).alias(f"n{i}")
@@ -179,6 +179,7 @@ class RetentionExpiryJobMulti:
                 .where(F.col("wm").isNotNull())
             )
             n_cols = tuple(f"n{i}" for i in range(n_tiers))
+            wm_schema = wm.drop("grp", *n_cols).schema
             # persist the PRE-compaction watermark first (the serving
             # view over a compacted store must read the stored one)
             before = self.store.write(
@@ -188,8 +189,7 @@ class RetentionExpiryJobMulti:
                 drop=n_cols)
             after = {c: dict.fromkeys(batch, 0) for c in n_cols}
             if any(before["n0"].values()):
-                wm_c = (self.store.read(wm_root,
-                                        wm.drop("grp", *n_cols).schema)
+                wm_c = (self.store.read(wm_root, wm_schema)
                         .where(in_batch).drop("grp"))
                 # per-tier keep predicate, dispatched on tier_idx in ONE
                 # pass — a single join + filter + write, not T jobs; the
@@ -200,7 +200,7 @@ class RetentionExpiryJobMulti:
                 for i in reversed(range(n_tiers - 1)):
                     keep = F.when(tier == i, keeps[i]).otherwise(keep)
                 kept = (sub.join(wm_c, ["doc_id", "source"])
-                        .where(keep).drop("wm"))
+                        .where(keep).select(*live.columns))
                 after = self.store.write(
                     kept, comp_root, batch,
                     {f"n{i}": F.when(tier == i, 1).otherwise(0)
@@ -208,11 +208,10 @@ class RetentionExpiryJobMulti:
             self.store.backfill(
                 comp_root,
                 [k for k in batch if not any(after[c][k] for c in n_cols)],
-                staged.limit(0).drop("grp"))
+                live.drop("grp").schema)
             self.store.backfill(
                 wm_root, [k for k in batch if before["n0"][k] == 0],
-                staged.limit(0).groupBy("doc_id", "source")
-                .agg(F.lit(0).cast("long").alias("wm")))
+                wm_schema)
             fields = {}
             for k in batch:
                 census = [
@@ -237,7 +236,8 @@ class RetentionExpiryJobMulti:
         """All compacted tiers (``tier_idx`` column kept; full commit
         required)."""
         self.store.require_committed()
-        out = self.spark.read.parquet(str(self.base / "compacted")).drop("grp")
+        root = self.base / "compacted"
+        out = self.store.read(root, stored_schema(root)).drop("grp")
         if len(self.horizons) == 1:  # a one-tier store has no tier_idx
             out = out.withColumn("tier_idx", F.lit(0))
         return out
@@ -254,8 +254,8 @@ class RetentionExpiryJobMulti:
         """The pre-compaction per-doc watermark table — the authoritative
         high-water for serving views over the compacted store."""
         self.store.require_committed()
-        return (self.spark.read.parquet(str(self.base / "watermarks"))
-                .drop("grp"))
+        root = self.base / "watermarks"
+        return self.store.read(root, stored_schema(root)).drop("grp")
 
     def serving_view(self, coarsest: DataFrame) -> DataFrame:
         """N-tier retention serving view over the COMPACTED tiers + the
@@ -298,15 +298,11 @@ class RetentionExpiryJob:
             spark, base_dir, [fine_size, coarse_size], [horizon],
             n_groups=n_groups)
         self.store = self._tiers.store
-        self.store.staged = self.store.base / "fine_staged"
         self.store.policy = {"fine_size": fine_size,
                              "coarse_size": coarse_size, "horizon": horizon}
 
     def completed_groups(self) -> list[int]:
         return self.store.completed_groups()
-
-    def stage_input(self, fine: DataFrame) -> DataFrame:
-        return self._tiers.stage_input([fine])
 
     def run(self, fine: DataFrame, fail_after: int | None = None) -> list[int]:
         return self._tiers.run([fine], fail_after)

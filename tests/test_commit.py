@@ -52,7 +52,9 @@ JOBS = {
     ),
 }
 
-# staged data written, fingerprint not; batch data written, no manifest;
+# "staged": the crash hits as the fingerprint is written — the batch
+# data (for the rollup, its staged copy) is written, the fingerprint not;
+# "data": data and fingerprint written, no manifest; "manifest<k>":
 # manifest k written, the rest not
 POINTS = ["staged", "data"] + [f"manifest{k}" for k in range(N_GROUPS)]
 
@@ -86,7 +88,8 @@ def uninterrupted(spark, inputs, tmp_path_factory):
 
 
 def _crash_at(monkeypatch, point):
-    """Make the store's JSON writes raise ``Crash`` at ``point``."""
+    """Make the store's JSON writes raise ``Crash`` at ``point``; a run
+    that crashes before its fingerprint is written leaves none behind."""
     real = commit.write_json
     manifests = []
 
@@ -115,6 +118,8 @@ def test_crash_then_resume(spark, inputs, uninterrupted, tmp_path,
         with pytest.raises(Crash):
             make(spark, tmp_path).run(inp(inputs))
     assert not (tmp_path / f"_stage_{stage}_COMMITTED").exists()
+    assert (tmp_path / "input_fingerprint.json").exists() == (
+        point != "staged")
 
     job = make(spark, tmp_path)
     job.run(inp(inputs))

@@ -290,7 +290,7 @@ def test_store_file_counts_bounded(spark, fine, tmp_path_factory):
     job = CompressionPolicyJob(spark, base, FINE, CHUNK, HORIZON,
                                n_groups=4)
     job.run(fine)
-    for store in ("fine_staged", "head", "segments"):
+    for store in ("head", "segments"):
         files = glob.glob(str(base / store / "grp=*" / "*.parquet"))
         # allow a small factor over the one-file-per-group target, never
         # the ~shuffle_partitions x n_groups blowup
@@ -319,8 +319,7 @@ def test_range_read_is_one_wave_without_schema_jobs(spark, fine,
     job = CompressionPolicyJob(spark, base, FINE, CHUNK, HORIZON, n_groups=8)
     job.run(fine)
     # the declared read schemas are the ones inference would give
-    for store, df in (("head", job.head()), ("segments", job.segments()),
-                      ("fine_staged", job.stage_input(fine).drop("grp"))):
+    for store, df in (("head", job.head()), ("segments", job.segments())):
         inferred = spark.read.parquet(str(base / store)).drop("grp")
         assert df.schema == inferred.schema, store
     sc = spark.sparkContext
@@ -345,3 +344,120 @@ def test_range_read_is_one_wave_without_schema_jobs(spark, fine,
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
     assert splits <= sc.defaultParallelism
     assert n == fine.where(F.col("bucket").between(2, 5)).count()
+
+
+def _jobs(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
+    """Job budgets of the lifecycle on a parquet-backed fine store: a
+    fresh expiry runs at most 6 Spark jobs and a fresh compression at
+    most 8 (the input is bound, never copied); an unchanged re-run of
+    either runs none (the metadata pin); building the expiry reads runs
+    none (stored schemas). The same files under a different projection
+    fail the pin, fall back to the content fingerprint and are rejected
+    against the committed work."""
+    from matrixprofiler_spark.operators.rollup import cascade_tier
+    from matrixprofiler_spark.streaming.expiry import (
+        RetentionExpiryJob,
+        RetentionExpiryJobMulti,
+    )
+
+    src = tmp_path_factory.mktemp("budget_src") / "fine"
+    fine.write.parquet(str(src))
+    store = spark.read.parquet(str(src))
+    base = tmp_path_factory.mktemp("budget")
+
+    def expiry():
+        return RetentionExpiryJob(spark, base / "expiry", FINE, 64, HORIZON,
+                                  n_groups=8)
+
+    def compress():
+        return CompressionPolicyJob(spark, base / "compress", FINE, CHUNK,
+                                    HORIZON, n_groups=8)
+
+    done, n = _jobs(spark, "budget_expiry", lambda: expiry().run(store))
+    assert len(done) == 8 and n <= 6, n
+    done, n = _jobs(spark, "budget_compress", lambda: compress().run(store))
+    assert len(done) == 8 and n <= 8, n
+    # a new DataFrame over the same files (reading it infers a schema)
+    again = spark.read.parquet(str(src))
+    for name, make in (("expiry", expiry), ("compress", compress)):
+        redone, n = _jobs(spark, f"budget_rerun_{name}",
+                          lambda: make().run(again))
+        assert (redone, n) == ([], 0), (name, n)
+
+    # the compacted and watermark stores read with their written schemas
+    ejob = expiry()
+    reads, n = _jobs(spark, "budget_expiry_reads",
+                     lambda: (ejob.result(), ejob.watermarks()))
+    assert n == 0
+    for root, df in zip(("compacted", "watermarks"), reads):
+        inferred = spark.read.parquet(str(base / "expiry" / root))
+        assert df.schema == inferred.drop("grp").schema, root
+    multi = RetentionExpiryJobMulti(
+        spark, base / "multi", [FINE, 2 * FINE, 4 * FINE], [FINE, 2 * FINE],
+        n_groups=2)
+    multi.run([store, cascade_tier(store, FINE, 2 * FINE, "2m")])
+    inferred = spark.read.parquet(str(base / "multi" / "compacted"))
+    assert multi.result().schema == inferred.drop("grp").schema
+
+    changed = store.withColumn("sum_v", F.col("sum_v") + 1)
+    for make, match in ((expiry, "binds to one input"),
+                        (compress, "fresh base dir")):
+        with pytest.raises(ValueError, match=match):
+            _jobs(spark, "budget_projection", lambda: make().run(changed))
+    assert len(spark.sparkContext.statusTracker()
+               .getJobIdsForGroup("budget_projection")) > 0
+
+
+def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):
+    """An empty parquet input and one whose docs fill only some groups
+    both compress: every group of both stores holds a readable file, the
+    censuses read zero where no rows are, the empty input's fingerprint
+    is n = 0, h = 0, and a re-run is a no-op."""
+    import json
+
+    from matrixprofiler_spark.streaming.commit import read_manifest
+
+    src = tmp_path_factory.mktemp("compress_empty_src")
+    fine.limit(0).write.parquet(str(src / "empty"))
+    docs = [r["doc_id"] for r in
+            fine.select("doc_id").distinct().orderBy("doc_id").limit(2)
+            .collect()]
+    fine.where(F.col("doc_id").isin(docs)).write.parquet(str(src / "part"))
+
+    for name in ("empty", "part"):
+        inp = spark.read.parquet(str(src / name))
+        base = tmp_path_factory.mktemp(f"compress_{name}")
+        job = CompressionPolicyJob(spark, base, FINE, CHUNK, HORIZON,
+                                   n_groups=8)
+        assert len(job.run(inp)) == 8
+        for store in ("head", "segments"):
+            assert len(list((base / store).glob("grp=*/*.parquet"))) >= 8
+        assert _rows(job.read_fine()) == _rows(inp)
+        m = job.metrics()
+        assert m["groups_committed"] == 8
+        assert m["rows_in"] == inp.count()
+        assert m["rows_in"] == m["rows_head"] + m["rows_compressed"]
+        empty_groups = [k for k in range(8)
+                        if read_manifest(base, "compress", k)["rows_in"] == 0]
+        assert len(empty_groups) >= (8 if name == "empty" else 6)
+        bound = json.loads((base / "input_fingerprint.json").read_text())
+        if name == "empty":
+            assert (bound["n"], bound["h"]) == (0, 0)
+            assert m["n_segments"] == 0 and m["compression_ratio"] is None
+        else:
+            assert bound["n"] == inp.count() and m["rows_compressed"] > 0
+        assert CompressionPolicyJob(spark, base, FINE, CHUNK, HORIZON,
+                                    n_groups=8).run(inp) == []

@@ -5,6 +5,8 @@ watermark is row-identical to the view over the full store."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -141,14 +143,14 @@ def test_base_dir_binds_input_and_policy(spark, fine, tmp_path_factory):
     with pytest.raises(ValueError, match="binds to one input"):
         job_b.run(other)
 
-    # changed POLICY against the same staged input -> also loud
+    # changed POLICY against the same bound input -> also loud
     job_c = RetentionExpiryJob(spark, base, FINE, COARSE, HORIZON + 32,
                                n_groups=2)
     with pytest.raises(ValueError, match="binds to one input"):
         job_c.run(fine)
 
     # changed GROUPING: resuming with fewer groups would silently orphan
-    # the higher staged groups from the compacted store -> also loud
+    # the higher groups from the compacted store -> also loud
     job_d = RetentionExpiryJob(spark, base, FINE, COARSE, HORIZON,
                                n_groups=1)
     with pytest.raises(ValueError, match="binds to one input"):
@@ -156,20 +158,22 @@ def test_base_dir_binds_input_and_policy(spark, fine, tmp_path_factory):
 
 
 def test_torn_staging_resumes(spark, fine, tmp_path_factory):
-    """A fingerprint without a staged _SUCCESS (a restaging overwrite
-    that died mid-write) must RESTAGE on the next run, not brick the base
-    dir."""
+    """A fingerprint left with no committed group (a binding whose run
+    died before its first manifest, or one of another input) must
+    REBIND on the next run, not brick the base dir."""
     base = tmp_path_factory.mktemp("expiry_torn")
     job = RetentionExpiryJob(spark, base, FINE, COARSE, HORIZON, n_groups=2)
-    # simulate the torn state: fingerprint present, no staged _SUCCESS
-    import json as _json
-
-    (base / "input_fingerprint.json").write_text(
-        _json.dumps(fingerprint(fine)))
-    assert not (base / "fine_staged" / "_SUCCESS").exists()
-    job.run(fine)  # restages and completes
+    fp_path = base / "input_fingerprint.json"
+    fp_path.write_text(json.dumps(fingerprint(fine)))  # no policy: stale
+    assert not job.completed_groups()
+    job.run(fine)  # rebinds and completes
     assert len(job.completed_groups()) == 2
     assert _rows(job.result()) == _rows(_expected_kept(fine))
+    bound = json.loads(fp_path.read_text())
+    assert bound["policy"] == {
+        "fine_size": FINE, "coarse_size": COARSE, "horizon": HORIZON}
+    assert (bound["n"], bound["h"]) == tuple(
+        fingerprint(fine)[k] for k in ("n", "h"))
 
 
 def test_param_validation(spark, fine, tmp_path_factory):
@@ -314,3 +318,45 @@ def test_multi_binding_and_validation(spark, fine, tmp_path_factory):
             [16, 32, 64], [0, 0], n_groups=2).run([fine])
     with pytest.raises(ValueError, match="never compacted"):
         job.result_tier(2)
+
+
+# ------------------------------------------------------------ empty inputs
+
+
+def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):
+    """An empty parquet input and one whose docs fill only some groups
+    both commit: every group of both stores holds a readable file, the
+    censuses read zero where no rows are, the empty input's fingerprint
+    is n = 0, h = 0, and a re-run is a no-op."""
+    src = tmp_path_factory.mktemp("expiry_empty_src")
+    fine.limit(0).write.parquet(str(src / "empty"))
+    docs = [r["doc_id"] for r in
+            fine.select("doc_id").distinct().orderBy("doc_id").limit(2)
+            .collect()]
+    fine.where(F.col("doc_id").isin(docs)).write.parquet(str(src / "part"))
+
+    for name in ("empty", "part"):
+        inp = spark.read.parquet(str(src / name))
+        base = tmp_path_factory.mktemp(f"expiry_{name}")
+        job = RetentionExpiryJob(spark, base, FINE, COARSE, HORIZON,
+                                 n_groups=8)
+        assert len(job.run(inp)) == 8
+        for store in ("watermarks", "compacted"):
+            assert len(list((base / store).glob("grp=*/*.parquet"))) >= 8
+        assert _rows(job.result()) == _rows(_expected_kept(inp))
+        assert job.watermarks().count() == (
+            len(docs) if name == "part" else 0)
+        m = job.metrics()
+        assert m["groups_committed"] == 8
+        assert m["rows_before"] == inp.count()
+        assert m["rows_before"] == m["rows_dropped"] + m["rows_after"]
+        empty_groups = [k for k in range(8)
+                        if read_manifest(base, "expiry", k)["rows_before"] == 0]
+        assert len(empty_groups) >= (8 if name == "empty" else 6)
+        bound = json.loads((base / "input_fingerprint.json").read_text())
+        if name == "empty":
+            assert (bound["n"], bound["h"]) == (0, 0)
+        else:
+            assert bound["n"] == inp.count()
+        assert RetentionExpiryJob(spark, base, FINE, COARSE, HORIZON,
+                                  n_groups=8).run(inp) == []
