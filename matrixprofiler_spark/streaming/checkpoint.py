@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rollup import tier_rollup, with_derived_stats
-from .commit import GroupCommit
+from .commit import GroupCommit, stored_schema
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "mp_iceberg") -> bool:
@@ -181,10 +181,14 @@ class RollupJob:
         return committed, self._snapshot_id()
 
     def result(self) -> DataFrame:
-        # drop the hive-style `part` layout column — physical detail only
+        """The rollup rows, read with the schema they were written with
+        (no schema-inference job); the hive-style ``part`` layout column
+        is a physical detail and is dropped."""
         if self.iceberg_table:
             return self.spark.table(self.iceberg_table).drop("part")
-        return self.spark.read.parquet(str(self.base / f"stage={STAGE}")).drop("part")
+        root = self.base / f"stage={STAGE}"
+        return self.store.read(root, stored_schema(root, "part"),
+                               part="part").drop("part")
 
     def metrics(self) -> dict:
         m = self.store.metrics("rows", "points")

@@ -18,9 +18,9 @@ Layout under ``base_dir``:
                                    and the input's metadata pin
     <store>/grp=<k>/...parquet     the job's outputs, one partition per
                                    group, one file per group per write
-    manifests/<stage>_<k>.json     lineage of group k: censuses, policy,
-                                   input fingerprint, kernel version,
-                                   wall time
+    manifests/<stage>_<k>.json     lineage of group k: censuses, bytes
+                                   written per store, policy, input
+                                   fingerprint, kernel version, wall time
     _stage_<stage>_COMMITTED       every group has a manifest
     input_staged/grp=<k>/...       (rollup only) a copy of the input,
                                    hive-partitioned by group, so each of
@@ -40,13 +40,14 @@ analog — and the base dir binds to its identity instead of a copy
   pass); should AQE prune the observed stage — an empty input or batch —
   one aggregate computes it instead, so an empty input reads
   ``n = 0, h = 0``.
-* the metadata pin: the analyzed plan's ``semanticHash()`` plus the
-  sorted ``inputFiles()`` with each file's size and mtime. It exists only
-  for a deterministic plan whose leaves are all file relations and that
-  runs no Python UDF; the same files under another projection hash
-  differently. The plan hash is stable within one session (JVM), so an
-  unchanged re-run there launches no Spark job; a re-run from another
-  session recomputes the content fingerprint.
+* the metadata pin: the sha256 of the canonicalized analyzed plan's text
+  and of the schema (the plan text omits types), plus the sorted
+  ``inputFiles()`` with each file's size and mtime. It exists only for a
+  deterministic plan whose leaves are all file relations and that runs
+  no Python UDF; the same files under another projection hash
+  differently. Canonical plan text, unlike ``semanticHash()``, is the
+  same in every session (JVM), so an unchanged re-run launches no Spark
+  job, in the session that committed or in a new one.
 
 The stored record carries the recipe tag, the job's policy and
 ``n_groups``, so a base dir binds to one (input, policy, grouping): a
@@ -76,6 +77,7 @@ raises ``injected failure`` after committing them (kill-and-resume tests).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -101,10 +103,10 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _fp_metrics(cols: list[str]) -> list[Column]:
-    return [
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
-    ]
+    # SQL text: a Column tree costs several py4j calls per functions call
+    names = ", ".join("`" + c.replace("`", "``") + "`" for c in cols)
+    return [F.expr("count(1) AS n"),
+            F.expr(f"sum(CAST(xxhash64({names}) AS DECIMAL(38,0))) AS h")]
 
 
 def _fp(m) -> dict:
@@ -135,11 +137,14 @@ def read_manifest(base_dir: str | Path, stage: str, part: int) -> dict | None:
         return None  # torn write == incomplete
 
 
-def stored_schema(root: str | Path) -> T.StructType:
-    """The row schema a group-partitioned store under ``root`` was written
-    with, from one file's footer (every group holds a file, see
-    :meth:`GroupCommit.backfill`): no schema-inference job."""
-    f = next(Path(root).glob("grp=*/*.parquet"))
+def stored_schema(root: str | Path, part: str = "grp") -> T.StructType:
+    """The row schema a store under ``root``, hive-partitioned by
+    ``part``, was written with, from one file's footer (every partition
+    holds a file, see :meth:`GroupCommit.backfill`): no schema-inference
+    job."""
+    f = next(Path(root).glob(f"{part}=*/*.parquet"), None)
+    if f is None:
+        raise FileNotFoundError(f"no committed store under {root}")
     meta = pq.read_schema(f).metadata[_SPARK_SCHEMA_KEY]
     return T.StructType.fromJson(json.loads(meta))
 
@@ -161,6 +166,8 @@ class GroupCommit:
         # a fresh binding until its fingerprint is written:
         # (input, observation, pin)
         self._fresh: tuple | None = None
+        # the stores this run wrote, by name (for the manifests' bytes)
+        self._roots: dict[str, Path] = {}
         (self.base / "manifests").mkdir(parents=True, exist_ok=True)
 
     # ------------------------------------------------------------ groups
@@ -186,19 +193,25 @@ class GroupCommit:
             return todo, False
         return todo[:fail_after], True
 
-    def layout(self, df: DataFrame) -> DataFrame:
-        """Bound a store's file count (guide §6): without this, every
-        hive-partitioned write fans each of ~shuffle-partitions tasks into
-        up to n_groups grp dirs — measured 1004 files for a 6891-row
-        store, and every later scan pays a task + Python-worker roundtrip
-        per couple of files. One hash repartition on the group puts each
-        group into exactly one task, so one file per write; at scale,
-        choose n_groups so each file lands in the 128MB-1GB band (the
-        group stays the commit unit). ``min(n_groups, task slots)`` tasks
-        make the write one wave."""
-        return df.repartition(
-            min(self.n_groups, self.spark.sparkContext.defaultParallelism),
-            F.col("grp"))
+    def layout(self, live: DataFrame, batch: list[int]) -> DataFrame:
+        """The batch's rows of ``live`` (from :meth:`bind`) as the job's
+        first pass reads them, laid out by group: the job's one shuffle.
+        A per-doc quantity is then a window partitioned by ``grp`` and the
+        doc, which this partitioning already clusters, and every store is
+        written from these rows with no other shuffle.
+
+        One hash repartition on the group puts each group into exactly one
+        task, so one file per write (guide §6: without it each
+        hive-partitioned write fanned ~shuffle-partitions tasks into up to
+        n_groups dirs — 1004 files for a 6891-row store, a task + Python
+        roundtrip per couple of files on every later scan). ``min(n_groups,
+        task slots)`` tasks make each write one wave; at scale, choose
+        n_groups so each file lands in the 128MB-1GB band."""
+        return (self.observe_input(live)
+                .where(f"grp IN ({', '.join(map(str, batch))})")
+                .repartition(min(self.n_groups,
+                                 self.spark.sparkContext.defaultParallelism),
+                             F.col("grp")))
 
     # ----------------------------------------------------------- binding
 
@@ -207,7 +220,9 @@ class GroupCommit:
 
     def _pin(self, df: DataFrame) -> dict | None:
         """The metadata identity of a file-backed input (module
-        docstring), or None when ``df`` is not one."""
+        docstring), or None when ``df`` is not one — nor when its plan
+        text is truncated (``spark.sql.debug.maxToStringFields``), since
+        two projections could then print alike."""
         jvm = self.spark._jvm
         plan = df._jdf.queryExecution().analyzed()
         patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
@@ -227,7 +242,11 @@ class GroupCommit:
             path = jvm.org.apache.hadoop.fs.Path(name)
             st = path.getFileSystem(conf).getFileStatus(path)
             files.append([name, st.getLen(), st.getModificationTime()])
-        return {"plan": df.semanticHash(), "files": files}
+        text = plan.canonicalized().toString()
+        if " more fields" in text:
+            return None
+        digest = hashlib.sha256((text + df.schema.json()).encode())
+        return {"plan": digest.hexdigest(), "files": files}
 
     def _bound(self, df: DataFrame, pin: dict | None) -> bool:
         """Whether the base dir is already bound to ``df``: by the pin
@@ -319,30 +338,38 @@ class GroupCommit:
     def write(self, df: DataFrame, root: str | Path, batch: list[int],
               census: dict[str, Column], drop: tuple[str, ...] = ()
               ) -> dict[str, dict[int, int]]:
-        """Write the batch's groups of ``df`` (which carries ``grp``) under
-        ``root``: layout-repartitioned, hive-partitioned by group, dynamic
-        partition overwrite (only the batch's partitions are replaced).
-        Returns, per ``census`` name, the per-group sum of its column,
-        observed on the write itself — no read-back pass. ``drop`` lists
-        census-only columns left out of the stored rows.
+        """Write the batch's groups of ``df`` under ``root``:
+        hive-partitioned by group, dynamic partition overwrite (only the
+        batch's partitions are replaced). The caller lays out once and
+        derives ``df`` from :meth:`layout`'s rows with no shuffle between,
+        so each group is in one task and gets one file. Returns, per
+        ``census`` name, the per-group sum of its column, observed on the
+        write itself — no read-back pass. ``drop`` lists census-only
+        columns left out of the stored rows.
 
-        The census observe sits ABOVE the layout repartition: a
-        runtime-empty shuffle lets AQE's empty-relation propagation
-        replace the subtree BELOW the metrics node, and a CollectMetrics
-        inside the replaced subtree never reports — at the top of the
-        plan it always survives and counts the same rows."""
+        The census is one ``array(sum(if(grp = k, c, 0)), ...)`` SQL
+        expression per name: a Column tree per (name, group) cost several
+        py4j calls per ``functions`` call. The observe sits ABOVE the
+        layout's shuffle: a runtime-empty shuffle lets AQE's
+        empty-relation propagation replace the subtree BELOW the metrics
+        node, and a CollectMetrics inside the replaced subtree never
+        reports — at the top of the plan it always survives and counts
+        the same rows."""
         obs = Observation(f"census_{Path(root).name}")
+        cols = {f"_census_{name}": col for name, col in census.items()}
         metrics = [
-            F.sum(F.when(F.col("grp") == k, col).otherwise(0))
-            .alias(f"{name}_{k}")
-            for name, col in census.items() for k in batch
+            F.expr("array(" + ", ".join(
+                f"sum(if(grp = {k}, `_census_{name}`, 0))" for k in batch)
+                + f") AS `{name}`")
+            for name in census
         ]
-        (self.layout(df).observe(obs, *metrics).drop(*drop)
+        (df.withColumns(cols).observe(obs, *metrics).drop(*cols, *drop)
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("grp").parquet(str(root)))
+        self._roots[Path(root).name] = Path(root)
         m = obs.get
-        return {name: {k: int(m[f"{name}_{k}"] or 0) for k in batch}
+        return {name: {k: int(v or 0) for k, v in zip(batch, m[name])}
                 for name in census}
 
     def backfill(self, root: str | Path, groups: list[int],
@@ -350,6 +377,7 @@ class GroupCommit:
         """Schema-bearing empty partitions for the groups a dynamic write
         skipped (no rows), so an emptied store stays readable: one Spark
         write of the empty file, copied into every such group's dir."""
+        self._roots[Path(root).name] = Path(root)
         if not groups:
             return
         tmp = self.base / "_backfill"
@@ -388,12 +416,18 @@ class GroupCommit:
     def commit_batch(self, batch: list[int], t0: float,
                      fields: dict[int, dict], rows_key: str) -> None:
         """Commit every group of a batch written as one shared pass: each
-        group's wall time is an equal share of the batch's."""
+        group's wall time is an equal share of the batch's, and its
+        ``bytes_written`` are the sizes of its files in each store this
+        run wrote, stat'ed on the driver (no Spark job)."""
         share = (time.time() - t0) / len(batch)
         for k in batch:
             rows = fields[k][rows_key]
             self.commit(k, {
                 **fields[k],
+                "bytes_written": {
+                    name: sum(f.stat().st_size
+                              for f in root.glob(f"grp={k}/*.parquet"))
+                    for name, root in self._roots.items()},
                 "elapsed_sec": round(share, 3),
                 "rows_per_sec": round(rows / share, 1) if share else None,
             })
@@ -409,15 +443,16 @@ class GroupCommit:
 
     # ----------------------------------------------------------- reading
 
-    def read(self, root: str | Path, schema: T.StructType) -> DataFrame:
+    def read(self, root: str | Path, schema: T.StructType,
+             part: str = "grp") -> DataFrame:
         """The store under ``root``, written from rows of ``schema`` and
-        partitioned by group, read with the schema it was written with:
-        no schema-inference job. ``grp`` comes last, as the int that
-        partition inference gives. The field list is a fresh one:
+        hive-partitioned by ``part``, read with the schema it was written
+        with: no schema-inference job. ``part`` comes last, as the int
+        that partition inference gives. The field list is a fresh one:
         ``StructType.add`` appends in place and ``StructType(fields)``
         shares the caller's list, so either would change ``schema``."""
         full = T.StructType([*schema.fields,
-                             T.StructField("grp", T.IntegerType(), True)])
+                             T.StructField(part, T.IntegerType(), True)])
         return self.spark.read.schema(full).parquet(str(root))
 
     def require_committed(self) -> None:
@@ -429,11 +464,18 @@ class GroupCommit:
                 "manifest — run() to completion before reading the store")
 
     def metrics(self, *keys: str) -> dict:
-        """Manifest sums of ``keys``, the committed group count and the
-        summed wall time."""
+        """Manifest sums of ``keys``, the committed group count, the
+        summed wall time and, for the jobs that write through
+        :meth:`write`, the bytes written per store."""
         ms = self.manifests()
-        return {
+        out = {
             "groups_committed": len(ms),
             **{key: sum(m[key] for m in ms) for key in keys},
             "elapsed_sec": round(sum(m["elapsed_sec"] for m in ms), 3),
         }
+        written = [m["bytes_written"] for m in ms if "bytes_written" in m]
+        if written:
+            out["bytes_written"] = {
+                name: sum(w.get(name, 0) for w in written)
+                for name in written[0]}
+        return out

@@ -40,10 +40,12 @@ Commit contract: streaming/commit.py (stores: ``head/`` and
 ``segments/``, each partitioned by commit group; the input is read live
 and the base dir binds to its identity, never to a copy).
 
-Scale shape: no copy of the input; per run one map-side-combinable
-watermark aggregate over ROLLUP rows, one equi-join on (doc_id, source),
-one segment encode whose groups are bounded by the chunk grid (<=
-chunk_span/fine_size rows each — no skew regardless of doc length). At
+Scale shape: no copy of the input; per run one shuffle of the batch's
+ROLLUP rows into the commit-group layout, the watermark as a window over
+(grp, doc_id, source) inside it (no aggregate joined back, no second
+shuffle), and one segment encode whose groups are bounded by the chunk
+grid (<= chunk_span/fine_size rows each — no skew regardless of doc
+length); both stores are written from one cache of the windowed rows. At
 1000 executors each group maps to Iceberg partition REPLACE WHERE commits
 exactly as the expiry job documents. Reference
 analog for the precompute/serve lifecycle: the stats-struct reuse of
@@ -57,7 +59,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -213,16 +215,19 @@ class CompressionPolicyJob:
                 "constant columns like `tier` are the caller's to re-attach)"
             )
         # the head store keeps the row form the decoded segments have, so
-        # both read back with one declared schema
-        return fine.select(*[
-            F.col(f.name).cast(f.dataType).alias(f.name)
+        # both read back with one declared schema (one selectExpr: a
+        # Column tree per field costs py4j calls per functions call)
+        return fine.selectExpr(*[
+            f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
             for f in _FINE_OUT_SCHEMA.fields])
 
     def run(self, fine: DataFrame, fail_after: int | None = None) -> list[int]:
-        """Compress every incomplete group in ONE data pass: head and
-        segments are whole-batch writes that replace only the batch's
-        group partitions, then one manifest per group. Returns the groups
-        committed this run.
+        """Compress every incomplete group in ONE data pass: the batch is
+        laid out by group once (:meth:`GroupCommit.layout`), each row gets
+        its doc's watermark as a window over (grp, doc_id, source), and
+        that windowed batch is cached; head and segments are whole-batch
+        writes of it that replace only the batch's group partitions, then
+        one manifest per group. Returns the groups committed this run.
 
         Censuses are observed on the two writes: per-group head rows ride
         the head write; per-group segment count / compressed rows / blob
@@ -236,55 +241,42 @@ class CompressionPolicyJob:
         batch, inject = self.store.batch(fail_after)
         if batch:
             t0 = time.time()
-            in_batch = F.col("grp").isin(batch)
-            sub = live.where(in_batch)
             head_root = self.base / "head"
             seg_root = self.base / "segments"
-            # a doc lives wholly in one group (grp = hash(doc_id) %
-            # n_groups), so the watermark needs no grp key
-            wm = (self.store.observe_input(live).where(in_batch)
-                  .groupBy("doc_id", "source").agg(
-                      ((F.max("bucket") + 1) * self.fine_size).alias("wm")))
+            # grp is a window key (a doc lives wholly in one group), so
+            # the layout's partitioning on grp already clusters the doc;
+            # persist: the head and segment writes both read these rows
+            joined = (self.store.layout(live, batch).withColumn(
+                "wm", (F.max("bucket").over(
+                    Window.partitionBy("grp", "doc_id", "source")) + 1)
+                * self.fine_size).persist())
             cut = (
                 F.floor((F.col("wm") - self.horizon) / self.chunk_span)
                 * self.chunk_span
             ).cast("long")
-            # persist: the head and segment branches both consume the
-            # join; uncached, each re-runs the scan + watermark shuffle
-            joined = sub.join(wm, ["doc_id", "source"]).persist()
             compress_pred = (F.col("bucket") + 1) * self.fine_size <= cut
             head = joined.where(~compress_pred).drop("wm")
-            cold = (
-                joined.where(compress_pred).drop("wm")
-                .withColumn(
-                    "chunk",
-                    F.floor(F.col("bucket") * self.fine_size
-                            / self.chunk_span).cast("long"),
-                )
-            )
-
             # group JVM-side (sort_array guarantees bucket order —
             # bucket is the struct's first field and unique within a
             # segment), then encode every segment of an Arrow batch in
             # one vectorized pass
-            def _field(c):
-                # single-arg lambda: a 2-arg one would be read by
-                # F.transform as (element, index)
-                return lambda x: x.getField(c).cast("long")
-
-            grouped = (
-                cold.groupBy("grp", "doc_id", "source", "chunk")
-                .agg(F.sort_array(F.collect_list(F.struct(*_STAT_COLS)))
+            stats = ", ".join(_STAT_COLS)
+            segments = (
+                joined.where(compress_pred)
+                .withColumn("chunk", F.floor(F.col("bucket") * self.fine_size
+                                             / self.chunk_span).cast("long"))
+                .groupBy("grp", "doc_id", "source", "chunk")
+                .agg(F.expr(f"sort_array(collect_list(struct({stats})))")
                      .alias("r"))
-                .select(
-                    "grp", "doc_id", "source", "chunk",
-                    *[F.transform("r", _field(c)).alias(f"a_{c}")
-                      for c in _STAT_COLS],
-                )
-            )
-            segments = grouped.mapInPandas(
-                _pack_segments_batch, schema=_SEG_WRITE_SCHEMA)
+                .selectExpr("grp", "doc_id", "source", "chunk", *[
+                    f"transform(r, x -> CAST(x.{c} AS BIGINT)) AS a_{c}"
+                    for c in _STAT_COLS])
+                .mapInPandas(_pack_segments_batch, schema=_SEG_WRITE_SCHEMA))
             try:
+                # the segment groupBy keys include grp: AQE runs the cache
+                # as a query stage first, and the layout's partitioning
+                # then satisfies the groupBy, so it adds no exchange
+                # (plan-tested)
                 hc = self.store.write(head, head_root, batch,
                                       {"rows": F.lit(1)})
                 sc = self.store.write(segments, seg_root, batch, {

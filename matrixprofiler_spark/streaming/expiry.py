@@ -40,11 +40,13 @@ under the base dir, each partitioned by commit group:
 With more than one tier to compact, the input and the compacted rows
 carry a ``tier_idx`` column.
 
-Scale shape: no copy of the input; per run, one map-side-combinable
-watermark aggregate over ROLLUP rows (never raw tokens) and one equi-join
-on (doc_id, source) — no broadcast of any corpus-sized side, no skew (one
-watermark row per doc). At 1000 executors each group maps to a set of
-Iceberg partition overwrites (REPLACE WHERE).
+Scale shape: no copy of the input; per run, one shuffle of the batch's
+ROLLUP rows (never raw tokens) into the commit-group layout, and the
+watermark as a window over (grp, doc_id, source) inside it — no
+aggregate joined back, no broadcast of any corpus-sized side, no second
+shuffle. Both stores are written from one cache of the windowed rows. At
+1000 executors each group maps to a set of Iceberg partition overwrites
+(REPLACE WHERE).
 """
 
 from __future__ import annotations
@@ -53,7 +55,7 @@ import time
 from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rollup import retention_policy, retention_policy_multi
@@ -145,66 +147,74 @@ class RetentionExpiryJobMulti:
 
     def run(self, tiers: list[DataFrame],
             fail_after: int | None = None) -> list[int]:
-        """Compact every incomplete group in ONE data pass: the watermark
-        table and the compacted store are whole-batch writes that replace
-        only the batch's group partitions, then one manifest per group.
-        Returns the groups committed this run.
+        """Compact every incomplete group in ONE data pass: the batch is
+        laid out by group once (:meth:`GroupCommit.layout`), each row gets
+        its doc's watermark and per-tier row counts as windows over
+        (grp, doc_id, source), and that windowed batch is cached; the
+        watermark table (one row per doc) and the compacted store are
+        whole-batch writes of it that replace only the batch's group
+        partitions, then one manifest per group. Neither write shuffles
+        or joins, and neither reads the other: the watermark table is
+        written for the serving views, not for the compaction. Returns
+        the groups committed this run.
 
         Censuses are observed on the two writes: per-(group, tier) rows
         before and the finest tier's surviving doc count ride the
         watermark write (a doc keeps a finest row iff its ``wm`` exceeds
         its cutoff), per-(group, tier) rows after ride the compacted
         write. Coarser-tier rows of docs absent from the finest tier
-        violate the cascade-derivation contract: they never join a
-        watermark, so they are dropped and left out of every census."""
+        violate the cascade-derivation contract: their window watermark
+        is null, so they are dropped and left out of every census."""
         live = self.store.bind(self._input(tiers))
         batch, inject = self.store.batch(fail_after)
         if batch:
             t0 = time.time()
-            in_batch = F.col("grp").isin(batch)
-            sub = live.where(in_batch)
             wm_root = self.base / "watermarks"
             comp_root = self.base / "compacted"
             n_tiers = len(self.horizons)
             tier = F.col("tier_idx") if n_tiers > 1 else F.lit(0)
-            # a doc lives wholly in one group, so grp can ride along as a
-            # watermark key without changing its doc grain
-            wm = (
-                self.store.observe_input(live).where(in_batch)
-                .groupBy("grp", "doc_id", "source").agg(
-                    ((F.max(F.when(tier == 0, F.col("bucket"))) + 1)
-                     * self.sizes[0]).alias("wm"),
-                    *[F.count(F.when(tier == i, 1)).alias(f"n{i}")
-                      for i in range(n_tiers)])
-                .where(F.col("wm").isNotNull())
-            )
             n_cols = tuple(f"n{i}" for i in range(n_tiers))
+            # grp is a window key (a doc lives wholly in one group), so
+            # the layout's partitioning on grp already clusters the doc
+            doc = Window.partitionBy("grp", "doc_id", "source").orderBy(
+                "bucket")
+            whole = doc.rowsBetween(Window.unboundedPreceding,
+                                    Window.unboundedFollowing)
+            rows = (
+                self.store.layout(live, batch).withColumns({
+                    "wm": (F.max(F.when(tier == 0, F.col("bucket")))
+                           .over(whole) + 1) * self.sizes[0],
+                    **{c: F.count(F.when(tier == i, 1)).over(whole)
+                       for i, c in enumerate(n_cols)},
+                    "first": F.row_number().over(doc) == 1})
+                .where(F.col("wm").isNotNull())
+                .persist())
+            # per-tier keep predicate, dispatched on tier_idx in ONE pass
+            # — one filter + write, not T jobs; the last tier needs no
+            # test (tier_idx < n_tiers)
+            keeps = [(F.col("bucket") + 1) * size > self._cut(i)
+                     for i, size in enumerate(self.sizes[:-1])]
+            keep = keeps[-1]
+            for i in reversed(range(n_tiers - 1)):
+                keep = F.when(tier == i, keeps[i]).otherwise(keep)
+            wm = rows.where("first").select("grp", "doc_id", "source", "wm",
+                                            *n_cols)
             wm_schema = wm.drop("grp", *n_cols).schema
-            # persist the PRE-compaction watermark first (the serving
-            # view over a compacted store must read the stored one)
-            before = self.store.write(
-                wm, wm_root, batch,
-                {**{c: F.col(c) for c in n_cols},
-                 "docs": F.when(F.col("wm") > self._cut(0), 1).otherwise(0)},
-                drop=n_cols)
             after = {c: dict.fromkeys(batch, 0) for c in n_cols}
-            if any(before["n0"].values()):
-                wm_c = (self.store.read(wm_root, wm_schema)
-                        .where(in_batch).drop("grp"))
-                # per-tier keep predicate, dispatched on tier_idx in ONE
-                # pass — a single join + filter + write, not T jobs; the
-                # last tier needs no test (tier_idx < n_tiers)
-                keeps = [(F.col("bucket") + 1) * size > self._cut(i)
-                         for i, size in enumerate(self.sizes[:-1])]
-                keep = keeps[-1]
-                for i in reversed(range(n_tiers - 1)):
-                    keep = F.when(tier == i, keeps[i]).otherwise(keep)
-                kept = (sub.join(wm_c, ["doc_id", "source"])
-                        .where(keep).select(*live.columns))
-                after = self.store.write(
-                    kept, comp_root, batch,
-                    {f"n{i}": F.when(tier == i, 1).otherwise(0)
-                     for i in range(n_tiers)})
+            try:
+                before = self.store.write(
+                    wm, wm_root, batch,
+                    {**{c: F.col(c) for c in n_cols},
+                     "docs": F.when(F.col("wm") > self._cut(0), 1)
+                     .otherwise(0)},
+                    drop=n_cols)
+                if any(before["n0"].values()):
+                    after = self.store.write(
+                        rows.where(keep).select(*live.columns), comp_root,
+                        batch, {f"n{i}": F.when(tier == i, 1).otherwise(0)
+                                for i in range(n_tiers)})
+            finally:
+                rows.unpersist()
             self.store.backfill(
                 comp_root,
                 [k for k in batch if not any(after[c][k] for c in n_cols)],

@@ -125,3 +125,61 @@ def test_crash_then_resume(spark, inputs, uninterrupted, tmp_path,
     job.run(inp(inputs))
     assert (tmp_path / f"_stage_{stage}_COMMITTED").exists()
     assert _served(kind, job) == uninterrupted[kind]
+
+
+_PIN_SCRIPT = """
+import json, sys
+from pyspark.sql import SparkSession
+from matrixprofiler_spark.streaming.commit import GroupCommit
+from matrixprofiler_spark.streaming.compress import CompressionPolicyJob
+src, base = sys.argv[1:3]
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+fine = spark.read.parquet(src)
+job = CompressionPolicyJob(spark, base, %d, %d, %d, n_groups=%d)
+sc = spark.sparkContext
+sc.setJobGroup("rerun", "rerun")
+redone = job.run(fine)
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+print(json.dumps({
+    "pin": GroupCommit(spark, base, "probe", 1, {})._pin(job._input(fine)),
+    "redone": redone,
+    "jobs": len(sc.statusTracker().getJobIdsForGroup("rerun")),
+}))
+spark.stop()
+"""
+
+
+def test_pin_holds_across_sessions(spark, inputs, tmp_path):
+    """The metadata pin of a file-backed input is the same in a new
+    Spark session (JVM), so a re-run there on unchanged files binds with
+    no Spark job: a subprocess on ``local[1]`` prints the pin of the
+    same files and re-runs the committed compression."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    src = tmp_path / "fine"
+    inputs["fine"].write.parquet(str(src))
+    base = tmp_path / "compress"
+    job = CompressionPolicyJob(spark, base, FINE, 4 * FINE, 2 * FINE,
+                               n_groups=N_GROUPS)
+    fine = spark.read.parquet(str(src))
+    job.run(fine)
+    pin = job.store._pin(job._input(fine))
+    assert pin is not None
+    stored = json.loads((base / "input_fingerprint.json").read_text())
+    assert stored["pin"] == pin
+
+    repo = str(Path(commit.__file__).resolve().parents[2])
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        filter(None, [repo, os.environ.get("PYTHONPATH")]))}
+    script = _PIN_SCRIPT % (FINE, 4 * FINE, 2 * FINE, N_GROUPS)
+    out = subprocess.run(
+        [sys.executable, "-c", script, str(src), str(base)], env=env,
+        capture_output=True, text=True, timeout=300, check=True)
+    other = json.loads(out.stdout.strip().splitlines()[-1])
+    assert other["pin"] == pin
+    assert (other["redone"], other["jobs"]) == ([], 0)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from matrixprofiler_spark.codecs import dod_decode
 from matrixprofiler_spark.operators.rollup import retention_policy, tier_rollup
 from matrixprofiler_spark.sources.tokens import synth_tokens_df
+from matrixprofiler_spark.streaming.commit import read_manifest
 from matrixprofiler_spark.streaming.compress import CompressionPolicyJob
 
 FINE, CHUNK, HORIZON = 16, 64, 32
@@ -296,6 +297,15 @@ def test_store_file_counts_bounded(spark, fine, tmp_path_factory):
         # the ~shuffle_partitions x n_groups blowup
         assert 0 < len(files) <= 3 * job.n_groups, (
             store, len(files))
+    # each manifest records the bytes of its group's files per store
+    m = job.metrics()
+    for store in ("head", "segments"):
+        on_disk = [sum(f.stat().st_size
+                       for f in (base / store).glob(f"grp={k}/*.parquet"))
+                   for k in range(job.n_groups)]
+        assert [read_manifest(base, "compress", k)["bytes_written"][store]
+                for k in range(job.n_groups)] == on_disk
+        assert m["bytes_written"][store] == sum(on_disk) > 0
     # round-trip identity still holds on the compacted layout
     assert _rows(job.read_fine()) == _rows(fine)
 
@@ -359,15 +369,41 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _write_plans(spark, fn):
+    """``fn()``, and the final physical plan of every file write it ran,
+    each as a list of (node name, node description): the SQL status
+    store keeps each execution's plan graph, the cached plan under an
+    InMemoryTableScan included."""
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        ex = status.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    before = ids()
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = []
+    for eid in sorted(ids() - before):
+        nodes = status.planGraph(eid).allNodes()
+        plan = [(nodes.apply(i).name(), nodes.apply(i).desc())
+                for i in range(nodes.size())]
+        if any(name.startswith("Execute InsertInto") for name, _ in plan):
+            plans.append(plan)
+    return plans
+
+
 def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
     """Job budgets of the lifecycle on a parquet-backed fine store: a
-    fresh expiry runs at most 6 Spark jobs and a fresh compression at
-    most 8 (the input is bound, never copied); an unchanged re-run of
-    either runs none (the metadata pin); building the expiry reads runs
-    none (stored schemas). The same files under a different projection
-    fail the pin, fall back to the content fingerprint and are rejected
-    against the committed work."""
+    fresh expiry runs at most 4 Spark jobs and a fresh compression at
+    most 4 (one group layout per job, every store written from it); an
+    unchanged re-run of either runs none (the metadata pin); building
+    the expiry and rollup reads runs none (stored schemas). No write
+    joins, and none shuffles outside the one group layout. The same
+    files under a different projection fail the pin, fall back to the
+    content fingerprint and are rejected against the committed work."""
     from matrixprofiler_spark.operators.rollup import cascade_tier
+    from matrixprofiler_spark.streaming.checkpoint import RollupJob
     from matrixprofiler_spark.streaming.expiry import (
         RetentionExpiryJob,
         RetentionExpiryJobMulti,
@@ -386,10 +422,28 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
         return CompressionPolicyJob(spark, base / "compress", FINE, CHUNK,
                                     HORIZON, n_groups=8)
 
-    done, n = _jobs(spark, "budget_expiry", lambda: expiry().run(store))
-    assert len(done) == 8 and n <= 6, n
-    done, n = _jobs(spark, "budget_compress", lambda: compress().run(store))
-    assert len(done) == 8 and n <= 8, n
+    counts = {}
+
+    def fresh():
+        for name, make in (("expiry", expiry), ("compress", compress)):
+            done, counts[name] = _jobs(spark, f"budget_{name}",
+                                       lambda: make().run(store))
+            assert len(done) == 8, name
+
+    writes = _write_plans(spark, fresh)
+    assert counts["expiry"] <= 4 and counts["compress"] <= 4, counts
+    # watermarks, compacted, head and segments each ran a write over the
+    # layout; backfill writes have no exchange at all
+    assert sum(any(name == "Exchange" for name, _ in plan)
+               for plan in writes) >= 4
+    for plan in writes:
+        assert not [name for name, _ in plan
+                    if "Join" in name or name == "CartesianProduct"], plan
+        exchanges = [desc for name, desc in plan if "Exchange" in name]
+        assert len(exchanges) <= 1, exchanges
+        assert all("hashpartitioning(grp" in desc
+                   and "REPARTITION_BY_NUM" in desc
+                   for desc in exchanges), exchanges
     # a new DataFrame over the same files (reading it infers a schema)
     again = spark.read.parquet(str(src))
     for name, make in (("expiry", expiry), ("compress", compress)):
@@ -397,14 +451,20 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
                           lambda: make().run(again))
         assert (redone, n) == ([], 0), (name, n)
 
-    # the compacted and watermark stores read with their written schemas
+    # the compacted, watermark and rollup stores read with their written
+    # schemas
     ejob = expiry()
-    reads, n = _jobs(spark, "budget_expiry_reads",
-                     lambda: (ejob.result(), ejob.watermarks()))
+    rjob = RollupJob(spark, base / "rollup", n_groups=2, bucket_size=FINE)
+    rjob.run(synth_tokens_df(spark, 6, seed=7))
+    reads, n = _jobs(spark, "budget_reads",
+                     lambda: (ejob.result(), ejob.watermarks(),
+                              rjob.result()))
     assert n == 0
-    for root, df in zip(("compacted", "watermarks"), reads):
-        inferred = spark.read.parquet(str(base / "expiry" / root))
-        assert df.schema == inferred.drop("grp").schema, root
+    for root, df in zip(("expiry/compacted", "expiry/watermarks",
+                         "rollup/stage=rollup_1m"), reads):
+        inferred = spark.read.parquet(str(base / root))
+        part = "part" if root.startswith("rollup") else "grp"
+        assert df.schema == inferred.drop(part).schema, root
     multi = RetentionExpiryJobMulti(
         spark, base / "multi", [FINE, 2 * FINE, 4 * FINE], [FINE, 2 * FINE],
         n_groups=2)
@@ -427,8 +487,6 @@ def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):
     censuses read zero where no rows are, the empty input's fingerprint
     is n = 0, h = 0, and a re-run is a no-op."""
     import json
-
-    from matrixprofiler_spark.streaming.commit import read_manifest
 
     src = tmp_path_factory.mktemp("compress_empty_src")
     fine.limit(0).write.parquet(str(src / "empty"))

@@ -90,6 +90,16 @@ def test_kill_resume_and_identity(spark, fine, coarse, tmp_path_factory):
         assert man["policy"] == {
             "fine_size": FINE, "coarse_size": COARSE, "horizon": HORIZON}
         assert man["input_fingerprint"]["n"] == fine.count()
+        # bytes of the group's files, stat'ed when its run committed it
+        # (the resumed run rewrote only its own groups)
+        for store in ("compacted", "watermarks"):
+            assert man["bytes_written"][store] == sum(
+                f.stat().st_size
+                for f in (base / store).glob(f"grp={k}/*.parquet"))
+    assert m["bytes_written"] == {
+        store: sum(f.stat().st_size
+                   for f in (base / store).glob("grp=*/*.parquet"))
+        for store in ("watermarks", "compacted")}
 
 
 def test_full_expiry_edge_doc(spark, tmp_path_factory):
@@ -282,6 +292,33 @@ def test_multi_full_expiry_edge(spark, tmp_path_factory):
         [(fine, FINE), (m2, 2 * FINE), (m4, 4 * FINE)], [0, 0])
     assert _rows(view) == _rows(full)
     assert view.filter(F.col("tier") == "4m").count() == 2  # coarse serves
+
+
+def test_multi_orphan_coarser_rows_dropped(spark, fine, tmp_path_factory):
+    """Coarser-tier rows of a doc absent from the finest tier break the
+    cascade-derivation contract: that doc has no finest-tier watermark
+    (its window watermark is null), so its rows are absent from
+    ``compacted/`` and ``watermarks/`` and from every census."""
+    from matrixprofiler_spark.streaming.expiry import RetentionExpiryJobMulti
+
+    m2 = cascade_tier(fine, FINE, 2 * FINE, "2m")
+    orphan = (m2.where(F.col("doc_id") == m2.first()["doc_id"])
+              .withColumn("doc_id", F.lit("orphan")))
+    assert orphan.count() > 0
+    base = tmp_path_factory.mktemp("expiry_multi_orphan")
+    job = RetentionExpiryJobMulti(
+        spark, base, [FINE, 2 * FINE, 4 * FINE], [FINE, 2 * FINE],
+        n_groups=2)
+    job.run([fine, m2.unionByName(orphan)])
+    for root in ("compacted", "watermarks"):
+        stored = spark.read.parquet(str(base / root))
+        assert stored.where(F.col("doc_id") == "orphan").count() == 0, root
+    assert job.watermarks().count() == fine.select("doc_id").distinct().count()
+    m = job.metrics()
+    assert [t["rows_before"] for t in m["tiers"]] == [fine.count(), m2.count()]
+    assert m["rows_before"] == fine.count() + m2.count()
+    assert m["rows_after"] == job.result().count()
+    assert m["rows_before"] == m["rows_dropped"] + m["rows_after"]
 
 
 def test_multi_binding_and_validation(spark, fine, tmp_path_factory):
