@@ -3176,7 +3176,7 @@ def q_checkpoint_rollup_resume(spark, sf_dir, sink_dir: str | None = None):
     Default (driver) mode materializes the bounded result set so the temp
     base dir can be removed. Pass ``sink_dir`` (the 100-TB path: a
     durable checkpoint base) for a lazy, no-collect return with the base
-    dir — manifests, staged input and committed stage — retained."""
+    dir — input fingerprint, manifests and committed stage — retained."""
     import shutil
     import tempfile
 
@@ -3201,10 +3201,10 @@ def q_checkpoint_rollup_resume(spark, sf_dir, sink_dir: str | None = None):
         else:
             # durable re-invocation: the kill-and-resume already happened
             # against this base dir — just resume (idempotent no-op when
-            # complete; the staged-input fingerprint still rejects a
-            # different input)
+            # complete; the input fingerprint still rejects a different
+            # input)
             job.run(toks)
-        out = spark.read.parquet(f"{base}/stage=rollup_1m").select(
+        out = job.result().select(
             "doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v"
         )
         if sink_dir is not None:

@@ -1,7 +1,8 @@
-"""Resumable finest-tier rollup: a per-group loop on the group-commit
-store (streaming/commit.py holds the commit contract — staging,
-fingerprint, manifests, marker), with an optional Iceberg backend for the
-per-group data commits. The reference's only analog is its
+"""Resumable finest-tier rollup on the group-commit store
+(streaming/commit.py holds the commit contract — binding, fingerprint,
+manifests, marker): each run rolls up every incomplete group in one pass
+and one write, into ``stage=rollup_1m/grp=<k>/``, or into one Iceberg
+partition overwrite per run. The reference's only analog is its
 interrupt-safe partial return (R/stomp.R:50-58); full resumability is new
 engine surface."""
 
@@ -10,7 +11,7 @@ from __future__ import annotations
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rollup import tier_rollup, with_derived_stats
@@ -47,14 +48,15 @@ class RollupJob:
     (hash of doc_id — the same salting used for skew defeat); each group is
     one unit of commit (streaming/commit.py). This mirrors a per-partition
     Iceberg write with commit metadata, at sandbox scale. Output layout:
-    ``stage=rollup_1m/part=<k>/...parquet``."""
+    ``stage=rollup_1m/grp=<k>/...parquet``, every group of a run written in
+    one pass."""
 
     def __init__(self, spark: SparkSession, base_dir: str | Path, n_groups: int = 8,
                  bucket_size: int = 60, iceberg_table: str | None = None):
         """``iceberg_table`` (e.g. ``mp_iceberg.db.rollup_1m``) switches
-        the per-group data commits from path-parquet to atomic Iceberg
-        partition overwrites on that table; the catalog named in the
-        table's first part must be configured and its jar present
+        the data commit from path-parquet to one atomic Iceberg partition
+        overwrite on that table per run; the catalog named in the table's
+        first part must be configured and its jar present
         (iceberg_available). Manifests — our lineage/metrics surface —
         stay JSON either way; with Iceberg each manifest also records the
         table snapshot_id of its commit."""
@@ -73,52 +75,53 @@ class RollupJob:
                     "Spark runtime jar), falling back is not silent by "
                     "design — drop the argument to use parquet+manifests"
                 )
-        # the staged copy keeps the input's own partitioning: each
-        # group's pruned read then runs with the input's parallelism, not
-        # one task per group
         self.store = GroupCommit(spark, base_dir, STAGE, n_groups,
                                  {"bucket_size": bucket_size})
 
     def completed_groups(self) -> list[int]:
         return self.store.completed_groups()
 
-    def stage_input(self, tokens: DataFrame) -> DataFrame:
-        return self.store.stage(tokens)
-
     def run(self, tokens: DataFrame, fail_after: int | None = None) -> list[int]:
-        """Process all incomplete groups; returns the groups processed this
-        run. ``fail_after`` aborts after N groups (for kill-and-resume
-        tests)."""
-        staged = self.store.stage(tokens)
+        """Roll up every incomplete group in ONE pass over the live input
+        (:meth:`GroupCommit.bind`, no copy): the kernel runs on the
+        input's own partitions, its rows are laid out by group
+        (:meth:`GroupCommit.layout` — the shuffle moves rollup rows, about
+        one per ``bucket_size`` points, never token arrays), and one write
+        replaces only the batch's group partitions, then one manifest per
+        group. ``fail_after`` commits only the first N incomplete groups,
+        then raises (kill-and-resume tests). Returns the groups committed
+        this run.
+
+        Censuses are observed on the write: per-group rows, and distinct
+        ``doc_id``s as the first row of each (grp, doc_id) window — a doc
+        lives wholly in one group, so the layout already clusters it."""
+        live = self.store.bind(tokens)
         batch, inject = self.store.batch(fail_after)
-        for k in batch:
+        if batch:
             t0 = time.time()
-            part_tokens = staged.filter(F.col("grp") == k)  # pruned read
-            out = with_derived_stats(
-                tier_rollup(part_tokens, {"1m": self.bucket_size}))
+            rollup = with_derived_stats(tier_rollup(
+                self.store.batch_rows(live, batch), {"1m": self.bucket_size}))
+            doc = Window.partitionBy("grp", "doc_id").orderBy("source",
+                                                             "bucket")
+            rows = (self.store.layout(
+                rollup.withColumn("grp", self.store.group_col()))
+                .withColumn("first", F.row_number().over(doc) == 1))
+            census = {"rows": F.lit(1),
+                      "n_docs": F.when(F.col("first"), 1).otherwise(0)}
             lineage = {}
             if self.iceberg_table:
-                committed, snapshot_id = self._commit_iceberg(out, k)
-                if snapshot_id is not None:
-                    lineage["iceberg_snapshot_id"] = snapshot_id
+                counts, lineage = self._commit_iceberg(rows, batch, census)
             else:
-                out_path = str(self.base / f"stage={STAGE}" / f"part={k}")
-                out.write.mode("overwrite").parquet(out_path)
-                committed = self.spark.read.parquet(out_path)
-            agg = committed.agg(
-                F.count("*").alias("rows"),
-                F.countDistinct("doc_id").alias("n_docs"),
-            ).collect()[0]
-            rows = int(agg["rows"])
-            elapsed = time.time() - t0
-            self.store.commit(k, {
-                "n_docs": int(agg["n_docs"]),
-                "rows": rows,
-                "points": rows * 5,
-                "elapsed_sec": round(elapsed, 3),
-                "points_per_sec": round(rows * 5 / elapsed, 1) if elapsed else None,
-                **lineage,
-            })
+                root = self.base / f"stage={STAGE}"
+                counts = self.store.write(rows, root, batch, census,
+                                          drop=("first",))
+                self.store.backfill(
+                    root, [k for k in batch if counts["rows"][k] == 0],
+                    rollup.schema)
+            self.store.commit_batch(batch, t0, {
+                k: {"n_docs": counts["n_docs"][k], "rows": counts["rows"][k],
+                    "points": counts["rows"][k] * 5, **lineage}
+                for k in batch}, "rows")
         return self.store.finish(batch, inject)
 
     # The two catalog-API primitives of the commit path, factored out so
@@ -129,11 +132,11 @@ class RollupJob:
     # only these two one-call wrappers stay jar-gated.
 
     def _replace_partition(self, data: DataFrame, exists: bool) -> None:
-        """Create the partitioned table on first commit, else atomically
-        REPLACE its part=k slice (Iceberg overwritePartitions — an
-        all-or-nothing snapshot commit; a killed write leaves the
-        previous snapshot intact, the same torn-write guarantee the
-        parquet path gets from write-then-rename)."""
+        """Create the table partitioned by ``part`` on first commit, else
+        atomically REPLACE the partitions ``data`` holds (Iceberg
+        overwritePartitions — an all-or-nothing snapshot commit; a killed
+        write leaves the previous snapshot intact, the same torn-write
+        guarantee the parquet path gets from its manifests)."""
         w = data.writeTo(self.iceberg_table)
         if not exists:
             w.partitionedBy(F.col("part")).create()
@@ -151,15 +154,17 @@ class RollupJob:
         ).collect()
         return int(snap[0][0]) if snap else None
 
-    def _commit_iceberg(self, out: DataFrame, k: int):
-        """Atomic per-group commit: REPLACE the grp=k partition of the
-        Iceberg table. Returns (committed rows DF, snapshot_id)."""
-        data = out.withColumn("part", F.lit(k))
+    def _commit_iceberg(self, rows: DataFrame, batch: list[int],
+                        census: dict):
+        """Atomic batch commit: REPLACE the batch's partitions of the
+        Iceberg table (``part`` = ``grp``) in one overwrite. Returns the
+        census observed on it and the lineage every manifest of the batch
+        records: the snapshot id of that one commit."""
         try:
             exists = self.spark.catalog.tableExists(self.iceberg_table)
         except Exception:
             exists = False
-        if exists and not getattr(self, "_iceberg_shape_checked", False):
+        if exists:
             # a table written by a job with a different n_groups would
             # keep its extra partitions past this job's overwrites and
             # result() would serve duplicated docs — bind the table to
@@ -173,22 +178,19 @@ class RollupJob:
                     f"up to part={stale} from a job with more groups than "
                     f"n_groups={self.n_groups}; use a fresh table"
                 )
-        self._iceberg_shape_checked = True
-        self._replace_partition(data, exists)
-        committed = (
-            self.spark.table(self.iceberg_table).filter(F.col("part") == k).drop("part")
-        )
-        return committed, self._snapshot_id()
+        data, counts = self.store.observe_census(rows, batch, census,
+                                                 drop=("first",))
+        self._replace_partition(data.withColumnRenamed("grp", "part"), exists)
+        return counts(), {"iceberg_snapshot_id": self._snapshot_id()}
 
     def result(self) -> DataFrame:
         """The rollup rows, read with the schema they were written with
-        (no schema-inference job); the hive-style ``part`` layout column
-        is a physical detail and is dropped."""
+        (no schema-inference job); the layout column (``grp``, or the
+        Iceberg table's ``part``) is a physical detail and is dropped."""
         if self.iceberg_table:
             return self.spark.table(self.iceberg_table).drop("part")
         root = self.base / f"stage={STAGE}"
-        return self.store.read(root, stored_schema(root, "part"),
-                               part="part").drop("part")
+        return self.store.read(root, stored_schema(root)).drop("grp")
 
     def metrics(self) -> dict:
         m = self.store.metrics("rows", "points")

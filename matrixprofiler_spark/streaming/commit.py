@@ -5,12 +5,15 @@ lineage manifests + metrics).
 The rollup (checkpoint.py), expiry (expiry.py) and compression
 (compress.py) jobs split their input into ``n_groups`` deterministic doc
 groups, ``grp = pmod(xxhash64(doc_id), n_groups)`` — a doc lives wholly in
-one group — and commit group by group. In production every group commit
-is an Iceberg snapshot commit (atomic, versioned, time-travelable) and
-resume asks "which groups are already in the committed snapshot?". The
-:class:`GroupCommit` store keeps that contract with parquet and one JSON
-manifest per committed group; it is the only code that writes
-fingerprints, manifests and stage markers.
+one group — and each run commits its incomplete groups through the same
+calls: :meth:`~GroupCommit.bind`, :meth:`~GroupCommit.batch_rows`,
+:meth:`~GroupCommit.layout`, :meth:`~GroupCommit.write`,
+:meth:`~GroupCommit.commit_batch`, :meth:`~GroupCommit.finish`. In
+production every group commit is an Iceberg snapshot commit (atomic,
+versioned, time-travelable) and resume asks "which groups are already in
+the committed snapshot?". The :class:`GroupCommit` store keeps that
+contract with parquet and one JSON manifest per committed group; it is
+the only code that writes fingerprints, manifests and stage markers.
 
 Layout under ``base_dir``:
 
@@ -22,14 +25,11 @@ Layout under ``base_dir``:
                                    written per store, policy, input
                                    fingerprint, kernel version, wall time
     _stage_<stage>_COMMITTED       every group has a manifest
-    input_staged/grp=<k>/...       (rollup only) a copy of the input,
-                                   hive-partitioned by group, so each of
-                                   its one-group passes is a pruned read
 
-Binding. The expiry and compression jobs read their input live: the
-input is treated as an immutable snapshot — the Iceberg snapshot-id
-analog — and the base dir binds to its identity instead of a copy
-(:meth:`GroupCommit.bind`). Two identities:
+Binding. Every job reads its input live: the input is treated as an
+immutable snapshot — the Iceberg snapshot-id analog — and the base dir
+binds to its identity instead of a copy (:meth:`GroupCommit.bind`). Two
+identities:
 
 * the content fingerprint (recipe ``FP_RECIPE``): the row count plus the
   ``decimal(38,0)`` SUM of ``xxhash64`` over every input column. The sum
@@ -67,10 +67,6 @@ Commit order, and what a crash at each point leaves behind:
    or missing manifest means "not committed";
 4. the stage marker, once every group has a manifest.
 
-The rollup job stages first instead (:meth:`GroupCommit.stage`): its
-staged data (its ``_SUCCESS``), then the fingerprint, then steps 1-4 per
-group; a crash between the first two restages.
-
 ``fail_after=N`` restricts a run to the first N incomplete groups and
 raises ``injected failure`` after committing them (kill-and-resume tests).
 """
@@ -83,6 +79,7 @@ import os
 import shutil
 import time
 from pathlib import Path
+from typing import Callable
 
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
@@ -137,12 +134,11 @@ def read_manifest(base_dir: str | Path, stage: str, part: int) -> dict | None:
         return None  # torn write == incomplete
 
 
-def stored_schema(root: str | Path, part: str = "grp") -> T.StructType:
-    """The row schema a store under ``root``, hive-partitioned by
-    ``part``, was written with, from one file's footer (every partition
-    holds a file, see :meth:`GroupCommit.backfill`): no schema-inference
-    job."""
-    f = next(Path(root).glob(f"{part}=*/*.parquet"), None)
+def stored_schema(root: str | Path) -> T.StructType:
+    """The row schema a group-partitioned store under ``root`` was
+    written with, from one file's footer (every partition holds a file,
+    see :meth:`GroupCommit.backfill`): no schema-inference job."""
+    f = next(Path(root).glob("grp=*/*.parquet"), None)
     if f is None:
         raise FileNotFoundError(f"no committed store under {root}")
     meta = pq.read_schema(f).metadata[_SPARK_SCHEMA_KEY]
@@ -193,12 +189,21 @@ class GroupCommit:
             return todo, False
         return todo[:fail_after], True
 
-    def layout(self, live: DataFrame, batch: list[int]) -> DataFrame:
+    def batch_rows(self, live: DataFrame, batch: list[int]) -> DataFrame:
         """The batch's rows of ``live`` (from :meth:`bind`) as the job's
-        first pass reads them, laid out by group: the job's one shuffle.
-        A per-doc quantity is then a window partitioned by ``grp`` and the
-        doc, which this partitioning already clusters, and every store is
-        written from these rows with no other shuffle.
+        first pass reads them: on a fresh binding that pass observes the
+        content fingerprint, over every input row (the batch filter comes
+        after the observe)."""
+        if self._fresh is not None:
+            df, obs, _ = self._fresh
+            live = live.observe(obs, *_fp_metrics(df.columns))
+        return live.where(f"grp IN ({', '.join(map(str, batch))})")
+
+    def layout(self, rows: DataFrame) -> DataFrame:
+        """``rows`` (with ``grp``) laid out by group: the job's one
+        shuffle. A per-doc quantity is then a window partitioned by
+        ``grp`` and the doc, which this partitioning already clusters, and
+        every store is written from these rows with no other shuffle.
 
         One hash repartition on the group puts each group into exactly one
         task, so one file per write (guide §6: without it each
@@ -207,11 +212,9 @@ class GroupCommit:
         roundtrip per couple of files on every later scan). ``min(n_groups,
         task slots)`` tasks make each write one wave; at scale, choose
         n_groups so each file lands in the 128MB-1GB band."""
-        return (self.observe_input(live)
-                .where(f"grp IN ({', '.join(map(str, batch))})")
-                .repartition(min(self.n_groups,
-                                 self.spark.sparkContext.defaultParallelism),
-                             F.col("grp")))
+        return rows.repartition(
+            min(self.n_groups, self.spark.sparkContext.defaultParallelism),
+            F.col("grp"))
 
     # ----------------------------------------------------------- binding
 
@@ -285,21 +288,12 @@ class GroupCommit:
     def bind(self, df: DataFrame) -> DataFrame:
         """Bind the base dir to the live input ``df`` without copying it;
         returns ``df`` with ``grp``. A fresh binding's fingerprint is
-        observed by the pass :meth:`observe_input` marks and written
-        before the first manifest."""
+        observed by the pass :meth:`batch_rows` marks and written before
+        the first manifest."""
         pin = self._pin(df)
         if not self._bound(df, pin):
             self._fresh = (df, Observation(f"fp_{self.stage_name}"), pin)
         return df.withColumn("grp", self.group_col())
-
-    def observe_input(self, live: DataFrame) -> DataFrame:
-        """``live`` (from :meth:`bind`) as the job's first pass reads it:
-        on a fresh binding it observes the content fingerprint. Filter
-        the batch AFTER this, so every input row is counted."""
-        if self._fresh is None:
-            return live
-        df, obs, _ = self._fresh
-        return live.observe(obs, *_fp_metrics(df.columns))
 
     def _record(self) -> None:
         """Write a fresh binding's fingerprint, once its observed pass
@@ -317,35 +311,16 @@ class GroupCommit:
                    self.fp if pin is None else {**self.fp, "pin": pin})
         self._fresh = None
 
-    def stage(self, df: DataFrame) -> DataFrame:
-        """Write ``df`` once, partitioned by group, and bind the base dir
-        to it; returns the staged read (with ``grp``). Idempotent: a
-        staged input bound to ``df`` is reused."""
-        staged = self.base / "input_staged"
-        pin = self._pin(df)
-        if (staged / "_SUCCESS").exists() and self._bound(df, pin):
-            return self.read(staged, df.schema)
-        self._fresh = (df, Observation("stage_fp"), pin)
-        (self.observe_input(df.withColumn("grp", self.group_col()))
-         .write.mode("overwrite")
-         .partitionBy("grp")
-         .parquet(str(staged)))
-        self._record()
-        return self.read(staged, df.schema)
-
     # ------------------------------------------------------------ writes
 
-    def write(self, df: DataFrame, root: str | Path, batch: list[int],
-              census: dict[str, Column], drop: tuple[str, ...] = ()
-              ) -> dict[str, dict[int, int]]:
-        """Write the batch's groups of ``df`` under ``root``:
-        hive-partitioned by group, dynamic partition overwrite (only the
-        batch's partitions are replaced). The caller lays out once and
-        derives ``df`` from :meth:`layout`'s rows with no shuffle between,
-        so each group is in one task and gets one file. Returns, per
-        ``census`` name, the per-group sum of its column, observed on the
-        write itself — no read-back pass. ``drop`` lists census-only
-        columns left out of the stored rows.
+    def observe_census(self, df: DataFrame, batch: list[int],
+                       census: dict[str, Column],
+                       drop: tuple[str, ...] = ()
+                       ) -> tuple[DataFrame, Callable[[], dict]]:
+        """``df`` with ``census`` observed on it and the census-only
+        columns ``drop`` left out, and a function that returns — once the
+        one write of those rows has run — per ``census`` name the
+        per-group sum of its column: no read-back pass.
 
         The census is one ``array(sum(if(grp = k, c, 0)), ...)`` SQL
         expression per name: a Column tree per (name, group) cost several
@@ -355,7 +330,7 @@ class GroupCommit:
         node, and a CollectMetrics inside the replaced subtree never
         reports — at the top of the plan it always survives and counts
         the same rows."""
-        obs = Observation(f"census_{Path(root).name}")
+        obs = Observation()
         cols = {f"_census_{name}": col for name, col in census.items()}
         metrics = [
             F.expr("array(" + ", ".join(
@@ -363,14 +338,30 @@ class GroupCommit:
                 + f") AS `{name}`")
             for name in census
         ]
-        (df.withColumns(cols).observe(obs, *metrics).drop(*cols, *drop)
-         .write.mode("overwrite")
+
+        def counts() -> dict[str, dict[int, int]]:
+            m = obs.get
+            return {name: {k: int(v or 0) for k, v in zip(batch, m[name])}
+                    for name in census}
+
+        return (df.withColumns(cols).observe(obs, *metrics)
+                .drop(*cols, *drop), counts)
+
+    def write(self, df: DataFrame, root: str | Path, batch: list[int],
+              census: dict[str, Column], drop: tuple[str, ...] = ()
+              ) -> dict[str, dict[int, int]]:
+        """Write the batch's groups of ``df`` under ``root``:
+        hive-partitioned by group, dynamic partition overwrite (only the
+        batch's partitions are replaced). The caller lays out once and
+        derives ``df`` from :meth:`layout`'s rows with no shuffle between,
+        so each group is in one task and gets one file. Returns the
+        census :meth:`observe_census` observes on the write."""
+        rows, counts = self.observe_census(df, batch, census, drop)
+        (rows.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("grp").parquet(str(root)))
         self._roots[Path(root).name] = Path(root)
-        m = obs.get
-        return {name: {k: int(v or 0) for k, v in zip(batch, m[name])}
-                for name in census}
+        return counts()
 
     def backfill(self, root: str | Path, groups: list[int],
                  schema: T.StructType) -> None:
@@ -393,44 +384,38 @@ class GroupCommit:
 
     # ----------------------------------------------------------- commits
 
-    def commit(self, k: int, fields: dict) -> None:
-        """Commit group ``k``: its manifest, with the shared lineage
-        fields, is the commit point. A fresh binding's fingerprint goes
-        first."""
-        if self._fresh is not None:
-            self._record()
-        write_json(
-            self.base / "manifests" / f"{self.stage_name}_{k}.json",
-            {
-                "stage": self.stage_name,
-                "part": k,
-                **fields,
-                "policy": self.policy,
-                "kernel_version": __version__,
-                "input_fingerprint": self.fp,
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
-                                              time.gmtime()),
-            },
-        )
-
     def commit_batch(self, batch: list[int], t0: float,
                      fields: dict[int, dict], rows_key: str) -> None:
         """Commit every group of a batch written as one shared pass: each
-        group's wall time is an equal share of the batch's, and its
+        group's manifest, with the shared lineage fields, is its commit
+        point, and a fresh binding's fingerprint goes first. A group's
+        wall time is an equal share of the batch's, and its
         ``bytes_written`` are the sizes of its files in each store this
         run wrote, stat'ed on the driver (no Spark job)."""
         share = (time.time() - t0) / len(batch)
+        if self._fresh is not None:
+            self._record()
         for k in batch:
             rows = fields[k][rows_key]
-            self.commit(k, {
-                **fields[k],
-                "bytes_written": {
-                    name: sum(f.stat().st_size
-                              for f in root.glob(f"grp={k}/*.parquet"))
-                    for name, root in self._roots.items()},
-                "elapsed_sec": round(share, 3),
-                "rows_per_sec": round(rows / share, 1) if share else None,
-            })
+            write_json(
+                self.base / "manifests" / f"{self.stage_name}_{k}.json",
+                {
+                    "stage": self.stage_name,
+                    "part": k,
+                    **fields[k],
+                    "bytes_written": {
+                        name: sum(f.stat().st_size
+                                  for f in root.glob(f"grp={k}/*.parquet"))
+                        for name, root in self._roots.items()},
+                    "elapsed_sec": round(share, 3),
+                    "rows_per_sec": round(rows / share, 1) if share else None,
+                    "policy": self.policy,
+                    "kernel_version": __version__,
+                    "input_fingerprint": self.fp,
+                    "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
+                                                  time.gmtime()),
+                },
+            )
 
     def finish(self, batch: list[int], inject: bool) -> list[int]:
         """End a run: raise the injected failure, or mark the stage
@@ -443,16 +428,15 @@ class GroupCommit:
 
     # ----------------------------------------------------------- reading
 
-    def read(self, root: str | Path, schema: T.StructType,
-             part: str = "grp") -> DataFrame:
+    def read(self, root: str | Path, schema: T.StructType) -> DataFrame:
         """The store under ``root``, written from rows of ``schema`` and
-        hive-partitioned by ``part``, read with the schema it was written
-        with: no schema-inference job. ``part`` comes last, as the int
+        hive-partitioned by group, read with the schema it was written
+        with: no schema-inference job. ``grp`` comes last, as the int
         that partition inference gives. The field list is a fresh one:
         ``StructType.add`` appends in place and ``StructType(fields)``
         shares the caller's list, so either would change ``schema``."""
         full = T.StructType([*schema.fields,
-                             T.StructField(part, T.IntegerType(), True)])
+                             T.StructField("grp", T.IntegerType(), True)])
         return self.spark.read.schema(full).parquet(str(root))
 
     def require_committed(self) -> None:

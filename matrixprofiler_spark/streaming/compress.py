@@ -246,10 +246,10 @@ class CompressionPolicyJob:
             # grp is a window key (a doc lives wholly in one group), so
             # the layout's partitioning on grp already clusters the doc;
             # persist: the head and segment writes both read these rows
-            joined = (self.store.layout(live, batch).withColumn(
-                "wm", (F.max("bucket").over(
-                    Window.partitionBy("grp", "doc_id", "source")) + 1)
-                * self.fine_size).persist())
+            joined = (self.store.layout(self.store.batch_rows(live, batch))
+                      .withColumn("wm", (F.max("bucket").over(
+                          Window.partitionBy("grp", "doc_id", "source")) + 1)
+                          * self.fine_size).persist())
             cut = (
                 F.floor((F.col("wm") - self.horizon) / self.chunk_span)
                 * self.chunk_span

@@ -181,7 +181,8 @@ class RetentionExpiryJobMulti:
             whole = doc.rowsBetween(Window.unboundedPreceding,
                                     Window.unboundedFollowing)
             rows = (
-                self.store.layout(live, batch).withColumns({
+                self.store.layout(self.store.batch_rows(live, batch))
+                .withColumns({
                     "wm": (F.max(F.when(tier == 0, F.col("bucket")))
                            .over(whole) + 1) * self.sizes[0],
                     **{c: F.count(F.when(tier == i, 1)).over(whole)

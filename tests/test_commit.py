@@ -53,9 +53,8 @@ JOBS = {
 }
 
 # "staged": the crash hits as the fingerprint is written — the batch
-# data (for the rollup, its staged copy) is written, the fingerprint not;
-# "data": data and fingerprint written, no manifest; "manifest<k>":
-# manifest k written, the rest not
+# data is written, the fingerprint not; "data": data and fingerprint
+# written, no manifest; "manifest<k>": manifest k written, the rest not
 POINTS = ["staged", "data"] + [f"manifest{k}" for k in range(N_GROUPS)]
 
 

@@ -463,8 +463,7 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
     for root, df in zip(("expiry/compacted", "expiry/watermarks",
                          "rollup/stage=rollup_1m"), reads):
         inferred = spark.read.parquet(str(base / root))
-        part = "part" if root.startswith("rollup") else "grp"
-        assert df.schema == inferred.drop(part).schema, root
+        assert df.schema == inferred.drop("grp").schema, root
     multi = RetentionExpiryJobMulti(
         spark, base / "multi", [FINE, 2 * FINE, 4 * FINE], [FINE, 2 * FINE],
         n_groups=2)
@@ -479,6 +478,46 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
             _jobs(spark, "budget_projection", lambda: make().run(changed))
     assert len(spark.sparkContext.statusTracker()
                .getJobIdsForGroup("budget_projection")) > 0
+
+
+def test_rollup_job_budget(spark, tmp_path_factory):
+    """Job budget of the rollup on a parquet-backed tokens table: a fresh
+    run over 8 groups launches at most 4 Spark jobs (one kernel pass and
+    one write, however many groups), an unchanged re-run over a new
+    DataFrame of the same files launches none (the metadata pin), and
+    the one write's plan joins nothing and shuffles only in the group
+    layout."""
+    from matrixprofiler_spark.streaming.checkpoint import RollupJob
+
+    src = tmp_path_factory.mktemp("rollup_budget_src") / "tokens"
+    synth_tokens_df(spark, 40, seed=11).write.parquet(str(src))
+    base = tmp_path_factory.mktemp("rollup_budget")
+
+    def run(name):
+        # a new DataFrame over the same files (reading it infers a schema)
+        tokens = spark.read.parquet(str(src))
+        job = RollupJob(spark, base, n_groups=8, bucket_size=FINE)
+        return _jobs(spark, name, lambda: job.run(tokens))
+
+    counts = {}
+
+    def fresh():
+        done, counts["fresh"] = run("rollup_budget_fresh")
+        assert len(done) == 8
+
+    writes = _write_plans(spark, fresh)
+    assert counts["fresh"] <= 4, counts
+    shuffled = [plan for plan in writes
+                if any(name == "Exchange" for name, _ in plan)]
+    assert len(shuffled) == 1, writes
+    for plan in writes:
+        assert not [name for name, _ in plan
+                    if "Join" in name or name == "CartesianProduct"], plan
+    exchanges = [desc for name, desc in shuffled[0] if "Exchange" in name]
+    assert len(exchanges) == 1, exchanges
+    assert ("hashpartitioning(grp" in exchanges[0]
+            and "REPARTITION_BY_NUM" in exchanges[0]), exchanges
+    assert run("rollup_budget_rerun") == ([], 0)
 
 
 def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):

@@ -56,21 +56,40 @@ def test_kill_and_resume(spark, tokens, tmp_path_factory):
         assert a.asDict() == b.asDict()
 
 
-def test_manifests_carry_lineage(spark, tokens, tmp_path):
-    job = RollupJob(spark, tmp_path, n_groups=4)
-    job.run(tokens)
-    total_docs = 0
+def _check_lineage(spark, inp, base):
+    """Run the rollup of ``inp`` under ``base`` and check its manifests:
+    ``n_docs`` sums to the distinct ``doc_id``s of the input."""
+    job = RollupJob(spark, base, n_groups=4)
+    job.run(inp)
+    total_docs = total_rows = 0
     for k in range(4):
-        m = read_manifest(tmp_path, "rollup_1m", k)
+        m = read_manifest(base, "rollup_1m", k)
         assert m is not None
         assert m["rows"] > 0 and m["elapsed_sec"] >= 0
         assert m["kernel_version"]
         assert m["points"] == m["rows"] * 5
         total_docs += m["n_docs"]
-    assert total_docs == tokens.count()
+        total_rows += m["rows"]
+    assert total_docs == inp.select("doc_id").distinct().count()
+    assert total_rows == tier_rollup(inp, {"1m": 60}).count()
     metrics = job.metrics()
     assert metrics["groups_done"] == 4
     assert metrics["points"] == metrics["rows"] * 5
+    return total_docs
+
+
+def test_manifests_carry_lineage(spark, tokens, tmp_path):
+    assert _check_lineage(spark, tokens, tmp_path) == tokens.count()
+
+
+def test_manifests_count_distinct_docs(spark, tokens, tmp_path):
+    """One doc_id under a second source and one duplicated row add rows
+    but no doc: ``n_docs`` is the distinct ``doc_id`` count per group."""
+    a, b = tokens.orderBy("doc_id").limit(2).collect()
+    edge = tokens.unionByName(spark.createDataFrame(
+        [{**a.asDict(), "source": a["source"] + "_other"}, b.asDict()],
+        tokens.schema))
+    assert _check_lineage(spark, edge, tmp_path) == tokens.count()
 
 
 def test_torn_manifest_is_retried(spark, tokens, tmp_path):
@@ -87,15 +106,14 @@ def test_torn_manifest_is_retried(spark, tokens, tmp_path):
 def test_changed_input_same_base_dir_is_rejected(spark, tokens, tmp_path):
     """A base dir binds to ONE input: rerunning with a different tokens
     table against committed work must fail loudly, never silently serve
-    the stale staged copy (the staged _SUCCESS marker alone is not
-    identity)."""
+    the committed rollup of another input."""
     job = RollupJob(spark, tmp_path, n_groups=4)
     job.run(tokens)
     other = synth_tokens_df(spark, 10, seed=99)
     job2 = RollupJob(spark, tmp_path, n_groups=4)
     # all groups committed -> nothing to do, but identity must be checked
     with pytest.raises(ValueError, match="different input"):
-        job2.stage_input(other)
+        job2.run(other)
     # the SAME input resumes fine and reports all groups complete
     assert job2.run(tokens) == []
 
@@ -104,7 +122,7 @@ def test_same_shape_different_tokens_is_rejected(spark, tokens, tmp_path):
     """The fingerprint must hash token VALUES, not just (doc_id, n_tok):
     an input with identical doc ids and lengths but perturbed token
     contents is a DIFFERENT input and must be rejected against committed
-    work, not silently served the stale staged copy."""
+    work, not silently served the committed rollup of another input."""
     job = RollupJob(spark, tmp_path, n_groups=2)
     job.run(tokens)
     # same doc_id, same n_tok, every token value shifted by +1
@@ -114,14 +132,14 @@ def test_same_shape_different_tokens_is_rejected(spark, tokens, tmp_path):
     assert perturbed.count() == tokens.count()
     job2 = RollupJob(spark, tmp_path, n_groups=2)
     with pytest.raises(ValueError, match="different input"):
-        job2.stage_input(perturbed)
+        job2.run(perturbed)
 
 
 def test_duplicated_rows_do_not_alias(spark, tokens, tmp_path):
     """{A, B, B} and {A, C, C} have the same row count, and under a
     bit_xor hash the same hash too (each duplicated pair cancels): a
     resume against committed work for one must reject the other, never
-    serve its stale staged copy."""
+    serve its committed rollup."""
     a, b, c = tokens.orderBy("doc_id").limit(3).collect()
     x = spark.createDataFrame([a, b, b], tokens.schema)
     y = spark.createDataFrame([a, c, c], tokens.schema)
@@ -216,14 +234,14 @@ def test_fingerprint_recipe_change_is_distinguished(spark, tokens, tmp_path):
     job.run(tokens)
     fp_path = tmp_path / "input_fingerprint.json"
     good = json.loads(fp_path.read_text())
-    assert good["recipe"] == FP_RECIPE  # staged dirs carry the version
+    assert good["recipe"] == FP_RECIPE  # bindings carry the version
 
     # differing values + differing tag -> the ambiguity error
     bad = dict(good, h=good["h"] ^ 1, recipe=FP_RECIPE - 1)
     fp_path.write_text(json.dumps(bad))
     job3 = RollupJob(spark, tmp_path, n_groups=2)
     with pytest.raises(ValueError, match="changed input or a\n?\\s*changed hash formula|hash formula"):
-        job3.stage_input(tokens)
+        job3.run(tokens)
 
 
 def test_iceberg_commit_contract_on_session_catalog(spark, tokens, tmp_path,
@@ -234,9 +252,9 @@ def test_iceberg_commit_contract_on_session_catalog(spark, tokens, tmp_path,
     (_replace_partition -> v1 dynamic partition overwrite on the session
     catalog, _snapshot_id -> deterministic counter), so _commit_iceberg's
     real body runs under test: existence + stale-partition shape check,
-    create-vs-replace decision, snapshot-id lineage into manifests,
-    kill-and-resume skipping committed groups, result() serving from the
-    table."""
+    create-vs-replace decision, one commit per run whose snapshot id
+    every manifest of the run records, kill-and-resume skipping
+    committed groups, result() serving from the table."""
     from matrixprofiler_spark.streaming import checkpoint as cp
 
     table = "spark_catalog.default.rollup_contract_t"
@@ -266,16 +284,21 @@ def test_iceberg_commit_contract_on_session_catalog(spark, tokens, tmp_path,
     job = SessionCatalogJob(spark, base, n_groups=4, iceberg_table=table)
     with pytest.raises(RuntimeError, match="injected failure"):
         job.run(tokens, fail_after=2)
-    assert len(job.completed_groups()) == 2
+    first = job.completed_groups()
+    assert len(first) == 2
 
-    # resume completes only the remaining groups; manifests carry the
-    # snapshot lineage of each commit
+    # resume completes only the remaining groups; each run is one table
+    # commit, and every manifest of a run records that commit's snapshot
     job2 = SessionCatalogJob(spark, base, n_groups=4, iceberg_table=table)
     done = job2.run(tokens)
     assert len(done) == 2 and len(job2.completed_groups()) == 4
-    snap_ids = [read_manifest(base, "rollup_1m", k)["iceberg_snapshot_id"]
-                for k in range(4)]
-    assert sorted(snap_ids) == snap_ids and len(set(snap_ids)) == 4
+    assert sorted(first + done) == [0, 1, 2, 3]
+    snap_ids = {k: read_manifest(base, "rollup_1m", k)["iceberg_snapshot_id"]
+                for k in range(4)}
+    s1, s2 = snap_ids[first[0]], snap_ids[done[0]]
+    assert s1 < s2
+    assert {k for k, s in snap_ids.items() if s == s1} == set(first)
+    assert {k for k, s in snap_ids.items() if s == s2} == set(done)
 
     # the committed table serves the same rows as the parquet backend
     ref_job = cp.RollupJob(spark, tmp_path / "ref", n_groups=4)
