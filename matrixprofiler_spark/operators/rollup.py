@@ -424,6 +424,25 @@ def tier_blobs(rollup: DataFrame) -> DataFrame:
     )
 
 
+def check_tiers(sizes: list[int], horizons: list[int]) -> None:
+    """The retention policy domain, one check for the serving views and
+    the expiry and compression jobs: >= 2 nested tier sizes finest-first,
+    one horizon per tier but the last, nonnegative (a negative horizon
+    would place the cutoff past the watermark, silently starving the fine
+    tier) and nondecreasing finest-first."""
+    if len(sizes) < 2 or len(horizons) != len(sizes) - 1:
+        raise ValueError(
+            "need >=2 tier sizes and exactly len(sizes)-1 horizons")
+    for finer, coarser in zip(sizes, sizes[1:]):
+        if coarser % finer:
+            raise ValueError(
+                f"tier sizes must nest: {coarser} % {finer} != 0")
+    if any(h < 0 for h in horizons):
+        raise ValueError("horizons must be nonnegative")
+    if any(b < a for a, b in zip(horizons, horizons[1:])):
+        raise ValueError("horizons must be nondecreasing finest-first")
+
+
 def retention_policy(fine: DataFrame, coarse: DataFrame, fine_size: int,
                      coarse_size: int, horizon: int,
                      watermark: DataFrame | None = None) -> DataFrame:
@@ -487,18 +506,8 @@ def retention_policy_multi(tiers: list, horizons: list[int],
     The contract is enforced: each tier left-joins the watermark and a
     missing wm raises at execution time (fail-fast) instead of the old
     inner join silently dropping the doc."""
-    if len(tiers) < 2 or len(horizons) != len(tiers) - 1:
-        raise ValueError("need >=2 tiers and exactly len(tiers)-1 horizons")
     sizes = [s for _, s in tiers]
-    for finer, coarser in zip(sizes, sizes[1:]):
-        if coarser % finer:
-            raise ValueError(f"tier sizes must nest: {coarser} % {finer} != 0")
-    if any(h < 0 for h in horizons):
-        # a negative horizon would place the cutoff past the watermark,
-        # silently starving the fine tier — reject like the other misconfigs
-        raise ValueError("horizons must be nonnegative")
-    if any(b < a for a, b in zip(horizons, horizons[1:])):
-        raise ValueError("horizons must be nondecreasing finest-first")
+    check_tiers(sizes, horizons)
 
     fine_df, fine_size = tiers[0]
     if watermark is not None:

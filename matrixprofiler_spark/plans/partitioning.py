@@ -34,15 +34,6 @@ class PartitionPlan:
     num_partitions: int          # salted-hash fan-out for per-doc kernels
     chunk_len: int | None        # offset-range chunk length (None = no chunking)
     target_partition_tokens: int # expected token mass per partition
-    shuffle_partitions: int      # spark.sql.shuffle.partitions for cascades
-    max_partition_bytes: str     # scan split size
-
-    def spark_confs(self) -> dict[str, str]:
-        return {
-            "spark.sql.shuffle.partitions": str(self.shuffle_partitions),
-            "spark.sql.files.maxPartitionBytes": self.max_partition_bytes,
-            "spark.sql.adaptive.enabled": "true",
-        }
 
 
 def plan_partitions(
@@ -69,13 +60,10 @@ def plan_partitions(
     chunk_len = None
     if max_tokens > max(4096, target // 8):
         chunk_len = max(4096, target // 8)
-    shuffle_partitions = max(cores * 2, min(num_partitions, 2000))
     return PartitionPlan(
         num_partitions=int(num_partitions),
         chunk_len=int(chunk_len) if chunk_len else None,
         target_partition_tokens=int(target),
-        shuffle_partitions=int(shuffle_partitions),
-        max_partition_bytes="32m" if total_tokens < 10**10 else "128m",
     )
 
 

@@ -21,6 +21,9 @@ running the real golden-tested kernels.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -113,6 +116,46 @@ def _face_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+def _kill_and_resume(make_job, inputs):
+    """The durable faces' resume witness, so the driver gate itself
+    certifies resumability: on a base dir with nothing committed, a first
+    run (``make_job().run(inputs)``) is killed after 2 groups by the
+    injected failure, and a new job must find exactly those 2 committed
+    before it runs to completion; a base dir with committed groups is
+    only resumed (a no-op when complete; the input binding still rejects
+    a different input). Returns the job that completed the run."""
+    job = make_job()
+    if not job.completed_groups():
+        try:
+            job.run(inputs, fail_after=2)
+            raise AssertionError("injected failure did not fire")
+        except RuntimeError as e:
+            if "injected failure" not in str(e):
+                raise  # a REAL failure must surface, not masquerade
+        job = make_job()
+        if len(job.completed_groups()) != 2:
+            raise AssertionError("expected exactly 2 committed groups")
+    job.run(inputs)
+    return job
+
+
+def _in_base_dir(spark, prefix, face, sink_dir=None):
+    """``face(base, durable)`` run in a base dir. With ``sink_dir`` (the
+    100-TB path: a durable table location) ``durable`` is true and the
+    result is returned lazily, no collect, dirs retained. Without, the
+    base is a temp dir named ``prefix...``: the bounded result is
+    materialized — the rows the driver would collect anyway — before the
+    dir is removed."""
+    if sink_dir is not None:
+        return face(sink_dir, True)
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        out = face(base, False)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 # ---------------------------------------------------------------- queries
 
 def q_rollup_1m(spark, sf_dir):
@@ -196,56 +239,36 @@ WHERE (c.bucket + 1) * {BUCKET_COARSE} <= cutoff
 """
 
 
-def q_retention_expiry(spark, sf_dir, sink_dir=None):
+def q_retention_expiry(spark, sf_dir):
     """PHYSICAL retention expiry (TimescaleDB drop_chunks analog,
     streaming/expiry.py): a snapshot-committed compaction job REWRITES the
     stored fine tier, dropping every bucket at or below the per-doc
     cutoff (same aligned-cutoff math as the retention_policy serving
     view). The face runs the job through an injected mid-run kill and a
-    resume, so the driver's value hash certifies the committed store that
-    a RESUMED run serves — and ``n_dropped`` embeds the expired-row
-    census (capfire pattern, recomputed independently by the oracle), so
-    the hash also proves rows were physically dropped, not just planned
-    to be."""
-    import shutil
-    import tempfile
-
+    resume (:func:`_kill_and_resume`), so the driver's value hash
+    certifies the committed store that a RESUMED run serves — and
+    ``n_dropped`` embeds the expired-row census (capfire pattern,
+    recomputed independently by the oracle), so the hash also proves rows
+    were physically dropped, not just planned to be."""
     from .streaming.expiry import RetentionExpiryJob
 
-    base = sink_dir or tempfile.mkdtemp(prefix="retention_expiry_")
-    try:
+    def face(base, _durable):
         # persist: the job reads its input live — the watermark pass,
         # the compaction pass and the resume run's re-fingerprint all
         # read the rollup; without the cache the raw-token Arrow kernel
         # would run once per pass
         _face_caches_clear()
         fine = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
-        job = RetentionExpiryJob(
-            spark, base, BUCKET, BUCKET_COARSE, RET_HORIZON, n_groups=4)
-        if not job.completed_groups():
-            try:
-                job.run(fine, fail_after=2)
-                raise AssertionError("injected failure did not fire")
-            except RuntimeError as e:
-                if "injected failure" not in str(e):
-                    raise  # a REAL failure must surface, not masquerade
-            job = RetentionExpiryJob(
-                spark, base, BUCKET, BUCKET_COARSE, RET_HORIZON, n_groups=4)
-            if len(job.completed_groups()) != 2:
-                raise AssertionError("expected exactly 2 committed groups")
-        job.run(fine)
+        job = _kill_and_resume(lambda: RetentionExpiryJob(
+            spark, base, BUCKET, BUCKET_COARSE, RET_HORIZON, n_groups=4),
+            fine)
         n_dropped = job.metrics()["rows_dropped"]
-        out = job.result().select(
+        return job.result().select(
             "doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v",
             F.lit(int(n_dropped)).cast("long").alias("n_dropped"),
         )
-        if sink_dir is not None:
-            return out
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        if sink_dir is None:
-            shutil.rmtree(base, ignore_errors=True)
+
+    return _in_base_dir(spark, "retention_expiry_", face)
 
 
 SQL_RETENTION_EXPIRY = f"""
@@ -277,7 +300,7 @@ FROM kept
 """
 
 
-def q_retention_expiry_tiers(spark, sf_dir, sink_dir=None):
+def q_retention_expiry_tiers(spark, sf_dir):
     """N-tier physical expiry (streaming/expiry.py
     RetentionExpiryJobMulti): the full drop_chunks-per-hypertable analog
     — EVERY non-coarsest tier of the 16/32/64 cascade is compacted by
@@ -287,34 +310,19 @@ def q_retention_expiry_tiers(spark, sf_dir, sink_dir=None):
     per-tier expired-row censuses (capfire pattern, recomputed
     independently by the oracle), so the driver hash certifies that the
     resumed store physically dropped rows from each tier."""
-    import shutil
-    import tempfile
-
     from .streaming.expiry import RetentionExpiryJobMulti
 
     sizes = [BUCKET, 2 * BUCKET, 4 * BUCKET]
     horizons = [BUCKET, 2 * BUCKET]
-    base = sink_dir or tempfile.mkdtemp(prefix="retention_expiry_tiers_")
-    try:
+
+    def face(base, _durable):
         _face_caches_clear()
         m1 = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
         m2 = cascade_tier(m1, BUCKET, 2 * BUCKET, "2m")
-        job = RetentionExpiryJobMulti(
-            spark, base, sizes, horizons, n_groups=4)
-        if not job.completed_groups():
-            try:
-                job.run([m1, m2], fail_after=2)
-                raise AssertionError("injected failure did not fire")
-            except RuntimeError as e:
-                if "injected failure" not in str(e):
-                    raise  # a REAL failure must surface, not masquerade
-            job = RetentionExpiryJobMulti(
-                spark, base, sizes, horizons, n_groups=4)
-            if len(job.completed_groups()) != 2:
-                raise AssertionError("expected exactly 2 committed groups")
-        job.run([m1, m2])
+        job = _kill_and_resume(lambda: RetentionExpiryJobMulti(
+            spark, base, sizes, horizons, n_groups=4), [m1, m2])
         census = job.metrics()["tiers"]
-        out = job.result().select(
+        return job.result().select(
             "doc_id", F.col("tier_idx").cast("int").alias("tier_idx"),
             "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v",
             F.lit(int(census[0]["rows_dropped"]))
@@ -322,13 +330,8 @@ def q_retention_expiry_tiers(spark, sf_dir, sink_dir=None):
             F.lit(int(census[1]["rows_dropped"]))
             .cast("long").alias("nd_mid"),
         )
-        if sink_dir is not None:
-            return out
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        if sink_dir is None:
-            shutil.rmtree(base, ignore_errors=True)
+
+    return _in_base_dir(spark, "retention_expiry_tiers_", face)
 
 
 SQL_RETENTION_EXPIRY_TIERS = f"""
@@ -383,7 +386,7 @@ COMPRESS_CHUNK = 64    # token positions per compressed chunk (4 fine buckets;
 COMPRESS_HORIZON = 16  # recent history kept row-form
 
 
-def q_retention_compress(spark, sf_dir, sink_dir=None):
+def q_retention_compress(spark, sf_dir):
     """Compression policy (TimescaleDB compress_chunks analog,
     streaming/compress.py): a snapshot-committed job REWRITES fine-tier
     rows older than a chunk-aligned horizon into per-(doc, chunk)
@@ -394,47 +397,25 @@ def q_retention_compress(spark, sf_dir, sink_dir=None):
     commit — and embeds the compression census (rows compressed,
     segments written; capfire pattern, both recomputed independently by
     the oracle), so the hash also proves the cold path actually fired."""
-    import shutil
-    import tempfile
-
     from .streaming.compress import CompressionPolicyJob
 
-    base = sink_dir or tempfile.mkdtemp(prefix="retention_compress_")
-    try:
+    def face(base, _durable):
         _face_caches_clear()
         fine = _face_cache(tier_rollup(_tok(spark, sf_dir), {"1m": BUCKET}))
-        job = CompressionPolicyJob(
+        job = _kill_and_resume(lambda: CompressionPolicyJob(
             spark, base, BUCKET, COMPRESS_CHUNK, COMPRESS_HORIZON,
-            n_groups=4)
-        if not job.completed_groups():
-            try:
-                job.run(fine, fail_after=2)
-                raise AssertionError("injected failure did not fire")
-            except RuntimeError as e:
-                if "injected failure" not in str(e):
-                    raise  # a REAL failure must surface, not masquerade
-            job = CompressionPolicyJob(
-                spark, base, BUCKET, COMPRESS_CHUNK, COMPRESS_HORIZON,
-                n_groups=4)
-            if len(job.completed_groups()) != 2:
-                raise AssertionError("expected exactly 2 committed groups")
-        job.run(fine)
+            n_groups=4), fine)
         m = job.metrics()
         if not m["rows_compressed"] or not m["n_segments"]:
             raise AssertionError(
                 "compression face must exercise the cold path")
-        out = job.read_fine().select(
+        return job.read_fine().select(
             "doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v",
             F.lit(int(m["rows_compressed"])).cast("long").alias("n_comp"),
             F.lit(int(m["n_segments"])).cast("long").alias("n_seg"),
         )
-        if sink_dir is not None:
-            return out
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        if sink_dir is None:
-            shutil.rmtree(base, ignore_errors=True)
+
+    return _in_base_dir(spark, "retention_compress_", face)
 
 
 SQL_RETENTION_COMPRESS = f"""
@@ -3093,23 +3074,14 @@ def q_stream_rollup(spark, sf_dir, sink_dir: str | None = None):
     sink, and the COMPLETED sink is returned. Same kernel as the batch
     path (tier_rollup is a streaming-legal transformation), so rows
     equal the batch rollup bit-for-bit — the oracle is the batch SQL.
-
-    Default (driver) mode uses a self-cleaning temp dir, so the bounded
-    result set is materialized before the dir is removed — the same rows
-    the driver would collect anyway. Pass ``sink_dir`` (the 100-TB path:
-    a durable table location) and the sink DataFrame is returned lazily,
-    no collect, dirs retained."""
-    import shutil
-    import tempfile
-
+    ``sink_dir``: see :func:`_in_base_dir`."""
     from .streaming.stream_rollup import stream_tokens_rollup
 
-    base = sink_dir or tempfile.mkdtemp(prefix="stream_rollup_")
-    try:
+    def face(base, durable):
         inp = f"{base}/input"
         toks = _tok(spark, sf_dir)
         stage = True
-        if sink_dir is not None:
+        if durable:
             # durable mode must be re-invocation-safe: rewriting the
             # input mints new part-file names, which the file-source
             # checkpoint would ingest as NEW data and the append sink
@@ -3139,81 +3111,47 @@ def q_stream_rollup(spark, sf_dir, sink_dir: str | None = None):
                 )
         if stage:
             toks.write.mode("overwrite").parquet(inp)
-            if sink_dir is not None:
+            if durable:
                 write_json(fp_path, fp)
         q = stream_tokens_rollup(
             spark, inp, f"{base}/sink", f"{base}/ckpt", bucket_size=BUCKET
         )
         if not q.awaitTermination(600):
             q.stop()
-            raise TimeoutError("stream_rollup: availableNow query did not finish")
-        out = (
+            raise TimeoutError(
+                "stream_rollup: availableNow query did not finish")
+        return (
             spark.read.parquet(f"{base}/sink")
             .select("doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v")
         )
-        if sink_dir is not None:
-            return out
-        # the temp sink dir is deleted on return; materialize locally first
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        if sink_dir is None:
-            shutil.rmtree(base, ignore_errors=True)
+
+    return _in_base_dir(spark, "stream_rollup_", face, sink_dir)
 
 
 SQL_STREAM_ROLLUP = SQL_ROLLUP_1M
 
 
 def q_checkpoint_rollup_resume(spark, sf_dir, sink_dir: str | None = None):
-    """KILL-AND-RESUME face of the snapshot-checkpointed rollup job: the
-    first run is killed after 2 of 4 partition groups (injected failure);
-    a second job against the same base dir resumes from the per-group
-    manifests and completes the rest. The committed output equals the
-    batch rollup bit-for-bit — the oracle is the batch SQL, so the driver
-    gate itself witnesses resumability (north_rule: resumable from
-    checkpoint with per-partition lineage).
-
-    Default (driver) mode materializes the bounded result set so the temp
-    base dir can be removed. Pass ``sink_dir`` (the 100-TB path: a
-    durable checkpoint base) for a lazy, no-collect return with the base
-    dir — input fingerprint, manifests and committed stage — retained."""
-    import shutil
-    import tempfile
-
+    """KILL-AND-RESUME face of the snapshot-checkpointed rollup job
+    (:func:`_kill_and_resume`): the first run is killed after 2 of 4
+    partition groups; a second job against the same base dir resumes
+    from the per-group manifests and completes the rest. The committed
+    output equals the batch rollup bit-for-bit — the oracle is the batch
+    SQL, so the driver gate itself witnesses resumability (north_rule:
+    resumable from checkpoint with per-partition lineage). ``sink_dir``
+    (see :func:`_in_base_dir`) retains the base dir — input fingerprint,
+    manifests and committed stage."""
     from .streaming.checkpoint import RollupJob
 
-    base = sink_dir or tempfile.mkdtemp(prefix="ckpt_rollup_")
-    try:
-        toks = _tok(spark, sf_dir)
-        job = RollupJob(spark, base, n_groups=4, bucket_size=BUCKET)
-        already = len(job.completed_groups())
-        if already == 0:
-            try:
-                job.run(toks, fail_after=2)
-                raise AssertionError("injected failure did not fire")
-            except RuntimeError as e:
-                if "injected failure" not in str(e):
-                    raise  # a REAL failure must surface, not masquerade
-            resumed = RollupJob(spark, base, n_groups=4, bucket_size=BUCKET)
-            if len(resumed.completed_groups()) != 2:
-                raise AssertionError("expected exactly 2 committed groups")
-            resumed.run(toks)
-        else:
-            # durable re-invocation: the kill-and-resume already happened
-            # against this base dir — just resume (idempotent no-op when
-            # complete; the input fingerprint still rejects a different
-            # input)
-            job.run(toks)
-        out = job.result().select(
+    def face(base, _durable):
+        job = _kill_and_resume(
+            lambda: RollupJob(spark, base, n_groups=4, bucket_size=BUCKET),
+            _tok(spark, sf_dir))
+        return job.result().select(
             "doc_id", "bucket", "cnt", "sum_v", "sumsq", "min_v", "max_v"
         )
-        if sink_dir is not None:
-            return out
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        if sink_dir is None:
-            shutil.rmtree(base, ignore_errors=True)
+
+    return _in_base_dir(spark, "ckpt_rollup_", face, sink_dir)
 
 
 SQL_CHECKPOINT_ROLLUP = SQL_ROLLUP_1M

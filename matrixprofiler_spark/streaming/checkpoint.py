@@ -94,7 +94,16 @@ class RollupJob:
 
         Censuses are observed on the write: per-group rows, and distinct
         ``doc_id``s as the first row of each (grp, doc_id) window — a doc
-        lives wholly in one group, so the layout already clusters it."""
+        lives wholly in one group, so the layout already clusters it.
+
+        A base dir holding the older per-group ``part=<k>/`` layout is
+        refused: ``result()`` could not read it next to ``grp=<k>/``."""
+        root = self.base / f"stage={STAGE}"
+        if next(root.glob("part=*"), None) is not None:
+            raise ValueError(
+                f"{root} holds the part=<k>/ layout of an older build, "
+                "which this build's grp=<k>/ store cannot be read beside; "
+                "use a fresh base dir")
         live = self.store.bind(tokens)
         batch, inject = self.store.batch(fail_after)
         if batch:
@@ -112,12 +121,8 @@ class RollupJob:
             if self.iceberg_table:
                 counts, lineage = self._commit_iceberg(rows, batch, census)
             else:
-                root = self.base / f"stage={STAGE}"
                 counts = self.store.write(rows, root, batch, census,
                                           drop=("first",))
-                self.store.backfill(
-                    root, [k for k in batch if counts["rows"][k] == 0],
-                    rollup.schema)
             self.store.commit_batch(batch, t0, {
                 k: {"n_docs": counts["n_docs"][k], "rows": counts["rows"][k],
                     "points": counts["rows"][k] * 5, **lineage}

@@ -13,7 +13,10 @@ production every group commit is an Iceberg snapshot commit (atomic,
 versioned, time-travelable) and resume asks "which groups are already in
 the committed snapshot?". The :class:`GroupCommit` store keeps that
 contract with parquet and one JSON manifest per committed group; it is
-the only code that writes fingerprints, manifests and stage markers.
+the only code that writes fingerprints, manifests and stage markers, and
+:meth:`~GroupCommit.write` owns the empty-group rule: every group a
+write leaves without rows gets a schema-bearing empty file, so a store
+stays readable however its rows fall.
 
 Layout under ``base_dir``:
 
@@ -21,6 +24,8 @@ Layout under ``base_dir``:
                                    and the input's metadata pin
     <store>/grp=<k>/...parquet     the job's outputs, one partition per
                                    group, one file per group per write
+                                   (an empty one where the write left
+                                   the group without rows)
     manifests/<stage>_<k>.json     lineage of group k: censuses, bytes
                                    written per store, policy, input
                                    fingerprint, kernel version, wall time
@@ -137,7 +142,7 @@ def read_manifest(base_dir: str | Path, stage: str, part: int) -> dict | None:
 def stored_schema(root: str | Path) -> T.StructType:
     """The row schema a group-partitioned store under ``root`` was
     written with, from one file's footer (every partition holds a file,
-    see :meth:`GroupCommit.backfill`): no schema-inference job."""
+    see :meth:`GroupCommit.write`): no schema-inference job."""
     f = next(Path(root).glob("grp=*/*.parquet"), None)
     if f is None:
         raise FileNotFoundError(f"no committed store under {root}")
@@ -354,23 +359,29 @@ class GroupCommit:
         hive-partitioned by group, dynamic partition overwrite (only the
         batch's partitions are replaced). The caller lays out once and
         derives ``df`` from :meth:`layout`'s rows with no shuffle between,
-        so each group is in one task and gets one file. Returns the
+        so each group is in one task and gets one file. Every batch group
+        the write leaves without rows gets an empty file of the written
+        rows' own schema (:meth:`_backfill`), so each group of the store
+        is readable and the store holds one footer schema. Returns the
         census :meth:`observe_census` observes on the write."""
-        rows, counts = self.observe_census(df, batch, census, drop)
+        rows, counts = self.observe_census(
+            df, batch, {**census, "_written": F.lit(1)}, drop)
         (rows.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("grp").parquet(str(root)))
         self._roots[Path(root).name] = Path(root)
-        return counts()
+        out = counts()
+        written = out.pop("_written")
+        empty = [k for k in batch if not written[k]]
+        if empty:
+            self._backfill(root, empty, rows.drop("grp").schema)
+        return out
 
-    def backfill(self, root: str | Path, groups: list[int],
-                 schema: T.StructType) -> None:
+    def _backfill(self, root: str | Path, groups: list[int],
+                  schema: T.StructType) -> None:
         """Schema-bearing empty partitions for the groups a dynamic write
-        skipped (no rows), so an emptied store stays readable: one Spark
-        write of the empty file, copied into every such group's dir."""
-        self._roots[Path(root).name] = Path(root)
-        if not groups:
-            return
+        skipped (no rows): one Spark write of the empty file, copied into
+        every such group's dir."""
         tmp = self.base / "_backfill"
         self.spark.createDataFrame([], schema).write.mode(
             "overwrite").parquet(str(tmp))

@@ -64,8 +64,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..codecs import dod_decode_many, dod_encode_many
+from ..operators.rollup import check_tiers
 from .commit import GroupCommit
-from .expiry import check_tiers
 
 STAGE = "compress"
 
@@ -235,8 +235,9 @@ class CompressionPolicyJob:
         ``blob_bytes``), and ``rows_in = rows_head + rows_compressed``
         holds by construction (the two predicates partition the store).
         A group with no head or no segment rows gets a schema-bearing
-        empty partition, so a store where nothing (or everything) aged
-        past the horizon stays readable on both roots."""
+        empty partition (:meth:`GroupCommit.write`), so a store where
+        nothing (or everything) aged past the horizon stays readable on
+        both roots."""
         live = self.store.bind(self._input(fine))
         batch, inject = self.store.batch(fail_after)
         if batch:
@@ -284,12 +285,6 @@ class CompressionPolicyJob:
                     "bytes": F.col("blob_bytes")})
             finally:
                 joined.unpersist()
-            self.store.backfill(
-                head_root, [k for k in batch if hc["rows"][k] == 0],
-                _FINE_OUT_SCHEMA)
-            self.store.backfill(
-                seg_root, [k for k in batch if sc["nseg"][k] == 0],
-                SEGMENT_SCHEMA)
             fields = {}
             for k in batch:
                 rows_compressed = sc["rows"][k]

@@ -58,26 +58,14 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.rollup import retention_policy, retention_policy_multi
+from ..operators.rollup import (
+    check_tiers,
+    retention_policy,
+    retention_policy_multi,
+)
 from .commit import GroupCommit, stored_schema
 
 STAGE = "expiry"
-
-
-def check_tiers(sizes: list[int], horizons: list[int]) -> None:
-    """The retention policy domain the serving views enforce: nested tier
-    sizes, nonnegative horizons, nondecreasing finest-first."""
-    if len(sizes) < 2 or len(horizons) != len(sizes) - 1:
-        raise ValueError(
-            "need >=2 tier sizes and exactly len(sizes)-1 horizons")
-    for finer, coarser in zip(sizes, sizes[1:]):
-        if coarser % finer:
-            raise ValueError(
-                f"tier sizes must nest: {coarser} % {finer} != 0")
-    if any(h < 0 for h in horizons):
-        raise ValueError("horizon must be nonnegative")
-    if any(b < a for a, b in zip(horizons, horizons[1:])):
-        raise ValueError("horizons must be nondecreasing finest-first")
 
 
 class RetentionExpiryJobMulti:
@@ -200,8 +188,6 @@ class RetentionExpiryJobMulti:
                 keep = F.when(tier == i, keeps[i]).otherwise(keep)
             wm = rows.where("first").select("grp", "doc_id", "source", "wm",
                                             *n_cols)
-            wm_schema = wm.drop("grp", *n_cols).schema
-            after = {c: dict.fromkeys(batch, 0) for c in n_cols}
             try:
                 before = self.store.write(
                     wm, wm_root, batch,
@@ -209,20 +195,12 @@ class RetentionExpiryJobMulti:
                      "docs": F.when(F.col("wm") > self._cut(0), 1)
                      .otherwise(0)},
                     drop=n_cols)
-                if any(before["n0"].values()):
-                    after = self.store.write(
-                        rows.where(keep).select(*live.columns), comp_root,
-                        batch, {f"n{i}": F.when(tier == i, 1).otherwise(0)
-                                for i in range(n_tiers)})
+                after = self.store.write(
+                    rows.where(keep).select(*live.columns), comp_root,
+                    batch, {f"n{i}": F.when(tier == i, 1).otherwise(0)
+                            for i in range(n_tiers)})
             finally:
                 rows.unpersist()
-            self.store.backfill(
-                comp_root,
-                [k for k in batch if not any(after[c][k] for c in n_cols)],
-                live.drop("grp").schema)
-            self.store.backfill(
-                wm_root, [k for k in batch if before["n0"][k] == 0],
-                wm_schema)
             fields = {}
             for k in batch:
                 census = [

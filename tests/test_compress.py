@@ -5,6 +5,7 @@ input/policy binding from the group-commit contract."""
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -520,12 +521,26 @@ def test_rollup_job_budget(spark, tmp_path_factory):
     assert run("rollup_budget_rerun") == ([], 0)
 
 
+def _footer_schemas(root):
+    """The distinct Spark row schemas in the file footers of the group
+    store under ``root``."""
+    return {pq.read_schema(f).metadata[
+                b"org.apache.spark.sql.parquet.row.metadata"]
+            for f in root.glob("grp=*/*.parquet")}
+
+
 def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):
     """An empty parquet input and one whose docs fill only some groups
     both compress: every group of both stores holds a readable file, the
     censuses read zero where no rows are, the empty input's fingerprint
-    is n = 0, h = 0, and a re-run is a no-op."""
+    is n = 0, h = 0, and a re-run is a no-op. Expiry commits both inputs
+    too, its census adding up. Where a fresh run leaves groups empty,
+    every store of the three lifecycle jobs holds one footer schema: the
+    empty groups' files carry the written rows' own."""
     import json
+
+    from matrixprofiler_spark.streaming.checkpoint import RollupJob
+    from matrixprofiler_spark.streaming.expiry import RetentionExpiryJob
 
     src = tmp_path_factory.mktemp("compress_empty_src")
     fine.limit(0).write.parquet(str(src / "empty"))
@@ -558,3 +573,18 @@ def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):
             assert bound["n"] == inp.count() and m["rows_compressed"] > 0
         assert CompressionPolicyJob(spark, base, FINE, CHUNK, HORIZON,
                                     n_groups=8).run(inp) == []
+        expiry = RetentionExpiryJob(spark, base / "expiry", FINE, 64,
+                                    HORIZON, n_groups=8)
+        assert len(expiry.run(inp)) == 8
+        em = expiry.metrics()
+        assert em["rows_before"] == inp.count()
+        assert expiry.result().count() == em["rows_after"] == (
+            em["rows_before"] - em["rows_dropped"])
+        stores = ["head", "segments", "expiry/watermarks", "expiry/compacted"]
+        if name == "part":
+            RollupJob(spark, base / "rollup", n_groups=8,
+                      bucket_size=FINE).run(synth_tokens_df(spark, 2, seed=7))
+            stores.append("rollup/stage=rollup_1m")
+        for store in stores:
+            assert len(list((base / store).glob("grp=*"))) == 8, store
+            assert len(_footer_schemas(base / store)) == 1, store

@@ -44,9 +44,15 @@ def test_smoke_queries(spark, name):
     assert df.count() > 0
 
 
-@pytest.mark.parametrize("name", ["image_features", "audio_features"])
+@pytest.mark.parametrize("name", [
+    "image_features", "audio_features", "retention_expiry",
+    "retention_expiry_tiers", "retention_compress",
+    "checkpoint_rollup_resume", "stream_rollup"])
 def test_media_faces_match_oracle(spark, name):
-    """The two media faces hash-match their DuckDB oracles at sf0.001."""
+    """The two media faces and the five durable faces (each runs a
+    committed store or a checkpointed stream, four of them through a kill
+    and a resume) hash-match their DuckDB oracles at sf0.001; every one
+    of these oracles reads only the ``documents`` view."""
     import duckdb
 
     import __spark_entry__ as e

@@ -15,7 +15,6 @@ def test_small_corpus_scheduling_bound():
     p = plan_partitions(n_docs=20_000, total_tokens=66_000_000,
                         max_tokens=16_384, cores=32)
     assert p.num_partitions == 32
-    assert p.spark_confs()["spark.sql.adaptive.enabled"] == "true"
 
 
 def test_memory_bound_wins_over_cores():

@@ -103,6 +103,16 @@ def test_torn_manifest_is_retried(spark, tokens, tmp_path):
     assert job2.run(tokens) == [2]
 
 
+def test_old_part_layout_is_refused(spark, tokens, tmp_path):
+    """A base dir committed in the older ``part=<k>/`` layout is refused
+    by name before any work, instead of resuming into a store whose
+    ``result()`` cannot be read."""
+    (tmp_path / "stage=rollup_1m" / "part=0").mkdir(parents=True)
+    with pytest.raises(ValueError, match="part=<k>/ layout"):
+        RollupJob(spark, tmp_path, n_groups=4).run(tokens)
+    assert not (tmp_path / "input_fingerprint.json").exists()
+
+
 def test_changed_input_same_base_dir_is_rejected(spark, tokens, tmp_path):
     """A base dir binds to ONE input: rerunning with a different tokens
     table against committed work must fail loudly, never silently serve
