@@ -21,8 +21,12 @@ Scale design
 * every tier computed per doc inside one ``mapInPandas`` kernel (one
   cumsum-diff / ``reduceat`` pass per tier over the Arrow batch; no
   per-row Python) — docs are independent rows, so there is NO shuffle
-  before or after the kernel; only an optional salted ``repartition`` to
-  balance token-length skew.
+  before or after the kernel. ``num_partitions`` merges the input's own
+  splits (``coalesce``) into one wave of tasks, so the token arrays go
+  from the scan into the kernel without an exchange; the scan packs its
+  splits by bytes, so the merged tasks carry even token mass without a
+  hash shuffle. ``window_stats`` is vectorized the same way: one pass
+  over each Arrow batch.
 * raw tier (per-window statistic series) is emitted as Gorilla-compressed
   binary blobs per doc — one row per doc, not one row per offset.
 """
@@ -38,8 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codecs import dod_encode, gorilla_encode, gorilla_encode_many
-from ..kernels.window import movmax, movmean, movmin, movstd
+from ..codecs import dod_encode, dod_encode_many, gorilla_encode, gorilla_encode_many
+from ..kernels.window import movmean, movstd
 
 TIER_SIZES = MappingProxyType({"1m": 60, "1h": 3600, "1d": 86400})
 
@@ -58,24 +62,19 @@ ROLLUP_SCHEMA = T.StructType(
 )
 
 
-def salted(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Hash repartition on (source, doc_id) — defeats token-length skew by
-    spreading docs uniformly. For a Python stage, take the count from
-    ``plans.plan_partitions``: one wave (cores) unless memory needs more.
-    Each Python task pays a fixed cost before its first row, 0.06-0.08 s
-    once the package's import-time pin stops PySpark's per-task
-    ``importlib.invalidate_caches()`` from re-reading Spark's own archives
-    (``matrixprofiler_spark/__init__.py``, CPython 3.11), so extra waves
-    only multiply that cost; offset chunking, not more partitions, is what
-    evens out the zipf length tail.
+def _batch_tokens(b: pd.DataFrame):
+    """The token arrays of Arrow batch ``b`` as one int64 series, with
+    each row's length and first position in it."""
+    toks = list(b["tokens"])
+    lens = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    x = np.concatenate(toks).astype(np.int64) if toks else np.zeros(0, np.int64)
+    return x, lens, np.cumsum(lens) - lens
 
-    Hashing the natural high-cardinality key directly keeps every output
-    partition populated. The previous pmod(xxhash64, n) synthetic salt had
-    exactly n distinct values hashed into n partitions, which leaves ~1/e
-    of the partitions EMPTY and overloads others 2-3x (measured at bench
-    scale: 321/512 partitions non-empty, per-partition cost max/mean 5.1
-    vs 2.3 with the direct hash; max kernel task 7.9s -> 3.0s)."""
-    return df.repartition(num_partitions, F.col("source"), F.col("doc_id"))
+
+def _ranks(counts: np.ndarray) -> np.ndarray:
+    """Each item's rank within its row (0, 1, ...), over the items of
+    every row in order, for per-row item ``counts``."""
+    return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
 
 
 def bucket_stats(x: np.ndarray, starts: np.ndarray, ends: np.ndarray):
@@ -140,6 +139,13 @@ def tier_rollup(tokens_df: DataFrame,
     shuffle, so the sizes need not nest. A one-entry mapping is a single
     tier.
 
+    ``num_partitions`` merges the input's splits (``coalesce``): the
+    fan-out is min(input splits, ``num_partitions``), so an input with
+    fewer splits than task slots leaves slots idle (the batch callers
+    read multi-file parquet scans, which plan at least as many splits as
+    slots). The count is not checked here: ``getNumPartitions()`` of a
+    shuffled input runs a Spark job.
+
     ``persist=True`` caches the output, whose consumers (per-tier
     aggregates, gap fill) would otherwise each re-run the kernel; in
     production each tier is a table written once (streaming/checkpoint.py).
@@ -150,21 +156,16 @@ def tier_rollup(tokens_df: DataFrame,
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            toks_list = [np.asarray(t, dtype=np.int64) for t in b["tokens"]]
-            lens = np.fromiter((t.size for t in toks_list), dtype=np.int64,
-                               count=len(toks_list))
+            x, lens, doc_starts = _batch_tokens(b)
             if not lens.sum():
                 continue
-            x = np.concatenate(toks_list)
-            doc_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
             doc_ends = doc_starts + lens
             for name, bs in zip(names, sizes):
                 # each doc tiles into ceil(n/bs) buckets, contiguous in the
                 # concatenated array, so a tier is one bucket_stats call
                 # over the whole batch
                 nb = (lens + bs - 1) // bs
-                first_bucket = np.concatenate(([0], np.cumsum(nb)[:-1]))
-                k = np.arange(nb.sum()) - np.repeat(first_bucket, nb)
+                k = _ranks(nb)
                 starts = np.repeat(doc_starts, nb) + k * bs
                 ends = np.minimum(starts + bs, np.repeat(doc_ends, nb))
                 cnt, sum_v, sumsq, min_v, max_v = bucket_stats(x, starts, ends)
@@ -183,7 +184,7 @@ def tier_rollup(tokens_df: DataFrame,
                 )
 
     if num_partitions:
-        tokens_df = salted(tokens_df, num_partitions)
+        tokens_df = tokens_df.coalesce(num_partitions)
     out = tokens_df.select("doc_id", "source", "tokens").mapInPandas(
         kernel, schema=ROLLUP_SCHEMA
     )
@@ -211,52 +212,88 @@ WINDOW_STATS_SCHEMA = T.StructType(
 )
 
 
+# below this bound on n * max|x| and on n * max(x^2), kernels/window.py
+# sums a series exactly in int64 (``_is_integral``)
+_EXACT_INT = 9007199254740992.0  # 2^53
+
+
+def _window_stats_batch(b: pd.DataFrame, w: int,
+                        keep_tokens: bool) -> pd.DataFrame:
+    """One Arrow batch of :func:`window_stats`, in one pass over the
+    batch's concatenated tokens: one int64 cumsum each for the window
+    sums and sums of squares, one rolling min and max, one Gorilla and
+    one DoD batch encode. Int64 wraparound of the batch-wide cumsums is
+    harmless, since every window sum is a difference of two of them.
+
+    A row matches the per-series kernels byte for byte when they take
+    their integer fast path (``_is_integral`` of the row and of its
+    squares); a row that fails that test (int32 extremes, where
+    n * x^2 passes 2^53) gets its mean and std from ``movmean`` /
+    ``movstd`` instead, which run the Ogita loop on it."""
+    x, lens, starts = _batch_tokens(b)
+    nw = np.maximum(lens - (w - 1), 0)  # windows per row
+    ws = np.repeat(starts, nw) + _ranks(nw)  # each window's first token
+    c = np.concatenate(([0], np.cumsum(x)))
+    c2 = np.concatenate(([0], np.cumsum(x * x)))
+    mean = (c[ws + w] - c[ws]).astype(np.float64) / w
+    with np.errstate(invalid="ignore"):
+        std = np.sqrt((c2[ws + w] - c2[ws]).astype(np.float64) / w
+                      - mean * mean)
+    roll = pd.Series(x).rolling(w)
+    lo = roll.min().to_numpy()[ws + (w - 1)]
+    hi = roll.max().to_numpy()[ws + (w - 1)]
+
+    valid = np.flatnonzero(nw)
+    cols = dict.fromkeys(("movmean_blob", "movstd_blob", "movmin_blob",
+                          "movmax_blob", "offsets_blob"))
+    if valid.size:
+        first = np.cumsum(nw[valid]) - nw[valid]  # each row's first window
+        top = np.maximum(np.maximum.reduceat(hi, first),
+                         -np.minimum.reduceat(lo, first))
+        n = lens[valid].astype(np.float64)
+        inexact = (top * n >= _EXACT_INT) | (top * top * n >= _EXACT_INT)
+        for r, f in zip(valid[inexact], first[inexact]):
+            xf = x[starts[r]:starts[r] + lens[r]].astype(np.float64)
+            mean[f:f + nw[r]] = movmean(xf, w, "ogita")
+            std[f:f + nw[r]] = movstd(xf, w)
+        base = (b["chunk_off"].to_numpy(np.int64) if "chunk_off" in b
+                else np.zeros(len(b), np.int64))
+        series = [np.split(v, first[1:]) for v in (mean, std, lo, hi)]
+        offsets = np.split(np.repeat(base, nw) + _ranks(nw), first[1:])
+        blobs = iter(gorilla_encode_many([s for v in series for s in v])
+                     + dod_encode_many(offsets))
+        for name in cols:
+            cols[name] = col = [None] * len(b)
+            for r in valid:
+                col[r] = next(blobs)
+    return pd.DataFrame({
+        "doc_id": b["doc_id"].to_numpy(),
+        "source": b["source"].to_numpy(),
+        "w": np.full(len(b), w, dtype=np.int32),
+        "n_tok": lens.astype(np.int32),
+        "n_windows": nw.astype(np.int32),
+        **cols,
+        "tokens_back": b["tokens"].to_numpy() if keep_tokens else None,
+    })
+
+
 def window_stats(tokens_df: DataFrame, w: int, num_partitions: int | None = None,
                  keep_tokens: bool = False) -> DataFrame:
     """Raw tier: per-window movmean/movstd/movmin/movmax series per doc,
     Gorilla-encoded into binary columns; window offsets delta-of-delta
-    encoded. ``keep_tokens`` echoes the input array for the per-row
-    token-array-equality invariant check."""
+    encoded (from each row's ``chunk_off`` when the input has one).
+    Every blob is byte-equal to encoding the per-series kernel's output
+    for that row alone (:func:`_window_stats_batch`). ``keep_tokens``
+    echoes the input array for the per-row token-array-equality
+    invariant check. ``num_partitions`` merges the input's splits, as in
+    :func:`tier_rollup`: fan-out min(input splits, ``num_partitions``),
+    no shuffle."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = []
-            series = []  # (row_index, [mm, ms, mi, ma]) for batch encode
-            base_offs = b["chunk_off"] if "chunk_off" in b.columns else [0] * len(b)
-            for doc_id, toks, src, base in zip(
-                b["doc_id"], b["tokens"], b["source"], base_offs
-            ):
-                x = np.asarray(toks, dtype=np.int32)
-                n = int(x.size)
-                if n < w:
-                    rows.append([doc_id, src, w, n, 0, None, None, None, None,
-                                 None, list(map(int, x)) if keep_tokens else None])
-                    continue
-                xf = x.astype(np.float64)
-                series.append(
-                    (len(rows), [movmean(xf, w, "ogita"), movstd(xf, w),
-                                 movmin(xf, w), movmax(xf, w)])
-                )
-                offs = int(base) + np.arange(n - w + 1, dtype=np.int64)
-                rows.append(
-                    [doc_id, src, w, n, int(n - w + 1),
-                     None, None, None, None,
-                     dod_encode(offs),
-                     list(map(int, x)) if keep_tokens else None]
-                )
-            # one vectorized Gorilla assembly for all stat series of the batch
-            flat = [s for _, group in series for s in group]
-            blobs = gorilla_encode_many(flat)
-            for j, (ri, _) in enumerate(series):
-                rows[ri][5:9] = blobs[4 * j : 4 * j + 4]
-            yield pd.DataFrame(
-                (tuple(r) for r in rows),
-                columns=[f.name for f in WINDOW_STATS_SCHEMA.fields],
-            )
+            yield _window_stats_batch(b, w, keep_tokens)
 
-    df = tokens_df
-    if num_partitions:
-        df = salted(df, num_partitions)
+    df = tokens_df.coalesce(num_partitions) if num_partitions else tokens_df
     cols = ["doc_id", "source", "tokens"] + (
         ["chunk_off"] if "chunk_off" in tokens_df.columns else []
     )
@@ -265,15 +302,15 @@ def window_stats(tokens_df: DataFrame, w: int, num_partitions: int | None = None
 
 def chunk_tokens(tokens_df: DataFrame, w: int, chunk_len: int = 4096,
                  equalize: bool = False) -> DataFrame:
-    """Range-repartition on sequence offset: split long docs into chunks of
-    ``chunk_len`` offsets with w-1 overlap — the distributed analog of MASS
-    v3's chunked processing (src/mass.cpp:168-192) — so a single 16k-token
-    doc no longer pins one task (token-length skew defeat, north_rule).
+    """Offset-range split: cut long docs into chunks of ``chunk_len``
+    offsets with w-1 overlap — the distributed analog of MASS v3's chunked
+    processing (src/mass.cpp:168-192) — so no kernel row holds more than
+    ``chunk_len + w - 1`` tokens, however long its doc.
 
     Chunk c covers offsets [c*chunk_len, min(n, (c+1)*chunk_len + w - 1));
     every window start lands in exactly one chunk, so per-window outputs
-    concatenate losslessly. All slicing is JVM-side (sequence + transform +
-    slice), then a repartition spreads chunks across tasks.
+    concatenate losslessly. All slicing is JVM-side (sequence + explode +
+    slice), with no shuffle: a doc's chunks stay in its input split.
 
     Output schema: (doc_id, source, chunk_off long, tokens array<int>) where
     chunk_off is the global offset of the chunk's first element.
@@ -321,14 +358,8 @@ def window_stats_chunked(tokens_df: DataFrame, w: int, chunk_len: int = 4096,
     """window_stats over offset-range chunks: identical per-window values
     (bit-exact on integer data — every sliding sum is an exact int64
     regardless of where the series is cut), one row per (doc, chunk)."""
-    chunked = chunk_tokens(tokens_df, w, chunk_len)
-    if num_partitions:
-        # direct hash on the natural high-cardinality key (see salted():
-        # a pmod-n synthetic salt leaves ~1/e of the partitions empty)
-        chunked = chunked.repartition(
-            num_partitions, F.col("doc_id"), F.col("chunk_off")
-        )
-    return window_stats(chunked, w)
+    return window_stats(chunk_tokens(tokens_df, w, chunk_len), w,
+                        num_partitions)
 
 
 def spine_from_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:

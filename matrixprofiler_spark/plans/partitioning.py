@@ -1,7 +1,8 @@
-"""Partitioning plan: sizes the salted-hash fan-out and offset-chunking for
-a tokens corpus so that (a) every partition's token mass fits comfortably in
-executor memory, (b) the zipf length tail cannot pin a straggler, and
-(c) a per-doc Python stage runs as at most one wave of tasks.
+"""Partitioning plan: sizes the fan-out of the per-doc Python stages and
+the offset-chunking for a tokens corpus so that (a) every partition's
+token mass fits comfortably in executor memory, (b) the zipf length tail
+cannot pin a straggler, and (c) a per-doc Python stage runs as at most
+one wave of tasks.
 
 One wave: every task that crosses into Python pays a fixed cost before it
 sees a row. PySpark's worker calls ``importlib.invalidate_caches()`` at the
@@ -14,7 +15,10 @@ costs 0.06-0.08 s on a 4-core VM (``tools/py_task_cost.py`` re-measures
 both on any host).
 Offset chunking already caps the largest unit of work, so extra waves buy
 no balance; they only make each slot pay that cost once more per wave.
-The fan-out is therefore ``max(memory bound, cores)``.
+The fan-out is therefore ``max(memory bound, cores)``. The linear rollup
+kernels reach it by merging their input's splits (``coalesce``, no
+shuffle: fan-out min(input splits, plan)); the quadratic per-doc matrix
+profile by a hash repartition (``operators/mp_ops.salted``).
 
 The inputs come from cheap corpus stats (count + sum/max of n_tok — one
 aggregate over table metadata or a scan), so the plan can be computed before
@@ -31,7 +35,7 @@ from ..kernels.mp import _mpx_selftest
 
 @dataclass
 class PartitionPlan:
-    num_partitions: int          # salted-hash fan-out for per-doc kernels
+    num_partitions: int          # fan-out of the per-doc Python kernels
     chunk_len: int | None        # offset-range chunk length (None = no chunking)
     target_partition_tokens: int # expected token mass per partition
 

@@ -21,7 +21,9 @@ parquet directory with an identical schema.
 
 from __future__ import annotations
 
+import json
 import os
+from importlib import resources
 from typing import Iterator
 
 import numpy as np
@@ -54,11 +56,12 @@ _GOLDEN_OFFSET = 10000
 
 
 def _golden_series() -> np.ndarray:
-    import json
-    from pathlib import Path
-
-    p = Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "goldens.json"
-    return np.asarray(__import__("json").loads(p.read_text())["series"], dtype=np.float64)
+    """The reference's 875-point test series, shipped inside the package
+    (``golden_series.json``, readable from a zip too);
+    ``tests/fixtures/goldens.json`` holds the same series with the
+    reference's outputs on it."""
+    text = (resources.files(__package__) / "golden_series.json").read_text()
+    return np.asarray(json.loads(text), dtype=np.float64)
 
 
 def _gen_doc(idx: int, seed: int) -> tuple[np.ndarray, str]:

@@ -8,7 +8,8 @@
 
 On a cluster, pass e.g. --master yarn / k8s:// and executor confs as usual;
 the job is agnostic — all partitioning decisions live in the engine
-(salted hash on (source, doc_id), skew-safe; see operators/rollup.py).
+(``--partitions`` caps the window-stats fan-out, which merges the input's
+splits without a shuffle; see operators/rollup.py).
 Re-running with the same --output resumes from the last committed
 partition group (per-partition lineage manifests; streaming/checkpoint.py).
 """

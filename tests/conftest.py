@@ -43,5 +43,24 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(group, fn)``: ``fn()`` and the number of Spark jobs
+    it launched."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store learns of jobs through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 def sf_dir(scale: str = "sf0.001") -> str:
     return f"/root/testdata/{scale}"

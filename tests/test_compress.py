@@ -357,19 +357,6 @@ def test_range_read_is_one_wave_without_schema_jobs(spark, fine,
     assert n == fine.where(F.col("bucket").between(2, 5)).count()
 
 
-def _jobs(spark, group, fn):
-    """``fn()`` and the number of Spark jobs it launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store learns of jobs through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write_plans(spark, fn):
     """``fn()``, and the final physical plan of every file write it ran,
     each as a list of (node name, node description): the SQL status
@@ -394,7 +381,7 @@ def _write_plans(spark, fn):
     return plans
 
 
-def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
+def test_lifecycle_job_budget(spark, spark_jobs, fine, tmp_path_factory):
     """Job budgets of the lifecycle on a parquet-backed fine store: a
     fresh expiry runs at most 4 Spark jobs and a fresh compression at
     most 4 (one group layout per job, every store written from it); an
@@ -427,8 +414,8 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
 
     def fresh():
         for name, make in (("expiry", expiry), ("compress", compress)):
-            done, counts[name] = _jobs(spark, f"budget_{name}",
-                                       lambda: make().run(store))
+            done, counts[name] = spark_jobs(f"budget_{name}",
+                                            lambda: make().run(store))
             assert len(done) == 8, name
 
     writes = _write_plans(spark, fresh)
@@ -448,8 +435,8 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
     # a new DataFrame over the same files (reading it infers a schema)
     again = spark.read.parquet(str(src))
     for name, make in (("expiry", expiry), ("compress", compress)):
-        redone, n = _jobs(spark, f"budget_rerun_{name}",
-                          lambda: make().run(again))
+        redone, n = spark_jobs(f"budget_rerun_{name}",
+                               lambda: make().run(again))
         assert (redone, n) == ([], 0), (name, n)
 
     # the compacted, watermark and rollup stores read with their written
@@ -457,9 +444,9 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
     ejob = expiry()
     rjob = RollupJob(spark, base / "rollup", n_groups=2, bucket_size=FINE)
     rjob.run(synth_tokens_df(spark, 6, seed=7))
-    reads, n = _jobs(spark, "budget_reads",
-                     lambda: (ejob.result(), ejob.watermarks(),
-                              rjob.result()))
+    reads, n = spark_jobs("budget_reads",
+                          lambda: (ejob.result(), ejob.watermarks(),
+                                   rjob.result()))
     assert n == 0
     for root, df in zip(("expiry/compacted", "expiry/watermarks",
                          "rollup/stage=rollup_1m"), reads):
@@ -476,12 +463,12 @@ def test_lifecycle_job_budget(spark, fine, tmp_path_factory):
     for make, match in ((expiry, "binds to one input"),
                         (compress, "fresh base dir")):
         with pytest.raises(ValueError, match=match):
-            _jobs(spark, "budget_projection", lambda: make().run(changed))
+            spark_jobs("budget_projection", lambda: make().run(changed))
     assert len(spark.sparkContext.statusTracker()
                .getJobIdsForGroup("budget_projection")) > 0
 
 
-def test_rollup_job_budget(spark, tmp_path_factory):
+def test_rollup_job_budget(spark, spark_jobs, tmp_path_factory):
     """Job budget of the rollup on a parquet-backed tokens table: a fresh
     run over 8 groups launches at most 4 Spark jobs (one kernel pass and
     one write, however many groups), an unchanged re-run over a new
@@ -498,7 +485,7 @@ def test_rollup_job_budget(spark, tmp_path_factory):
         # a new DataFrame over the same files (reading it infers a schema)
         tokens = spark.read.parquet(str(src))
         job = RollupJob(spark, base, n_groups=8, bucket_size=FINE)
-        return _jobs(spark, name, lambda: job.run(tokens))
+        return spark_jobs(name, lambda: job.run(tokens))
 
     counts = {}
 

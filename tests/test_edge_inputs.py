@@ -7,10 +7,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from matrixprofiler_spark.codecs import dod_encode, gorilla_encode
+from matrixprofiler_spark.kernels.window import movmax, movmean, movmin, movstd
 from matrixprofiler_spark.operators.rollup import (
     gap_fill,
     tier_rollup,
     window_stats,
+    window_stats_chunked,
     with_derived_stats,
 )
 from matrixprofiler_spark.operators.mp_ops import matrix_profile_blobs
@@ -59,6 +62,79 @@ def test_window_stats_edge(spark, edge_tokens):
     assert (mm == 5.0).all()
     ms = gorilla_decode(bytes(const.movstd_blob))
     assert (ms == 0.0).all()
+
+
+W_MIX = 8
+I32 = 2147483647
+
+
+@pytest.fixture(scope="module")
+def mixed_tokens(spark):
+    """Rows for one Arrow batch that exercise every branch of the batched
+    window-stats kernel."""
+    rng = np.random.default_rng(16)
+    toks = {
+        "empty": [],
+        "short": [3, 1, 4],                          # n < w
+        "exact_w": list(range(W_MIX)),               # n == w: one window
+        "const": [9] * 40,                           # std 0 everywhere
+        "extreme": [I32, -I32] * 20,                 # reference: Ogita loop
+        "neg": [-5, 7, -2, 0, 11, -40, 3, 3, 1, -8, 6] * 3,
+        "walk": (10000 + np.cumsum(rng.integers(-40, 41, 90))).tolist(),
+    }
+    rows = [(d, t, len(t), "web") for d, t in toks.items()]
+    return spark.createDataFrame(rows, schema=TOKENS_SCHEMA).cache()
+
+
+BLOB_COLS = ("movmean_blob", "movstd_blob", "movmin_blob", "movmax_blob",
+             "offsets_blob")
+
+
+def _per_series(x, w: int, off: int) -> tuple:
+    """(n_tok, n_windows, five blobs) of one row, from the per-series
+    kernels run on that row alone."""
+    x = np.asarray(x, dtype=np.float64)
+    if x.size < w:
+        return (x.size, 0) + (None,) * 5
+    return (x.size, x.size - w + 1,
+            gorilla_encode(movmean(x, w, "ogita")), gorilla_encode(movstd(x, w)),
+            gorilla_encode(movmin(x, w)), gorilla_encode(movmax(x, w)),
+            dod_encode(off + np.arange(x.size - w + 1, dtype=np.int64)))
+
+
+def _batched(r) -> tuple:
+    return (r.n_tok, r.n_windows,
+            *(None if r[c] is None else bytes(r[c]) for c in BLOB_COLS))
+
+
+def test_batched_window_stats_match_per_series_kernels(spark, mixed_tokens):
+    """One Arrow batch mixing empty, short, exactly-w, constant and
+    int32-extreme rows, with and without ``chunk_off``: every blob of
+    ``window_stats`` and ``window_stats_chunked`` is byte-equal to
+    encoding the per-series kernels' output for that row alone. The
+    extreme row's n * x^2 passes 2^53, so the reference takes its Ogita
+    loop there (and the row's window sums of squares overflow int64)."""
+    toks = {r.doc_id: list(r.tokens) for r in mixed_tokens.collect()}
+    for offs in ({}, {d: 1000 * len(d) for d in toks}):
+        df = mixed_tokens.withColumn(
+            "chunk_off", (F.length("doc_id") * 1000).cast("long")
+        ) if offs else mixed_tokens
+        rows = window_stats(df, W_MIX, num_partitions=1,
+                            keep_tokens=True).collect()
+        assert sorted(r.doc_id for r in rows) == sorted(toks)
+        for r in rows:
+            assert list(r.tokens_back) == toks[r.doc_id]
+            assert _batched(r) == _per_series(
+                toks[r.doc_id], W_MIX, offs.get(r.doc_id, 0)), r.doc_id
+    # chunk c of a doc covers offsets [16c, min(n, 16(c+1) + w - 1))
+    expect = [
+        (d, *_per_series(t[16 * c:16 * (c + 1) + W_MIX - 1], W_MIX, 16 * c))
+        for d, t in toks.items()
+        for c in range(max(-(-(len(t) - W_MIX + 1) // 16), 1))
+    ]
+    got = [(r.doc_id, *_batched(r)) for r in window_stats_chunked(
+        mixed_tokens, W_MIX, chunk_len=16, num_partitions=1).collect()]
+    assert sorted(got, key=repr) == sorted(expect, key=repr)
 
 
 def test_matrix_profile_edge(spark, edge_tokens):

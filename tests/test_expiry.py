@@ -360,11 +360,13 @@ def test_multi_binding_and_validation(spark, fine, tmp_path_factory):
 # ------------------------------------------------------------ empty inputs
 
 
-def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):
+def test_empty_and_partly_empty_inputs_commit(spark, spark_jobs, fine,
+                                              tmp_path_factory):
     """An empty parquet input and one whose docs fill only some groups
     both commit: every group of both stores holds a readable file, the
     censuses read zero where no rows are, the empty input's fingerprint
-    is n = 0, h = 0, and a re-run is a no-op."""
+    is n = 0, h = 0, its run launches a fixed 8 Spark jobs, and a re-run
+    is a no-op."""
     src = tmp_path_factory.mktemp("expiry_empty_src")
     fine.limit(0).write.parquet(str(src / "empty"))
     docs = [r["doc_id"] for r in
@@ -377,7 +379,13 @@ def test_empty_and_partly_empty_inputs_commit(spark, fine, tmp_path_factory):
         base = tmp_path_factory.mktemp(f"expiry_{name}")
         job = RetentionExpiryJob(spark, base, FINE, COARSE, HORIZON,
                                  n_groups=8)
-        assert len(job.run(inp)) == 8
+        committed, jobs = spark_jobs(f"expiry_{name}", lambda: job.run(inp))
+        assert len(committed) == 8
+        if name == "empty":
+            # both writes run although no group has a row (a watermark
+            # row exists only where a finest-tier row does), and each
+            # store is then backfilled: 8 jobs
+            assert jobs == 8
         for store in ("watermarks", "compacted"):
             assert len(list((base / store).glob("grp=*/*.parquet"))) >= 8
         assert _rows(job.result()) == _rows(_expected_kept(inp))

@@ -13,7 +13,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from matrixprofiler_spark.operators.rollup import tier_rollup
+from matrixprofiler_spark.operators.rollup import tier_rollup, window_stats_chunked
 from matrixprofiler_spark.operators.similarity import cosine_topk
 from matrixprofiler_spark.sources.tokens import tokens_from_documents
 
@@ -62,15 +62,39 @@ def _tree_nodes(plan: str) -> list[str]:
             for line in plan.split("\n\n")[0].splitlines()[1:]]
 
 
-def test_tier_rollup_is_one_kernel(spark):
-    """Every tier comes out of one Arrow kernel over the raw tokens: the
-    salted plan has the salt as its only Exchange, one MapInPandas and no
-    aggregation, whatever tiers it emits."""
-    tok = tokens_from_documents(spark, SF)
-    nodes = _tree_nodes(plan_of(tier_rollup(tok, num_partitions=4)))
-    assert nodes.count("Exchange") == 1
+def _assert_one_kernel_on_scan(df) -> None:
+    """One MapInPandas fed straight from the scan: no Exchange (the
+    fan-out merges input splits) and no aggregation."""
+    nodes = _tree_nodes(plan_of(df))
+    assert "Exchange" not in nodes
     assert nodes.count("MapInPandas") == 1
     assert not [n for n in nodes if "Aggregate" in n]
+
+
+def test_tier_rollup_is_one_kernel(spark):
+    """Every tier comes out of one Arrow kernel over the raw tokens, and
+    the fanned-out plan coalesces the scan's splits instead of shuffling
+    the token arrays, whatever tiers it emits."""
+    tok = tokens_from_documents(spark, SF)
+    _assert_one_kernel_on_scan(tier_rollup(tok, num_partitions=4))
+
+
+def test_window_stats_chunked_is_one_kernel(spark):
+    """The chunked window stats run as one Arrow kernel on the chunked
+    scan, fanned out without a shuffle."""
+    tok = tokens_from_documents(spark, SF)
+    _assert_one_kernel_on_scan(window_stats_chunked(tok, 8, num_partitions=4))
+
+
+def test_linear_kernels_build_without_jobs(spark, spark_jobs):
+    """Building the fanned-out rollup and window stats runs no Spark job,
+    even on a shuffled input (whose split count only a job would tell
+    under AQE): the fan-out is a coalesce, not sized from that count."""
+    tok = tokens_from_documents(spark, SF).repartition(3, "doc_id")
+    _, n = spark_jobs("build_linear_kernels", lambda: (
+        tier_rollup(tok, num_partitions=4),
+        window_stats_chunked(tok, 8, num_partitions=4)))
+    assert n == 0
 
 
 def test_distributed_mp_builds_without_jobs(spark):

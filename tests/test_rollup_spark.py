@@ -11,6 +11,12 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -29,6 +35,7 @@ from matrixprofiler_spark.sources.tokens import (
     GOLDEN_DOC_ID,
     synth_tokens_df,
     _gen_doc,
+    _golden_series,
 )
 
 N_DOCS = 40
@@ -135,6 +142,35 @@ def test_golden_doc_through_spark(spark, tokens, goldens):
     tok = np.round(series * _GOLDEN_SCALE) + _GOLDEN_OFFSET
     exp = movmean(tok, W, "ogita")
     np.testing.assert_array_equal(mm_tok, exp)
+
+
+def test_synth_tokens_from_package_zip_alone(tmp_path, goldens):
+    """``synth_tokens_df`` needs nothing outside the package: imported
+    from a zip of the package alone (no ``tests/`` anywhere on the path,
+    as with ``addPyFile``), it still embeds the golden doc, and the
+    shipped series is the fixture's."""
+    np.testing.assert_array_equal(_golden_series(), goldens["series"])
+    pkg = Path(__file__).resolve().parents[1] / "matrixprofiler_spark"
+    shutil.copytree(pkg, tmp_path / "src" / pkg.name,
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    archive = shutil.make_archive(str(tmp_path / "pkg"), "zip", tmp_path / "src")
+    script = (
+        "import matrixprofiler_spark as m\n"
+        f"assert m.__file__.startswith({archive!r}), m.__file__\n"
+        "from pyspark.sql import SparkSession\n"
+        "from matrixprofiler_spark.sources.tokens import synth_tokens_df\n"
+        "spark = (SparkSession.builder.master('local[1]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "df = synth_tokens_df(spark, 2, partitions=1)\n"
+        "print(sorted(r.doc_id for r in df.select('doc_id').collect()))\n"
+        "spark.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, capture_output=True,
+        text=True, timeout=300, env={**os.environ, "PYTHONPATH": archive})
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == str(
+        sorted(["doc_00000000", "doc_00000001", GOLDEN_DOC_ID]))
 
 
 def test_gap_fill(spark, tokens):

@@ -62,6 +62,8 @@ def main():
     sections = {
         "tier_rollup (1m/1h/1d in one kernel on pruned scan, zero shuffles)":
             tier_rollup(tok),
+        "tier_rollup fanned out (num_partitions=4: the scan's splits coalesced, zero shuffles)":
+            tier_rollup(tok, num_partitions=4),
         "tier_rollup 1m with source filter (pushdown)": tier_rollup(
             tok.filter(F.col("source") == "src1"), {"1m": 60}
         ),
@@ -70,6 +72,8 @@ def main():
         "gap_fill (generated spine + equi-join)": gap_fill(tier_rollup(tok, {"1m": 60})),
         "window_stats_chunked (offset-range chunking, JVM-side slice)":
             window_stats_chunked(tok, 64, chunk_len=500),
+        "window_stats_chunked fanned out (num_partitions=4: chunked scan coalesced, zero shuffles)":
+            window_stats_chunked(tok, 64, chunk_len=500, num_partitions=4),
         "cosine_topk (broadcast query side)": cosine_topk(emb, k=1, num_queries=5),
         "cosine_pairs_above (cogrouped block join, no driver collect)":
             cosine_pairs_above(emb, threshold=0.3, num_blocks=4),
